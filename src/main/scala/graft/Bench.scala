@@ -283,14 +283,14 @@ object Bench {
          |fixed in `Extract`: a repartition key correlated with the bucket
          |hash had been collapsing each bucket onto half its tasks.
          |
-         |Headline queries at $sfDir, local[$cores4n], noop-write-forced,
+         |Headline queries at $sfDir, local[$cpus], noop-write-forced,
          |second (warm) run:
          |
          || query | sec |
          ||---|---|
          |${qTimes.map { case (k, v) => f"| $k | $v%.3f |" }.mkString("\n")}
          |
-         |Reproduce: `SPARK_GRAFT_SF_DIR=$sfDir SPARK_GRAFT_CPUS=$cores4n sbt -batch "runMain graft.Bench"`
+         |Reproduce: `SPARK_GRAFT_SF_DIR=$sfDir SPARK_GRAFT_CPUS=$cpus sbt -batch "runMain graft.Bench"`
          |""".stripMargin
     Files.writeString(Paths.get("/root/repo/BENCH.md"), benchMd)
 

@@ -15,26 +15,4 @@ object Entities {
       val matches = Rx(pat).findall(text)
       if (matches.nonEmpty) Some(name -> matches) else None
     }
-
-  /** parse_structured_data (standard.py:38-59) word/line counts. */
-  def wordCount(text: String): Long = PyStr.countWords(text)
-  def lineCount(text: String): Long = PyStr.split(text, '\n').length.toLong
-
-  /** find_key_value_pairs (standard.py:61-84): per line split(sep, 1),
-    * keep if both sides non-empty after strip; later keys overwrite.
-    */
-  def findKeyValuePairs(text: String, separator: String = ":"): Vector[(String, String)] = {
-    val pairs = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    PyStr.split(text, '\n').foreach { line =>
-      if (line.contains(separator)) {
-        val parts = PyStr.split1(line, separator)
-        if (parts.length == 2) {
-          val key = PyStr.strip(parts(0))
-          val value = PyStr.strip(parts(1))
-          if (key.nonEmpty && value.nonEmpty) pairs(key) = value
-        }
-      }
-    }
-    pairs.toVector
-  }
 }

@@ -75,12 +75,6 @@ object PyStr {
     out.toArray
   }
 
-  /** `str.split(sep, 1)` — at most one split. */
-  def split1(s: String, sep: String): Array[String] = {
-    val i = s.indexOf(sep)
-    if (i < 0) Array(s) else Array(s.substring(0, i), s.substring(i + sep.length))
-  }
-
   private def isCased(c: Char): Boolean =
     Character.isUpperCase(c) || Character.isLowerCase(c) ||
       Character.getType(c) == Character.TITLECASE_LETTER

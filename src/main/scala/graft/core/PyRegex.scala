@@ -48,12 +48,7 @@ final class Rx private (val source: String, val p: Pattern) {
 
   def containsMatch(s: String): Boolean = m(s).find()
 
-  /** re.match → match anchored at position 0, or None. */
-  def matchAt(s: String): Option[Mtch] = {
-    val mm = m(s)
-    if (mm.lookingAt()) Some(new Mtch(mm.toMatchResult)) else None
-  }
-
+  /** re.match succeeds → a match anchored at position 0 exists. */
   def matchesAt(s: String): Boolean = m(s).lookingAt()
 
   /** re.finditer — non-overlapping matches left to right. */
@@ -84,7 +79,6 @@ final class Mtch(r: MatchResult) {
   def group0: String = r.group(0)
   /** group(i) — null when the group did not participate (≙ Python None). */
   def group(i: Int): String = r.group(i)
-  def groupOpt(i: Int): Option[String] = Option(r.group(i))
   def start: Int = r.start()
   def end: Int = r.end()
   def groupCount: Int = r.groupCount()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** One-call registration of the library's whole SQL surface — the line a
   * migrating user adds next to `spark.sql.extensions=graft.plans
-  * .GraftExtensions` (which injects the ExtractPages planner strategy):
+  * .GraftExtensions` (which injects the top-k optimizer rule):
   *
   * {{{
   *   graft.functions.GraftFunctions.registerAll(spark)

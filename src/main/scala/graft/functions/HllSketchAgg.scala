@@ -11,8 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** `hll_sketch(value, m)` → array<long>: the HLL register vector as a real
   * Catalyst AGGREGATE function (the `TypedImperativeAggregate` pattern of
   * Spark's own approx_count_distinct / bloom_filter_agg), completing the
-  * custom-surface set next to the Expression (`multi_match`), Generator
-  * (`extract_items`), and plan node (`ExtractPages`).
+  * custom-surface set next to the Expression (`multi_match`) and
+  * Generator (`extract_items`).
   *
   * Same arithmetic as the relational [[graft.ops.CorpusSignals.hllRegisters]]
   * (cross-pinned in HllSketchAggSpec): 60-bit md5 hash, bucket = h mod m,

@@ -49,7 +49,7 @@ object Png {
       val len = u32(pos)
       val ctype = new String(bytes, pos + 4, 4, java.nio.charset.StandardCharsets.US_ASCII)
       val dataOff = pos + 8
-      if (len < 0 || dataOff + len + 4 > bytes.length)
+      if (len < 0 || dataOff.toLong + len + 4 > bytes.length)
         throw new java.io.IOException(s"truncated chunk $ctype")
       ctype match {
         case "IHDR" =>

@@ -53,9 +53,6 @@ object TextStats {
   def langId(text: Column, threshold: Double = 0.05): Column =
     when(stopwordRatio(text) >= threshold, "en").otherwise("unk")
 
-  def digitRatio(text: Column): Column =
-    length(regexp_replace(text, "[^0-9]", "")).cast("double") / length(text)
-
   def punctRatio(text: Column): Column =
     length(regexp_replace(text, "[A-Za-z0-9\\s]", "")).cast("double") / length(text)
 

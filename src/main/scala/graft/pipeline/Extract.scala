@@ -140,7 +140,20 @@ object Extract {
                        charsOut: org.apache.spark.util.LongAccumulator,
                        errors: org.apache.spark.util.LongAccumulator,
                        pdfFallback: org.apache.spark.util.LongAccumulator,
-                       pdfEncrypted: org.apache.spark.util.LongAccumulator)
+                       pdfEncrypted: org.apache.spark.util.LongAccumulator) {
+    /** Tally one parsed row; returns it unchanged. */
+    def add(row: DocRow): DocRow = {
+      docs.add(1L); bytesIn.add(row.bytes_in); charsOut.add(row.chars_out)
+      if (row.error != null) {
+        errors.add(1L)
+        if (row.payload_kind == "pdf") {
+          if (row.error.startsWith("pdf-encrypted")) pdfEncrypted.add(1L)
+          else pdfFallback.add(1L)
+        }
+      }
+      row
+    }
+  }
   def newAcc(spark: SparkSession): Acc = Acc(
     spark.sparkContext.longAccumulator("docs"),
     spark.sparkContext.longAccumulator("bytes_in"),
@@ -149,38 +162,27 @@ object Extract {
     spark.sparkContext.longAccumulator("pdf_fallback"),
     spark.sparkContext.longAccumulator("pdf_encrypted"))
 
-  /** Transform one bucket's pages into DocRows. Declarative pre/post ops;
-    * the parse core is a typed mapPartitions (Catalyst object op).
+  /** The extraction operator, shared by the batch and streaming paths:
+    * O1 guard → url/html/text projection → salted repartition by url-hash
+    * (host skew cannot gang up on a task) → typed mapPartitions parse core.
+    * The projection lets Catalyst prune the scan to the three payload
+    * columns and push child filters below the parse. Works on any batch
+    * or streaming DataFrame carrying those columns.
     */
-  def extractBucket(spark: SparkSession, pages: DataFrame, cfg: Config, bucket: Int,
-                    acc: Option[Acc] = None): Dataset[DocRow] = {
+  def extract(pages: DataFrame, cfg: Config, bucket: Int = 0): Dataset[DocRow] = {
+    val spark = pages.sparkSession
     import spark.implicits._
     val p = if (cfg.parallelism > 0) cfg.parallelism
             else spark.sessionState.conf.numShufflePartitions
-    val valid = pages
+    val (mode, llm, ocr, useOcr) = (cfg.mode, cfg.llmParser, cfg.ocr, cfg.useOcr)
+    pages
       .where(col("html").isNotNull || col("text").isNotNull) // O1 guard
       .select(col("url"), col("html"), col("text"))
-    // salted repartition by url-hash: host-skew cannot gang up on a task.
-    val salted = valid.repartition(p, saltedKey(cfg.salt))
-    val llm = cfg.llmParser
-    val ocr = cfg.ocr
-    val useOcr = cfg.useOcr
-    salted.as[(String, Array[Byte], String)].mapPartitions { it =>
-      it.map { case (url, html, text) =>
-        val row = parseRow(url, html, text, bucket, cfg.mode, llm, ocr, useOcr)
-        acc.foreach { a =>
-          a.docs.add(1L); a.bytesIn.add(row.bytes_in); a.charsOut.add(row.chars_out)
-          if (row.error != null) {
-            a.errors.add(1L)
-            if (row.payload_kind == "pdf") {
-              if (row.error.startsWith("pdf-encrypted")) a.pdfEncrypted.add(1L)
-              else a.pdfFallback.add(1L)
-            }
-          }
-        }
-        row
-      }
-    }
+      .repartition(p, saltedKey(cfg.salt))
+      .as[(String, Array[Byte], String)]
+      .mapPartitions(_.map { case (url, html, text) =>
+        parseRow(url, html, text, bucket, mode, llm, ocr, useOcr)
+      })
   }
 
   final case class RunResult(manifestVersion: Int, snapshotId: String,
@@ -191,6 +193,7 @@ object Extract {
     * exists for the same mode.
     */
   def run(spark: SparkSession, pagesRoot: String, outRoot: String, cfg: Config): RunResult = {
+    import spark.implicits._
     val table = new SnapshotTable(outRoot)
     val prev = table.currentManifest.filter(m => m.mode == cfg.mode && m.bucketCount == cfg.buckets)
     val done = prev.map(_.completedBuckets.toSet).getOrElse(Set.empty)
@@ -211,8 +214,9 @@ object Extract {
         val t0 = System.nanoTime()
         // partition-pruned scan: only this bucket's files are read
         val pages = spark.read.parquet(pagesRoot).where(col("bucket") === b)
+        val parsed = extract(pages, cfg, b)
         val acc = newAcc(spark)
-        val out = extractBucket(spark, pages, cfg, b, Some(acc))
+        val out = if (cfg.exactMetrics) parsed else parsed.map(acc.add)
         val dir = table.dataDir(snapshotId, b)
         out.write.mode("overwrite").parquet(dir.toString)
         val secs = (System.nanoTime() - t0) / 1e9

@@ -2,6 +2,7 @@ package graft.plans
 
 import graft.functions.TopKAgg
 
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -22,9 +23,8 @@ import org.apache.spark.sql.types._
   * [[graft.functions.TopKAgg]]). This completes the Catalyst extension
   * surface: Expression (`py_findall`, `multi_match`), Generator
   * (`extract_items`), aggregates (`hll_sketch`/`cms_sketch`/`topk_agg`),
-  * plan node + Strategy (`ExtractPages`), and now an optimizer Rule,
-  * injected via `SparkSessionExtensions.injectOptimizerRule`
-  * ([[GraftExtensions]]).
+  * and an optimizer Rule, injected via
+  * `SparkSessionExtensions.injectOptimizerRule` ([[GraftExtensions]]).
   *
   * The rewrite fires only where it is PROVABLY semantics-preserving —
   * every guard below is a soundness condition, pinned in TopKRewriteSpec:
@@ -124,4 +124,13 @@ object TopKWindowRewrite extends Rule[LogicalPlan] {
     } :+ Alias(Add(posAttr, Literal(1)), rankAlias.name)(exprId = rankAttr.exprId)
     Some(Project(projectList, generate))
   }
+}
+
+/** `spark.sql.extensions=graft.plans.GraftExtensions` — injects the
+  * optimizer rule at session build time, the deployment-grade
+  * registration path.
+  */
+class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit =
+    ext.injectOptimizerRule(_ => TopKWindowRewrite)
 }

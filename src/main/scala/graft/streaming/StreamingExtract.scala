@@ -33,29 +33,6 @@ object StreamingExtract {
     StructField("text", StringType, nullable = true),
     StructField("lang", StringType, nullable = true)))
 
-  /** Transform shared by batch and streaming: O1 guard → salted
-    * repartition → typed parse core. Works on any (streaming or batch)
-    * DataFrame with the payload columns.
-    */
-  def extractTransform(spark: SparkSession, pages: DataFrame,
-                       cfg: Extract.Config): Dataset[graft.pipeline.DocRow] = {
-    import spark.implicits._
-    val p = if (cfg.parallelism > 0) cfg.parallelism
-            else spark.sessionState.conf.numShufflePartitions
-    val llm = cfg.llmParser
-    val ocr = cfg.ocr
-    val useOcr = cfg.useOcr
-    val mode = cfg.mode
-    pages
-      .where(col("html").isNotNull || col("text").isNotNull)
-      .select(col("url"), col("html"), col("text"))
-      .repartition(p, xxhash64(concat(col("url"), lit("#" + cfg.salt))))
-      .as[(String, Array[Byte], String)]
-      .mapPartitions(_.map { case (url, html, text) =>
-        Extract.parseRow(url, html, text, bucket = 0, mode, llm, ocr, useOcr)
-      })
-  }
-
   /** Stream new page files into an append-only extraction directory.
     * Exactly-once per input file via the streaming checkpoint; restart
     * with the same checkpointLocation resumes where it stopped.
@@ -68,7 +45,7 @@ object StreamingExtract {
       .schema(pagesSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(pagesRoot)
-    extractTransform(spark, pages, cfg).writeStream
+    Extract.extract(pages, cfg).writeStream
       .format("parquet")
       .option("path", s"$outRoot/data")
       .option("checkpointLocation", s"$outRoot/_checkpoint")

@@ -4,13 +4,10 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Minimal access bridge for APIs Spark scopes `private[sql]` — the same
   * technique public Spark-extension projects use (a one-object package
-  * bridge) to construct a DataFrame from a custom LogicalPlan. Nothing
-  * else in this repo lives outside the graft namespace.
+  * bridge) to move between Columns, catalyst Expressions and logical
+  * plans. Nothing else in this repo lives outside the graft namespace.
   */
 object GraftBridge {
-  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
   /** Column ↔ catalyst Expression (Spark 4 moved these behind the
     * column-node indirection).
     */

@@ -66,6 +66,10 @@ class PngSpec extends AnyFunSuite {
     intercept[java.io.IOException](Png.decode(deep))
     val laced = good.clone; laced(28) = 1 // IHDR interlace
     intercept[java.io.IOException](Png.decode(laced))
+    // an IDAT length near Int.MaxValue must not wrap the bounds check
+    val huge = good.clone; val idatLen = good.indexOfSlice("IDAT".getBytes("US-ASCII")) - 4
+    Seq(0x7F, 0xFF, 0xFF, 0xF8).zipWithIndex.foreach { case (b, i) => huge(idatLen + i) = b.toByte }
+    intercept[java.io.IOException](Png.decode(huge))
     assert(!Png.isPng("not a png".getBytes))
   }
 
