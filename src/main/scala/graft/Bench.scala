@@ -134,13 +134,8 @@ object Bench {
 
     def extractionRun(spark: SparkSession, pages: String, out: String, par: Int): Double = {
       val (_, t) = timeSec {
-        // exactMetrics=false: the bench measures parse THROUGHPUT; the
-        // exact-metrics read-back is a fixed per-commit job that would
-        // only add scale-independent noise to the small-corpus timings
-        // (production default stays exact).
         Extract.run(spark, pages, out,
           Extract.Config(mode = "construction", buckets = buckets, parallelism = par,
-            exactMetrics = false,
             // r3: the corpus now carries scanned docs; run the OCR seam so
             // the benched pipeline covers the recovered-text path too
             ocrEngine = "fake"))
@@ -195,14 +190,14 @@ object Bench {
     spark = session(cpus)
     val qTimes = headline.map { name =>
       val fn = SparkEntry.queries(name)
-      // plan + warm once, then min of TWO timed materializations — the same
+      // plan + warm once, then min of THREE timed materializations — the same
       // noise defense as the extraction pairs: a co-tenant episode parked on
       // one rep is discarded by the min instead of landing in the artifact
       // (the round-3 first run recorded q_minhash_sig at 51 s — 70× its
       // quiet-window time — from exactly this).
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       graft.ops.TextDedup.releaseCaches() // don't let warm-run caches serve the timed run
-      val t = (1 to 2).map { _ =>
+      val t = (1 to 3).map { _ =>
         val (_, t1) = timeSec {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         }
@@ -284,7 +279,7 @@ object Bench {
          |hash had been collapsing each bucket onto half its tasks.
          |
          |Headline queries at $sfDir, local[$cpus], noop-write-forced,
-         |second (warm) run:
+         |min of three warm runs:
          |
          || query | sec |
          ||---|---|

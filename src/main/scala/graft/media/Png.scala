@@ -1,11 +1,11 @@
 package graft.media
 
-import java.util.zip.{CRC32, Deflater, Inflater}
+import java.util.zip.CRC32
 
 /** Pure-JVM baseline PNG codec (RFC 2083) — the real pixel path behind the
   * multimodal decode seam (VERDICT r4 missing #2): no image library exists
   * in this sandbox, and none is needed for baseline PNG — IDAT is zlib
-  * (java.util.zip) and the scanline filters live in [[PngFilter]].
+  * ([[Zlib]]) and the scanline filters live in [[PngFilter]].
   *
   * Decoder coverage: gray (type 0) at depths 1/2/4/8/16, palette (3) at
   * 1/2/4/8, RGB (2) / gray+alpha (4) / RGBA (6) at 8/16, multi-IDAT,
@@ -93,7 +93,7 @@ object Png {
     val bitsPerPixel = channels * bitDepth
     // filter left-reference distance: whole bytes, min 1 (RFC 2083 §6.2)
     val fbpp = math.max(1, bitsPerPixel / 8)
-    val inflated = inflate(idat.toByteArray)
+    val inflated = Zlib.inflate(idat.toByteArray)
 
     // per-pixel channel samples, 0..255 (depth 16 keeps the high byte;
     // sub-byte depths unpack MSB-first). Filled sequentially for
@@ -222,7 +222,7 @@ object Png {
     p32(ihdr, 0, width); p32(ihdr, 4, height)
     ihdr(8) = 8; ihdr(9) = colorType.toByte; ihdr(10) = 0; ihdr(11) = 0; ihdr(12) = 0
     chunk("IHDR", ihdr)
-    chunk("IDAT", deflate(filtered))
+    chunk("IDAT", Zlib.deflate(filtered))
     chunk("IEND", Array.empty)
     out.toByteArray
   }
@@ -268,7 +268,7 @@ object Png {
     p32(ihdr, 0, img.width); p32(ihdr, 4, img.height)
     ihdr(8) = 8; ihdr(9) = 0; ihdr(10) = 0; ihdr(11) = 0; ihdr(12) = 1 // interlace 1
     chunk("IHDR", ihdr)
-    chunk("IDAT", deflate(body.toByteArray))
+    chunk("IDAT", Zlib.deflate(body.toByteArray))
     chunk("IEND", Array.empty)
     out.toByteArray
   }
@@ -299,31 +299,5 @@ object Png {
       i += 1
     }
     encode(img.width, img.height, colorType, samples, ftForRow)
-  }
-
-  private def deflate(data: Array[Byte]): Array[Byte] = {
-    val d = new Deflater()
-    d.setInput(data); d.finish()
-    val buf = new Array[Byte](math.max(64, data.length + 64))
-    val out = new java.io.ByteArrayOutputStream()
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
-    out.toByteArray
-  }
-
-  private def inflate(data: Array[Byte]): Array[Byte] = {
-    val inf = new Inflater()
-    inf.setInput(data)
-    val buf = new Array[Byte](8192)
-    val out = new java.io.ByteArrayOutputStream()
-    try while (!inf.finished()) {
-      val n = inf.inflate(buf)
-      if (n == 0 && inf.needsInput()) throw new java.io.IOException("truncated zlib stream")
-      out.write(buf, 0, n)
-    } catch {
-      case e: java.util.zip.DataFormatException =>
-        throw new java.io.IOException(s"corrupt deflate stream: ${e.getMessage}")
-    } finally inf.end()
-    out.toByteArray
   }
 }

@@ -607,6 +607,19 @@ object CorpusSignals {
       graft.functions.DeflateRatio(
         org.apache.spark.sql.GraftBridge.expression(text)))
 
+  /** HLL rho of the W-bit remainder `w` — see [[hllRegisters]]. */
+  private def hllRho(w: Column, W: Int): Column =
+    when(w === 0L, lit(W + 1).cast("long"))
+      .otherwise(lit(W).cast("long") - length(bin(w)) + 1L)
+
+  /** The HLL bias-correction constant alpha_m (Flajolet et al. 2007). */
+  private def hllAlpha(m: Int): Double = m match {
+    case 16 => 0.673
+    case 32 => 0.697
+    case 64 => 0.709
+    case _  => 0.7213 / (1.0 + 1.079 / m)
+  }
+
   /** HyperLogLog register table (Flajolet et al. 2007) over a value column
     * — the constant-size cardinality sketch a 100 TB dedup/mixing planner
     * runs INSTEAD of countDistinct (whose exact hash aggregate must hold
@@ -631,9 +644,7 @@ object CorpusSignals {
         // shiftright, NOT division: long / long is DOUBLE division in
         // Spark, and doubles lose bits past 2^53
         shiftright(h, logm).as("w"))
-      .select(col("bucket"),
-        when(col("w") === 0L, lit(W + 1).cast("long"))
-          .otherwise(lit(W).cast("long") - length(bin(col("w"))) + 1L).as("rho"))
+      .select(col("bucket"), hllRho(col("w"), W).as("rho"))
       .groupBy("bucket")
       .agg(max(col("rho")).as("rho_max"))
     df.sparkSession.range(m).select(col("id").as("bucket"))
@@ -646,12 +657,7 @@ object CorpusSignals {
     * rows — driver-free.
     */
   def hllEstimate(registers: DataFrame, m: Int): DataFrame = {
-    val alpha = m match {
-      case 16 => 0.673
-      case 32 => 0.697
-      case 64 => 0.709
-      case _  => 0.7213 / (1.0 + 1.079 / m)
-    }
+    val alpha = hllAlpha(m)
     registers
       .agg(sum(pow(lit(2.0), -col("rho_max"))).as("z"),
         sum(when(col("rho_max") === 0L, 1).otherwise(0)).as("v"))
@@ -686,9 +692,7 @@ object CorpusSignals {
     val h = hash(value)
     df.select(key.as("key"), pmod(h, lit(m.toLong)).as("bucket"),
         shiftright(h, logm).as("w"))
-      .select(col("key"), col("bucket"),
-        when(col("w") === 0L, lit(W + 1).cast("long"))
-          .otherwise(lit(W).cast("long") - length(bin(col("w"))) + 1L).as("rho"))
+      .select(col("key"), col("bucket"), hllRho(col("w"), W).as("rho"))
       .groupBy("key", "bucket")
       .agg(max(col("rho")).as("rho_max"))
       .groupBy("key")
@@ -705,12 +709,7 @@ object CorpusSignals {
     * estimate falls under 2.5m and empty registers remain.
     */
   def hllEstimateFromSummary(v: Column, zint: Column, m: Int): Column = {
-    val alpha = m match {
-      case 16 => 0.673
-      case 32 => 0.697
-      case 64 => 0.709
-      case _  => 0.7213 / (1.0 + 1.079 / m)
-    }
+    val alpha = hllAlpha(m)
     val logm = java.lang.Integer.numberOfTrailingZeros(m)
     val W = 60 - logm
     val raw = lit(alpha * m * m * math.pow(2.0, W + 1)) / zint.cast("double")

@@ -1,6 +1,6 @@
 package graft.pdf
 
-import graft.media.PngFilter
+import graft.media.{PngFilter, Zlib}
 
 import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
@@ -94,12 +94,6 @@ object Pdf {
             width: Double = 612.0, height: Double = 792.0): Array[Byte] =
     writePages(pages.map(p => PageSpec(p)), flate, width, height)
 
-  /** Serialize a document-information string: ASCII stays a literal string
-    * (PDFDocEncoding-compatible bytes); anything non-ASCII uses the
-    * standard UTF-16BE-with-BOM form (ISO 32000-1 §7.9.2.2) written as a
-    * HEX string — pure ASCII on the wire, so every framing's byte path
-    * carries it unchanged.
-    */
   /** The raw byte form an info string decodes FROM: ASCII bytes, or
     * BOM + UTF-16BE for non-ASCII values.
     */
@@ -108,6 +102,12 @@ object Pdf {
     else Array[Byte](0xFE.toByte, 0xFF.toByte) ++
       s.getBytes(java.nio.charset.StandardCharsets.UTF_16BE)
 
+  /** Serialize a document-information string: ASCII stays a literal string
+    * (PDFDocEncoding-compatible bytes); anything non-ASCII uses the
+    * standard UTF-16BE-with-BOM form (ISO 32000-1 §7.9.2.2) written as a
+    * HEX string — pure ASCII on the wire, so every framing's byte path
+    * carries it unchanged.
+    */
   private def infoString(s: String): String =
     if (s.forall(_ < 0x80)) {
       val sb = new java.lang.StringBuilder(s.length + 8)
@@ -122,11 +122,7 @@ object Pdf {
       }
       sb.append(')')
       sb.toString
-    } else {
-      val raw = Array[Byte](0xFE.toByte, 0xFF.toByte) ++
-        s.getBytes(java.nio.charset.StandardCharsets.UTF_16BE)
-      raw.map(b => f"${b & 0xff}%02X").mkString("<", "", ">")
-    }
+    } else infoRawBytes(s).map(b => f"${b & 0xff}%02X").mkString("<", "", ">")
 
   def writePages(pages: Seq[PageSpec], flate: Boolean,
                  width: Double = 612.0, height: Double = 792.0,
@@ -260,7 +256,7 @@ object Pdf {
 
     def streamObjBytes(num: Int, spec: PageSpec): Array[Byte] = {
       val raw = contentBytes(spec)
-      val data = encipher(if (flate) deflate(raw) else raw, num)
+      val data = encipher(if (flate) Zlib.deflate(raw) else raw, num)
       val filter = if (flate) " /Filter /FlateDecode" else ""
       val b = new java.io.ByteArrayOutputStream()
       b.write(bytes(s"$num 0 obj\n<< /Length ${data.length}$filter >>\nstream\n"))
@@ -347,7 +343,7 @@ object Pdf {
         val objStmNum = 4 + 2 * nPages + totalAnnots + infoCount + encState.size
         val xrefNum = objStmNum + 1
         encState.foreach { case (n, _, _, _) => obj(n, encDictObjBytes.get) }
-        val stmData = encipher(deflate(stmRaw), objStmNum)
+        val stmData = encipher(Zlib.deflate(stmRaw), objStmNum)
         obj(objStmNum, {
           val b = new java.io.ByteArrayOutputStream()
           b.write(bytes(s"$objStmNum 0 obj\n<< /Type /ObjStm /N ${members.length} " +
@@ -524,7 +520,7 @@ object Pdf {
       raw(o + 5) = (f3 >>> 8).toByte; raw(o + 6) = f3.toByte
     }
     val body = if (predicted) PngFilter.filter(raw, rowBytes, bpp = 1, _ => 2) else raw
-    val data = deflate(body)
+    val data = Zlib.deflate(body)
     val parms = if (predicted) s" /DecodeParms << /Predictor 12 /Columns $rowBytes >>" else ""
     val b = new java.io.ByteArrayOutputStream()
     b.write(bytes(s"$num 0 obj\n<< /Type /XRef /Size $size /W [1 4 2] /Root 1 0 R$extra " +
@@ -550,32 +546,6 @@ object Pdf {
       case c    => sb.append(c)
     }
     sb.toString
-  }
-
-  private def deflate(data: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater()
-    d.setInput(data); d.finish()
-    val buf = new Array[Byte](math.max(64, data.length * 2 + 64))
-    val out = new java.io.ByteArrayOutputStream()
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
-    out.toByteArray
-  }
-
-  private[pdf] def inflate(data: Array[Byte]): Array[Byte] = {
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(data)
-    val buf = new Array[Byte](8192)
-    val out = new java.io.ByteArrayOutputStream()
-    try while (!inf.finished()) {
-      val n = inf.inflate(buf)
-      if (n == 0 && inf.needsInput()) throw new java.io.IOException("truncated flate stream")
-      out.write(buf, 0, n)
-    } catch {
-      case e: java.util.zip.DataFormatException =>
-        throw new java.io.IOException(s"corrupt deflate stream: ${e.getMessage}")
-    } finally inf.end()
-    out.toByteArray
   }
 
   // ------------------------------------------------------------------ parse
@@ -1086,7 +1056,7 @@ object Pdf {
       case None    => raw
     }
     filterNames(o.dict).foreach {
-      case "FlateDecode" | "Fl"      => data = inflate(data)
+      case "FlateDecode" | "Fl"      => data = Zlib.inflate(data)
       case "ASCIIHexDecode" | "AHx"  => data = asciiHexDecode(data)
       case "ASCII85Decode" | "A85"   => data = ascii85Decode(data)
       case "RunLengthDecode" | "RL"  => data = runLengthDecode(data)

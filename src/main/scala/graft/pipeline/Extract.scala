@@ -4,7 +4,7 @@ import graft.core.Assemble
 import graft.json.Canonical
 import graft.table.{BucketMetrics, Manifest, SnapshotTable}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One output row per url — extracted text + spans + canonical JSON +
@@ -49,11 +49,9 @@ object Extract {
         * reference's no-credential path).
         */
       secondSource: String = "none",
-      /** Committed manifest metrics: true (default) re-aggregates the
-        * just-written bucket files — exact under task retries/speculation
-        * (accumulator updates inside transformations are at-least-once);
-        * the read-back scans only 3 numeric columns of one bucket. false
-        * trusts the accumulators (approximate, zero extra jobs).
+      /** Selects nothing: manifest metrics always come from one aggregate
+        * over the committed bucket files (see [[run]]). Kept only so
+        * existing callers that still pass it compile.
         */
       exactMetrics: Boolean = true,
       /** OCR seam (S4/S5): "none" (offline default — no tesseract in the
@@ -75,22 +73,6 @@ object Extract {
     def ocr: Option[OcrEngine] = Ocr.engine(ocrEngine)
   }
 
-  /** Page-boundary spans into the '\n\n'-joined extracted text — the span
-    * contract for payloads whose decoder has no finer block structure
-    * (pdf/text); HTML payloads carry block-level spans from the
-    * boilerplate scorer instead.
-    */
-  private def pageSpans(pages: Seq[graft.core.PageData]): Vector[SpanRow] = {
-    var off = 0L
-    val out = Vector.newBuilder[SpanRow]
-    pages.foreach { p =>
-      val len = p.text.length.toLong
-      out += SpanRow(off, off + len, "page")
-      off += len + 2 // the "\n\n" joiner
-    }
-    out.result()
-  }
-
   /** Pure per-row parse — the single opaque (non-Catalyst) region. */
   def parseRow(url: String, html: Array[Byte], text: String, bucket: Int, mode: String,
                llm: Option[graft.core.LlmParser] = None,
@@ -108,9 +90,7 @@ object Extract {
       n_pages = dec.pages.length,
       extracted_text = Assemble.combinePagesText(dec.pages),
       extracted_json = json,
-      spans =
-        if (dec.spans.nonEmpty) dec.spans.map(s => SpanRow(s.start, s.end, s.kind))
-        else pageSpans(dec.pages),
+      spans = dec.spans.map(s => SpanRow(s.start, s.end, s.kind)),
       bytes_in = dec.bytesIn,
       chars_out = dec.charsOut,
       needs_ocr = dec.needsOcr,
@@ -128,39 +108,8 @@ object Extract {
     * Exposed so the decorrelation regression test pins this exact
     * expression (PipelineE2ESpec).
     */
-  def saltedKey(salt: Int): org.apache.spark.sql.Column =
+  def saltedKey(salt: Int): Column =
     xxhash64(concat(col("url"), lit("#" + salt)))
-
-  /** Per-bucket extraction metrics, filled by accumulators during the write
-    * action itself — no second read-back job per bucket (at 1000 executors
-    * that extra scan per commit is pure scheduling overhead).
-    */
-  final case class Acc(docs: org.apache.spark.util.LongAccumulator,
-                       bytesIn: org.apache.spark.util.LongAccumulator,
-                       charsOut: org.apache.spark.util.LongAccumulator,
-                       errors: org.apache.spark.util.LongAccumulator,
-                       pdfFallback: org.apache.spark.util.LongAccumulator,
-                       pdfEncrypted: org.apache.spark.util.LongAccumulator) {
-    /** Tally one parsed row; returns it unchanged. */
-    def add(row: DocRow): DocRow = {
-      docs.add(1L); bytesIn.add(row.bytes_in); charsOut.add(row.chars_out)
-      if (row.error != null) {
-        errors.add(1L)
-        if (row.payload_kind == "pdf") {
-          if (row.error.startsWith("pdf-encrypted")) pdfEncrypted.add(1L)
-          else pdfFallback.add(1L)
-        }
-      }
-      row
-    }
-  }
-  def newAcc(spark: SparkSession): Acc = Acc(
-    spark.sparkContext.longAccumulator("docs"),
-    spark.sparkContext.longAccumulator("bytes_in"),
-    spark.sparkContext.longAccumulator("chars_out"),
-    spark.sparkContext.longAccumulator("errors"),
-    spark.sparkContext.longAccumulator("pdf_fallback"),
-    spark.sparkContext.longAccumulator("pdf_encrypted"))
 
   /** The extraction operator, shared by the batch and streaming paths:
     * O1 guard → url/html/text projection → salted repartition by url-hash
@@ -193,7 +142,6 @@ object Extract {
     * exists for the same mode.
     */
   def run(spark: SparkSession, pagesRoot: String, outRoot: String, cfg: Config): RunResult = {
-    import spark.implicits._
     val table = new SnapshotTable(outRoot)
     val prev = table.currentManifest.filter(m => m.mode == cfg.mode && m.bucketCount == cfg.buckets)
     val done = prev.map(_.completedBuckets.toSet).getOrElse(Set.empty)
@@ -214,35 +162,22 @@ object Extract {
         val t0 = System.nanoTime()
         // partition-pruned scan: only this bucket's files are read
         val pages = spark.read.parquet(pagesRoot).where(col("bucket") === b)
-        val parsed = extract(pages, cfg, b)
-        val acc = newAcc(spark)
-        val out = if (cfg.exactMetrics) parsed else parsed.map(acc.add)
         val dir = table.dataDir(snapshotId, b)
-        out.write.mode("overwrite").parquet(dir.toString)
+        extract(pages, cfg, b).write.mode("overwrite").parquet(dir.toString)
         val secs = (System.nanoTime() - t0) / 1e9
-        // Exact metrics (default): aggregate the committed files themselves —
-        // task retries / speculative execution make in-transformation
-        // accumulator updates at-least-once, so persisted manifests would
-        // overcount. The read-back prunes to 3 numeric columns of this one
-        // bucket (column-pruned vectorized scan, one tiny job per commit).
-        val bm =
-          if (cfg.exactMetrics) {
-            val isPdfErr = col("error").isNotNull && col("payload_kind") === "pdf"
-            val m = spark.read.parquet(dir.toString).agg(
-              count(lit(1)), coalesce(sum(col("bytes_in")), lit(0L)),
-              coalesce(sum(col("chars_out")), lit(0L)),
-              coalesce(sum(when(col("error").isNotNull, 1L).otherwise(0L)), lit(0L)),
-              coalesce(sum(when(col("needs_ocr"), 1L).otherwise(0L)), lit(0L)),
-              coalesce(sum(when(isPdfErr && !col("error").startsWith("pdf-encrypted"),
-                1L).otherwise(0L)), lit(0L)),
-              coalesce(sum(when(isPdfErr && col("error").startsWith("pdf-encrypted"),
-                1L).otherwise(0L)), lit(0L))).head()
-            BucketMetrics(b, m.getLong(0), m.getLong(1), m.getLong(2), m.getLong(3),
-              secs, m.getLong(4), m.getLong(5), m.getLong(6))
-          } else
-            BucketMetrics(b, acc.docs.value, acc.bytesIn.value,
-              acc.charsOut.value, acc.errors.value, secs, 0L,
-              acc.pdfFallback.value, acc.pdfEncrypted.value)
+        // Metrics are one aggregate over the committed files themselves, so
+        // task retries and speculative attempts cannot double-count a row.
+        // The read-back is a column-pruned scan of this one bucket.
+        val isPdfErr = col("error").isNotNull && col("payload_kind") === "pdf"
+        val encrypted = col("error").startsWith("pdf-encrypted")
+        def countIf(c: Column) = count(when(c, 1))
+        val m = spark.read.parquet(dir.toString).agg(
+          count(lit(1)), coalesce(sum(col("bytes_in")), lit(0L)),
+          coalesce(sum(col("chars_out")), lit(0L)), countIf(col("error").isNotNull),
+          countIf(col("needs_ocr")), countIf(isPdfErr && !encrypted),
+          countIf(isPdfErr && encrypted)).head()
+        val bm = BucketMetrics(b, m.getLong(0), m.getLong(1), m.getLong(2), m.getLong(3),
+          secs, m.getLong(4), m.getLong(5), m.getLong(6))
         version += 1
         metrics = metrics :+ bm
         dataDirs = dataDirs :+ s"data/snap-$snapshotId/bucket=$b"

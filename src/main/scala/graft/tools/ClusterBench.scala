@@ -34,7 +34,7 @@ object ClusterBench {
   private def extraction(spark: SparkSession, pages: String, out: String, par: Int): Long = {
     val res = Extract.run(spark, pages, out,
       Extract.Config(mode = "construction", buckets = 1, parallelism = par,
-        exactMetrics = false, ocrEngine = "fake"))
+        ocrEngine = "fake"))
     res.metrics.map(_.docs).sum
   }
 

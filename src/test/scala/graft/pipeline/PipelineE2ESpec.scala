@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.fixtures.{CorpusIO, PagesGen}
+import graft.pdf.Pdf
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -127,5 +128,55 @@ class PipelineE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     docs.filter(_.mode == "construction").take(10).foreach { d =>
       assert(rows(d.url) == golden(d.url))
     }
+  }
+
+  test("manifest metrics equal a recount of the committed files") {
+    import org.apache.spark.sql.functions._
+    val pagesPath = s"$work/pages_planted"
+    val buckets = 2
+    PagesGen.write(spark, pagesPath, replicate = 1, buckets = buckets)
+    // plant one document for each counter the corpus may not exercise
+    val line = Seq((72.0, 700.0, "Quarterly revenue grew in every region during the third quarter."))
+    val flate = Pdf.write(Seq(line), flate = true)
+    val planted = Seq(
+      "encrypted" -> Pdf.writePages(Seq(Pdf.PageSpec(line)), flate = true,
+        encrypt = Some(Pdf.EncryptSpec(userPwd = "secret"))),
+      "truncated" -> flate.take(flate.length / 3),
+      "one-word" -> Pdf.write(Seq(Seq((72.0, 700.0, "Hello"))), flate = false)
+    ).map { case (name, pdf) =>
+      PagesGen.PageRowOut(s"https://planted.example/$name.pdf",
+        new java.sql.Timestamp(0L), pdf, null, "en")
+    }
+    spark.createDataFrame(planted)
+      .withColumn("bucket", pmod(xxhash64(col("url")), lit(buckets)).cast("int"))
+      .write.mode("append").partitionBy("bucket").parquet(pagesPath)
+
+    val outRoot = s"$work/recount"
+    Extract.run(spark, pagesPath, outRoot, Extract.Config(buckets = buckets, parallelism = 4))
+    val snap = Extract.readSnapshot(spark, outRoot)
+    val fate = snap.where(col("url").startsWith("https://planted.example/"))
+      .select("url", "error", "needs_ocr").collect()
+      .map(r => r.getString(0).stripPrefix("https://planted.example/") ->
+        (Option(r.getString(1)).getOrElse(""), r.getBoolean(2))).toMap
+    assert(fate("encrypted.pdf")._1.startsWith("pdf-encrypted"), fate)
+    assert(fate("truncated.pdf")._1.startsWith("pdf-parse"), fate)
+    assert(fate("one-word.pdf") == ("" -> true), fate)
+    val isPdfErr = col("payload_kind") === "pdf" && col("error").isNotNull
+    val encrypted = coalesce(col("error").startsWith("pdf-encrypted"), lit(false))
+    val recount = snap.groupBy("bucket").agg(
+      count(lit(1)), sum(col("bytes_in")), sum(col("chars_out")),
+      sum(col("error").isNotNull.cast("long")), sum(col("needs_ocr").cast("long")),
+      sum((isPdfErr && !encrypted).cast("long")), sum((isPdfErr && encrypted).cast("long")))
+      .collect().map(r => r.getInt(0) -> (1 to 7).map(r.getLong).toVector).toMap
+    val recorded = new graft.table.SnapshotTable(outRoot).currentManifest.get.metrics
+    assert(recorded.map(_.bucket).sorted == (0 until buckets))
+    recorded.foreach { m =>
+      val fields = Vector(m.docs, m.bytesIn, m.charsOut, m.errors, m.needsOcr,
+        m.pdfFallback, m.pdfEncrypted)
+      assert(fields == recount(m.bucket), s"bucket ${m.bucket}")
+    }
+    assert(recorded.map(_.pdfEncrypted).sum >= 1)
+    assert(recorded.map(_.pdfFallback).sum >= 1)
+    assert(recorded.map(_.needsOcr).sum >= 1)
   }
 }
