@@ -29,6 +29,19 @@ object Queries {
   private val P = TextDedup.P // 1000000007
   private def pg(dir: String, t: String) = s"$dir/$t.parquet"
   private def docs(s: SparkSession, dir: String) = s.read.parquet(pg(dir, "documents"))
+
+  /** Range-splits `df` on doc_id into spark.sql.shuffle.partitions parts,
+    * each sorted by doc_id, so a heavy per-document map over the result
+    * runs once per row in parallel tasks and leaves in doc_id order. A
+    * trailing `orderBy` instead would evaluate the map twice (the range
+    * sampler's job, then the shuffle-map stage) in one task, because the
+    * documents table reads as one partition; an explicit count is not
+    * coalesced by AQE.
+    */
+  private def spread(df: DataFrame): DataFrame =
+    df.repartitionByRange(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+      col("doc_id")).sortWithinPartitions("doc_id")
+
   private def embs(s: SparkSession, dir: String) = s.read.parquet(pg(dir, "embeddings"))
 
   private val ph: Column => Column = TextDedup.portableHash
@@ -5128,8 +5141,7 @@ object Queries {
     */
   private def qConstructionItems(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    docs(s, dir)
-      .select(col("doc_id"), col("text"))
+    spread(docs(s, dir).select(col("doc_id"), col("text")))
       .as[(Long, String)]
       .flatMap { case (id, text) =>
         val line = s"QTY: ${id % 9 + 1} EA VALVE PACKAGE MODEL VP-$id wall mounted"
@@ -5142,7 +5154,8 @@ object Queries {
         }
       }
       .toDF("doc_id", "fixture_type", "quantity", "model_number", "mounting_type", "line_number")
-      .orderBy("doc_id", "line_number")
+      // parts are doc_id ranges in order, so a local sort is the global one
+      .sortWithinPartitions("doc_id", "line_number")
   }
 
   /** P2/P3 as a SQL-visible UDTF: the custom Catalyst Generator
@@ -5176,8 +5189,7 @@ object Queries {
     */
   private def qLlmMerge(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    docs(s, dir)
-      .select(col("doc_id"), col("text")).as[(Long, String)]
+    spread(docs(s, dir).select(col("doc_id"), col("text"))).as[(Long, String)]
       .flatMap { case (id, text) =>
         val line = s"QTY: ${id % 9 + 1} EA VALVE PACKAGE MODEL VP-$id wall mounted"
         val pages = Vector(PageData(1L, line + "\n" + text, None, None, Nil))
@@ -5189,7 +5201,6 @@ object Queries {
           graft.core.FakeLlmParser.parseItems(pages.head.text).length.toLong))
       }
       .toDF("doc_id", "json_chars", "merge_changed_output", "n_fake_items")
-      .orderBy("doc_id")
   }
 
   /** F7-F12 with exact Python findall semantics (incl. the phone group
@@ -5238,7 +5249,7 @@ object Queries {
     */
   private def qHtmlExtract(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    docs(s, dir).select(col("doc_id"), col("text")).as[(Long, String)]
+    spread(docs(s, dir).select(col("doc_id"), col("text"))).as[(Long, String)]
       .map { case (id, text) =>
         val html =
           s"""<html><head><title>d$id</title><script>var x=1;</script></head><body>
@@ -5252,7 +5263,6 @@ object Queries {
           1.0 - ex.text.length.toDouble / html.length)
       }
       .toDF("doc_id", "extracted_chars", "n_spans", "kept_main", "strip_ratio")
-      .orderBy("doc_id")
   }
 
   /** PDF 1.5+ structural + font surface as a driver row (r5): each document
@@ -5270,7 +5280,7 @@ object Queries {
     import s.implicits._
     import graft.pdf.Pdf
     val prefix = "§ déjà vu — café №42"
-    docs(s, dir).select(col("doc_id"), col("text")).as[(Long, String)]
+    spread(docs(s, dir).select(col("doc_id"), col("text"))).as[(Long, String)]
       .map { case (id, text) =>
         val chunks = if (text.isEmpty) Seq("") else text.grouped(40).toSeq
         val lines = prefix +: chunks
@@ -5302,7 +5312,6 @@ object Queries {
       .toDF("doc_id", "framing", "n_pages", "err_kind", "got_text")
       .withColumn("text_h", when(col("n_pages") > 0, ph(col("got_text"))).otherwise(lit(0L)))
       .select("doc_id", "framing", "n_pages", "err_kind", "text_h")
-      .orderBy("doc_id")
   }
 
   /** REAL-pixel perceptual hash (r5): per document a deterministic
@@ -5319,7 +5328,7 @@ object Queries {
   private def qPngPhash(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.media.Png
-    docs(s, dir).select(col("doc_id")).as[Long]
+    spread(docs(s, dir).select(col("doc_id"))).as[Long]
       .map { id =>
         val w = (9 * (2 + id % 4)).toInt
         val h = (7 * (2 + id % 5)).toInt
@@ -5333,7 +5342,6 @@ object Queries {
         (id, w.toLong, h.toLong, graft.ops.Multimodal.dHashImage(back))
       }
       .toDF("doc_id", "w", "h", "dhash")
-      .orderBy("doc_id")
   }
 
   private val pngCellsSql =
@@ -5362,7 +5370,7 @@ object Queries {
   private def qPngPhashPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.media.Png
-    val media = docs(s, dir).select(col("doc_id")).as[Long]
+    val media = spread(docs(s, dir).select(col("doc_id"))).as[Long]
       .map { id =>
         val base = id / 2
         val w = (9 * (2 + base % 4)).toInt
@@ -5457,7 +5465,7 @@ object Queries {
   private def qJpegPhash(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.media.{Jpeg, Png}
-    docs(s, dir).select(col("doc_id")).as[Long]
+    spread(docs(s, dir).select(col("doc_id"))).as[Long]
       .map { id =>
         val img = Png.Gray(72, 56, Array.tabulate(72 * 56) { i =>
           val bx = (i % 72) / 8; val by = (i / 72) / 8
@@ -5473,7 +5481,6 @@ object Queries {
           graft.ops.Multimodal.dHashImage(back))
       }
       .toDF("doc_id", "framing", "w", "h", "dhash")
-      .orderBy("doc_id")
   }
 
   private val oJpegPhash =
@@ -5502,7 +5509,7 @@ object Queries {
   private def qCrossFormatPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.media.{Gif, Jpeg, Png}
-    val media = docs(s, dir).select(col("doc_id")).as[Long]
+    val media = spread(docs(s, dir).select(col("doc_id"))).as[Long]
       .map { id =>
         val base = id / 3
         // base-dependent multipliers (mod 7 / mod 11) diversify the hash
@@ -5555,7 +5562,7 @@ object Queries {
   private def qPdfMeta(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.pdf.Pdf
-    docs(s, dir).select(col("doc_id"), col("text")).as[(Long, String)]
+    spread(docs(s, dir).select(col("doc_id"), col("text"))).as[(Long, String)]
       .map { case (id, text) =>
         val title =
           if (id % 2 == 0) "T: " + text.take(24)
@@ -5577,7 +5584,6 @@ object Queries {
           ymd._1.toLong, ymd._2.toLong, ymd._3.toLong)
       }
       .toDF("doc_id", "title", "author", "y", "m", "d")
-      .orderBy("doc_id")
   }
 
   private val oPdfMeta =
@@ -5602,7 +5608,7 @@ object Queries {
   private def qPdfEncrypted(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.pdf.Pdf
-    docs(s, dir).select(col("doc_id"), col("text")).as[(Long, String)]
+    spread(docs(s, dir).select(col("doc_id"), col("text"))).as[(Long, String)]
       .map { case (id, text) =>
         val chunks = if (text.isEmpty) Seq("") else text.grouped(40).toSeq
         val placements = chunks.zipWithIndex.map { case (l, i) => (50.0, 760.0 - 12.0 * i, l) }
@@ -5626,7 +5632,6 @@ object Queries {
       .toDF("doc_id", "mode", "n_pages", "err_kind", "got_text")
       .withColumn("text_h", when(col("n_pages") > 0, ph(col("got_text"))).otherwise(lit(0L)))
       .select("doc_id", "mode", "n_pages", "err_kind", "text_h")
-      .orderBy("doc_id")
   }
 
   private val oPdfEncrypted =
@@ -5651,7 +5656,7 @@ object Queries {
   private def qPdfAnnots(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.pdf.Pdf
-    docs(s, dir).select(col("doc_id"), col("text")).as[(Long, String)]
+    spread(docs(s, dir).select(col("doc_id"), col("text"))).as[(Long, String)]
       .map { case (id, text) =>
         val note = (if (id % 2 == 1) "№ " else "") + "note: " + text.take(20)
         val field = s"v-${id % 100}"
@@ -5671,7 +5676,6 @@ object Queries {
       .toDF("doc_id", "n_annots", "ann_text")
       .withColumn("ann_h", ph(col("ann_text")))
       .select("doc_id", "n_annots", "ann_h")
-      .orderBy("doc_id")
   }
 
   private val oPdfAnnots =
@@ -6033,8 +6037,7 @@ object Queries {
 
   def entry(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    docs(spark, dir)
-      .select(col("doc_id"), col("text")).as[(Long, String)]
+    spread(docs(spark, dir).select(col("doc_id"), col("text"))).as[(Long, String)]
       .flatMap { case (id, text) =>
         // a deterministic item-bearing first line so the construction fold
         // and the fuzzy merge have real work on every doc (same shape as

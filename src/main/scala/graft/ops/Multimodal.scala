@@ -170,6 +170,12 @@ object Multimodal {
     hash
   }
 
+  // A payload its decoder rejects (truncated, progressive JPEG, ...) hashes
+  // to None — a null simhash, which never pairs — instead of failing the
+  // stage.
+  private def decodedHash(img: => graft.media.Png.Gray): Option[Long] =
+    try Some(dHashImage(img)) catch { case _: Exception => None }
+
   /** 56-bit difference-hash (dHash) over the stub decode: the payload is
     * laid out as a 7×9 cell grid — cell (r,c) = Σ bytes at positions
     * ≡ r·9+c (mod 63), the integer-exact twin of a downscaled grayscale
@@ -193,16 +199,16 @@ object Multimodal {
       .as[(Long, Array[Byte])]
       .map { case (id, p) =>
         // routed by magic bytes like the pipeline's payload decode: real
-        // PNG/JPEG pixels when asked and present, the stub byte grid
+        // PNG/JPEG/GIF pixels when asked and present, the stub byte grid
         // otherwise
-        val h =
+        val h: Option[Long] =
           if (decodePixels && graft.media.Png.isPng(p))
-            dHashImage(graft.media.Png.decode(p))
+            decodedHash(graft.media.Png.decode(p))
           else if (decodePixels && graft.media.Jpeg.isJpeg(p))
-            dHashImage(graft.media.Jpeg.decodeGray(p))
+            decodedHash(graft.media.Jpeg.decodeGray(p))
           else if (decodePixels && graft.media.Gif.isGif(p))
-            dHashImage(graft.media.Gif.decodeGray(p))
-          else {
+            decodedHash(graft.media.Gif.decodeGray(p))
+          else Some {
             val cells = slotSums(p, 63)
             var hh = 0L
             var r = 0

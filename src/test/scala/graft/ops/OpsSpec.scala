@@ -490,6 +490,35 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(pairs.exists(p => p._1 == 1L && p._2 == 3L), "near-dup pair missing")
   }
 
+  test("imageNearDupPairs: undecodable images get a null hash and never pair; good ones still do") {
+    val s = spark; import s.implicits._
+    import graft.media.{Gif, Jpeg, Png}
+    // block-constant 72×56 lattice: every format decodes to the same dHash
+    val img = Png.Gray(72, 56, Array.tabulate(72 * 56) { i =>
+      40 + ((37 * ((i % 72) / 8) + 53 * ((i / 72) / 8)) % 22) * 8
+    })
+    val png = Png.encodeGrayAs(img, 2)
+    val jpeg = Jpeg.encodeGray(img, quality = 90)
+    val gif = Gif.encodeGray(img)
+    val cutPng = png.take(png.length / 2)
+    val progressive = jpeg.clone
+    val sof = jpeg.indices.find(i => (jpeg(i) & 0xff) == 0xFF && (jpeg(i + 1) & 0xff) == 0xC0).get
+    progressive(sof + 1) = 0xC2.toByte
+    val cutGif = gif.take(gif.length / 2)
+    Seq(() => Png.decode(cutPng), () => Jpeg.decodeGray(progressive), () => Gif.decodeGray(cutGif))
+      .foreach(d => intercept[java.io.IOException](d()))
+    val media = Seq(1L -> png, 2L -> jpeg, 3L -> gif,
+      11L -> cutPng, 12L -> progressive, 13L -> cutGif).toDF("id", "payload")
+    val hashes = Multimodal.dHash56(s, media, decodePixels = true)
+      .collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
+    assert(Seq(11L, 12L, 13L).forall(hashes(_).isEmpty), s"bad payloads must hash to null: $hashes")
+    val pairs = Multimodal.imageNearDupPairs(s, media, maxHamming = 3, decodePixels = true)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    TextDedup.releaseCaches()
+    assert(pairs == Set((1L, 2L, 0), (1L, 3L, 0), (2L, 3L, 0)),
+      s"good cross-format pairs only: $pairs")
+  }
+
   test("noveltyScores: df=1 grams counted, duplicates score 0, unique prose 10^6") {
     val df = docsDf(
       1L -> "a b c d e",        // shares "a b c" with doc 2; "b c d"/"c d e" also in 2

@@ -1,6 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{MapElementsExec, MapPartitionsExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -590,5 +595,74 @@ class CatalogPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val hashEx = finalPlanOf(p).linesIterator.count(l =>
       l.contains("Exchange hashpartitioning"))
     assert(hashEx == 1, s"exactly one key exchange (saw $hashEx):\n$p")
+  }
+
+  /** Every node of an executed plan, stepping into AQE query stages and,
+    * once per cache, into the plan that fills an in-memory cache.
+    */
+  private def planNodes(root: SparkPlan): Seq[SparkPlan] = {
+    val seenCaches = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case m: InMemoryTableScanExec =>
+        if (seenCaches.add(m.relation.cacheBuilder)) walk(m.relation.cacheBuilder.cachedPlan) else Nil
+      case _ => p.children.flatMap(walk)
+    })
+    walk(root)
+  }
+
+  /** Checks that `df`'s per-document map reads a range split of the
+    * documents table: exactly one range exchange on doc_id, into 4
+    * partitions that AQE leaves uncoalesced, below a typed map. Returns
+    * the plan's nodes and that exchange.
+    */
+  private def spreadBelowMap(what: String, df: DataFrame): (Seq[SparkPlan], SparkPlan) = {
+    val nodes = planNodes(df.queryExecution.executedPlan)
+    val p = df.queryExecution.executedPlan.toString
+    val byDocId = nodes.collect {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case RangePartitioning(ord, _) => ord.flatMap(_.references.map(_.name)) == Seq("doc_id")
+        case _ => false
+      }) => e
+    }
+    assert(byDocId.length == 1, s"$what: one range exchange on doc_id (saw ${byDocId.length}):\n$p")
+    val ex = byDocId.head
+    assert(ex.outputPartitioning.numPartitions == 4, s"$what: split into 4:\n$p")
+    assert(!nodes.exists {
+      case AQEShuffleReadExec(q: QueryStageExec, _) => q.plan eq ex
+      case _ => false
+    }, s"$what: AQE must not coalesce the split:\n$p")
+    def above(n: SparkPlan) = planNodes(n).exists(_ eq ex)
+    assert(nodes.exists {
+      case m @ (_: MapElementsExec | _: MapPartitionsExec) => above(m)
+      case _ => false
+    }, s"$what: the split must sit below the per-document map:\n$p")
+    (nodes, ex)
+  }
+
+  test("codec and parse rows: documents range-split below the map, no exchange above it") {
+    assume(Files.exists(Paths.get(s"$sf/documents.parquet")), "sf0.001 testdata missing")
+    val inOrder = Seq("q_png_phash", "q_jpeg_phash", "q_pdf_xrefstream", "q_pdf_encrypted",
+      "q_pdf_annots", "q_pdf_meta", "q_html_extract", "q_llm_merge", "q_construction_items")
+      .map(q => q -> graft.SparkEntry.queries(q)(spark, sf)) :+
+      ("entry" -> graft.Queries.entry(spark, sf))
+    inOrder.foreach { case (q, df) =>
+      val ids = df.collect().map(_.getAs[Long]("doc_id"))
+      val (nodes, ex) = spreadBelowMap(q, df)
+      assert(nodes.collect { case e: Exchange => e } == Seq(ex),
+        s"$q: no exchange above the map:\n${df.queryExecution.executedPlan}")
+      assert(df.rdd.getNumPartitions == 4, s"$q: map output in 4 partitions")
+      assert(ids.nonEmpty && ids.toSeq.zip(ids.tail).forall { case (a, b) => a <= b },
+        s"$q: doc_ids must leave in key order")
+    }
+    // the pair rows and the digest shuffle again above the map (join,
+    // aggregate): only their media/document side is checked
+    Seq("q_png_phash_pairs", "q_cross_format_pairs", "q_entry_digest").foreach { q =>
+      val df = graft.SparkEntry.queries(q)(spark, sf)
+      try { df.collect(); spreadBelowMap(q, df) }
+      finally graft.ops.TextDedup.releaseCaches()
+    }
   }
 }
