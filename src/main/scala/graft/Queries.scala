@@ -1533,8 +1533,7 @@ object Queries {
   // Binary media columns through the batched per-partition decode plumbing
   // (graft.ops.Multimodal): a media table synthesized from the documents
   // text (payload = UTF-8 bytes, kind from the id), integer-exact slot-sum
-  // features so DuckDB verifies the identical bytes. The float stub decode
-  // shares this exact batch shape (OpsSpec).
+  // features so DuckDB verifies the identical bytes.
   private def qMultimodal(s: SparkSession, dir: String): DataFrame = {
     val media = docs(s, dir).select(
       col("doc_id").as("id"),
@@ -1562,14 +1561,14 @@ object Queries {
        FROM documents ORDER BY doc_id"""
 
   // ------------------------------------------------------- perceptual hash
-  // 56-bit dHash over the stub byte grid + Hamming near-dup pairs through
+  // 56-bit dHash over the opaque byte grid + Hamming near-dup pairs through
   // the text simhash banding. The per-doc oracle hex-decodes payload BYTES
   // (the q_multimodal idiom) into the same 7×9 mod-63 cell sums and
   // replays the gradient bits; the pair oracle is brute-force all-pairs,
   // so the banding's exactness is what's verified. Exact-dup payloads in
   // the corpus guarantee hamming-0 rows exist.
-  // Role since r5: these rows pin the OPAQUE-payload arm of dHash56 (the
-  // fallback for payloads with no decodable codec). The REAL-pixel arm —
+  // These rows pin the OPAQUE-payload arm of dHash56 (payloads that carry
+  // no PNG/JPEG/GIF signature; no documents text does). The pixel arm —
   // actual PNG/JPEG/GIF decodes — is pinned by q_png_phash,
   // q_png_phash_pairs, q_jpeg_phash, and q_cross_format_pairs, closing
   // the r4 "perceptual in name only" caveat.
@@ -1581,18 +1580,37 @@ object Queries {
       .orderBy("doc_id")
   }
 
-  private val phashCellsSql =
-    """list_transform(generate_series(0, 62), j ->
+  // The dHash bit rule over a 63-element `cells` list (7×9, row-major) —
+  // every image-hash oracle interpolates this one fragment. It compares
+  // cell sums: the pixel fixtures' cells all have one area (so sums order
+  // like means), and the byte grid compares sums in Scala too.
+  private val dhashBitsSql =
+    """list_sum(list_transform(generate_series(0, 55), b ->
+         CASE WHEN cells[(b // 8) * 9 + (b % 8) + 1] > cells[(b // 8) * 9 + (b % 8) + 2]
+              THEN (1::BIGINT << b) ELSE 0 END))::BIGINT"""
+
+  /** Brute-force all-pairs oracle of `imageNearDupPairs(maxHamming = 3)`:
+    * `cellsCtes` defines a CTE `c(doc_id, cells)`; every id pair whose
+    * dHashes differ in at most 3 bits.
+    */
+  private def dhashPairsSql(cellsCtes: String): String =
+    s"""WITH $cellsCtes,
+       ph AS (SELECT doc_id AS id, $dhashBitsSql AS h FROM c)
+       SELECT a.id AS id_a, b.id AS id_b,
+         bit_count(xor(a.h, b.h))::BIGINT AS hamming
+       FROM ph a JOIN ph b ON a.id < b.id
+       WHERE bit_count(xor(a.h, b.h)) <= 3
+       ORDER BY id_a, id_b"""
+
+  private val phashCellsCte =
+    """c AS (SELECT doc_id, list_transform(generate_series(0, 62), j ->
          COALESCE(list_sum(list_transform(generate_series(1 + j, octet_length(encode(text)), 63),
-           i -> ('0x' || substr(hex(encode(text)), 2*i - 1, 2))::BIGINT)), 0))"""
+           i -> ('0x' || substr(hex(encode(text)), 2*i - 1, 2))::BIGINT)), 0)) AS cells
+       FROM documents)"""
 
   private val oPhash =
-    s"""WITH c AS (SELECT doc_id, $phashCellsSql AS cells FROM documents)
-       SELECT doc_id,
-         list_sum(list_transform(generate_series(0, 55), b ->
-           CASE WHEN cells[(b // 8) * 9 + (b % 8) + 1] > cells[(b // 8) * 9 + (b % 8) + 2]
-                THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS dhash
-       FROM c ORDER BY doc_id"""
+    s"""WITH $phashCellsCte
+       SELECT doc_id, $dhashBitsSql AS dhash FROM c ORDER BY doc_id"""
 
   private def qPhashPairs(s: SparkSession, dir: String): DataFrame = {
     val media = docs(s, dir).select(col("doc_id").as("id"),
@@ -1601,18 +1619,7 @@ object Queries {
       .orderBy("id_a", "id_b")
   }
 
-  private val oPhashPairs =
-    s"""WITH c AS (SELECT doc_id, $phashCellsSql AS cells FROM documents),
-       ph AS (SELECT doc_id AS id,
-           list_sum(list_transform(generate_series(0, 55), b ->
-             CASE WHEN cells[(b // 8) * 9 + (b % 8) + 1] > cells[(b // 8) * 9 + (b % 8) + 2]
-                  THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS h
-         FROM c)
-       SELECT a.id AS id_a, b.id AS id_b,
-         bit_count(xor(a.h, b.h))::BIGINT AS hamming
-       FROM ph a JOIN ph b ON a.id < b.id
-       WHERE bit_count(xor(a.h, b.h)) <= 3
-       ORDER BY id_a, id_b"""
+  private val oPhashPairs = dhashPairsSql(phashCellsCte)
 
   // ------------------------------------------------------------ frame sample
   // Every-2nd-frame sampling over the video subset of the media table
@@ -5314,12 +5321,44 @@ object Queries {
       .select("doc_id", "framing", "n_pages", "err_kind", "text_h")
   }
 
-  /** REAL-pixel perceptual hash (r5): per document a deterministic
-    * grayscale image — pixel(x,y) = (7x + 13y + 31·doc_id) mod 251, dims
-    * (9·(2+id%4)) × (7·(2+id%5)) so the 7×9 dHash cells divide evenly —
-    * is encoded as an actual PNG (color type rotates gray/RGB/RGBA by
-    * id%3, scanline filter rotates 0-4 by row), decoded back through the
-    * real codec, and hashed with the pixel-domain dHash. The oracle
+  /** Gradient fixture image of the PNG rows: pixel(x,y) = (7x + 13y +
+    * 31·base) mod 251, plus `bump` at (0,0); dims (9·cw) × (7·ch) with
+    * cw = 2 + base%4, ch = 2 + base%5, so the 7×9 dHash cells divide
+    * evenly. Oracle twin: [[gradientCellsCtes]].
+    */
+  private def gradientImage(base: Long, bump: Int): graft.media.Png.Gray = {
+    val w = (9 * (2 + base % 4)).toInt
+    val h = (7 * (2 + base % 5)).toInt
+    val px = new Array[Int](w * h)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) { px(y * w + x) = ((7L * x + 13L * y + 31L * base) % 251L).toInt; x += 1 }
+      y += 1
+    }
+    px(0) += bump
+    graft.media.Png.Gray(w, h, px)
+  }
+
+  /** DuckDB twin of [[gradientImage]]: CTE `c(doc_id, w, h, cells)` with
+    * the per-cell pixel sums, for the SQL expressions `base` and `bump`
+    * over `documents`.
+    */
+  private def gradientCellsCtes(base: String, bump: String): String =
+    s"""p AS (SELECT doc_id, $base AS base, 2 + ($base) % 4 AS cw, 2 + ($base) % 5 AS ch,
+           $bump AS bump FROM documents),
+       c AS (SELECT doc_id, 9 * cw AS w, 7 * ch AS h,
+           list_transform(generate_series(0, 62), k ->
+             list_sum(list_transform(generate_series(0, cw * ch - 1), j ->
+               (7 * ((k % 9) * cw + (j % cw)) + 13 * ((k // 9) * ch + (j // cw)) + 31 * base) % 251
+                 + CASE WHEN k = 0 AND j = 0 THEN bump ELSE 0 END))) AS cells
+         FROM p)"""
+
+  /** REAL-pixel perceptual hash (r5): per document the gradient fixture
+    * image ([[gradientImage]] with base = doc_id, no bump) is encoded as
+    * an actual PNG (color type rotates gray/RGB/RGBA by id%3, scanline
+    * filter rotates 0-4 by row), decoded back through the real codec, and
+    * hashed with the pixel-domain dHash. The oracle
     * recomputes the hash from the closed-form pixel function, so the WHOLE
     * codec chain (chunking, zlib, all five PNG filters, luma) is verified
     * end-to-end: any byte the decoder gets wrong flips the hash. Replaces
@@ -5330,34 +5369,18 @@ object Queries {
     import graft.media.Png
     spread(docs(s, dir).select(col("doc_id"))).as[Long]
       .map { id =>
-        val w = (9 * (2 + id % 4)).toInt
-        val h = (7 * (2 + id % 5)).toInt
-        val img = Png.Gray(w, h, Array.tabulate(w * h) { i =>
-          val x = i % w; val y = i / w
-          ((7L * x + 13L * y + 31L * id) % 251L).toInt
-        })
+        val img = gradientImage(id, bump = 0)
         val colorType = (id % 3) match { case 0 => 0; case 1 => 2; case _ => 6 }
         val bytes = Png.encodeGrayAs(img, colorType, y => y % 5)
         val back = Png.decode(bytes)
-        (id, w.toLong, h.toLong, graft.ops.Multimodal.dHashImage(back))
+        (id, img.width.toLong, img.height.toLong, graft.ops.Multimodal.dHashImage(back))
       }
       .toDF("doc_id", "w", "h", "dhash")
   }
 
-  private val pngCellsSql =
-    """list_transform(generate_series(0, 62), k ->
-         list_sum(list_transform(generate_series(0, cw * ch - 1), j ->
-           (7 * ((k % 9) * cw + (j % cw)) + 13 * ((k // 9) * ch + (j // cw)) + 31 * base) % 251)))"""
-
   private val oPngPhash =
-    s"""WITH p AS (SELECT doc_id, doc_id AS base,
-           2 + doc_id % 4 AS cw, 2 + doc_id % 5 AS ch FROM documents),
-       c AS (SELECT doc_id, 9 * cw AS w, 7 * ch AS h, $pngCellsSql AS cells FROM p)
-       SELECT doc_id, w, h,
-         list_sum(list_transform(generate_series(0, 55), b ->
-           CASE WHEN cells[(b // 8) * 9 + (b % 8) + 1] > cells[(b // 8) * 9 + (b % 8) + 2]
-                THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS dhash
-       FROM c ORDER BY doc_id"""
+    s"""WITH ${gradientCellsCtes("doc_id", "0")}
+       SELECT doc_id, w, h, $dhashBitsSql AS dhash FROM c ORDER BY doc_id"""
 
   /** Image near-dup pairs over REAL PNGs: consecutive doc ids share a base
     * image (base = id/2) and the odd sibling carries a one-pixel +1 edit —
@@ -5372,41 +5395,16 @@ object Queries {
     import graft.media.Png
     val media = spread(docs(s, dir).select(col("doc_id"))).as[Long]
       .map { id =>
-        val base = id / 2
-        val w = (9 * (2 + base % 4)).toInt
-        val h = (7 * (2 + base % 5)).toInt
-        val img = Png.Gray(w, h, Array.tabulate(w * h) { i =>
-          val x = i % w; val y = i / w
-          val v = (7L * x + 13L * y + 31L * base) % 251L
-          (v + (if (id % 2 == 1 && x == 0 && y == 0) 1L else 0L)).toInt
-        })
+        val img = gradientImage(id / 2, bump = (id % 2).toInt)
         val colorType = (id % 3) match { case 0 => 0; case 1 => 2; case _ => 6 }
         (id, Png.encodeGrayAs(img, colorType, y => y % 5))
       }
       .toDF("id", "payload")
-    graft.ops.Multimodal.imageNearDupPairs(s, media, maxHamming = 3, decodePixels = true)
+    graft.ops.Multimodal.imageNearDupPairs(s, media, maxHamming = 3)
       .orderBy("id_a", "id_b")
   }
 
-  private val oPngPhashPairs =
-    s"""WITH p AS (SELECT doc_id, doc_id // 2 AS base,
-           2 + (doc_id // 2) % 4 AS cw, 2 + (doc_id // 2) % 5 AS ch FROM documents),
-       c AS (SELECT doc_id, cw, ch,
-           list_transform(generate_series(0, 62), k ->
-             list_sum(list_transform(generate_series(0, cw * ch - 1), j ->
-               (7 * ((k % 9) * cw + (j % cw)) + 13 * ((k // 9) * ch + (j // cw)) + 31 * base) % 251
-                 + CASE WHEN doc_id % 2 = 1 AND k = 0 AND j = 0 THEN 1 ELSE 0 END))) AS cells
-         FROM p),
-       ph AS (SELECT doc_id AS id,
-           list_sum(list_transform(generate_series(0, 55), b ->
-             CASE WHEN cells[(b // 8) * 9 + (b % 8) + 1] > cells[(b // 8) * 9 + (b % 8) + 2]
-                  THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS h
-         FROM c)
-       SELECT a.id AS id_a, b.id AS id_b,
-         bit_count(xor(a.h, b.h))::BIGINT AS hamming
-       FROM ph a JOIN ph b ON a.id < b.id
-       WHERE bit_count(xor(a.h, b.h)) <= 3
-       ORDER BY id_a, id_b"""
+  private val oPngPhashPairs = dhashPairsSql(gradientCellsCtes("doc_id // 2", "doc_id % 2"))
 
   // Oracle twin of qPdfXrefstream: expected text replayed straight from the
   // documents table (constant decoration line + 40-char chunking), expected
@@ -5451,26 +5449,52 @@ object Queries {
     corpus.unionByName(env).orderBy("mode")
   }
 
-  /** REAL JPEG perceptual hash (r5): per document a block-constant 72×56
-    * grayscale lattice — each 8×8 block one palette value 40+8·((37c+53r+
-    * 17·doc_id) mod 22), so each dHash CELL is one DCT block and adjacent
-    * cells differ by ≥8 gray levels — encoded as an actual baseline JPEG
-    * (framing rotates pure grayscale / YCbCr 4:2:0 with chroma skip /
-    * grayscale with restart markers by id%3), decoded through the real
-    * Huffman+IDCT path, and hashed. Flat blocks decode within ±2 of the
-    * source (DC-only, quality-90 quantization), far under the 8-level cell
-    * contrast, so the oracle recomputes the EXACT hash from the closed
-    * form: any entropy-decode, dequant, IDCT, or MCU-layout bug flips it.
+  /** Block-constant 72×56 fixture image of the JPEG rows: each 8×8 block
+    * (bx, by) is one gray level 40 + 8·((m1·bx + m2·by + 17·base) mod 22),
+    * so each dHash CELL is one DCT block and adjacent cells differ by ≥ 8
+    * gray levels whenever m1 mod 22 ≠ 0. Oracle twin: [[blockCellsCtes]].
+    */
+  private def blockImage(base: Long, m1: Long, m2: Long): graft.media.Png.Gray = {
+    val px = new Array[Int](72 * 56)
+    var y = 0
+    while (y < 56) {
+      var x = 0
+      while (x < 72) {
+        px(y * 72 + x) = (40L + ((m1 * (x / 8) + m2 * (y / 8) + 17L * base) % 22L) * 8L).toInt
+        x += 1
+      }
+      y += 1
+    }
+    graft.media.Png.Gray(72, 56, px)
+  }
+
+  /** DuckDB twin of [[blockImage]]: CTE `c(doc_id, cells)` with one cell
+    * per block, for the SQL expressions `base`, `m1`, `m2` over
+    * `documents`.
+    */
+  private def blockCellsCtes(base: String, m1: String, m2: String): String =
+    s"""p AS (SELECT doc_id, $base AS base, $m1 AS m1, $m2 AS m2 FROM documents),
+       c AS (SELECT doc_id,
+           list_transform(generate_series(0, 62), k ->
+             40 + ((m1 * (k % 9) + m2 * (k // 9) + 17 * base) % 22) * 8) AS cells
+         FROM p)"""
+
+  /** REAL JPEG perceptual hash (r5): per document the block fixture image
+    * ([[blockImage]] with base = doc_id, multipliers 37/53) is encoded as
+    * an actual baseline JPEG (framing rotates pure grayscale / YCbCr 4:2:0
+    * with chroma skip / grayscale with restart markers by id%3), decoded
+    * through the real Huffman+IDCT path, and hashed. Flat blocks decode
+    * within ±2 of the source (DC-only, quality-90 quantization), far under
+    * the 8-level cell contrast, so the oracle recomputes the EXACT hash
+    * from the closed form: any entropy-decode, dequant, IDCT, or
+    * MCU-layout bug flips it.
     */
   private def qJpegPhash(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.media.{Jpeg, Png}
+    import graft.media.Jpeg
     spread(docs(s, dir).select(col("doc_id"))).as[Long]
       .map { id =>
-        val img = Png.Gray(72, 56, Array.tabulate(72 * 56) { i =>
-          val bx = (i % 72) / 8; val by = (i / 72) / 8
-          (40L + ((37L * bx + 53L * by + 17L * id) % 22L) * 8L).toInt
-        })
+        val img = blockImage(id, 37L, 53L)
         val bytes = (id % 3) match {
           case 0 => Jpeg.encodeGray(img, quality = 90)
           case 1 => Jpeg.encodeGray(img, quality = 90, color420 = true)
@@ -5484,15 +5508,9 @@ object Queries {
   }
 
   private val oJpegPhash =
-    """WITH c AS (SELECT doc_id,
-         list_transform(generate_series(0, 62), k ->
-           40 + ((37 * (k % 9) + 53 * (k // 9) + 17 * doc_id) % 22) * 8) AS cells
-       FROM documents)
+    s"""WITH ${blockCellsCtes("doc_id", "37", "53")}
        SELECT doc_id, CAST(doc_id % 3 AS INTEGER) AS framing,
-         72::BIGINT AS w, 56::BIGINT AS h,
-         list_sum(list_transform(generate_series(0, 55), b ->
-           CASE WHEN cells[(b // 8) * 9 + (b % 8) + 1] > cells[(b // 8) * 9 + (b % 8) + 2]
-                THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS dhash
+         72::BIGINT AS w, 56::BIGINT AS h, $dhashBitsSql AS dhash
        FROM c ORDER BY doc_id"""
 
   /** Cross-format image near-dup (r5): docs 3k/3k+1/3k+2 share one block-
@@ -5516,10 +5534,7 @@ object Queries {
         // family to ~1700 classes: same-base (cross-format) pairs dominate
         // instead of a 22-class quadratic pair blowup; adjacent-cell
         // contrast stays >= 8 gray levels (multiplier mod 22 is never 0)
-        val img = Png.Gray(72, 56, Array.tabulate(72 * 56) { i =>
-          val bx = (i % 72) / 8; val by = (i / 72) / 8
-          (40L + (((37L + base % 7L) * bx + (53L + base % 11L) * by + 17L * base) % 22L) * 8L).toInt
-        })
+        val img = blockImage(base, 37L + base % 7L, 53L + base % 11L)
         val payload = (id % 3) match {
           case 0 =>
             val ct = (base % 3) match { case 0 => 0; case 1 => 2; case _ => 6 }
@@ -5530,26 +5545,12 @@ object Queries {
         (id, payload)
       }
       .toDF("id", "payload")
-    graft.ops.Multimodal.imageNearDupPairs(s, media, maxHamming = 3, decodePixels = true)
+    graft.ops.Multimodal.imageNearDupPairs(s, media, maxHamming = 3)
       .orderBy("id_a", "id_b")
   }
 
-  private val oCrossFormatPairs =
-    """WITH c AS (SELECT doc_id,
-         list_transform(generate_series(0, 62), k ->
-           40 + (((37 + (doc_id // 3) % 7) * (k % 9) + (53 + (doc_id // 3) % 11) * (k // 9)
-                  + 17 * (doc_id // 3)) % 22) * 8) AS cells
-       FROM documents),
-       ph AS (SELECT doc_id AS id,
-           list_sum(list_transform(generate_series(0, 55), b ->
-             CASE WHEN cells[(b // 8) * 9 + (b % 8) + 1] > cells[(b // 8) * 9 + (b % 8) + 2]
-                  THEN (1::BIGINT << b) ELSE 0 END))::BIGINT AS h
-         FROM c)
-       SELECT a.id AS id_a, b.id AS id_b,
-         bit_count(xor(a.h, b.h))::BIGINT AS hamming
-       FROM ph a JOIN ph b ON a.id < b.id
-       WHERE bit_count(xor(a.h, b.h)) <= 3
-       ORDER BY id_a, id_b"""
+  private val oCrossFormatPairs = dhashPairsSql(
+    blockCellsCtes("doc_id // 3", "37 + (doc_id // 3) % 7", "53 + (doc_id // 3) % 11"))
 
   /** PDF document-information metadata (r5): the /Info dict — the PDF
     * analog of the HTML page_meta surface — written per doc (Title forced

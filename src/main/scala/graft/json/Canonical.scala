@@ -40,9 +40,6 @@ object Canonical {
     sb.toString
   }
 
-  def renderBytes(j: J): Array[Byte] =
-    render(j).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-
   // one arraycopy per indent instead of 2·level char appends; levels ≥ 32
   // (never hit by the fixed-shape result docs) fall back to the loop
   private val indentCache: Array[String] = Array.tabulate(32)(l => " " * (2 * l))

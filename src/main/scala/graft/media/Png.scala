@@ -28,6 +28,11 @@ object Png {
 
   private val Signature = Array[Int](0x89, 0x50, 0x4E, 0x47, 0x0D, 0x0A, 0x1A, 0x0A)
 
+  // Adam7 (RFC 2083 §8.2): seven sub-images (x0, y0, dx, dy), each
+  // filtered independently
+  private val Adam7 = Array((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
+    (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
+
   def isPng(bytes: Array[Byte]): Boolean =
     bytes != null && bytes.length >= 8 &&
       (0 until 8).forall(i => (bytes(i) & 0xff) == Signature(i))
@@ -131,11 +136,8 @@ object Png {
         y += 1
       }
     } else {
-      // Adam7 (RFC 2083 §8.2): seven sub-images, each filtered independently
-      val passes = Array((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-        (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
       var off = 0
-      passes.foreach { case (x0, y0, dx, dy) =>
+      Adam7.foreach { case (x0, y0, dx, dy) =>
         val wp = if (width > x0) (width - x0 + dx - 1) / dx else 0
         val hp = if (height > y0) (height - y0 + dy - 1) / dy else 0
         if (wp > 0 && hp > 0) {
@@ -197,8 +199,36 @@ object Png {
     val raw = new Array[Byte](samples.length)
     var i = 0
     while (i < samples.length) { raw(i) = (samples(i) & 0xff).toByte; i += 1 }
-    val filtered = PngFilter.filter(raw, rowBytes, channels, ftForRow)
+    container(width, height, colorType, interlaced = false,
+      PngFilter.filter(raw, rowBytes, channels, ftForRow))
+  }
 
+  /** Adam7-interlaced 8-bit grayscale encoder (fixtures): the seven pass
+    * sub-images, each filtered per `ftForRow`, concatenated then deflated.
+    */
+  def encodeGrayAdam7(img: Gray, ftForRow: Int => Int = _ => 0): Array[Byte] = {
+    val body = new java.io.ByteArrayOutputStream()
+    Adam7.foreach { case (x0, y0, dx, dy) =>
+      val wp = if (img.width > x0) (img.width - x0 + dx - 1) / dx else 0
+      val hp = if (img.height > y0) (img.height - y0 + dy - 1) / dy else 0
+      if (wp > 0 && hp > 0) {
+        val raw = new Array[Byte](wp * hp)
+        (0 until hp).foreach { r =>
+          (0 until wp).foreach { c =>
+            raw(r * wp + c) = (img(x0 + c * dx, y0 + r * dy) & 0xff).toByte
+          }
+        }
+        body.write(PngFilter.filter(raw, wp, 1, ftForRow))
+      }
+    }
+    container(img.width, img.height, colorType = 0, interlaced = true, body.toByteArray)
+  }
+
+  /** The PNG file around already-filtered 8-bit scanlines: signature,
+    * IHDR, one deflated IDAT, IEND — each chunk length-prefixed and CRC'd.
+    */
+  private def container(width: Int, height: Int, colorType: Int, interlaced: Boolean,
+                        filtered: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     Signature.foreach(out.write)
     def chunk(ctype: String, data: Array[Byte]): Unit = {
@@ -215,60 +245,15 @@ object Png {
       w32(crc.getValue.toInt)
     }
     val ihdr = new Array[Byte](13)
-    def p32(a: Array[Byte], o: Int, v: Int): Unit = {
-      a(o) = (v >>> 24).toByte; a(o + 1) = (v >>> 16).toByte
-      a(o + 2) = (v >>> 8).toByte; a(o + 3) = v.toByte
+    def p32(o: Int, v: Int): Unit = {
+      ihdr(o) = (v >>> 24).toByte; ihdr(o + 1) = (v >>> 16).toByte
+      ihdr(o + 2) = (v >>> 8).toByte; ihdr(o + 3) = v.toByte
     }
-    p32(ihdr, 0, width); p32(ihdr, 4, height)
-    ihdr(8) = 8; ihdr(9) = colorType.toByte; ihdr(10) = 0; ihdr(11) = 0; ihdr(12) = 0
+    p32(0, width); p32(4, height)
+    ihdr(8) = 8; ihdr(9) = colorType.toByte; ihdr(10) = 0; ihdr(11) = 0
+    ihdr(12) = (if (interlaced) 1 else 0).toByte
     chunk("IHDR", ihdr)
     chunk("IDAT", Zlib.deflate(filtered))
-    chunk("IEND", Array.empty)
-    out.toByteArray
-  }
-
-  /** Adam7-interlaced 8-bit grayscale encoder (fixtures): the seven pass
-    * sub-images, each filtered per `ftForRow`, concatenated then deflated.
-    */
-  def encodeGrayAdam7(img: Gray, ftForRow: Int => Int = _ => 0): Array[Byte] = {
-    val passes = Array((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-      (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
-    val body = new java.io.ByteArrayOutputStream()
-    passes.foreach { case (x0, y0, dx, dy) =>
-      val wp = if (img.width > x0) (img.width - x0 + dx - 1) / dx else 0
-      val hp = if (img.height > y0) (img.height - y0 + dy - 1) / dy else 0
-      if (wp > 0 && hp > 0) {
-        val raw = new Array[Byte](wp * hp)
-        (0 until hp).foreach { r =>
-          (0 until wp).foreach { c =>
-            raw(r * wp + c) = (img(x0 + c * dx, y0 + r * dy) & 0xff).toByte
-          }
-        }
-        body.write(PngFilter.filter(raw, wp, 1, ftForRow))
-      }
-    }
-    val out = new java.io.ByteArrayOutputStream()
-    Signature.foreach(out.write)
-    def chunk(ctype: String, data: Array[Byte]): Unit = {
-      def w32(v: Int): Unit = {
-        out.write((v >>> 24) & 0xff); out.write((v >>> 16) & 0xff)
-        out.write((v >>> 8) & 0xff); out.write(v & 0xff)
-      }
-      w32(data.length)
-      val tb = ctype.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-      out.write(tb); out.write(data)
-      val crc = new CRC32(); crc.update(tb); crc.update(data)
-      w32(crc.getValue.toInt)
-    }
-    val ihdr = new Array[Byte](13)
-    def p32(a: Array[Byte], o: Int, v: Int): Unit = {
-      a(o) = (v >>> 24).toByte; a(o + 1) = (v >>> 16).toByte
-      a(o + 2) = (v >>> 8).toByte; a(o + 3) = v.toByte
-    }
-    p32(ihdr, 0, img.width); p32(ihdr, 4, img.height)
-    ihdr(8) = 8; ihdr(9) = 0; ihdr(10) = 0; ihdr(11) = 0; ihdr(12) = 1 // interlace 1
-    chunk("IHDR", ihdr)
-    chunk("IDAT", Zlib.deflate(body.toByteArray))
     chunk("IEND", Array.empty)
     out.toByteArray
   }

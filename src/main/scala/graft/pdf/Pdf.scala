@@ -590,15 +590,43 @@ object Pdf {
     * a pass-through + metric).
     */
   def parse(payload: Array[Byte]): Vector[PdfPage] = {
-    val latin = new String(payload, Latin1)
-    val doc =
-      try loadByXref(payload, latin)
-      catch {
-        case e: EncryptedPdfException => throw e // password-protected: not repairable
-        case _: Exception => loadByScan(payload, latin)
-      }
+    val doc = load(payload)
     buildPages(doc, doc.decryptor)
   }
+
+  /** The document's object graph: the xref chain, with the whole-file
+    * object scan as repair fallback. An encrypted document is not
+    * repairable, so its [[EncryptedPdfException]] rethrows.
+    */
+  private def load(payload: Array[Byte]): DocObjs = {
+    val latin = new String(payload, Latin1)
+    try loadByXref(payload, latin)
+    catch {
+      case e: EncryptedPdfException => throw e
+      case _: Exception => loadByScan(payload, latin)
+    }
+  }
+
+  /** Latin-1-framed string (one char per byte) → its bytes from `from` on.
+    * Truncating `toByte` on purpose: `getBytes(ISO_8859_1)` would turn a
+    * char above 0xFF into `?`.
+    */
+  private def latin1Bytes(raw: String, from: Int = 0): Array[Byte] = {
+    val bs = new Array[Byte](raw.length - from)
+    var i = from
+    while (i < raw.length) { bs(i - from) = raw.charAt(i).toByte; i += 1 }
+    bs
+  }
+
+  /** A raw dict string of object `o` in plain form: strings are
+    * individually encrypted with the object's key — except inside an
+    * ObjStm, whose stream decrypt already covered them.
+    */
+  private def plainString(raw: String, o: PdfObj, dec: Option[PdfCrypt.Decryptor]): String =
+    dec match {
+      case Some(d) if !o.fromObjStm => new String(d.decrypt(latin1Bytes(raw), o.num, o.gen), Latin1)
+      case _ => raw
+    }
 
   /** Document-information dictionary (trailer /Info): Title/Author/Subject/
     * Keywords/Creator/Producer/CreationDate/ModDate as decoded strings —
@@ -609,13 +637,7 @@ object Pdf {
     * encrypted documents (same contract as [[parse]]).
     */
   def docInfo(payload: Array[Byte]): Map[String, String] = {
-    val latin = new String(payload, Latin1)
-    val doc =
-      try loadByXref(payload, latin)
-      catch {
-        case e: EncryptedPdfException => throw e
-        case _: Exception => loadByScan(payload, latin)
-      }
+    val doc = load(payload)
     val dec = doc.decryptor
     doc.trailers.iterator.flatMap(t => refValue(t, "/Info")).nextOption()
       .flatMap(doc.objs.get) match {
@@ -624,19 +646,7 @@ object Pdf {
         val keys = Seq("Title", "Author", "Subject", "Keywords", "Creator",
           "Producer", "CreationDate", "ModDate")
         keys.flatMap { k =>
-          infoValue(o.dict, "/" + k).map { raw0 =>
-            // dict strings are individually encrypted with the object's key
-            // — except inside an ObjStm, whose stream decrypt covered them
-            val raw = dec match {
-              case Some(d) if !o.fromObjStm =>
-                val bs = new Array[Byte](raw0.length)
-                var i = 0
-                while (i < raw0.length) { bs(i) = raw0.charAt(i).toByte; i += 1 }
-                new String(d.decrypt(bs, o.num, o.gen), Latin1)
-              case _ => raw0 // unencrypted, or ObjStm-resident (already plain)
-            }
-            k -> decodeInfoString(raw)
-          }
+          infoValue(o.dict, "/" + k).map(raw => k -> decodeInfoString(plainString(raw, o, dec)))
         }.toMap
     }
   }
@@ -667,12 +677,9 @@ object Pdf {
     * otherwise (the printable-range PDFDocEncoding approximation).
     */
   private def decodeInfoString(raw: String): String =
-    if (raw.length >= 2 && raw.charAt(0) == 0xFE.toChar && raw.charAt(1) == 0xFF.toChar) {
-      val bs = new Array[Byte](raw.length - 2)
-      var i = 2
-      while (i < raw.length) { bs(i - 2) = raw.charAt(i).toByte; i += 1 }
-      new String(bs, java.nio.charset.StandardCharsets.UTF_16BE)
-    } else raw
+    if (raw.length >= 2 && raw.charAt(0) == 0xFE.toChar && raw.charAt(1) == 0xFF.toChar)
+      new String(latin1Bytes(raw, 2), java.nio.charset.StandardCharsets.UTF_16BE)
+    else raw
 
   /** `D:YYYYMMDDHHmmSS…` info date → (year, month, day) if parseable. */
   def infoDateYmd(s: String): Option[(Int, Int, Int)] = {
@@ -731,20 +738,12 @@ object Pdf {
       if (i < trailer.length && trailer.charAt(i) == '<') readHexString(trailer, i)._1
       else if (i < trailer.length && trailer.charAt(i) == '(') readString(trailer, i)._1
       else return Array.empty
-    val bs = new Array[Byte](raw.length)
-    var k = 0
-    while (k < raw.length) { bs(k) = raw.charAt(k).toByte; k += 1 }
-    bs
+    latin1Bytes(raw)
   }
 
   /** `key (literal)` / `key <hex>` value as raw bytes (for /O and /U). */
   private def rawStringBytes(dict: String, key: String): Option[Array[Byte]] =
-    infoValue(dict, key).map { raw =>
-      val bs = new Array[Byte](raw.length)
-      var i = 0
-      while (i < raw.length) { bs(i) = raw.charAt(i).toByte; i += 1 }
-      bs
-    }
+    infoValue(dict, key).map(latin1Bytes(_))
 
   private def extractSignedInt(dict: String, key: String): Option[Int] = {
     val p = cachedPattern("S" + key,
@@ -761,13 +760,7 @@ object Pdf {
     * (except ObjStm-resident annots, already covered by the stream).
     */
   def annotations(payload: Array[Byte]): Vector[(Int, String, String)] = {
-    val latin = new String(payload, Latin1)
-    val doc =
-      try loadByXref(payload, latin)
-      catch {
-        case e: EncryptedPdfException => throw e
-        case _: Exception => loadByScan(payload, latin)
-      }
+    val doc = load(payload)
     val dec = doc.decryptor
     val objs = doc.objs
     val rootNum = doc.trailers.iterator.flatMap(t => refValue(t, "/Root")).nextOption()
@@ -795,15 +788,7 @@ object Pdf {
                 if (subtype == "Widget") infoValue(ao.dict, "/V")
                 else infoValue(ao.dict, "/Contents")
               raw0.foreach { r0 =>
-                val r = dec match {
-                  case Some(dd) if !ao.fromObjStm =>
-                    val bs = new Array[Byte](r0.length)
-                    var i = 0
-                    while (i < r0.length) { bs(i) = r0.charAt(i).toByte; i += 1 }
-                    new String(dd.decrypt(bs, ao.num, ao.gen), Latin1)
-                  case _ => r0
-                }
-                out += ((pageIdx, subtype, decodeInfoString(r)))
+                out += ((pageIdx, subtype, decodeInfoString(plainString(r0, ao, dec))))
               }
             }
           }
@@ -1455,12 +1440,7 @@ object Pdf {
       var i = 0
       while (ascii && i < raw.length) { if (raw.charAt(i) >= 0x80) ascii = false; i += 1 }
       if (ascii) raw
-      else {
-        val bs = new Array[Byte](raw.length)
-        i = 0
-        while (i < raw.length) { bs(i) = raw.charAt(i).toByte; i += 1 }
-        new String(bs, Utf8)
-      }
+      else new String(latin1Bytes(raw), Utf8)
     }
   }
 

@@ -507,12 +507,20 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cutGif = gif.take(gif.length / 2)
     Seq(() => Png.decode(cutPng), () => Jpeg.decodeGray(progressive), () => Gif.decodeGray(cutGif))
       .foreach(d => intercept[java.io.IOException](d()))
+    // no image signature: hashed as the opaque byte grid
+    val text = "plain text payload: no PNG, JPEG or GIF signature up front"
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val media = Seq(1L -> png, 2L -> jpeg, 3L -> gif,
-      11L -> cutPng, 12L -> progressive, 13L -> cutGif).toDF("id", "payload")
-    val hashes = Multimodal.dHash56(s, media, decodePixels = true)
+      11L -> cutPng, 12L -> progressive, 13L -> cutGif, 21L -> text).toDF("id", "payload")
+    val hashes = Multimodal.dHash56(s, media)
       .collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
     assert(Seq(11L, 12L, 13L).forall(hashes(_).isEmpty), s"bad payloads must hash to null: $hashes")
-    val pairs = Multimodal.imageNearDupPairs(s, media, maxHamming = 3, decodePixels = true)
+    assert(hashes(1L) == Some(Multimodal.dHashImage(img)), "PNG arm hashes decoded pixels")
+    val cells = Multimodal.slotSums(text, 63)
+    val gridHash = (for (r <- 0 until 7; c <- 0 until 8 if cells(r * 9 + c) > cells(r * 9 + c + 1))
+      yield 1L << (r * 8 + c)).foldLeft(0L)(_ | _)
+    assert(hashes(21L) == Some(gridHash), "opaque payload hashes its byte grid")
+    val pairs = Multimodal.imageNearDupPairs(s, media, maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     TextDedup.releaseCaches()
     assert(pairs == Set((1L, 2L, 0), (1L, 3L, 0), (2L, 3L, 0)),
@@ -582,7 +590,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // -------------------------------------------------------------- multimodal
 
-  test("multimodal: stub decode is deterministic, total, schema-stable") {
+  test("multimodal: slot sums are deterministic, total, schema-stable") {
     val s = spark; import s.implicits._
     val media = Seq(
       (1L, "image", Array[Byte](1, 2, 3, 4, 5, 6, 7, 8)),
@@ -590,15 +598,14 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (3L, "audio", Array.empty[Byte]),
       (4L, "video", null.asInstanceOf[Array[Byte]])
     ).toDF("id", "kind", "payload").repartition(3)
-    val out = Multimodal.extractFeatures(spark, media, dim = 4)
+    val out = Multimodal.extractSlotFeatures(spark, media, dim = 4)
+    assert(out.columns.toSeq == Seq("id", "kind", "n_bytes", "slots_csv"))
     val rows = out.collect().map(r => r.id -> r).toMap
-    assert(rows(1L).ok && rows(2L).ok && !rows(3L).ok && !rows(4L).ok)
-    assert(rows(1L).features.toSeq == rows(2L).features.toSeq) // deterministic
-    assert(rows(1L).features.length == 4)
-    assert(rows(4L).n_bytes == 0L)
-    // feeds the similarity path end-to-end
-    val top = Multimodal.mediaTopK(spark, media, k = 1, dim = 4).collect()
-    assert(top.nonEmpty && top.head.getDouble(2) == 1.0) // 1↔2 are duplicates
+    assert(rows.keySet == Set(1L, 2L, 3L, 4L)) // total: no payload is dropped
+    assert(rows(1L).slots_csv == "6,8,10,12") // slot j sums bytes at i ≡ j (mod 4)
+    assert(rows(1L).slots_csv == rows(2L).slots_csv) // deterministic
+    assert(rows(3L).n_bytes == 0L && rows(3L).slots_csv == "0,0,0,0")
+    assert(rows(4L).n_bytes == 0L && rows(4L).slots_csv == "0,0,0,0")
   }
 
   test("multimodal: sampleFrames slices, strides, keeps the partial tail, skips empties") {
