@@ -108,7 +108,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString).toInt
     // N vs 4N inside the host's linear-scaling region ("1 executor of 2
     // cores" vs "4 executors"): the calibration sweep (see BENCH.md) shows
     // the full pipeline scales 2→8 cores at ~3.9× but saturates the VM's

@@ -106,9 +106,8 @@ object Construction {
   // patterns ≡ one search over `(?:p1)|(?:p2)|…` (pure boolean, no group
   // use), so ten scans per line become one.
   // The exclusion fold splits on prescreen-ability: patterns 0-3 start with
-  // literal keywords (token-gated via FactExclude), patterns 4-9 are all
-  // ^-anchored (cheap to scan, run always). OR of the two folds ≡ the
-  // original single fold.
+  // literal keywords (screened), patterns 4-9 are all ^-anchored (cheap to
+  // scan, run always). OR of the two folds ≡ the original single fold.
   private val excludeKeywordRx = rxI(excludePatterns.take(4).map(p => s"(?:$p)").mkString("|"))
   // all six start with ^: hoist it and test with lookingAt — find() over an
   // alternation of ^-anchored branches re-fails every branch at every
@@ -118,18 +117,39 @@ object Construction {
   private val fixtureRx = fixturePatterns.map(rxI).toArray
   private val quantityRx = quantityPatterns.map(rxI).toArray
   private val modelRx = modelPatterns.map(rxI).toArray
-  // digit-free subsets: model patterns 2-4 and spec patterns 5-8 require a
-  // digit in every alternative, so digit-free lines only need the rest
-  // (order within the subset is the original order — break semantics hold)
-  private val modelRxNoDigit = Array(modelRx(0))
-  private val emptyRx = Array.empty[Rx]
   private val dimensionRx = dimensionPatterns.map(rxI).toArray
   private val fullDimRx = fullDimPatterns.map(rxI).toArray
   private val mountingRx = mountingPatterns.map(rxI).toArray
   private val specRx = specPatterns.map(rxI).toArray
-  private val specRxNoDigit = specRx.take(4)
+  // spec patterns whose source names a page (construction.py:751-755)
+  private val specPageRef = specPatterns.map { p =>
+    val l = PyStr.lower(p); l.contains("page") || l.contains("pg")
+  }.toArray
   private val drawingRefRx = drawingReferencePatterns.map(rxS).toArray
   private val modelInLineRx = modelPatternsInLine.map(rxI).toArray
+
+  // Prescreen. Nearly every table-pattern scan on a line fails. One
+  // LiteralScreen over all per-line table patterns derives, from the
+  // pattern text alone, the literals each one needs (a fixture word
+  // between word boundaries, a quote, digit-dot-digit, a letter followed
+  // by digits, ...), finds them all in one automaton pass over the line,
+  // and a pattern runs only where its literals occur. The regexes stay the
+  // verifiers, so results do not change. Table pattern i is screen bit
+  // `<Table>At + i`; the pass is memoized per line across the detect pass
+  // and the enrich window. Soundness is pinned per pattern by
+  // PrescreenFactsSpec and FuzzFactsMain.
+  private[core] val ExcludeAt = 0
+  private[core] val FixtureAt = 1
+  private[core] val QuantityAt = FixtureAt + fixtureRx.length
+  private[core] val ModelAt = QuantityAt + quantityRx.length
+  private[core] val DimensionAt = ModelAt + modelRx.length
+  private[core] val FullDimAt = DimensionAt + dimensionRx.length
+  private[core] val MountingAt = FullDimAt + fullDimRx.length
+  private[core] val SpecAt = MountingAt + mountingRx.length
+  private[core] val screen = new LiteralScreen(
+    Vector(excludeKeywordRx) ++ fixtureRx ++ quantityRx ++ modelRx ++ dimensionRx ++
+      fullDimRx ++ mountingRx ++ specRx)
+  import LiteralScreen.{hasDigit, may}
 
   private val actionVerbStartRx =
     rxI("""^\s*(up\s+to|see|refer|use|install|mount|connect|note|notice|warning)\s+""")
@@ -154,12 +174,9 @@ object Construction {
   private val hyphenWsRx = rxS("""[-\s]+""")
   private val digitsRx = rxS("""\d+""")
 
-  // Hand scans replacing upperAsciiRx/digitClassRx containment probes: the
-  // per-call Matcher reset dominated the actual scan in JFR. Semantics are
-  // exactly the compiled patterns': [A-Z] is ASCII-only (case-sensitive, no
-  // folding); \d under UNICODE_CHARACTER_CLASS is \p{IsDigit} =
-  // Character.isDigit over CODE POINTS (non-BMP digits included, hence the
-  // codePointAt walk).
+  // Hand scan replacing an upperAsciiRx containment probe: the per-call
+  // Matcher reset dominated the actual scan in JFR. [A-Z] is ASCII-only
+  // (case-sensitive, no folding).
   private def hasUpperAscii(s: String): Boolean = {
     var i = 0
     while (i < s.length) {
@@ -169,23 +186,6 @@ object Construction {
     }
     false
   }
-  private def hasDigit(s: String): Boolean = {
-    var i = 0
-    val n = s.length
-    while (i < n) {
-      val c = s.charAt(i)
-      if (c < 0x80) {
-        if (c >= '0' && c <= '9') return true
-        i += 1
-      } else {
-        val cp = s.codePointAt(i)
-        if (Character.isDigit(cp)) return true
-        i += Character.charCount(cp)
-      }
-    }
-    false
-  }
-
   // constant phrase table, uppercased once (not per line); the first-char
   // table gates the 15 startsWith probes behind one array load
   private val instructionPhrasesUpper = instructionPhrases.map(PyStr.upper).toArray
@@ -197,268 +197,58 @@ object Construction {
     arr
   }
 
-  // Literal-word prescreen for the fixture/mounting tables: every
-  // alternative in fixturePatterns starts with a literal word followed by
-  // \b or \s+, and every mounting alternative starts with one of a fixed
-  // set of literal PREFIXES (prefix, not word: `wall[-\s]*hung` matches the
-  // single token "wallhung"). So a line whose word set contains no fixture
-  // first-word (resp. no word starting with a mounting prefix) cannot match
-  // any pattern of that table, and the 10 (resp. 6) finditer scans can be
-  // skipped. The scan is exact only for ASCII; any char ≥ 0x80 returns
-  // (true, true) — inconclusive, run the full loops — because exotic case
-  // folds (ſ→S) and combining marks could otherwise diverge from the
-  // regexes' Unicode semantics. Soundness is pinned by ConstructionSpec's
-  // prescreen property test.
-  private val fixtureFirstWords: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String]()
-    List(
-      // p1 fixtures        p2 pumps            p3 equipment
-      "pipe", "fitting", "duct", "conduit", "fixture", "valve", "faucet",
-      "sink", "toilet", "shower", "bathtub", "drain", "vent", "elbow", "tee",
-      "coupling", "reducer", "adapter", "cap", "plug", "flange", "gasket",
-      "hanger", "bracket", "mount",
-      "pump", "circulating", "booster", "centrifugal",
-      "equipment", "boiler", "heater", "tower", "cooling", "tank",
-      "reservoir", "vessel", "chiller",
-      // p4 stations        p5 connections      p6 packages
-      "station", "wash", "eye", "safety", "emergency",
-      "connection", "piping",
-      "package",
-      // p7/p8 shop         p9 materials        p10 generic
-      "shop", "repair", "body", "paint", "booth",
-      "fixtures", "mechanical",
-      "abs", "pvc", "cpvc", "pex", "copper", "steel", "stainless",
-      "galvanized", "cast", "brass", "bronze",
-      "item", "component", "part", "unit", "assembly", "system"
-    ).foreach(s.add)
-    s
-  }
-  private val mountingFirstPrefixes: Array[String] = Array(
-    "wall", "floor", "ceiling", "surface", "recessed", "concealed",
-    "exposed", "flush", "undercounter", "countertop", "freestanding",
-    "portable", "stationary", "fixed", "removable", "slip", "threaded",
-    "welded", "bolted", "hanging", "suspended", "mounting")
-
-  // Every alternative in the keyword exclusion patterns (excludePatterns
-  // 0-3) starts with one of these words followed by \s or a trailing \b, so
-  // the first word is always a COMPLETE token of the line.
-  private val excludeFirstWords: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String]()
-    List("prohibited", "copyright", "reserved", "confidential", "proprietary",
-      "use", "in", "strictly", "all", "page", "document",
-      "revision", "date", "prepared", "approved").foreach(s.add)
-    s
-  }
-  // The digit-free spec patterns (specPatterns 0-3) each start with a
-  // literal keyword whose tail may run straight into word chars
-  // ("specX", "ULtimate" — the second group is [A-Z0-9.-] under IGNORECASE,
-  // so it eats lowercase letters too): prefix match, not equality.
-  private val specFirstPrefixes: Array[String] = Array(
-    "astm", "ansi", "ul", "csa", "asme", "nema", "nfpa", "awwa", "ipc",
-    "iso", "din", "bs", "grade", "class", "type", "rating",
-    "spec", "ref", "dwg", "drawing")
-
-  // Every quantity-pattern alternative needs a qty/quantity token, a unit
-  // keyword after digits, a '(', digit '.' digit, or a bare trailing
-  // number (pattern 7's `|$)` arm). Pattern 7 has NO trailing \b, so its
-  // keywords match as token PREFIXES ("7 eaend", "689pcsi…") — both
-  // fuzz-found by FuzzFactsMain; prefix match, with qty/quantity included
-  // for the glued/after-digits form ("7quantity").
-  private val qtyPrefixes: Array[String] = Array(
-    "ea", "pc", "pieces", "unit", "qty", "quantity",
-    "lf", "ft", "feet", "sq", "square", "linear")
-  // Every dimension-pattern alternative needs a quote, ø (non-ASCII ⇒
-  // inconclusive anyway), an 'x' char, a length unit standalone-after-
-  // digits or glued ("5mm"), or a dia/size keyword ending a token directly
-  // followed (over \s/: only) by a digit-led token (patterns 10/18 have no
-  // leading \b, so the keyword can END any token: "and 7" genuinely
-  // matches via the 'D' alternative).
-  // "inch" is a PREFIX, not an equality: dimension pattern 9 lets the dia
-  // keyword glue straight onto the unit ("7inchdia", "141inchod" — \s* is
-  // optional between them; fuzz-found by FuzzFactsMain). The others carry
-  // a trailing \b, so equality is exact for them.
-  private val dimUnitSuffixes: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String]()
-    List("in", "ft", "feet", "cm", "mm", "m").foreach(s.add)
-    s
-  }
-
-  // Every model-pattern alternative needs a model/part keyword token, a
-  // token whose letters run straight into a digit ("K2032", IGNORECASE so
-  // case-folded), or a letters-'-'-digits span ("OM-141" — tokenized as
-  // letters, hyphen separator, digit-led token).
-  private val modelFirstWords: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String]()
-    List("model", "part", "pn", "sku", "cat", "catalog", "item").foreach(s.add)
-    s
-  }
-
-  private[core] val FactFixture = 1    // fixtureRx table may match
-  private[core] val FactMount = 2      // mountingRx table may match
-  private[core] val FactExclude = 4    // excludeKeywordRx may match
-  private[core] val FactCapPair = 8    // capPhraseRx may match
-  private[core] val FactSpec = 16     // specPatterns 0-3 may match
-  private[core] val FactDimAnchor = 32 // dimensionRx table may match
-  private[core] val FactQty = 64       // quantityRx table may match
-  private[core] val FactModel = 128    // modelRx table may match
-  private[core] val FactAll = 255
-
-  /** One pass over the line computing which pattern tables can possibly
-    * match (soundness: a cleared bit PROVES the table cannot match; a set
-    * bit means "run the regexes"). Exact only for ASCII — any char ≥ 0x80
-    * returns all bits, because exotic case folds and combining marks could
-    * otherwise diverge from the regexes' Unicode semantics. Soundness of
-    * every bit is pinned by PrescreenFactsSpec properties.
-    *
-    *  - FactFixture: a token equals a fixture-table first word.
-    *  - FactMount: a token starts with a mounting prefix.
-    *  - FactExclude: a token equals an exclusion-table first word.
-    *  - FactCapPair: two CONSECUTIVE tokens both look like [A-Z][A-Za-z]+
-    *    (capPhraseRx needs two such words separated by \s+; any non-word
-    *    separator makes the tokens consecutive here too — conservative).
-    *  - FactSpec: a token starts with a spec-table keyword prefix.
+  /** capPhraseRx needs two words of shape [A-Z][A-Za-z]+ split by \s+. It
+    * is case-sensitive, so it gets a char-class check instead of a
+    * literal: two consecutive word-char tokens of that shape (any non-word
+    * separator counts — conservative). Non-ASCII lines are inconclusive.
     */
-  // Java \s under UNICODE_CHARACTER_CLASS ≙ Character.isWhitespace on
-  // ASCII: \t, \n-\r (10-13), -, space.
-  @inline private def isWsAscii(c: Char): Boolean =
-    c == ' ' || c == '\t' || (c >= '\n' && c <= '\r') || (c >= 0x1C && c <= 0x1F)
-
-  private[core] def lineFacts(line: String): Int = {
+  private[core] def capPairShape(line: String): Boolean = {
     val n = line.length
-    var facts = 0
-    var prevCapShape = false
-    var prevEndsDigit = false    // last token's last char was a digit
-    var prevEndsLetter = false   // last token's last char was a letter
-    var pendingDimKw = false     // last token ended with a dia/size keyword
-    var sepWsColonOnly = true    // separator since last token was \s/: only
-    var sepHasHyphen = false     // separator since last token contained '-'
-    var lastTokAllDigits = false
-    var lastTokEnd = 0
+    var prevCap = false
     var i = 0
-    val sb = new java.lang.StringBuilder(16)
-    while (i < n && facts != FactAll) {
+    while (i < n) {
       val c = line.charAt(i)
-      if (c >= 0x80) return FactAll // non-ASCII: inconclusive
-      val isWord = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
-        (c >= '0' && c <= '9') || c == '_'
-      if (isWord) {
-        sb.setLength(0)
-        var j = i
-        var ascii = true
-        var hasX = false
-        var hasDigitInTok = false
-        while (j < n && {
-          val cj = line.charAt(j)
-          if (cj >= 0x80) { ascii = false; false }
-          else if ((cj >= 'a' && cj <= 'z') || (cj >= 'A' && cj <= 'Z') ||
-                   (cj >= '0' && cj <= '9') || cj == '_') {
-            if (cj == 'x' || cj == 'X') hasX = true
-            if (cj >= '0' && cj <= '9') hasDigitInTok = true
-            sb.append(if (cj >= 'A' && cj <= 'Z') (cj + 32).toChar else cj); true
-          } else false
-        }) j += 1
-        if (!ascii) return FactAll
-        val w = sb.toString
-        if (hasX) facts |= FactDimAnchor
-        if (pendingDimKw && sepWsColonOnly && c >= '0' && c <= '9')
-          facts |= FactDimAnchor
-        val startsLetter = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
-        if ((startsLetter && hasDigitInTok) ||
-            (prevEndsLetter && sepHasHyphen && c >= '0' && c <= '9'))
-          facts |= FactModel
-        if ((facts & FactModel) == 0 && modelFirstWords.contains(w))
-          facts |= FactModel
-        if ((facts & FactFixture) == 0 && fixtureFirstWords.contains(w))
-          facts |= FactFixture
-        if ((facts & FactExclude) == 0 && excludeFirstWords.contains(w))
-          facts |= FactExclude
-        if ((facts & FactMount) == 0) {
-          var k = 0
-          while ((facts & FactMount) == 0 && k < mountingFirstPrefixes.length) {
-            if (w.startsWith(mountingFirstPrefixes(k))) facts |= FactMount
-            k += 1
-          }
-        }
-        if ((facts & FactSpec) == 0) {
-          var k = 0
-          while ((facts & FactSpec) == 0 && k < specFirstPrefixes.length) {
-            if (w.startsWith(specFirstPrefixes(k))) facts |= FactSpec
-            k += 1
-          }
-        }
-        // digit-prefix split: w = digits + rest ("3ea" → "ea")
-        var r = 0
-        while (r < w.length && w.charAt(r) >= '0' && w.charAt(r) <= '9') r += 1
-        val allDigits = r == w.length
-        if (!allDigits) {
-          val rest = if (r == 0) w else w.substring(r)
-          val glued = r > 0
-          if ((facts & FactQty) == 0 &&
-              (w == "qty" || w == "quantity" ||
-               ((glued || prevEndsDigit) && {
-                 var k = 0
-                 var hit = false
-                 while (!hit && k < qtyPrefixes.length) {
-                   if (rest.startsWith(qtyPrefixes(k))) hit = true
-                   k += 1
-                 }
-                 hit
-               })))
-            facts |= FactQty
-          if ((facts & FactDimAnchor) == 0 && (glued || prevEndsDigit) &&
-              (dimUnitSuffixes.contains(rest) || rest.startsWith("inch")))
-            facts |= FactDimAnchor
-        }
-        val wl = w.charAt(w.length - 1)
-        pendingDimKw = wl == 'd' || w.endsWith("dia") || w.endsWith("diameter") ||
-          w.endsWith("size") || w.endsWith("dimension")
-        prevEndsDigit = wl >= '0' && wl <= '9'
-        prevEndsLetter = wl >= 'a' && wl <= 'z' // w is lowercased
-        lastTokAllDigits = allDigits
-        lastTokEnd = j
-        sepWsColonOnly = true
-        sepHasHyphen = false
-        // capPhraseRx is case-SENSITIVE: shape check on the ORIGINAL chars
-        val capShape = j - i >= 2 && {
-          val c0 = line.charAt(i); val c1 = line.charAt(i + 1)
-          c0 >= 'A' && c0 <= 'Z' &&
-            ((c1 >= 'A' && c1 <= 'Z') || (c1 >= 'a' && c1 <= 'z'))
-        }
-        if (capShape && prevCapShape) facts |= FactCapPair
-        prevCapShape = capShape
+      if (c >= 0x80) return true
+      if (LiteralScreen.isWordAscii(c)) {
+        var j = i + 1
+        while (j < n && LiteralScreen.isWordAscii(line.charAt(j))) j += 1
+        val c1 = if (j - i >= 2) line.charAt(i + 1) else ' '
+        val cap = c >= 'A' && c <= 'Z' && ((c1 >= 'A' && c1 <= 'Z') || (c1 >= 'a' && c1 <= 'z'))
+        if (cap && prevCap) return true
+        prevCap = cap
         i = j
-      } else {
-        if (c == '"' || c == '\'') facts |= FactDimAnchor
-        else if (c == '(') facts |= FactQty
-        else if (c == '.' && i > 0 && i + 1 < n &&
-                 line.charAt(i - 1) >= '0' && line.charAt(i - 1) <= '9' &&
-                 line.charAt(i + 1) >= '0' && line.charAt(i + 1) <= '9')
-          facts |= FactQty
-        if (!(isWsAscii(c) || c == ':')) sepWsColonOnly = false
-        if (c == '-') sepHasHyphen = true
-        i += 1
-      }
+      } else i += 1
     }
-    // quantity pattern 7's `(\d{1,3})\s*(?:…|$)` arm: a bare number token
-    // with only whitespace to end-of-line
-    if ((facts & FactQty) == 0 && lastTokAllDigits) {
-      var k = lastTokEnd
-      var wsOnly = true
-      while (wsOnly && k < n) {
-        val c = line.charAt(k)
-        if (c >= 0x80) return FactAll
-        wsOnly = isWsAscii(c)
-        k += 1
-      }
-      if (wsOnly) facts |= FactQty
-    }
-    facts
+    false
   }
 
-  /** (mayMatchFixture, mayMatchMounting); (true, true) when inconclusive. */
-  private[core] def wordPrescreen(line: String): (Boolean, Boolean) = {
-    val f = lineFacts(line)
-    ((f & FactFixture) != 0, (f & FactMount) != 0)
+  // The capitalized-phrase regex embeds the fixture match text
+  // (construction.py:258-273), so it cannot be compiled once. Java's
+  // CASE_INSENSITIVE | UNICODE_CASE compares chars by
+  // toLowerCase(toUpperCase(c)), so texts that differ only in case compile
+  // to the same language: the cache is keyed by that fold (whitespace runs
+  // stay exact). It is private and bounded — cleared when full — and its
+  // patterns take no slot in Rx's global cache or per-thread matchers.
+  private val phraseCache = new java.util.concurrent.ConcurrentHashMap[String, java.util.regex.Pattern]()
+  private val PhraseCacheMax = 512
+  private def caseFold(s: String): String = {
+    val sb = new java.lang.StringBuilder(s.length)
+    s.codePoints.forEach(c => sb.appendCodePoint(Character.toLowerCase(Character.toUpperCase(c))))
+    sb.toString
+  }
+  /** group(1) of the capitalized-phrase search before `fixtureText`. */
+  private[core] def phraseBefore(line: String, fixtureText: String): Option[String] = {
+    val folded = caseFold(fixtureText)
+    val key = if (caseFold(folded) == folded) folded else fixtureText
+    var p = phraseCache.get(key)
+    if (p == null) {
+      if (phraseCache.size >= PhraseCacheMax) phraseCache.clear()
+      p = Rx.compile("""\b([A-Z][A-Za-z\s]+?)\s*(?:""" + Rx.escape(key) +
+        """|package|equipment|fixture|station|connection)""", ignoreCase = true)
+      phraseCache.put(key, p)
+    }
+    val m = p.matcher(line)
+    if (m.find()) Some(m.group(1)) else None
   }
 
   // ---------------------------------------------------------------- P2 fold
@@ -481,24 +271,23 @@ object Construction {
 
     // Per-line memo across the fold: a context line is stripped/prescreened
     // once even though the detect pass and the enrich window both touch it
-    // (lineFacts is a pure function of the stripped line, so reuse is
-    // semantics-free; ~2x fewer prescreen scans on item-dense pages).
+    // (the screen is a pure function of the stripped line, so reuse is
+    // semantics-free; ~2x fewer prescreen passes on item-dense pages).
     val stripped = new Array[String](lines.length)
     var si = 0
     while (si < lines.length) { stripped(si) = PyStr.strip(lines(si)); si += 1 }
-    val factsMemo = new Array[Int](lines.length)
-    java.util.Arrays.fill(factsMemo, -1)
-    def factsOf(k: Int): Int = {
-      var f = factsMemo(k)
-      if (f == -1) { f = lineFacts(stripped(k)); factsMemo(k) = f }
-      f
+    val screenMemo = new Array[Array[Long]](lines.length)
+    def screenOf(k: Int): Array[Long] = {
+      var b = screenMemo(k)
+      if (b == null) { b = screen.screen(stripped(k)); screenMemo(k) = b }
+      b
     }
 
     var lineNum = 0
     while (lineNum < lines.length) {
       val line = stripped(lineNum)
       if (line.nonEmpty) {
-        detectItemLineF(line, pageNum, lineNum, factsOf(lineNum)) match {
+        detectItemLineF(line, pageNum, lineNum, screenOf(lineNum)) match {
           case Some(d) =>
             if (current != null && current.meaningful) items += current.toRaw
             current = new OpenItem(
@@ -522,7 +311,7 @@ object Construction {
               var k = lo
               while (k <= hi) {
                 val c = stripped(k)
-                if (c.nonEmpty) enrichItemF(current, c, factsOf(k))
+                if (c.nonEmpty) enrichItemF(current, c, screenOf(k))
                 k += 1
               }
               if (hi > enrichedUpTo) enrichedUpTo = hi
@@ -538,17 +327,17 @@ object Construction {
   // ------------------------------------------------------ P3 line classifier
   /** _detect_item_line (construction.py:216-649). */
   def detectItemLine(line: String, pageNum: Long, lineNum: Long): Option[Detected] =
-    detectItemLineF(line, pageNum, lineNum, lineFacts(line))
+    detectItemLineF(line, pageNum, lineNum, screen.screen(line))
 
   /** detectItemLine with the prescreen precomputed (extractItems memoizes
     * it per line across the detect pass and the enrich window).
     */
   private[core] def detectItemLineF(
-      line: String, pageNum: Long, lineNum: Long, facts: Int): Option[Detected] = {
+      line: String, pageNum: Long, lineNum: Long, bits: Array[Long]): Option[Detected] = {
 
-    // exclusion regexes (:222-224) — keyword fold prescreened, anchored
-    // fold always (equivalent to the original 10-pattern fold)
-    if ((facts & FactExclude) != 0 && excludeKeywordRx.containsMatch(line)) return None
+    // exclusion regexes (:222-224) — keyword fold screened, anchored fold
+    // always (equivalent to the original 10-pattern fold)
+    if (may(bits, ExcludeAt) && excludeKeywordRx.containsMatch(line)) return None
     if (excludeAnchoredRx.matchesAt(line)) return None
 
     // instruction-phrase prefixes (:227-230)
@@ -566,32 +355,27 @@ object Construction {
     if (PyStr.len(PyStr.strip(line)) < 3) return None
 
     val d = new Detected
-    val mayFixture = (facts & FactFixture) != 0
-    val mayMount = (facts & FactMount) != 0
     // fixture types — longest match across all patterns (:243-254)
     var bestMatch: String = null
     var bestLen = 0
-    (if (mayFixture) fixtureRx else emptyRx).foreach { rx =>
-      rx.finditer(line).foreach { m =>
+    var fi = 0
+    while (fi < fixtureRx.length) {
+      if (may(bits, FixtureAt + fi)) fixtureRx(fi).finditer(line).foreach { m =>
         val t = PyStr.strip(m.group0)
         if (PyStr.len(t) > bestLen) { bestMatch = t; bestLen = PyStr.len(t) }
       }
+      fi += 1
     }
 
     if (bestMatch != null) {
       // capitalized phrase before the match (:258-273)
-      val fullPat = """\b([A-Z][A-Za-z\s]+?)\s*(?:""" + Rx.escape(bestMatch) +
-        """|package|equipment|fixture|station|connection)"""
-      rxI(fullPat).search(line) match {
-        case Some(fm) =>
-          val fixtureType = PyStr.strip(fm.group(1)) + " " + bestMatch
-          d.tpe = Some(PyStr.title(dedupConsecutiveWords(fixtureType)))
-        case None =>
-          d.tpe = Some(PyStr.title(bestMatch))
-      }
-    } else if ((facts & FactCapPair) != 0) {
+      d.tpe = Some(phraseBefore(line, bestMatch) match {
+        case Some(g) => PyStr.title(dedupConsecutiveWords(PyStr.strip(g) + " " + bestMatch))
+        case None    => PyStr.title(bestMatch)
+      })
+    } else if (capPairShape(line)) {
       // inferred capitalized multi-word phrase (:276-291); no IGNORECASE;
-      // prescreened — needs two consecutive capitalized words
+      // needs two consecutive capitalized words
       capPhraseRx.search(line).foreach { cp =>
         val potential = PyStr.strip(cp.group(1))
         val isDimensionPattern = dimShapeRx.containsMatch(potential)
@@ -603,20 +387,14 @@ object Construction {
       }
     }
 
-    // Digit prescreen: every quantity / dimension / full-dim pattern
-    // requires `\d` to participate in any match, so a digit-free line
-    // cannot match any of them — skipping the 8+19(+12) regex scans is
-    // semantics-free (the loops below would fall through unmatched).
-    val lineHasDigit = hasDigit(line)
-
-    // quantities (:294-351) — FactQty prescreen, see lineFacts
+    // quantities (:294-351)
     // the pattern loops below use `match` instead of Option.foreach: the
     // foreach closures captured the break vars, boxing them into
     // BooleanRefs on every call (visible in JFR allocation samples)
-    var qtyBreak = !lineHasDigit || (facts & FactQty) == 0
-    val qtyIt = quantityRx.iterator
-    while (!qtyBreak && qtyIt.hasNext) {
-      qtyIt.next().search(line) match { case None => (); case Some(m) =>
+    var qtyBreak = false
+    var qi = 0
+    while (!qtyBreak && qi < quantityRx.length) {
+      if (may(bits, QuantityAt + qi)) quantityRx(qi).search(line) match { case None => (); case Some(m) =>
         try {
           val qtyStr = m.group(1)
           if (qtyStr == null) throw new NumberFormatException("no group") // ≙ IndexError-ish guard
@@ -656,13 +434,14 @@ object Construction {
           }
         } catch { case _: NumberFormatException => () } // ≙ except (ValueError, IndexError): pass
       }
+      qi += 1
     }
 
-    // model numbers (:353-405) — FactModel prescreen, see lineFacts
+    // model numbers (:353-405)
     val allModels = ArrayBuffer.empty[String]
-    (if ((facts & FactModel) == 0) emptyRx
-     else if (lineHasDigit) modelRx else modelRxNoDigit).foreach { rx =>
-      rx.finditer(line).foreach { m =>
+    var mi = 0
+    while (mi < modelRx.length) {
+      if (may(bits, ModelAt + mi)) modelRx(mi).finditer(line).foreach { m =>
         val groups = m.groups
         if (groups.nonEmpty) {
           var gi = groups.length - 1
@@ -704,16 +483,17 @@ object Construction {
           }
         }
       }
+      mi += 1
     }
     if (allModels.nonEmpty) {
       d.model = Some(allModels.take(2).mkString(", "))
     }
 
-    // dimensions (:407-486) — digit + FactDimAnchor prescreens
-    var dimBreak = !lineHasDigit || (facts & FactDimAnchor) == 0
-    val dimIt = dimensionRx.iterator
-    while (!dimBreak && dimIt.hasNext) {
-      dimIt.next().search(line) match { case None => (); case Some(m) =>
+    // dimensions (:407-486)
+    var dimBreak = false
+    var di = 0
+    while (!dimBreak && di < dimensionRx.length) {
+      if (may(bits, DimensionAt + di)) dimensionRx(di).search(line) match { case None => (); case Some(m) =>
         val dimParts = m.groups.filter(g => g != null && g.nonEmpty)
         if (dimParts.nonEmpty) {
           val filtered = dimParts.filter { dim =>
@@ -726,8 +506,9 @@ object Construction {
             } else true
           }
           if (filtered.nonEmpty) {
-            val fullDimFound = fullDimRx.iterator
-              .flatMap(fp => fp.search(line).map(fm => PyStr.strip(fm.group(1))))
+            val fullDimFound = fullDimRx.indices.iterator
+              .filter(i => may(bits, FullDimAt + i))
+              .flatMap(i => fullDimRx(i).search(line).map(fm => PyStr.strip(fm.group(1))))
               .nextOption()
             fullDimFound match {
               case Some(fd) =>
@@ -746,28 +527,26 @@ object Construction {
           }
         }
       }
+      di += 1
     }
 
-    // mounting (:489-494) — word prescreen, see above
-    var mountBreak = !mayMount
-    val mountIt = mountingRx.iterator
-    while (!mountBreak && mountIt.hasNext) {
-      mountIt.next().search(line) match { case None => (); case Some(m) =>
+    // mounting (:489-494)
+    var mountBreak = false
+    var ui = 0
+    while (!mountBreak && ui < mountingRx.length) {
+      if (may(bits, MountingAt + ui)) mountingRx(ui).search(line) match { case None => (); case Some(m) =>
         d.mounting = Some(PyStr.strip(m.group0))
         mountBreak = true
       }
+      ui += 1
     }
 
-    // specs (:496-514) — patterns 0-3 are keyword-led (FactSpec gates
-    // them); 4-7 need a digit. Skipping a non-matchable prefix of the
-    // break-at-first-match loop preserves its order semantics.
+    // specs (:496-514) — skipping a pattern that cannot match keeps the
+    // break-at-first-match order semantics
     var specBreak = false
-    val maySpecKw = (facts & FactSpec) != 0
-    val specIt =
-      (if (lineHasDigit) { if (maySpecKw) specRx else specRx.drop(4) }
-       else { if (maySpecKw) specRxNoDigit else emptyRx }).iterator
-    while (!specBreak && specIt.hasNext) {
-      specIt.next().search(line) match { case None => (); case Some(m) =>
+    var pi = 0
+    while (!specBreak && pi < specRx.length) {
+      if (may(bits, SpecAt + pi)) specRx(pi).search(line) match { case None => (); case Some(m) =>
         val groups = m.groups
         val specStr =
           if (groups.nonEmpty) PyStr.strip(groups.filter(g => g != null && g.nonEmpty).mkString(" "))
@@ -781,6 +560,7 @@ object Construction {
           specBreak = true
         }
       }
+      pi += 1
     }
 
     // final instruction re-validation (:516-533)
@@ -860,22 +640,16 @@ object Construction {
     * line "SEE PAGE 5" contributes quantity 5.
     */
   def enrichItem(item: OpenItem, line: String): Unit =
-    enrichItemF(item, line, lineFacts(line))
+    enrichItemF(item, line, screen.screen(line))
 
   /** enrichItem with the prescreen precomputed (see detectItemLineF). */
-  private[core] def enrichItemF(item: OpenItem, line: String, facts: Int): Unit = {
-    // digit prescreen (see detectItemLine): quantity/dimension patterns
-    // all require \d, so digit-free context lines skip those loops;
-    // lineFacts gates the quantity/dimension/mounting tables (same
-    // soundness contract as in detectItemLine, one scan for all three)
-    val lineHasDigit = hasDigit(line)
-
+  private[core] def enrichItemF(item: OpenItem, line: String, bits: Array[Long]): Unit = {
     // quantity (:654-667)
     if (!item.quantity.exists(_.truthy)) {
-      var brk = !lineHasDigit || (facts & FactQty) == 0
-      val it = quantityRx.iterator
-      while (!brk && it.hasNext) {
-        it.next().search(line) match { case None => (); case Some(m) =>
+      var brk = false
+      var i = 0
+      while (!brk && i < quantityRx.length) {
+        if (may(bits, QuantityAt + i)) quantityRx(i).search(line) match { case None => (); case Some(m) =>
           try {
             val qtyStr = m.group(1)
             if (qtyStr == null) throw new NumberFormatException("no group")
@@ -884,15 +658,16 @@ object Construction {
           } catch { case _: NumberFormatException => () }
           brk = true // break sits outside the try (construction.py:667)
         }
+        i += 1
       }
     }
 
-    // model (:670-685) — FactModel prescreen, see lineFacts
+    // model (:670-685)
     if (!item.modelNumber.exists(_.nonEmpty)) {
-      var brk = (facts & FactModel) == 0
-      val it = (if (lineHasDigit) modelRx else modelRxNoDigit).iterator
-      while (!brk && it.hasNext) {
-        it.next().search(line) match { case None => (); case Some(m) =>
+      var brk = false
+      var i = 0
+      while (!brk && i < modelRx.length) {
+        if (may(bits, ModelAt + i)) modelRx(i).search(line) match { case None => (); case Some(m) =>
           val groups = m.groups
           if (groups.nonEmpty) {
             var gi = groups.length - 1
@@ -908,15 +683,16 @@ object Construction {
           } else item.modelNumber = Some(PyStr.strip(m.group0))
           brk = true
         }
+        i += 1
       }
     }
 
-    // dimensions (:689-717) — digit + FactDimAnchor prescreens
+    // dimensions (:689-717)
     if (!item.dimensions.exists(_.nonEmpty)) {
-      var brk = !lineHasDigit || (facts & FactDimAnchor) == 0
-      val it = dimensionRx.iterator
-      while (!brk && it.hasNext) {
-        it.next().search(line) match { case None => (); case Some(m) =>
+      var brk = false
+      var i = 0
+      while (!brk && i < dimensionRx.length) {
+        if (may(bits, DimensionAt + i)) dimensionRx(i).search(line) match { case None => (); case Some(m) =>
           val dimParts = m.groups.filter(g => g != null)
             .map(PyStr.strip).filter(_.nonEmpty)
           if (dimParts.nonEmpty) {
@@ -932,15 +708,16 @@ object Construction {
           }
           brk = true
         }
+        i += 1
       }
     }
 
-    // mounting (:720-730) — word prescreen, see detectItemLine
+    // mounting (:720-730)
     if (!item.mountingType.exists(_.nonEmpty)) {
-      var brk = (facts & FactMount) == 0
-      val it = mountingRx.iterator
-      while (!brk && it.hasNext) {
-        it.next().search(line) match { case None => (); case Some(m) =>
+      var brk = false
+      var i = 0
+      while (!brk && i < mountingRx.length) {
+        if (may(bits, MountingAt + i)) mountingRx(i).search(line) match { case None => (); case Some(m) =>
           val mounting0 = PyStr.strip(m.group0)
           if (mounting0.nonEmpty) {
             var mounting = hyphenWsRx.p.matcher(PyStr.lower(mounting0)).replaceAll("-")
@@ -949,25 +726,22 @@ object Construction {
           }
           brk = true
         }
+        i += 1
       }
     }
 
-    // spec (:733-758) — may overwrite page_number from a page reference;
-    // patterns 0-3 are keyword-led (FactSpec), 4-7 need a digit
+    // spec (:733-758) — may overwrite page_number from a page reference
     if (!item.specReference.exists(_.nonEmpty)) {
       var brk = false
-      var pi = if ((facts & FactSpec) != 0) 0 else 4
-      val nSpec = if (lineHasDigit) specRx.length else specRxNoDigit.length
-      while (!brk && pi < nSpec) {
-        val pat = specPatterns(pi)
-        specRx(pi).search(line) match { case None => (); case Some(m) =>
+      var i = 0
+      while (!brk && i < specRx.length) {
+        if (may(bits, SpecAt + i)) specRx(i).search(line) match { case None => (); case Some(m) =>
           val groups = m.groups
           val specStr =
             if (groups.nonEmpty) PyStr.strip(groups.filter(g => g != null && g.nonEmpty).mkString(" "))
             else PyStr.strip(m.group0)
           if (specStr.nonEmpty) item.specReference = Some(specStr)
-          val patLower = PyStr.lower(pat)
-          if (patLower.contains("page") || patLower.contains("pg")) {
+          if (specPageRef(i)) {
             digitsRx.search(specStr).foreach { pm =>
               try item.pageNumber = PyInt.parse(pm.group0)
               catch { case _: NumberFormatException => () }
@@ -975,7 +749,7 @@ object Construction {
           }
           brk = true
         }
-        pi += 1
+        i += 1
       }
     }
   }

@@ -114,11 +114,17 @@ object Rx {
     val hit = cache.get(pattern)
     if (hit != null) hit
     else {
-      val rx = new Rx(pattern, Pattern.compile(pattern, if (ignoreCase) base | ic else base))
+      val rx = new Rx(pattern, compile(pattern, ignoreCase))
       val prev = cache.putIfAbsent(pattern, rx)
       if (prev != null) prev else rx
     }
   }
+
+  /** The dialect's flags without the cache or a matcher slot: for
+    * patterns built from input text, which must not accumulate here.
+    */
+  def compile(pattern: String, ignoreCase: Boolean): Pattern =
+    Pattern.compile(pattern, if (ignoreCase) base | ic else base)
 
   /** re.escape (Python ≥3.7): backslash-escape only special characters. */
   private val escapeSet = "()[]{}?*+-|^$\\.&~# \t\n\r\f".toSet

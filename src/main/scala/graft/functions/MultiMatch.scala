@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.core.AcAutomaton
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -42,7 +43,7 @@ case class MultiMatch(child: Expression, patterns: Seq[String])
     else TypeCheckResult.TypeCheckFailure(
       s"multi_match expects string, got ${child.dataType}")
 
-  @transient private lazy val automaton = new AcAutomaton(
+  @transient private lazy val automaton = AcAutomaton.ofBytes(
     patterns.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray)
 
   override def eval(input: InternalRow): Any = {
@@ -105,55 +106,4 @@ object MultiMatch {
         MultiMatch(exprs.head, pats)
       },
       "built-in")
-}
-
-/** The Aho–Corasick automaton in dense delta form: a full 256-way
-  * transition table per node (failure links resolved at build time, so the
-  * hot loop is a single array index per input byte) plus per-node merged
-  * output sets (pattern ids ending at the node, INCLUDING every proper
-  * suffix that is itself a pattern — merged through the failure links).
-  * Built once per expression on each executor; size is Θ(256·Σ|pattern|)
-  * ints, the classic time-for-space trade of the dense construction.
-  */
-final class AcAutomaton(patternBytes: Array[Array[Byte]]) extends Serializable {
-  val nPatterns: Int = patternBytes.length
-
-  val (delta: Array[Array[Int]], outputs: Array[Array[Int]]) = {
-    val next = scala.collection.mutable.ArrayBuffer(Array.fill(256)(-1))
-    val out = scala.collection.mutable.ArrayBuffer(List.empty[Int])
-    // trie
-    patternBytes.zipWithIndex.foreach { case (p, pid) =>
-      var s = 0
-      p.foreach { b =>
-        val c = b & 0xff
-        if (next(s)(c) == -1) {
-          next += Array.fill(256)(-1)
-          out += Nil
-          next(s)(c) = next.length - 1
-        }
-        s = next(s)(c)
-      }
-      out(s) = pid :: out(s)
-    }
-    // BFS: failure links, then resolve to a dense DFA and merge outputs
-    val n = next.length
-    val fail = new Array[Int](n)
-    val queue = scala.collection.mutable.Queue.empty[Int]
-    (0 until 256).foreach { c =>
-      val t = next(0)(c)
-      if (t == -1) next(0)(c) = 0
-      else { fail(t) = 0; queue += t }
-    }
-    while (queue.nonEmpty) {
-      val s = queue.dequeue()
-      out(s) = out(s) ::: out(fail(s))
-      (0 until 256).foreach { c =>
-        val t = next(s)(c)
-        if (t == -1) next(s)(c) = next(fail(s))(c)
-        else { fail(t) = next(fail(s))(c); queue += t }
-      }
-    }
-    (next.toArray,
-      out.map(o => if (o.isEmpty) null else o.toArray.sorted).toArray)
-  }
 }

@@ -259,10 +259,13 @@ object Jpeg {
     while (parsing) {
       if (pos + 4 > bytes.length) throw new java.io.IOException("truncated segments")
       if (b(pos) != 0xFF) throw new java.io.IOException("marker expected")
+      // any number of 0xFF fill bytes may precede a marker (T.81 B.1.1.2)
+      while (b(pos + 1) == 0xFF) pos += 1
       val marker = b(pos + 1)
       pos += 2
       marker match {
         case 0xD8 => () // stray SOI
+        case 0x01 => () // TEM: standalone, no length
         case m if m >= 0xD0 && m <= 0xD7 => () // stray RST
         case 0xD9 => throw new java.io.IOException("EOI before SOS")
         case 0xC0 | 0xC1 => // baseline / extended sequential

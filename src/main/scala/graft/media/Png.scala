@@ -98,13 +98,24 @@ object Png {
     val bitsPerPixel = channels * bitDepth
     // filter left-reference distance: whole bytes, min 1 (RFC 2083 §6.2)
     val fbpp = math.max(1, bitsPerPixel / 8)
-    val inflated = Zlib.inflate(idat.toByteArray)
+    def rowBytesFor(w: Int): Int = (w * bitsPerPixel + 7) / 8
+    def passDims(x0: Int, y0: Int, dx: Int, dy: Int): (Int, Int) =
+      (if (width > x0) (width - x0 + dx - 1) / dx else 0,
+        if (height > y0) (height - y0 + dy - 1) / dy else 0)
+    // the exact inflated size IHDR implies — a filter byte per row, per
+    // Adam7 pass when interlaced — bounds the inflate (an IDAT bomb throws)
+    val passes =
+      if (interlaced) Adam7.toSeq.map { case (x0, y0, dx, dy) => passDims(x0, y0, dx, dy) }
+      else Seq((width, height))
+    val expected = passes.map { case (w, h) =>
+      if (w > 0 && h > 0) h.toLong * ((w.toLong * bitsPerPixel + 7) / 8 + 1) else 0L
+    }.sum
+    val inflated = Zlib.inflate(idat.toByteArray, math.min(expected, Int.MaxValue.toLong).toInt)
 
     // per-pixel channel samples, 0..255 (depth 16 keeps the high byte;
     // sub-byte depths unpack MSB-first). Filled sequentially for
     // non-interlaced files, pass-by-pass (Adam7 scatter) otherwise.
     val samples = new Array[Int](width * height * channels)
-    def rowBytesFor(w: Int): Int = (w * bitsPerPixel + 7) / 8
     def extractRow(raw: Array[Byte], rowBase: Int, w: Int,
                    emit: (Int, Int, Int) => Unit): Unit = {
       var x = 0
@@ -138,8 +149,7 @@ object Png {
     } else {
       var off = 0
       Adam7.foreach { case (x0, y0, dx, dy) =>
-        val wp = if (width > x0) (width - x0 + dx - 1) / dx else 0
-        val hp = if (height > y0) (height - y0 + dy - 1) / dy else 0
+        val (wp, hp) = passDims(x0, y0, dx, dy)
         if (wp > 0 && hp > 0) {
           val rb = rowBytesFor(wp)
           val passLen = hp * (rb + 1)

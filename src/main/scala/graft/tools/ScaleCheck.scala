@@ -15,7 +15,8 @@ object ScaleCheck {
   def main(args: Array[String]): Unit = {
     val replicate = if (args.nonEmpty) args(0).toInt else 600
     val buckets = if (args.length > 1) args(1).toInt else 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString).toInt
     val fat = sys.env.getOrElse("SPARK_GRAFT_BENCH_FAT", "16").toInt
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

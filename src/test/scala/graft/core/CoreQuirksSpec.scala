@@ -23,6 +23,41 @@ class CoreQuirksSpec extends AnyFunSuite {
     assert(it.rawText.contains("VALVE PACKAGE MODEL VP-77"))
   }
 
+  test("fixture phrase lookup stays bounded: case and whitespace variants add no matchers") {
+    // construction.py:258-273 builds a regex from the matched fixture text;
+    // the per-text regex is the reference, built here per variant
+    def reference(line: String, text: String): Option[String] = {
+      val p = java.util.regex.Pattern.compile(
+        """\b([A-Z][A-Za-z\s]+?)\s*(?:""" + Rx.escape(text) +
+          """|package|equipment|fixture|station|connection)""",
+        java.util.regex.Pattern.UNICODE_CHARACTER_CLASS |
+          java.util.regex.Pattern.CASE_INSENSITIVE | java.util.regex.Pattern.UNICODE_CASE)
+      val m = p.matcher(line)
+      if (m.find()) Some(m.group(1)) else None
+    }
+    // 2,000 distinct runs of spaces and tabs, 1 to 10 long
+    val spaces = (2 until 2002).map(k =>
+      Integer.toBinaryString(k).tail.map(b => if (b == '1') '\t' else ' '))
+    val cases = (0 until 16).map(k =>
+      "pipe".zipWithIndex.map { case (c, b) => if ((k >> b & 1) == 1) c.toUpper else c }.mkString)
+    val variants = spaces.map(ws => (s"Big Cooling${ws}Tower 3 ea", s"Cooling${ws}Tower")) ++
+      cases.map(v => (s"Main Supply $v 2 ea", v)) ++
+      Seq(("Kelvin \u212Aey Pipe", "\u212Aey Pipe"), ("\u017Fteel pipe", "\u017Fteel"))
+    // first use of each code path on this thread
+    Seq(variants.head, variants(spaces.size), variants.last)
+      .foreach { case (line, _) => Construction.detectItemLine(line, 1L, 0L) }
+    val before = Rx.tlInits.get
+    val got = variants.map { case (line, text) => Construction.phraseBefore(line, text) }
+    variants.foreach { case (line, _) => Construction.detectItemLine(line, 1L, 0L) }
+    assert(Rx.tlInits.get - before <= 8, "per-text patterns leaked into Rx")
+    variants.zip(got).foreach { case ((line, text), g) =>
+      assert(g == reference(line, text), s"phrase differs on ${line.replace("\t", "\\t")}")
+    }
+    assert(got.head.contains("Big"))
+    assert(Construction.detectItemLine("Main Supply PiPe 2 ea", 1L, 0L).flatMap(_.tpe)
+      .contains("Main Supply Pipe"))
+  }
+
   test("decimal-spec quirk: 'spec: 31.1' becomes BOTH spec and string quantity") {
     // construction.py:322-340 + :496-514 — the decimal feeds spec_reference
     // and survives as a *string* quantity (never int-coerced)

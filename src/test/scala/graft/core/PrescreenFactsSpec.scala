@@ -1,15 +1,19 @@
 package graft.core
 
+import graft.fixtures.CorpusIO
 import org.scalacheck.{Gen, Prop, Test => ScTest}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Soundness of [[Construction.lineFacts]]: a CLEARED bit must prove the
-  * corresponding pattern table cannot match the line (set bits promise
-  * nothing). Each property rebuilds the gated regexes from the Semantics
-  * tables — the same folds production compiles — and asserts no match on
-  * any line whose bit is clear.
+/** Soundness of the construction fold's prescreen
+  * ([[Construction.screen]], a [[LiteralScreen]]): a CLEARED bit must
+  * prove that its pattern cannot match the line (set bits promise
+  * nothing). Each property rebuilds the regexes from the Semantics tables —
+  * the same patterns production compiles — and asserts no match on any
+  * line whose bit is clear. The capitalized-phrase pattern is
+  * case-sensitive and keeps a char-class check, [[Construction.capPairShape]].
   */
 class PrescreenFactsSpec extends AnyFunSuite {
+  import Construction._
 
   private def rxI(p: String) = Rx(p, ignoreCase = true)
 
@@ -20,12 +24,28 @@ class PrescreenFactsSpec extends AnyFunSuite {
   private val excludeAnchoredRx =
     rxI(Semantics.excludePatterns.drop(4).map(p => s"(?:$p)").mkString("|"))
   private val capPhraseRx = Rx("""\b([A-Z][A-Za-z]+(?:\s+[A-Z][A-Za-z]+)+)""")
-  private val specKwRx = Semantics.specPatterns.take(4).map(rxI)
-  private val quantityRx = Semantics.quantityPatterns.map(rxI)
-  private val dimensionRx = Semantics.dimensionPatterns.map(rxI)
-  private val modelRx = Semantics.modelPatterns.map(rxI)
   private val anchoredHoisted =
     rxI(Semantics.excludePatterns.drop(4).map(p => s"(?:${p.stripPrefix("^")})").mkString("|"))
+
+  /** (family, screen bit, regex) for every pattern the screen gates. */
+  private def family(name: String, patterns: List[String], at: Int) =
+    patterns.zipWithIndex.map { case (p, i) => (s"$name p$i", at + i, rxI(p)) }
+  private val quantity = family("quantity", Semantics.quantityPatterns, QuantityAt)
+  private val model = family("model", Semantics.modelPatterns, ModelAt)
+  private val dimension = family("dimension", Semantics.dimensionPatterns, DimensionAt)
+  private val spec = family("spec", Semantics.specPatterns, SpecAt)
+  private val sevenFamilies =
+    family("fixture", Semantics.fixturePatterns, FixtureAt) ++ quantity ++ model ++
+      dimension ++ family("full-dim", Semantics.fullDimPatterns, FullDimAt) ++
+      family("mounting", Semantics.mountingPatterns, MountingAt) ++ spec
+  private val allScreened = ("exclusion fold", ExcludeAt, excludeKeywordRx) +: sevenFamilies
+
+  private def skipped(line: String, bit: Int): Boolean =
+    !LiteralScreen.may(screen.screen(line), bit)
+
+  /** The patterns of `table` the screen skips although they match. */
+  private def unsound(table: Seq[(String, Int, Rx)], line: String): Seq[String] =
+    table.collect { case (name, bit, rx) if skipped(line, bit) && rx.containsMatch(line) => name }
 
   private def check(prop: Prop): Unit = {
     val res = ScTest.check(ScTest.Parameters.default.withMinSuccessfulTests(500), prop)
@@ -63,7 +83,7 @@ class PrescreenFactsSpec extends AnyFunSuite {
       "qty 3", "QTY: 0", "quantity: 12", "3ea", "3 ea", "3, ea", "5 each",
       "12 pcs", "7pc", "4 units", "90 lf", "14 sq ft", "3 linear feet",
       "1.5", "a 1.5 b", "(3)", "room (12)", "Valve Box (4)", "end 42",
-      "end 42 ", "42 end", "12345", "end 42.", "42", "and 7",
+      "end 42 ", "42 end", "12345", "end 42.", "42", "and 7",
       "road: 66", "D: 5", "d5", "id 3", "OD: 7", "media 5", "resize: 9",
       "dimensions: 24", "dimension: 24", "size 8", "5mm", "5.5mm", "5 mm",
       "5-mm", "24x36", "24 x 36", "2X4", "5 in", "went in 2024", "3 in.",
@@ -75,49 +95,52 @@ class PrescreenFactsSpec extends AnyFunSuite {
       "_AB-12", "ab_12", "2024-01-02", "a-b-c", "7-11 store", "item"),
     1 -> Gen.listOf(Gen.oneOf("42", "qty", "ea", "d", "dia", ":", ".", "(",
       ")", "\"", "'", "x", "mm", "in", "1.5", " ", "\t", "word", "Ab",
-      "", "end")).map(_.mkString(" "))
+      "", "end")).map(_.mkString(" "))
   )
+
+  // Java's CASE_INSENSITIVE | UNICODE_CASE lets `k` match U+212A and `s`
+  // match U+017F, and `$` also matches before a final line terminator:
+  // every such line must take the screen's fallback.
+  private val foldTraps: Seq[String] = {
+    val seeds = Seq("Kelvin cap 3 ea", "sku: A9", "3 pcs", "ASTM B88", "steel pipe",
+      "floor mounted", "qty 5", "cast iron 2 units", "5 sq ft", "spec 22 40 00",
+      "see page 7", "K2032", "tank 4", "SS-300", "12 feet", "42")
+    seeds.flatMap { s =>
+      Seq(s.replace('k', '\u212A').replace('K', '\u212A'),
+        s.replace('s', '\u017F').replace('S', '\u017F'),
+        s + " é", s + "\n", s + "\r\n", "end " + s + "\n")
+    }
+  }
+
+  private lazy val corpusLines: Vector[String] =
+    CorpusIO.load().flatMap(_.pages).flatMap(p => PyStr.split(p.text, '\n')).map(PyStr.strip).distinct
 
   test("cleared FactExclude proves the keyword exclusion fold cannot match") {
     check(Prop.forAll(lines) { s =>
-      (Construction.lineFacts(s) & Construction.FactExclude) != 0 ||
-        !excludeKeywordRx.containsMatch(s)
+      !skipped(s, ExcludeAt) || !excludeKeywordRx.containsMatch(s)
     })
   }
 
   test("cleared FactCapPair proves capPhraseRx cannot match") {
     check(Prop.forAll(lines) { s =>
-      (Construction.lineFacts(s) & Construction.FactCapPair) != 0 ||
-        capPhraseRx.search(s).isEmpty
+      capPairShape(s) || capPhraseRx.search(s).isEmpty
     })
   }
 
   test("cleared FactSpec proves spec patterns 0-3 cannot match") {
-    check(Prop.forAll(lines) { s =>
-      (Construction.lineFacts(s) & Construction.FactSpec) != 0 ||
-        specKwRx.forall(_.search(s).isEmpty)
-    })
+    check(Prop.forAll(lines)(s => unsound(spec, s).isEmpty))
   }
 
   test("cleared FactQty proves the quantity table cannot match") {
-    check(Prop.forAll(lines) { s =>
-      (Construction.lineFacts(s) & Construction.FactQty) != 0 ||
-        quantityRx.forall(_.search(s).isEmpty)
-    })
+    check(Prop.forAll(lines)(s => unsound(quantity, s).isEmpty))
   }
 
   test("cleared FactDimAnchor proves the dimension table cannot match") {
-    check(Prop.forAll(lines) { s =>
-      (Construction.lineFacts(s) & Construction.FactDimAnchor) != 0 ||
-        dimensionRx.forall(_.search(s).isEmpty)
-    })
+    check(Prop.forAll(lines)(s => unsound(dimension, s).isEmpty))
   }
 
   test("cleared FactModel proves the model table cannot match") {
-    check(Prop.forAll(lines) { s =>
-      (Construction.lineFacts(s) & Construction.FactModel) != 0 ||
-        modelRx.forall(_.search(s).isEmpty)
-    })
+    check(Prop.forAll(lines)(s => unsound(model, s).isEmpty))
   }
 
   test("keyword-fold OR anchored-fold ≡ the original 10-pattern fold") {
@@ -134,11 +157,33 @@ class PrescreenFactsSpec extends AnyFunSuite {
     })
   }
 
-  test("fixture/mounting bits agree with the legacy wordPrescreen tuple") {
-    check(Prop.forAll(lines) { s =>
-      val f = Construction.lineFacts(s)
-      Construction.wordPrescreen(s) ==
-        (((f & Construction.FactFixture) != 0, (f & Construction.FactMount) != 0))
-    })
+  test("every pattern of the seven families: skip implies no match") {
+    check(Prop.forAll(lines)(s => unsound(allScreened, s).isEmpty))
+    val fixed = corpusLines ++ foldTraps
+    assert(fixed.size > 100)
+    val bad = fixed.flatMap(s => unsound(allScreened, s).map(n => s"$n on ${s.take(60)}"))
+    assert(bad.isEmpty, bad.take(10).mkString("\n"))
+    // every fold trap is screened conservatively
+    foldTraps.foreach { s =>
+      val kept = sevenFamilies.filter { case (_, bit, _) => !skipped(s, bit) }
+      assert(kept.nonEmpty, s"fallback not taken on ${s.take(40)}")
+    }
+  }
+
+  test("the screen skips on words, not substrings, and derives a clause for every pattern") {
+    // fixture p0 puts \b around `cap` and `tee`: "capital" and "steel" don't open it
+    assert(skipped("capital letters only", FixtureAt))
+    assert(!skipped("end cap 3", FixtureAt))
+    assert(skipped("galvanized steel", FixtureAt) && !skipped("galvanized steel", FixtureAt + 8))
+    // a digit-free line runs no quantity or dimension pattern
+    assert(quantity.forall(q => skipped("no anchors here at all", q._2)))
+    assert(dimension.forall(d => skipped("no anchors here at all", d._2)))
+    // non-ASCII line without any digit: only digit-free patterns may run
+    assert(quantity.forall(q => skipped("naïve words", q._2)))
+    assert(!skipped("naïve words", FixtureAt))
+    // the derivation parses every screened pattern and keeps a requirement
+    allScreened.foreach { case (name, bit, _) =>
+      assert(screen.clauses(bit).nonEmpty, s"$name derives no clause")
+    }
   }
 }

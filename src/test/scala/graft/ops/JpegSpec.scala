@@ -46,6 +46,24 @@ class JpegSpec extends AnyFunSuite {
     assert(errs.sum.toDouble / errs.length <= 6.0, s"mean err ${errs.sum.toDouble / errs.length}")
   }
 
+  test("fill bytes and TEM markers between segments are skipped") {
+    val clean = Jpeg.encodeGray(mkGray(24, 16, (x, y) => 30 + x * 7 + y * 3), quality = 90)
+    def u16(p: Int) = ((clean(p) & 0xff) << 8) | (clean(p + 1) & 0xff)
+    // the marker positions from the first segment after SOI through SOS
+    val segments = Iterator.iterate(2)(p => p + 2 + u16(p + 2))
+      .takeWhile(p => (clean(p + 1) & 0xff) != 0xDA).toList
+    val starts = segments :+ (segments.last + 2 + u16(segments.last + 2))
+    assert(starts.length >= 3 && (clean(starts.last + 1) & 0xff) == 0xDA)
+    val stuffing = Array(0xFF, 0x01, 0xFF, 0xFF, 0xFF).map(_.toByte) // TEM, then fill
+    val out = new java.io.ByteArrayOutputStream()
+    var prev = 0
+    starts.foreach { p => out.write(clean, prev, p - prev); out.write(stuffing); prev = p }
+    out.write(clean, prev, clean.length - prev)
+    val stuffed = out.toByteArray
+    assert(stuffed.length == clean.length + starts.length * stuffing.length)
+    assert(Jpeg.decodeGray(stuffed).pixels.toSeq == Jpeg.decodeGray(clean).pixels.toSeq)
+  }
+
   test("grayscale and color-4:2:0 framings of the same luma decode identically") {
     val img = blockImage(6, 4, seed = 9)
     val gray = Jpeg.decodeGray(Jpeg.encodeGray(img, quality = 90))

@@ -154,6 +154,21 @@ class PngSpec extends AnyFunSuite {
     }
   }
 
+  test("an IDAT that inflates past the size IHDR implies throws IOException") {
+    val good = Png.encodeGrayAs(mkGray(8, 8, (x, y) => x * 9 + y), 0)
+    val bomb = graft.media.Zlib.deflate(new Array[Byte](2 << 20)) // 2 MiB of zeros
+    val out = new java.io.ByteArrayOutputStream()
+    def chunk(ctype: String, data: Array[Byte]): Unit = {
+      val len = java.nio.ByteBuffer.allocate(4).putInt(data.length).array()
+      out.write(len); out.write(ctype.getBytes("US-ASCII")); out.write(data); out.write(new Array[Byte](4))
+    }
+    out.write(good, 0, 33) // signature + IHDR (8×8 gray: 8 rows of 1 + 8 bytes)
+    chunk("IDAT", bomb)
+    chunk("IEND", Array.emptyByteArray)
+    val e = intercept[java.io.IOException](Png.decode(out.toByteArray))
+    assert(e.getMessage.contains("exceeds 72 bytes"), e.getMessage)
+  }
+
   test("16-bit depths keep the high byte (gray and RGB)") {
     // 2x1 depth-16 gray: 0x1234, 0xFF00 → 0x12, 0xFF
     val g16 = Png.decode(handBuilt(

@@ -346,6 +346,43 @@ class PdfFramingSpec extends AnyFunSuite {
     }
   }
 
+  test("decompression bomb: a FlateDecode stream past the inflate cap lands in pdf-parse") {
+    // ~40 KB of deflate that inflates to 40 MiB of zeros
+    val df = new java.util.zip.Deflater(9)
+    val zeros = new Array[Byte](1 << 16)
+    val buf = new Array[Byte](1 << 16)
+    val bomb = new java.io.ByteArrayOutputStream()
+    (0 until 640).foreach { _ =>
+      df.setInput(zeros)
+      while (!df.needsInput()) bomb.write(buf, 0, df.deflate(buf))
+    }
+    df.finish()
+    while (!df.finished()) bomb.write(buf, 0, df.deflate(buf))
+    df.end()
+    val data = bomb.toByteArray
+    assert(data.length < (1 << 20))
+    val body = new java.io.ByteArrayOutputStream()
+    def w(s: String): Unit = body.write(s.getBytes(StandardCharsets.ISO_8859_1))
+    w("%PDF-1.4\n")
+    val offs = Seq(
+      "1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n",
+      "2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n",
+      "3 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents 4 0 R >>\nendobj\n")
+      .map { o => val at = body.size(); w(o); at } :+ body.size()
+    w(s"4 0 obj\n<< /Length ${data.length} /Filter /FlateDecode >>\nstream\n")
+    body.write(data)
+    w("\nendstream\nendobj\n")
+    val xref = body.size()
+    w("xref\n0 5\n0000000000 65535 f \n" + offs.map(o => f"$o%010d 00000 n \n").mkString)
+    w(s"trailer\n<< /Size 5 /Root 1 0 R >>\nstartxref\n$xref\n%%EOF\n")
+    val pdf = body.toByteArray
+    val e = intercept[java.io.IOException](Pdf.parse(pdf))
+    assert(e.getMessage.contains("exceeds"), e.getMessage)
+    val d = graft.pipeline.Decode.decode(pdf, "")
+    assert(d.kind == "pdf" && d.pages.isEmpty)
+    assert(d.error.exists(_.startsWith("pdf-parse:")), d.error)
+  }
+
   test("PngFilter: filter → unfilter is the identity for every filter type") {
     val rnd = new scala.util.Random(17)
     for (ft <- 0 to 4; bpp <- Seq(1, 3)) {
