@@ -110,7 +110,12 @@ object Png {
     val expected = passes.map { case (w, h) =>
       if (w > 0 && h > 0) h.toLong * ((w.toLong * bitsPerPixel + 7) / 8 + 1) else 0L
     }.sum
-    val inflated = Zlib.inflate(idat.toByteArray, math.min(expected, Int.MaxValue.toLong).toInt)
+    // the inflate stops at the smaller of that size and the fixed cap, and a
+    // stream of any other length throws here, before the sample array that
+    // IHDR alone sizes (up to 1 GiB under the pixel cap) is allocated
+    val inflated = Zlib.inflate(idat.toByteArray, math.min(expected, Zlib.MaxInflated.toLong).toInt)
+    if (inflated.length != expected)
+      throw new java.io.IOException(s"IDAT inflates to ${inflated.length} bytes, IHDR implies $expected")
 
     // per-pixel channel samples, 0..255 (depth 16 keeps the high byte;
     // sub-byte depths unpack MSB-first). Filled sequentially for
@@ -138,7 +143,6 @@ object Png {
     if (!interlaced) {
       val rowBytes = rowBytesFor(width)
       val raw = PngFilter.unfilter(inflated, rowBytes, fbpp)
-      if (raw.length < rowBytes * height) throw new java.io.IOException("short pixel data")
       var y = 0
       while (y < height) {
         val yy = y
@@ -153,8 +157,6 @@ object Png {
         if (wp > 0 && hp > 0) {
           val rb = rowBytesFor(wp)
           val passLen = hp * (rb + 1)
-          if (off + passLen > inflated.length)
-            throw new java.io.IOException("short Adam7 pass data")
           val raw = PngFilter.unfilter(
             java.util.Arrays.copyOfRange(inflated, off, off + passLen), rb, fbpp)
           var r = 0

@@ -50,17 +50,6 @@ object Decontam {
         min(col("bench_id")).as("first_bench_id"))
   }
 
-  /** The filter most pipelines actually apply: drop contaminated training
-    * docs entirely (left-anti against the report).
-    */
-  def decontaminate(train: DataFrame, bench: DataFrame,
-                    idCol: String, textCol: String, n: Int = 13,
-                    hash: Column => Column = TextDedup.fastHash): DataFrame =
-    train.join(
-      contaminated(train, bench, idCol, textCol, n, hash)
-        .select(col("train_id").as(idCol)),
-      Seq(idCol), "left_anti")
-
   /** Fractional-containment contamination (the Llama-2/3-era refinement of
     * the binary n-gram hit: an eval sample is contaminated when a large
     * FRACTION of its n-grams appear in a training doc, conventionally n≈8

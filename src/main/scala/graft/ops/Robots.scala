@@ -197,8 +197,4 @@ object Robots {
       .withColumn("allowed", col("best.a"))
       .drop("best", "__rid")
   }
-
-  /** Keep only robots-allowed pages. */
-  def filterAllowed(pages: DataFrame, urlCol: String, rules: DataFrame): DataFrame =
-    allowedDecision(pages, urlCol, rules).where(col("allowed")).drop("allowed")
 }

@@ -720,26 +720,6 @@ object TextDedup {
       .where(col("cluster").isNull || col("cluster") === col(idCol))
       .drop("cluster")
 
-  /** Quality-aware retention: keep the HIGHEST-scoring document per
-    * near-dup cluster (ties by lowest id) — what curation actually wants
-    * (keep the best copy, not the canonical-id one). Docs without a
-    * cluster row are kept. The rank=1 keep decision rides WindowGroupLimit
-    * (map-side partial), and unclustered docs bypass the window entirely —
-    * they must: putting them in the window would collapse every
-    * unclustered doc into one NULL-key partition.
-    */
-  def dedupResolveBy(docs: DataFrame, clusters: DataFrame, idCol: String,
-                     scoreCol: String): DataFrame = {
-    val joined = docs.join(clusters.withColumnRenamed("id", idCol), Seq(idCol), "left")
-    val w = Window.partitionBy(col("cluster"))
-      .orderBy(col(scoreCol).desc, col(idCol))
-    joined.where(col("cluster").isNotNull)
-      .withColumn("__rk", row_number().over(w))
-      .where(col("__rk") === 1)
-      .drop("__rk", "cluster")
-      .unionByName(joined.where(col("cluster").isNull).drop("cluster"))
-  }
-
   /** Per-document n-gram NOVELTY: how much of a document's (distinct)
     * shingle set appears nowhere else in the corpus — the inverse of
     * boilerplate-ness as a per-doc scalar. Templates, mirrored pages and

@@ -357,8 +357,8 @@ object VectorSim {
     * quantized vector, with the per-subvector self-dot precomputed
     * scan-side (every later distance needs it; once, not per candidate).
     */
-  private def pqSubvectors(corpus: DataFrame, idCol: String, embCol: String,
-                           m: Int, scale: Int, dim: Int): DataFrame = {
+  private[ops] def pqSubvectors(corpus: DataFrame, idCol: String, embCol: String,
+                                m: Int, scale: Int, dim: Int): DataFrame = {
     val dsub = dim / m
     corpus.select(col(idCol).as("id"), quantize(col(embCol), scale).as("v"))
       .select(col("id"), explode(sequence(lit(0), lit(m - 1))).as("sub"), col("v"))
@@ -374,7 +374,7 @@ object VectorSim {
     * rows before the exchange, so the shuffle carries n·m rows, not
     * n·m·ksub.
     */
-  private def pqAssign(svecs: DataFrame, books: DataFrame): DataFrame =
+  private[ops] def pqAssign(svecs: DataFrame, books: DataFrame): DataFrame =
     svecs.join(broadcast(books), Seq("sub"))
       .select(col("id"), col("sub"), struct(
         (col("svv") - lit(2L) * dot(col("sv"), col("cv")) + col("cvv")).as("d"),
@@ -419,18 +419,6 @@ object VectorSim {
     }
     books
   }
-
-  /** PQ-encode the corpus against a trained codebook: (id, codes) where
-    * codes[sub] is the nearest entry's cid in that subspace. The 100 TB
-    * artifact: m longs per vector instead of dim floats.
-    */
-  def pqEncode(corpus: DataFrame, idCol: String, embCol: String,
-               books: DataFrame, m: Int = 4, scale: Int = 1000,
-               dim: Int = 64): DataFrame =
-    pqAssign(pqSubvectors(corpus, idCol, embCol, m, scale, dim), books)
-      .groupBy("id")
-      .agg(array_sort(collect_list(struct(col("sub"), col("cid")))).as("sc"))
-      .select(col("id"), transform(col("sc"), x => x.getField("cid")).as("codes"))
 
   /** ANN top-k via PQ/ADC: train codebooks on the corpus, encode every
     * corpus vector to m codes, build each query's m×ksub subspace-distance

@@ -4,8 +4,13 @@ import graft.core.Assemble
 import graft.json.Canonical
 import graft.table.{BucketMetrics, Manifest, SnapshotTable}
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, GraftBridge, Observation,
+  SparkSession}
 import org.apache.spark.sql.functions._
+
+import java.util.concurrent.{ExecutionException, Executors, Future, TimeUnit}
+import scala.collection.mutable
 
 /** One output row per url — extracted text + spans + canonical JSON +
   * lineage/metrics columns.
@@ -29,10 +34,10 @@ final case class DocRow(
 /** The Dataset pipeline (SURVEY.md §3 Spark lifecycle):
   * pruned scan of one bucket partition → payload-valid filter → salted
   * repartition by url-hash (host-skew defusal) → typed mapPartitions parse
-  * core (HTML/PDF/text routed by magic bytes) → snapshot data files →
-  * manifest commit. Bucket granularity gives resumability: each bucket is
-  * one chained snapshot commit; a killed job resumes at the first
-  * uncommitted bucket.
+  * core (HTML/PDF/text routed by magic bytes) → observed bucket metrics →
+  * snapshot data files → manifest commit. Bucket granularity gives
+  * resumability: each bucket is one chained snapshot commit; a killed job
+  * resumes at the first uncommitted bucket.
   */
 object Extract {
 
@@ -50,8 +55,8 @@ object Extract {
         */
       secondSource: String = "none",
       /** Selects nothing: manifest metrics always come from one aggregate
-        * over the committed bucket files (see [[run]]). Kept only so
-        * existing callers that still pass it compile.
+        * observed on each bucket's write (see [[observeMetrics]]). Kept
+        * only so existing callers that still pass it compile.
         */
       exactMetrics: Boolean = true,
       /** OCR seam (S4/S5): "none" (offline default — no tesseract in the
@@ -140,6 +145,11 @@ object Extract {
   /** Run the job over a bucket-partitioned pages table, committing one
     * chained snapshot per bucket. Resumes from the current manifest if one
     * exists for the same mode.
+    *
+    * Two Spark jobs per bucket (the scan's salted-shuffle map stage, then
+    * the parse and write), plus one schema inference per run for the pages
+    * table. The next bucket's write runs while the current one commits; see
+    * [[writeAhead]].
     */
   def run(spark: SparkSession, pagesRoot: String, outRoot: String, cfg: Config): RunResult = {
     val table = new SnapshotTable(outRoot)
@@ -153,49 +163,110 @@ object Extract {
     var metrics = prev.map(_.metrics).getOrElse(Vector.empty)
     var dataDirs = prev.map(_.dataDirs).getOrElse(Vector.empty)
     var committed = prev.map(_.completedBuckets).getOrElse(Vector.empty)
-    var processed = 0
 
-    (0 until cfg.buckets).foreach { b =>
-      if (!done.contains(b)) {
-        if (cfg.poisonAfterBuckets >= 0 && processed >= cfg.poisonAfterBuckets)
-          throw new RuntimeException(s"poison: killed before bucket $b")
+    val pending = (0 until cfg.buckets).filterNot(done.contains)
+    // the poison hook's budget: a bucket past it is never started
+    val started =
+      if (cfg.poisonAfterBuckets >= 0) pending.take(cfg.poisonAfterBuckets) else pending
+    if (started.nonEmpty) {
+      // one schema inference per run; each bucket's filter prunes the scan
+      // to that bucket's partition
+      val pages = spark.read.parquet(pagesRoot)
+      def write(b: Int): BucketMetrics = {
         val t0 = System.nanoTime()
-        // partition-pruned scan: only this bucket's files are read
-        val pages = spark.read.parquet(pagesRoot).where(col("bucket") === b)
-        val dir = table.dataDir(snapshotId, b)
-        extract(pages, cfg, b).write.mode("overwrite").parquet(dir.toString)
-        val secs = (System.nanoTime() - t0) / 1e9
-        // Metrics are one aggregate over the committed files themselves, so
-        // task retries and speculative attempts cannot double-count a row.
-        // The read-back is a column-pruned scan of this one bucket.
-        val isPdfErr = col("error").isNotNull && col("payload_kind") === "pdf"
-        val encrypted = col("error").startsWith("pdf-encrypted")
-        def countIf(c: Column) = count(when(c, 1))
-        val m = spark.read.parquet(dir.toString).agg(
-          count(lit(1)), coalesce(sum(col("bytes_in")), lit(0L)),
-          coalesce(sum(col("chars_out")), lit(0L)), countIf(col("error").isNotNull),
-          countIf(col("needs_ocr")), countIf(isPdfErr && !encrypted),
-          countIf(isPdfErr && encrypted)).head()
-        val bm = BucketMetrics(b, m.getLong(0), m.getLong(1), m.getLong(2), m.getLong(3),
-          secs, m.getLong(4), m.getLong(5), m.getLong(6))
+        val (rows, observation) = observeMetrics(extract(pages.where(col("bucket") === b), cfg, b))
+        rows.write.mode("overwrite").parquet(table.dataDir(snapshotId, b).toString)
+        bucketMetrics(b, observation.get, (System.nanoTime() - t0) / 1e9)
+      }
+      writeAhead(spark.sparkContext, started, write) { bm =>
         version += 1
         metrics = metrics :+ bm
-        dataDirs = dataDirs :+ s"data/snap-$snapshotId/bucket=$b"
-        committed = committed :+ b
+        dataDirs = dataDirs :+ s"data/snap-$snapshotId/bucket=${bm.bucket}"
+        committed = committed :+ bm.bucket
         table.commit(Manifest(version, snapshotId, parent, cfg.mode, cfg.buckets,
           committed, dataDirs, metrics))
         parent = Some(snapshotId)
-        processed += 1
       }
+    }
+    pending.drop(started.size).headOption.foreach { b =>
+      throw new RuntimeException(s"poison: killed before bucket $b")
     }
     RunResult(version, snapshotId, metrics, committed.filter(done.contains))
   }
 
-  /** Read the current snapshot back as a DataFrame. */
+  /** The manifest counters of [[BucketMetrics]] as one aggregate observed on
+    * the rows a write consumes. The `CollectMetrics` node sits above the
+    * parse, in the write's result stage, and the scheduler merges a result
+    * task's accumulator updates only for the first successful attempt of
+    * each partition: a failed, retried or commit-denied attempt adds
+    * nothing, so each written row is counted exactly once.
+    */
+  private[pipeline] def observeMetrics(rows: Dataset[DocRow]): (Dataset[DocRow], Observation) = {
+    val isPdfErr = col("error").isNotNull && col("payload_kind") === "pdf"
+    val encrypted = col("error").startsWith("pdf-encrypted")
+    def countIf(c: Column) = count(when(c, 1))
+    val observation = Observation()
+    (rows.observe(observation,
+      count(lit(1)).as("docs"), coalesce(sum(col("bytes_in")), lit(0L)).as("bytes_in"),
+      coalesce(sum(col("chars_out")), lit(0L)).as("chars_out"),
+      countIf(col("error").isNotNull).as("errors"), countIf(col("needs_ocr")).as("needs_ocr"),
+      countIf(isPdfErr && !encrypted).as("pdf_fallback"),
+      countIf(isPdfErr && encrypted).as("pdf_encrypted")), observation)
+  }
+
+  /** One bucket's metrics from the values [[observeMetrics]] observed. */
+  private[pipeline] def bucketMetrics(bucket: Int, m: Map[String, Any], seconds: Double): BucketMetrics = {
+    def n(name: String) = m(name).asInstanceOf[Long]
+    BucketMetrics(bucket, n("docs"), n("bytes_in"), n("chars_out"), n("errors"), seconds,
+      n("needs_ocr"), n("pdf_fallback"), n("pdf_encrypted"))
+  }
+
+  /** Runs `write` for each bucket on a two-thread pool owned by this call,
+    * so at most two writes are in flight, and hands each result to `commit`
+    * on the calling thread, strictly in bucket order. A bucket's successor
+    * is submitted before it commits, so the cores keep parsing through the
+    * commit and the next job's driver-side set-up. The caller's Spark local
+    * properties (job group, scheduler pool, job tags, its own keys) are
+    * installed on the pool threads explicitly. On any failure the other
+    * in-flight write is waited for before the failure is rethrown, so no
+    * job outlives the call; a kill leaves at most two uncommitted data
+    * directories, which a resumed run overwrites.
+    */
+  private def writeAhead(sc: SparkContext, buckets: Seq[Int], write: Int => BucketMetrics)
+                        (commit: BucketMetrics => Unit): Unit = {
+    val props = GraftBridge.localProperties(sc)
+    val pool = Executors.newFixedThreadPool(2)
+    val inFlight = mutable.Queue.empty[Future[BucketMetrics]]
+    val next = buckets.iterator
+    def submit(): Unit = if (next.hasNext) {
+      val b = next.next()
+      inFlight += pool.submit { () =>
+        GraftBridge.setLocalProperties(sc, props)
+        write(b)
+      }
+    }
+    try {
+      submit(); submit()
+      while (inFlight.nonEmpty) {
+        val bm = try inFlight.dequeue().get() catch { case e: ExecutionException => throw e.getCause }
+        submit()
+        commit(bm)
+      }
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
+  }
+
+  /** Read the current snapshot back as a DataFrame, with the writer's
+    * schema ([[DocRow]]) instead of one inferred from the files, so the read
+    * starts no schema-inference job. A column the files lack reads as null:
+    * a pre-round-2 snapshot, written before `ocr_pages`, gives null there.
+    */
   def readSnapshot(spark: SparkSession, outRoot: String): DataFrame = {
     val table = new SnapshotTable(outRoot)
     val m = table.currentManifest.getOrElse(sys.error(s"no snapshot at $outRoot"))
     val dirs = m.dataDirs.map(d => s"$outRoot/$d")
-    spark.read.parquet(dirs: _*)
+    spark.read.schema(Encoders.product[DocRow].schema).parquet(dirs: _*)
   }
 }

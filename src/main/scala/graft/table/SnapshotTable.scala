@@ -23,6 +23,11 @@ final case class BucketMetrics(
     bytesIn: Long,
     charsOut: Long,
     errors: Long,
+    /** Wall time of this bucket's own write, from planning its jobs to
+      * holding its observed metrics. `Extract.run` keeps the next bucket's
+      * write in flight while one commits, so the times of neighbouring
+      * buckets overlap and their sum can exceed the run's wall time.
+      */
     seconds: Double,
     /** image-PDF suspects (first-page text < 50 chars, O2) — distinguishes
       * "needs OCR, passed through" from "parse error" in the lineage.

@@ -1,8 +1,13 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.util.Utils
 
-/** Minimal access bridge for APIs Spark scopes `private[sql]` — the same
+import java.util.Properties
+
+/** Minimal access bridge for APIs Spark scopes `private[sql]` or
+  * `private[spark]` — the same
   * technique public Spark-extension projects use (a one-object package
   * bridge) to move between Columns, catalyst Expressions and logical
   * plans. Nothing else in this repo lives outside the graft namespace.
@@ -21,4 +26,18 @@ object GraftBridge {
     */
   def analyzedPlan(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
+
+  /** A copy of the calling thread's Spark local properties: job group,
+    * job tags, scheduler pool and any key the caller set. Thread-pool
+    * threads get them only by inheritance at creation; this passes them on
+    * explicitly (`private[spark]` in `SparkContext`).
+    */
+  def localProperties(sc: SparkContext): Properties =
+    Utils.cloneProperties(sc.getLocalProperties)
+
+  /** Installs a copy of `props` as the calling thread's local properties,
+    * so that this thread's SQL executions cannot touch another thread's.
+    */
+  def setLocalProperties(sc: SparkContext, props: Properties): Unit =
+    sc.setLocalProperties(Utils.cloneProperties(props))
 }

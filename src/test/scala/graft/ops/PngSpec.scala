@@ -169,6 +169,23 @@ class PngSpec extends AnyFunSuite {
     assert(e.getMessage.contains("exceeds 72 bytes"), e.getMessage)
   }
 
+  test("a short IDAT under a huge IHDR throws IOException before the sample array is allocated") {
+    // 8192×8192 16-bit RGBA: exactly the 2^26-pixel cap, 1 GiB of samples
+    val ihdr = java.nio.ByteBuffer.allocate(13).putInt(8192).putInt(8192)
+      .put(16.toByte).put(6.toByte).put(0.toByte).put(0.toByte).put(0.toByte).array()
+    val png = handBuilt(ihdr, Array.tabulate[Byte](100)(i => (i * 37).toByte))
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread().getId
+    val before = mx.getThreadAllocatedBytes(tid)
+    // the heap is large enough to allocate 1 GiB, so an OOM cannot be the
+    // signal: the bytes this thread allocated are
+    val e = intercept[java.io.IOException](Png.decode(png))
+    val allocated = mx.getThreadAllocatedBytes(tid) - before
+    assert(e.getMessage.contains("IHDR implies"), e.getMessage)
+    assert(allocated < (64L << 20), s"decode allocated $allocated bytes")
+  }
+
   test("16-bit depths keep the high byte (gray and RGB)") {
     // 2x1 depth-16 gray: 0x1234, 0xFF00 → 0x12, 0xFF
     val g16 = Png.decode(handBuilt(

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -27,6 +27,16 @@ class PqSpec extends AnyFunSuite with BeforeAndAfterAll {
     if (spark != null) { TextDedup.releaseCaches(); spark.stop() }
 
   // --- the operator's exact arithmetic, reimplemented directly -------------
+  /** PQ-encode the corpus against a trained codebook: (id, codes) where
+    * codes[sub] is the nearest entry's cid in that subspace.
+    */
+  private def pqEncode(corpus: DataFrame, idCol: String, embCol: String, books: DataFrame,
+                       m: Int, dim: Int): DataFrame =
+    VectorSim.pqAssign(VectorSim.pqSubvectors(corpus, idCol, embCol, m, 1000, dim), books)
+      .groupBy("id")
+      .agg(array_sort(collect_list(struct(col("sub"), col("cid")))).as("sc"))
+      .select(col("id"), transform(col("sc"), x => x.getField("cid")).as("codes"))
+
   private def quant(v: Seq[Float]): Array[Long] =
     v.map(x => math.floor(x.toDouble * 1000 + 0.5).toLong).toArray
 
@@ -102,7 +112,7 @@ class PqSpec extends AnyFunSuite with BeforeAndAfterAll {
     gotBooks.foreach { case (k, cv) => assert(cv.sameElements(expBooks(k)), k) }
 
     val expCodes = encodeRef(q, m = 2, books = expBooks)
-    val gotCodes = VectorSim.pqEncode(df, "vec_id", "embedding",
+    val gotCodes = pqEncode(df, "vec_id", "embedding",
         VectorSim.pqCodebooks(df, "vec_id", "embedding", m = 2, ksub = 3, iters = 2, dim = 8),
         m = 2, dim = 8)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,6 +21,10 @@ class RobotsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  /** Keep only robots-allowed pages. */
+  private def filterAllowed(pages: DataFrame, urlCol: String, rules: DataFrame): DataFrame =
+    Robots.allowedDecision(pages, urlCol, rules).where(col("allowed")).drop("allowed")
 
   test("parseRules: group selection, comments, empty Disallow") {
     val txt =
@@ -107,7 +111,7 @@ class RobotsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val got = Robots.allowedDecision(pages, "url", rules)
       .orderBy("id").collect().map(r => (r.getLong(0), r.getBoolean(2)))
     assert(got.toSeq == Seq((1L, false), (2L, true), (3L, true), (4L, true)))
-    val kept = Robots.filterAllowed(pages, "url", rules)
+    val kept = filterAllowed(pages, "url", rules)
       .collect().map(_.getLong(0)).toSet
     assert(kept == Set(2L, 3L, 4L))
     // exact same-length tie goes to Allow (RFC 9309 §2.2.2)
