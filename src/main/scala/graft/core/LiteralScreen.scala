@@ -13,22 +13,36 @@ import java.util.regex.Pattern
   * prefix set), alternation unions them, and `x{m,}` keeps the
   * requirements of `x{m}` (RE2's prefilter info, with the clause form of
   * Cox's trigram-index rules). Literals are spelled over a compressed
-  * symbol alphabet: two ASCII chars share a symbol when no character atom
-  * of any pattern tells them apart (case is folded, so `PIPE` and `pipe`
-  * are one literal), plus three markers fed into the stream: S before the
+  * symbol alphabet plus three markers fed into the stream: S before the
   * line, E after it and B at every word boundary. So `\b(cap)\b` requires
   * the literal B-c-a-p-B and "capital" does not satisfy it. All `\s`
   * chars are one symbol and a run of them is fed once, so `\s*` and `\s+`
   * keep literals exact.
   *
-  * Soundness. A cleared bit proves the regex cannot match the line: the
-  * regexes stay the verifiers, so order, longest-match and groups are
-  * untouched. The literal pass is exact only for ASCII lines — under
-  * `CASE_INSENSITIVE | UNICODE_CASE` `k` also matches U+212A and `s`
-  * U+017F — so a line with any char ≥ 0x80 (or one ending in a line
-  * terminator, where `$` may also match) takes the fallback: every
-  * pattern, less those that need a `\d` when the line has no digit.
-  * A construct outside the parsed subset yields no requirement.
+  * Alphabet. Its domain is ASCII plus every non-ASCII char an atom names,
+  * with its case variants (`ø`, `Ø` and `–` for the construction tables).
+  * Two domain chars share a symbol when no character atom of any pattern
+  * tells them apart (a case-insensitive atom matches both cases, so `PIPE`
+  * and `pipe` are one literal). Two fresh symbols, "other word char" and "other non-word
+  * char", occur in no literal. Any other char is classified on first
+  * sight and cached: a `\s` char is the space symbol; a char that no small
+  * atom (at most `MaxClass` symbols) matches is the fresh symbol of its
+  * word class; any other char is a symbol of its word class that lies in
+  * the symbol set of every small atom matching it. Membership is asked of
+  * each atom's own compiled Pattern, so Java supplies the
+  * `CASE_INSENSITIVE | UNICODE_CASE` folds (U+212A is `k`, U+017F is `s`).
+  *
+  * Soundness. A cleared bit proves the regex cannot match the line: every
+  * char an atom matches maps to a symbol in that atom's set (or the atom
+  * is wide and needs no literal), and the B marker follows Unicode `\w`,
+  * as Java 17's `\b` does under UNICODE_CHARACTER_CLASS. The regexes stay
+  * the verifiers, so order, longest-match and groups are untouched. A line
+  * takes the fallback (every pattern, less those that need a `\d` when the
+  * line has no digit) when it holds a surrogate; U+0085, U+2028 or U+2029
+  * (`$` may match before them); a combining mark (`\b` looks through it);
+  * a char where Unicode `\w` and `isLetterOrDigit || '_'` disagree; or a
+  * char no symbol fits; and when it ends in `\n` or `\r`. A construct
+  * outside the parsed subset yields no requirement.
   */
 final class LiteralScreen(patterns: IndexedSeq[Rx]) {
   import LiteralScreen._
@@ -41,8 +55,8 @@ final class LiteralScreen(patterns: IndexedSeq[Rx]) {
       case _: Unsupported => None
     })
 
-  private val atoms: Seq[Atom] = {
-    val b = Seq.newBuilder[Atom]
+  private val atoms: IndexedSeq[Atom] = {
+    val b = IndexedSeq.newBuilder[Atom]
     def walk(n: Node): Unit = n match {
       case a: Atom => b += a
       case Cat(ps) => ps.foreach(walk)
@@ -53,15 +67,31 @@ final class LiteralScreen(patterns: IndexedSeq[Rx]) {
     asts.flatten.foreach(walk)
     b.result().distinct
   }
+  private val atomPattern: IndexedSeq[Pattern] = atoms.map(a => Pattern.compile(a.src, a.flags))
 
-  // chars no atom tells apart (case folded) share a symbol; word chars
-  // never share one with non-word chars; all `\s` chars are one symbol
-  private val alpha: Alphabet = Alphabet((0 until 128).map { c =>
-    val lo = Character.toLowerCase(c.toChar); val up = Character.toUpperCase(c.toChar)
-    if (isSpace(c)) "space"
-    else (isWordAscii(c.toChar), atoms.map(a => a.members(lo) || a.members(up)))
-  })
-  private val derive = new Derive(alpha)
+  private val domain: IndexedSeq[Char] = (0 until 128).map(_.toChar) ++
+    atoms.flatMap(_.src).filter(_ >= 0x80)
+      .flatMap(c => Seq(c, Character.toLowerCase(c), Character.toUpperCase(c), Character.toTitleCase(c)))
+      .filter(c => c >= 0x80 && wordClass(c) >= 0).distinct.sorted
+
+  // chars no atom tells apart share a symbol; word chars never share one
+  // with non-word chars; all `\s` chars are one symbol
+  private val (alpha, atomSyms) = {
+    // per domain char, the atoms that match it
+    val hits = domain.map { c =>
+      val h = new java.util.BitSet(atoms.length)
+      val cs = String.valueOf(c)
+      atomPattern.indices.foreach(a => if (atomPattern(a).matcher(cs).matches()) h.set(a))
+      h
+    }
+    val alpha = Alphabet(domain.indices.map { i =>
+      if (isSpace(domain(i))) "space" else (wordClass(domain(i)), hits(i))
+    }, domain.map(wordClass(_) == 1))
+    (alpha, atoms.indices.map { a =>
+      atoms(a) -> domain.indices.filter(hits(_).get(a)).map(alpha.symOf(_)).distinct.sorted.toArray
+    }.toMap)
+  }
+  private val derive = new Derive(alpha, atomSyms)
   private val infos: IndexedSeq[Option[Info]] = asts.map(_.map(derive.info))
 
   /** Per pattern, the clauses the derivation keeps — at most 128 distinct
@@ -101,6 +131,48 @@ final class LiteralScreen(patterns: IndexedSeq[Rx]) {
     b
   }
 
+  // A char's code: its symbol << 2 | word << 1 | 1, or Fallback. ASCII
+  // codes sit in a flat table; every other char's in 256-entry blocks
+  // made on first use, 0 meaning not yet classified. The blocks are
+  // shared by every thread without locks: a lost or unseen store only
+  // makes a thread classify that char again, to the same code.
+  private val ascii: Array[Int] = Array.tabulate(128)(c => code(alpha.symOf(c), isWordAscii(c.toChar)))
+  private val blocks = new Array[Array[Int]](256)
+  (128 until domain.length).foreach(i => store(domain(i), code(alpha.symOf(i), wordClass(domain(i)) == 1)))
+
+  private val small: IndexedSeq[(Pattern, Array[Int])] =
+    atoms.indices.filter(a => atomSyms(atoms(a)).length <= MaxClass)
+      .map(a => (atomPattern(a), atomSyms(atoms(a))))
+
+  private def code(t: Int, word: Boolean): Int = t << 2 | (if (word) 2 else 0) | 1
+
+  private def store(c: Char, v: Int): Unit = {
+    var b = blocks(c >>> 8)
+    if (b == null) { b = new Array[Int](256); blocks(c >>> 8) = b }
+    b(c & 0xff) = v
+  }
+
+  private def codeOf(c: Char): Int = {
+    val b = blocks(c >>> 8)
+    val v = if (b == null) 0 else b(c & 0xff)
+    if (v != 0) v
+    else { val k = classify(c); store(c, k); k }
+  }
+
+  /** The code of a char outside the domain (see the class doc). */
+  private def classify(c: Char): Int = {
+    val wc = wordClass(c)
+    val space = isSpace(c)
+    if (wc < 0 || (space && wc != 0)) return Fallback
+    val word = wc == 1
+    val hit = small.filter(a => matches(a._1, c))
+    if (hit.isEmpty && !space) return code(if (word) alpha.otherWord else alpha.otherNonWord, word)
+    (0 until alpha.nReal)
+      .find(t => (if (space) t == alpha.space else t != alpha.space && alpha.isWord(t) == word) &&
+        hit.forall(_._2.contains(t)))
+      .fold(Fallback)(code(_, word))
+  }
+
   /** Which patterns may match `line`: bit `i` clear proves pattern `i`
     * cannot. The returned array is shared on the fallback path — read only.
     */
@@ -108,7 +180,7 @@ final class LiteralScreen(patterns: IndexedSeq[Rx]) {
     val n = line.length
     if (n > 0 && (line.charAt(n - 1) == '\n' || line.charAt(n - 1) == '\r'))
       return fallback(line)
-    val a = alpha.size; val sym = alpha.symOf; val B = alpha.B; val space = alpha.space
+    val a = alpha.size; val B = alpha.B; val space = alpha.space; val ascii = this.ascii
     var s = delta(alpha.S)
     var lo = stateLo(s); var hi = stateHi(s)
     var prevWord = false
@@ -116,13 +188,14 @@ final class LiteralScreen(patterns: IndexedSeq[Rx]) {
     var i = 0
     while (i < n) {
       val c = line.charAt(i)
-      if (c >= 0x80) return fallback(line)
-      val w = isWordAscii(c)
+      val v = if (c < 0x80) ascii(c) else codeOf(c)
+      if (v < 0) return fallback(line)
+      val w = (v & 2) != 0
       if (w != prevWord) {
         s = delta(s * a + B); lo |= stateLo(s); hi |= stateHi(s)
         prevWord = w
       }
-      val t = sym(c)
+      val t = v >>> 2
       if (t != space || !prevSpace) { s = delta(s * a + t); lo |= stateLo(s); hi |= stateHi(s) }
       prevSpace = t == space
       i += 1
@@ -139,6 +212,12 @@ final class LiteralScreen(patterns: IndexedSeq[Rx]) {
     bits
   }
 
+  /** Whether `line` takes the fallback instead of the literal pass. */
+  private[core] def fallsBack(line: String): Boolean = {
+    val b = screen(line)
+    (b eq allBits) || (b eq noDigitBits)
+  }
+
   private def fallback(line: String): Array[Long] =
     if (hasDigit(line)) allBits else noDigitBits
 }
@@ -151,7 +230,28 @@ object LiteralScreen {
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9') || c == '_'
 
   private val spaceClass = Pattern.compile("\\s", Pattern.UNICODE_CHARACTER_CLASS)
-  private def isSpace(c: Int): Boolean = spaceClass.matcher(String.valueOf(c.toChar)).matches()
+  private val wordCharClass = Pattern.compile("\\w", Pattern.UNICODE_CHARACTER_CLASS)
+  private def matches(p: Pattern, c: Char): Boolean = p.matcher(String.valueOf(c)).matches()
+  private def isSpace(c: Char): Boolean = matches(spaceClass, c)
+
+  private val Fallback = -1
+
+  /** 1 for a word char and 0 for a non-word char (Unicode `\w`), or -1
+    * for a char whose part in a match the symbol stream cannot stand for:
+    * a surrogate, a line terminator that `$` may match before, a combining
+    * mark, or a char where Unicode `\w` and `isLetterOrDigit || '_'` (the
+    * word test of `\b` without UNICODE_CHARACTER_CLASS) disagree.
+    */
+  private def wordClass(c: Char): Int = {
+    val t = Character.getType(c)
+    if (Character.isSurrogate(c) || c == '\u0085' || c == '\u2028' || c == '\u2029' ||
+      t == Character.NON_SPACING_MARK || t == Character.ENCLOSING_MARK ||
+      t == Character.COMBINING_SPACING_MARK) -1
+    else {
+      val w = matches(wordCharClass, c)
+      if (w != (Character.isLetterOrDigit(c) || c == '_')) -1 else if (w) 1 else 0
+    }
+  }
 
   /** Contains a `\d` under UNICODE_CHARACTER_CLASS: Character.isDigit over
     * code points (non-BMP digits included, hence the codePointAt walk).
@@ -176,16 +276,11 @@ object LiteralScreen {
   // ------------------------------------------------------------------ AST
   private sealed trait Node
   /** One char position: a literal, an escape class or a bracket class,
-    * with the ASCII chars it matches under the pattern's own flags.
+    * compiled with the pattern's own flags to ask which chars it matches.
     */
   private final case class Atom(src: String, flags: Int) extends Node {
-    lazy val members: Array[Boolean] = memberCache.computeIfAbsent(this, _ => {
-      val p = Pattern.compile(src, flags)
-      Array.tabulate(128)(c => p.matcher(String.valueOf(c.toChar)).matches())
-    })
     def isDigitClass: Boolean = src == "\\d"
   }
-  private val memberCache = new java.util.concurrent.ConcurrentHashMap[Atom, Array[Boolean]]()
   private case object Bound extends Node
   private case object Start extends Node
   private case object End extends Node
@@ -299,24 +394,28 @@ object LiteralScreen {
   }
 
   // ------------------------------------------------------------- alphabets
-  /** A partition of ASCII into symbols `0 until nReal` plus three markers;
-    * `space` is the symbol of the `\s` chars.
+  /** A partition of the domain into symbols (`symOf(i)` for domain char
+    * i), then the two fresh symbols, together `0 until nReal`, then three
+    * markers; `space` is the symbol of the `\s` chars.
     */
   private final case class Alphabet(symOf: Array[Int], nReal: Int, realWord: Array[Boolean]) {
+    val otherWord: Int = nReal - 2; val otherNonWord: Int = nReal - 1
     val S: Int = nReal; val E: Int = nReal + 1; val B: Int = nReal + 2
     val size: Int = nReal + 3
     val space: Int = symOf(' ')
-    def sym(c: Int): Int = symOf(c)
     def isWord(t: Int): Boolean = t < nReal && realWord(t)
   }
   private object Alphabet {
-    /** ASCII chars with equal keys share a symbol. */
-    def apply(keys: IndexedSeq[Any]): Alphabet = {
+    /** Domain chars with equal keys share a symbol; `word(i)` is the word
+      * class of domain char i.
+      */
+    def apply(keys: IndexedSeq[Any], word: IndexedSeq[Boolean]): Alphabet = {
       val ids = keys.distinct.zipWithIndex.toMap
       val symOf = keys.map(ids).toArray
-      val realWord = new Array[Boolean](ids.size)
-      (0 until 128).foreach(c => realWord(symOf(c)) = isWordAscii(c.toChar))
-      Alphabet(symOf, ids.size, realWord)
+      val realWord = new Array[Boolean](ids.size + 2)
+      keys.indices.foreach(i => realWord(symOf(i)) = word(i))
+      realWord(ids.size) = true
+      Alphabet(symOf, ids.size + 2, realWord)
     }
   }
 
@@ -334,7 +433,7 @@ object LiteralScreen {
   private final case class Info(exact: Set[String], pre: Set[String], suf: Set[String],
                                 cnf: List[Set[String]], digit: Boolean)
 
-  private final class Derive(a: Alphabet) {
+  private final class Derive(a: Alphabet, atomSyms: Atom => Array[Int]) {
     private val eps = Info(Set(""), null, null, Nil, digit = false)
     private val any = Info(null, Set(""), Set(""), Nil, digit = false)
     private def marker(t: Int) = Info(Set(t.toChar.toString), null, null, Nil, digit = false)
@@ -397,9 +496,8 @@ object LiteralScreen {
 
     def info(n: Node): Info = n match {
       case at: Atom =>
-        val m = at.members
-        val syms = (0 until 128).filter(m(_)).map(a.sym).distinct
-        if (syms.size <= MaxClass) Info(syms.map(_.toChar.toString).toSet, null, null, Nil, at.isDigitClass)
+        val syms = atomSyms(at)
+        if (syms.length <= MaxClass) Info(syms.map(_.toChar.toString).toSet, null, null, Nil, at.isDigitClass)
         else any.copy(digit = at.isDigitClass)
       case Bound => marker(a.B)
       case Start => marker(a.S)

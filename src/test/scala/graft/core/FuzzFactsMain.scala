@@ -7,7 +7,7 @@ import java.util.SplittableRandom
   * pattern still matches. PrescreenFactsSpec runs 500 ScalaCheck cases per
   * property in the suite; this main hammers millions of char-level random
   * lines (biased toward the literals: digits, quotes, hyphens, keywords,
-  * glued tokens, case-fold traps such as U+212A and U+017F) against every
+  * glued tokens, BMP traps such as U+212A, U+017F, NBSP and `ø`) against every
   * pattern of the seven families and the keyword exclusion fold, for
   * release-grade confidence. Exits non-zero on the first violations with
   * the offending line.
@@ -52,8 +52,9 @@ object FuzzFactsMain {
       "slip", "on", "ceiling", "cast", "iron", "pump", "package", "station")
     val seps = Array(" ", "  ", "\t", ",", ", ", ":", ": ", "-", " - ", ".",
       "(", ")", "\"", "'", "#", "/", ";", "", " :", "", "", "=", "\u2013", "\u00F8")
-    // case-fold and boundary traps: Kelvin sign, long s, NBSP, combining mark
-    val exotic = Array('\u212A', '\u017F', '\u00A0', '\u0301', '\u00E9', '\u0660')
+    // BMP traps: case folds, Unicode spaces and digits, line terminators,
+    // a combining mark, a surrogate (see PrescreenFactsSpec.bmpTraps)
+    val exotic = (PrescreenFactsSpec.bmpTraps :+ '\u0660').toArray
 
     def randLine(): String = {
       val sb = new java.lang.StringBuilder
@@ -68,7 +69,7 @@ object FuzzFactsMain {
           val w = words(rnd.nextInt(words.length))
           sb.append(if (rnd.nextInt(3) == 0) w.toUpperCase else w)
         }
-        if (rnd.nextInt(40) == 0) sb.append(exotic(rnd.nextInt(exotic.length)))
+        if (rnd.nextInt(16) == 0) sb.append(exotic(rnd.nextInt(exotic.length)))
         sb.append(seps(rnd.nextInt(seps.length)))
         k += 1
       }

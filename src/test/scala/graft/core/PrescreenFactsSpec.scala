@@ -1,6 +1,7 @@
 package graft.core
 
-import graft.fixtures.CorpusIO
+import graft.fixtures.{CorpusIO, PagesGen}
+import graft.pipeline.Decode
 import org.scalacheck.{Gen, Prop, Test => ScTest}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,6 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PrescreenFactsSpec extends AnyFunSuite {
   import Construction._
+  import PrescreenFactsSpec._
 
   private def rxI(p: String) = Rx(p, ignoreCase = true)
 
@@ -54,7 +56,7 @@ class PrescreenFactsSpec extends AnyFunSuite {
 
   // Adversarial line pool: keyword hits, prefix near-misses, case traps,
   // punctuation-separated capitals, unicode, raw ascii noise.
-  private val lines: Gen[String] = Gen.frequency(
+  private val plainLines: Gen[String] = Gen.frequency(
     3 -> Gen.asciiPrintableStr,
     3 -> Gen.oneOf(
       "all rights reserved", "ALL RIGHTS RESERVED", "Copyright 2024 Example",
@@ -98,9 +100,16 @@ class PrescreenFactsSpec extends AnyFunSuite {
       "", "end")).map(_.mkString(" "))
   )
 
+  // ... and the same lines with a BMP trap char put in or swapped in
+  private val lines: Gen[String] = Gen.frequency(
+    3 -> plainLines,
+    1 -> (for {
+      s <- plainLines; c <- Gen.oneOf(bmpTraps); at <- Gen.choose(0, 64); swap <- Gen.oneOf(false, true)
+    } yield splice(s, c, at, swap)))
+
   // Java's CASE_INSENSITIVE | UNICODE_CASE lets `k` match U+212A and `s`
   // match U+017F, and `$` also matches before a final line terminator:
-  // every such line must take the screen's fallback.
+  // the screen must keep the patterns such lines can match.
   private val foldTraps: Seq[String] = {
     val seeds = Seq("Kelvin cap 3 ea", "sku: A9", "3 pcs", "ASTM B88", "steel pipe",
       "floor mounted", "qty 5", "cast iron 2 units", "5 sq ft", "spec 22 40 00",
@@ -112,8 +121,26 @@ class PrescreenFactsSpec extends AnyFunSuite {
     }
   }
 
-  private lazy val corpusLines: Vector[String] =
-    CorpusIO.load().flatMap(_.pages).flatMap(p => PyStr.split(p.text, '\n')).map(PyStr.strip).distinct
+  private def linesOf(pages: Seq[PageData]): Vector[String] =
+    pages.flatMap(p => PyStr.split(p.text, '\n')).map(PyStr.strip).distinct.toVector
+
+  private lazy val corpusLines: Vector[String] = linesOf(CorpusIO.load().flatMap(_.pages))
+
+  // every corpus line with each trap char put in and swapped in at eight
+  // positions spread over the line
+  private lazy val splicedCorpusLines: Vector[String] =
+    for {
+      s <- corpusLines; c <- bmpTraps.toVector; swap <- Vector(false, true); j <- (0 until 8).toVector
+    } yield splice(s, c, (s.length + 1) * j / 8, swap)
+
+  private def twin(s: String): Seq[String] =
+    Seq(s.replace('k', '\u212A').replace('K', '\u212A'), s.replace('s', '\u017F').replace('S', '\u017F'))
+
+  /** The bits `line` sets that its twin `t` clears. */
+  private def clearedInTwin(s: String, t: String): Seq[Int] = {
+    val a = screen.screen(s); val b = screen.screen(t)
+    (0 until screen.size).filter(p => LiteralScreen.may(a, p) && !LiteralScreen.may(b, p))
+  }
 
   test("cleared FactExclude proves the keyword exclusion fold cannot match") {
     check(Prop.forAll(lines) { s =>
@@ -170,6 +197,26 @@ class PrescreenFactsSpec extends AnyFunSuite {
     }
   }
 
+  test("BMP chars spliced into corpus lines: skip implies no match") {
+    val bad = splicedCorpusLines.flatMap(s => unsound(allScreened, s).map(n => s"$n on ${s.take(60)}"))
+    assert(bad.isEmpty, bad.take(10).mkString("\n"))
+  }
+
+  test("swapping k for U+212A or s for U+017F never clears a bit the ASCII twin sets") {
+    check(Prop.forAll(plainLines)(s => twin(s).forall(t => clearedInTwin(s, t).isEmpty)))
+    val bad = (corpusLines ++ foldTraps.filter(_.forall(_ < 0x80))).flatMap { s =>
+      twin(s).flatMap(t => clearedInTwin(s, t).map(p => s"bit $p on ${t.take(60)}"))
+    }
+    assert(bad.isEmpty, bad.take(10).mkString("\n"))
+  }
+
+  test("no line of the corpus or of its variant pages takes the fallback") {
+    val variantLines = linesOf(PagesGen.docsFor(1, 1).flatMap(r => Decode.decode(r.html, r.text).pages))
+    assert(variantLines.exists(_.exists(_ >= 0x80)) && corpusLines.exists(_.exists(_ >= 0x80)))
+    val fallen = (corpusLines ++ variantLines).filter(screen.fallsBack)
+    assert(fallen.isEmpty, fallen.take(10).mkString("\n"))
+  }
+
   test("the screen skips on words, not substrings, and derives a clause for every pattern") {
     // fixture p0 puts \b around `cap` and `tee`: "capital" and "steel" don't open it
     assert(skipped("capital letters only", FixtureAt))
@@ -178,12 +225,34 @@ class PrescreenFactsSpec extends AnyFunSuite {
     // a digit-free line runs no quantity or dimension pattern
     assert(quantity.forall(q => skipped("no anchors here at all", q._2)))
     assert(dimension.forall(d => skipped("no anchors here at all", d._2)))
-    // non-ASCII line without any digit: only digit-free patterns may run
+    // non-ASCII line without any digit or fixture word
     assert(quantity.forall(q => skipped("naïve words", q._2)))
-    assert(!skipped("naïve words", FixtureAt))
+    assert(skipped("naïve words", FixtureAt))
     // the derivation parses every screened pattern and keeps a requirement
     allScreened.foreach { case (name, bit, _) =>
       assert(screen.clauses(bit).nonEmpty, s"$name derives no clause")
     }
+  }
+}
+
+object PrescreenFactsSpec {
+  /** BMP chars for the screen to classify: the six non-ASCII chars of the
+    * extract workload's pages and `Ø`; chars that Java's
+    * `CASE_INSENSITIVE | UNICODE_CASE` folds onto `k`, `s` and `i`; Unicode
+    * spaces; non-ASCII digits; plain letters; the line terminators `$` may
+    * match before; a combining mark; an unpaired surrogate.
+    */
+  val bmpTraps: Seq[Char] = Seq(
+    '\u00F8', '\u2013', '\u2502', '\u00B0', '\u00B1', '\u00A0', '\u00D8',
+    '\u212A', '\u017F', '\u0130', '\u0131', '\u2009', '\u3000', '\u0663', '\uFF13',
+    '\u00E9', '\u4E2D', '\u0085', '\u2028', '\u2029', '\u0301', '\uD800')
+
+  /** `s` with `c` put in before, or swapped in for, the char at `at`
+    * (mod the line's length + 1).
+    */
+  def splice(s: String, c: Char, at: Int, swap: Boolean): String = {
+    val i = Math.floorMod(at, s.length + 1)
+    if (swap && i < s.length) s.substring(0, i) + c + s.substring(i + 1)
+    else s.substring(0, i) + c + s.substring(i)
   }
 }
