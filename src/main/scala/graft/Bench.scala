@@ -250,34 +250,17 @@ object Bench {
          |load-independent cross-check.
          |
          |N is cpus/16 and 4N is cpus/4 ("one 2-core executor" vs "four"),
-         |so both levels sit in the host's linear-scaling region.
-         |Pure-JVM control (`graft.tools.ParseProfile`: fixed thread pool
-         |driving `Extract.parseRow` with the same per-row config as the
-         |pipeline incl. the OCR seam, no Spark, min of 3; re-measured
-         |round 5 on the 3680-doc corpus with the r5 framing mix —
-         |xref-stream/ObjStm/predicted PDFs):
+         |so both levels sit in the host's linear-scaling region. The
+         |pure-JVM control (`graft.tools.ParseProfile`: a fixed thread pool
+         |driving `Extract.parseRow` with the pipeline's per-row config, no
+         |Spark, min of 3 reps over the 40-replicate corpus) gives docs/s per
+         |thread count; run it for thread counts up to the host's cores:
          |
-         || threads | docs/s | step scaling |
-         ||---|---|---|
-         || 2 | 240 | — |
-         || 4 | 486 | 2.03× |
-         || 8 | 796 | 1.64× |
-         || 16 | 1695 | 2.13× |
-         || 32 | 2777 | 1.64× |
-         |
-         |2→8 threads scales 3.3× (0.83 efficiency; the weak 4→8 step is
-         |not reproduced at 8→16 — single-window co-tenant noise, the
-         |interleaved pipeline metric above is the robust signal). Unlike
-         |rounds 3-4, the r5 parse core keeps scaling to 32 threads
-         |(2→32 = 11.6×): the heavier per-doc work (xref-chain resolution,
-         |ObjStm inflation, predictor unfiltering, font decode) raised
-         |arithmetic intensity above the old memory-bandwidth knee. Within
-         |the measured region, full-pipeline scaling (shuffle, snapshot
-         |commit, parquet sink included) tracks raw-JVM compute scaling —
-         |the pipeline adds no scaling loss of its own. An earlier
-         |full-pipeline calibration sweep (round 2) caught a real bug now
-         |fixed in `Extract`: a repartition key correlated with the bucket
-         |hash had been collapsing each bucket onto half its tasks.
+         |```
+         |for t in 2 4 8 16 32; do
+         |  sbt -batch "runMain graft.tools.ParseProfile 40 16 $$t 3"
+         |done
+         |```
          |
          |Headline queries at $sfDir, local[$cpus], noop-write-forced,
          |min of three warm runs:

@@ -304,15 +304,17 @@ object Queries {
       .select(col("id"), array_join(col("sig"), ",").as("sig_csv"))
       .orderBy("id")
 
+  // MinHash signatures (id, sig) of every doc with a 3-gram: k = 8
+  // permutations (a_j·h + b_j) mod P of its gram hashes h = g mod P, the
+  // minimum per permutation — TextDedup.minhashSignatures(k = 8,
+  // shingleN = 3, hash = portableHash).
+  private def minhashSigsSql =
+    s"""SELECT id, list_transform(generate_series(0, 7),
+         j -> list_aggregate(list_transform(hs, h -> (h * (j*101 + 37) + (j*61 + 11)) % $P), 'min')) AS sig
+       FROM (SELECT doc_id AS id, list(g % $P) AS hs FROM (${gramHashesSql(3)}) GROUP BY doc_id)"""
+
   private val oMinhashSig =
-    s"""SELECT id, array_to_string(list_transform(generate_series(0, 7),
-       j -> list_aggregate(list_transform(hs, h -> (h * (j*101 + 37) + (j*61 + 11)) % $P), 'min')), ',') AS sig_csv
-       FROM (SELECT doc_id AS id,
-         list_transform(
-           list_distinct(list_transform(generate_series(1, len(t) - 2), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])),
-           x -> ('0x' || substr(md5(x), 1, 15))::BIGINT % $P) AS hs
-         FROM (SELECT doc_id, str_split(text, ' ') AS t FROM documents) WHERE len(t) >= 3)
-       ORDER BY id"""
+    s"""SELECT id, array_to_string(sig, ',') AS sig_csv FROM ($minhashSigsSql) ORDER BY id"""
 
   // --------------------------------------------------------- minhash LSH pairs
   private def qMinhashPairs(s: SparkSession, dir: String): DataFrame =
@@ -324,14 +326,7 @@ object Queries {
       .orderBy("id_a", "id_b")
 
   private val oMinhashPairs =
-    s"""WITH sigs AS (
-         SELECT id, list_transform(generate_series(0, 7),
-           j -> list_aggregate(list_transform(hs, h -> (h * (j*101 + 37) + (j*61 + 11)) % $P), 'min')) AS sig
-         FROM (SELECT doc_id AS id,
-           list_transform(
-             list_distinct(list_transform(generate_series(1, len(t) - 2), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])),
-             x -> ('0x' || substr(md5(x), 1, 15))::BIGINT % $P) AS hs
-           FROM (SELECT doc_id, str_split(text, ' ') AS t FROM documents) WHERE len(t) >= 3)),
+    s"""WITH sigs AS ($minhashSigsSql),
        banded AS (
          SELECT id, sig, b.band, sig[2*b.band + 1] * $P + sig[2*b.band + 2] AS band_key
          FROM sigs, generate_series(0, 3) b(band)),
@@ -361,14 +356,7 @@ object Queries {
       .orderBy("id_a", "id_b")
 
   private val oMinhashPairsB4 =
-    s"""WITH sigs AS (
-         SELECT id, list_transform(generate_series(0, 7),
-           j -> list_aggregate(list_transform(hs, h -> (h * (j*101 + 37) + (j*61 + 11)) % $P), 'min')) AS sig
-         FROM (SELECT doc_id AS id,
-           list_transform(
-             list_distinct(list_transform(generate_series(1, len(t) - 2), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])),
-             x -> ('0x' || substr(md5(x), 1, 15))::BIGINT % $P) AS hs
-           FROM (SELECT doc_id, str_split(text, ' ') AS t FROM documents) WHERE len(t) >= 3)),
+    s"""WITH sigs AS ($minhashSigsSql),
        banded AS (
          SELECT id, sig, b.band,
            ('0x' || substr(md5(sig[4*b.band + 1] || ',' || sig[4*b.band + 2] || ',' ||
@@ -634,11 +622,7 @@ object Queries {
       .orderBy("id_a", "id_b")
 
   private val oNgramJaccard =
-    """WITH sh AS (
-         SELECT doc_id AS id, unnest(list_transform(list_distinct(
-           list_transform(generate_series(1, len(t) - 2), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])),
-           x -> ('0x' || substr(md5(x), 1, 15))::BIGINT)) AS s
-         FROM (SELECT doc_id, str_split(text, ' ') AS t FROM documents) WHERE len(t) >= 3),
+    s"""WITH sh AS (SELECT doc_id AS id, g AS s FROM (${gramHashesSql(3)})),
        sizes AS (SELECT id, count(*) AS n FROM sh GROUP BY id),
        common AS (
          SELECT a.id AS id_a, b.id AS id_b, count(*) AS c
@@ -661,11 +645,7 @@ object Queries {
       .orderBy("id_a", "id_b")
 
   private val oContainment =
-    """WITH sh AS (
-         SELECT doc_id AS id, unnest(list_transform(list_distinct(
-           list_transform(generate_series(1, len(t) - 2), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])),
-           x -> ('0x' || substr(md5(x), 1, 15))::BIGINT)) AS s
-         FROM (SELECT doc_id, str_split(text, ' ') AS t FROM documents) WHERE len(t) >= 3),
+    s"""WITH sh AS (SELECT doc_id AS id, g AS s FROM (${gramHashesSql(3)})),
        sizes AS (SELECT id, count(*) AS n FROM sh GROUP BY id),
        common AS (
          SELECT a.id AS id_a, b.id AS id_b, count(*) AS c
@@ -687,11 +667,7 @@ object Queries {
       .orderBy("doc_id")
 
   private val oNovelty =
-    """WITH sh AS (
-         SELECT doc_id AS id, unnest(list_transform(list_distinct(
-           list_transform(generate_series(1, len(t) - 2), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])),
-           x -> ('0x' || substr(md5(x), 1, 15))::BIGINT)) AS s
-         FROM (SELECT doc_id, str_split(text, ' ') AS t FROM documents) WHERE len(t) >= 3),
+    s"""WITH sh AS (SELECT doc_id AS id, g AS s FROM (${gramHashesSql(3)})),
        df AS (SELECT s, count(*) AS dfreq FROM sh GROUP BY s)
        SELECT sh.id AS doc_id,
          count(*) AS n_grams,
@@ -1579,6 +1555,17 @@ object Queries {
       .select(col("id").as("doc_id"), col("simhash").as("dhash"))
       .orderBy("doc_id")
   }
+
+  // A document as its set of hashed word n-grams, (doc_id, g): one row per
+  // distinct n-gram of the doc, g = the portable 60-bit md5 hash. The DuckDB
+  // side of TextDedup.gramHashes(hash = portableHash); every gram-set oracle
+  // (Jaccard, containment, novelty, MinHash, decontamination) interpolates
+  // this one fragment.
+  private def gramHashesSql(n: Int): String =
+    s"""SELECT doc_id, ('0x' || substr(md5(gram), 1, 15))::BIGINT AS g FROM (
+         SELECT doc_id, unnest(list_distinct(list_transform(
+           generate_series(1, len(t) - ${n - 1}), i -> array_to_string(t[i:i+${n - 1}], ' ')))) AS gram
+         FROM (SELECT doc_id, str_split(text, ' ') AS t FROM documents))"""
 
   // The dHash bit rule over a 63-element `cells` list (7×9, row-major) —
   // every image-hash oracle interpolates this one fragment. It compares
@@ -2560,25 +2547,14 @@ object Queries {
   }
 
   private val oDedupEval =
-    s"""WITH sigs AS (
-         SELECT id, list_transform(generate_series(0, 7),
-           j -> list_aggregate(list_transform(hs, h -> (h * (j*101 + 37) + (j*61 + 11)) % $P), 'min')) AS sig
-         FROM (SELECT doc_id AS id,
-           list_transform(
-             list_distinct(list_transform(generate_series(1, len(t) - 2), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])),
-             x -> ('0x' || substr(md5(x), 1, 15))::BIGINT % $P) AS hs
-           FROM (SELECT doc_id, str_split(text, ' ') AS t FROM documents) WHERE len(t) >= 3)),
+    s"""WITH sigs AS ($minhashSigsSql),
        banded AS (
          SELECT id, sig, b.band, sig[2*b.band + 1] * $P + sig[2*b.band + 2] AS band_key
          FROM sigs, generate_series(0, 3) b(band)),
        cand AS (
          SELECT DISTINCT a.id AS id_a, b.id AS id_b
          FROM banded a JOIN banded b ON a.band = b.band AND a.band_key = b.band_key AND a.id < b.id),
-       sh AS (
-         SELECT doc_id AS id, unnest(list_transform(list_distinct(
-           list_transform(generate_series(1, len(t) - 2), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])),
-           x -> ('0x' || substr(md5(x), 1, 15))::BIGINT)) AS s
-         FROM (SELECT doc_id, str_split(text, ' ') AS t FROM documents) WHERE len(t) >= 3),
+       sh AS (SELECT doc_id AS id, g AS s FROM (${gramHashesSql(3)})),
        sizes AS (SELECT id, count(*) AS n FROM sh GROUP BY id),
        common AS (
          SELECT a.id AS id_a, b.id AS id_b, count(*) AS c
@@ -2889,11 +2865,7 @@ object Queries {
   }
 
   private val oDecontam =
-    """WITH gh AS (
-         SELECT doc_id, ('0x' || substr(md5(gram), 1, 15))::BIGINT AS g FROM (
-           SELECT doc_id, unnest(list_distinct(list_transform(
-             generate_series(1, len(t) - 12), i -> array_to_string(t[i:i+12], ' ')))) AS gram
-           FROM (SELECT doc_id, str_split(text, ' ') AS t FROM documents))),
+    s"""WITH gh AS (${gramHashesSql(13)}),
        bench AS (
          SELECT doc_id AS bench_id, g FROM gh
          WHERE ('0x' || substr(md5(doc_id::VARCHAR || 'bench13'), 1, 15))::BIGINT % 1000000 < 50000)
@@ -2917,11 +2889,7 @@ object Queries {
   }
 
   private val oDecontamFrac =
-    """WITH gh AS (
-         SELECT doc_id, ('0x' || substr(md5(gram), 1, 15))::BIGINT AS g FROM (
-           SELECT doc_id, unnest(list_distinct(list_transform(
-             generate_series(1, len(t) - 7), i -> array_to_string(t[i:i+7], ' ')))) AS gram
-           FROM (SELECT doc_id, str_split(text, ' ') AS t FROM documents))),
+    s"""WITH gh AS (${gramHashesSql(8)}),
        bench AS (
          SELECT doc_id AS bench_id, g FROM gh
          WHERE ('0x' || substr(md5(doc_id::VARCHAR || 'bench13'), 1, 15))::BIGINT % 1000000 < 50000),
@@ -5004,11 +4972,7 @@ object Queries {
   }
 
   private val oSplitLeak =
-    """WITH gh AS (
-         SELECT doc_id, ('0x' || substr(md5(gram), 1, 15))::BIGINT AS g FROM (
-           SELECT doc_id, unnest(list_distinct(list_transform(
-             generate_series(1, len(t) - 2), i -> array_to_string(t[i:i+2], ' ')))) AS gram
-           FROM (SELECT doc_id, str_split(text, ' ') AS t FROM documents))),
+    s"""WITH gh AS (${gramHashesSql(3)}),
        b AS (SELECT doc_id,
                ('0x' || substr(md5(doc_id::VARCHAR || 'split'), 1, 15))::BIGINT
                  % 1000000 AS h

@@ -200,7 +200,9 @@ object Construction {
   /** capPhraseRx needs two words of shape [A-Z][A-Za-z]+ split by \s+. It
     * is case-sensitive, so it gets a char-class check instead of a
     * literal: two consecutive word-char tokens of that shape (any non-word
-    * separator counts — conservative). Non-ASCII lines are inconclusive.
+    * separator counts — conservative). Each char counts by the word class
+    * the screen reads it as; a char of the screen's fallback class is
+    * inconclusive.
     */
   private[core] def capPairShape(line: String): Boolean = {
     val n = line.length
@@ -208,10 +210,11 @@ object Construction {
     var i = 0
     while (i < n) {
       val c = line.charAt(i)
-      if (c >= 0x80) return true
-      if (LiteralScreen.isWordAscii(c)) {
+      val w = screen.wordClassOf(c)
+      if (w < 0) return true
+      if (w == 1) {
         var j = i + 1
-        while (j < n && LiteralScreen.isWordAscii(line.charAt(j))) j += 1
+        while (j < n && screen.wordClassOf(line.charAt(j)) == 1) j += 1
         val c1 = if (j - i >= 2) line.charAt(i + 1) else ' '
         val cap = c >= 'A' && c <= 'Z' && ((c1 >= 'A' && c1 <= 'Z') || (c1 >= 'a' && c1 <= 'z'))
         if (cap && prevCap) return true

@@ -212,6 +212,15 @@ final class LiteralScreen(patterns: IndexedSeq[Rx]) {
     bits
   }
 
+  /** The class the screen reads `c` as, from its per-char cache: 1 for a
+    * word char (Unicode `\w`), 0 for any other char (`\s` included), -1 for
+    * a char that sends its line to the fallback.
+    */
+  private[core] def wordClassOf(c: Char): Int = {
+    val v = if (c < 0x80) ascii(c) else codeOf(c)
+    if (v < 0) -1 else (v >>> 1) & 1
+  }
+
   /** Whether `line` takes the fallback instead of the literal pass. */
   private[core] def fallsBack(line: String): Boolean = {
     val b = screen(line)
@@ -226,7 +235,7 @@ object LiteralScreen {
 
   @inline def may(bits: Array[Long], i: Int): Boolean = (bits(i >>> 6) & (1L << i)) != 0
 
-  @inline private[core] def isWordAscii(c: Char): Boolean =
+  @inline private def isWordAscii(c: Char): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9') || c == '_'
 
   private val spaceClass = Pattern.compile("\\s", Pattern.UNICODE_CHARACTER_CLASS)

@@ -16,11 +16,18 @@ import org.apache.spark.sql.functions._
   * the per-document hit aggregation, whose input is already filtered to
   * contaminated grams (a tiny fraction of the corpus).
   *
-  * Gram generation is the native WordShinglesGenerator (zero-copy byte
-  * slices, per-document distinct), hashed top-level so the hash runs
-  * codegen'd in the fused Generate+Project stage.
+  * Grams come from [[TextDedup.gramHashes]]: the native
+  * WordShinglesGenerator (zero-copy byte slices, per-document distinct),
+  * hashed top-level so the hash runs codegen'd in the fused
+  * Generate+Project stage.
   */
 object Decontam {
+
+  /** [[TextDedup.gramHashes]] of `df` as (`outId`, g). */
+  private def grams(df: DataFrame, outId: String, idCol: String, textCol: String,
+                    n: Int, hash: Column => Column): DataFrame =
+    TextDedup.gramHashes(df, idCol, textCol, n, hash)
+      .select(col("id").as(outId), col("s").as("g"))
 
   /** Per-train-document contamination report: every training doc sharing at
     * least one distinct word n-gram with any benchmark doc, with the number
@@ -35,13 +42,9 @@ object Decontam {
                    idCol: String, textCol: String, n: Int = 13,
                    hash: Column => Column = TextDedup.fastHash): DataFrame = {
     require(n >= 1, "n must be >= 1")
-    def gramHashes(df: DataFrame, outId: String): DataFrame =
-      df.select(col(idCol).as(outId),
-          TextDedup.shingleRows(col(textCol), n))
-        .select(col(outId), hash(col("shingle")).as("g"))
     // (bench_id, g) is already distinct: the generator dedups per doc.
-    val benchGrams = broadcast(gramHashes(bench, "bench_id"))
-    gramHashes(train, "train_id")
+    val benchGrams = broadcast(grams(bench, "bench_id", idCol, textCol, n, hash))
+    grams(train, "train_id", idCol, textCol, n, hash)
       .join(benchGrams, "g")
       .groupBy("train_id")
       .agg(
@@ -69,15 +72,11 @@ object Decontam {
                        minPermille: Long = 800,
                        hash: Column => Column = TextDedup.fastHash): DataFrame = {
     require(n >= 1 && minPermille >= 1 && minPermille <= 1000)
-    def gramHashes(df: DataFrame, outId: String): DataFrame =
-      df.select(col(idCol).as(outId),
-          TextDedup.shingleRows(col(textCol), n))
-        .select(col(outId), hash(col("shingle")).as("g"))
-    val bg = gramHashes(bench, "bench_id")
+    val bg = grams(bench, "bench_id", idCol, textCol, n, hash)
     // grams are per-doc distinct by the generator, so count(*) = |gram set|
     val benchSide = bg.join(
       bg.groupBy("bench_id").agg(count(lit(1)).as("n_bench_grams")), "bench_id")
-    gramHashes(train, "train_id")
+    grams(train, "train_id", idCol, textCol, n, hash)
       .join(broadcast(benchSide), "g")
       .groupBy("train_id", "bench_id")
       .agg(count(lit(1)).as("n_hit"),
@@ -102,12 +101,8 @@ object Decontam {
                    idCol: String, textCol: String, n: Int = 13,
                    hash: Column => Column = TextDedup.fastHash): DataFrame = {
     require(n >= 1, "n must be >= 1")
-    def gramHashes(df: DataFrame, outId: String): DataFrame =
-      df.select(col(idCol).as(outId),
-          TextDedup.shingleRows(col(textCol), n))
-        .select(col(outId), hash(col("shingle")).as("g"))
-    val benchGrams = broadcast(gramHashes(bench, "bench_id"))
-    gramHashes(train, "train_id")
+    val benchGrams = broadcast(grams(bench, "bench_id", idCol, textCol, n, hash))
+    grams(train, "train_id", idCol, textCol, n, hash)
       .join(benchGrams, "g")
       .groupBy("bench_id")
       .agg(

@@ -61,6 +61,16 @@ object TextDedup {
       graft.functions.WordShinglesGenerator(
         org.apache.spark.sql.GraftBridge.expression(text), n))
 
+  /** A document as its set of hashed word n-grams: (id, s), one row per
+    * distinct shingle ([[shingleRows]]), s = hash(shingle) as a top-level,
+    * codegen'd projection; docs under `n` tokens have no rows. The gram
+    * source of every gram-set operator here and in [[Decontam]].
+    */
+  private[ops] def gramHashes(df: DataFrame, idCol: String, textCol: String,
+                              n: Int, hash: Column => Column): DataFrame =
+    df.select(col(idCol).as("id"), shingleRows(col(textCol), n).as("s0"))
+      .select(col("id"), hash(col("s0")).as("s"))
+
   /** Distinct word n-gram shingles of a token array. Guarded: Spark's
     * sequence(1, stop) DESCENDS when stop < 1, so short docs get an empty
     * array explicitly rather than a reversed range.
@@ -224,9 +234,8 @@ object TextDedup {
     // the k permutation minima become k min-aggregates in ONE hash
     // aggregate (fully codegen, map-side partial). Docs shorter than one
     // shingle produce no rows and drop out, as before.
-    val sh = df.select(col(idCol).as("id"),
-        shingleRows(col(textCol), shingleN).as("s0"))
-      .select(col("id"), pmod(hash(col("s0")), lit(P)).as("h"))
+    val sh = gramHashes(df, idCol, textCol, shingleN, hash)
+      .select(col("id"), pmod(col("s"), lit(P)).as("h"))
     val mins = (0 until k).map { j =>
       val a = j * 101 + 37
       val b = j * 61 + 11
@@ -398,74 +407,23 @@ object TextDedup {
     * Since prefixes hold the RAREST shingles, hot shingles drop out of
     * candidate generation precisely where they would have blown up.
     * Candidates are then verified exactly from the full sorted shingle-hash
-    * arrays (one array_intersect per pair), so the output is identical to
+    * arrays (one merge-count per pair), so the output is identical to
     * the brute formulation (the DuckDB oracle keeps the brute shape).
-    */
-  /** Plan note (measured, round 2): a "fused" variant building prefix +
-    * verification sets in one groupBy(id) over (dfreq,s)-sorted struct
-    * arrays was tried and REVERTED — the per-doc interpreted array ops
-    * (struct sort_array, transform field extraction, slice) cost more than
-    * the Tungsten shuffle-sort they replaced (7.5 s vs 3.4 s at local[8]).
-    * The window formulation below keeps the rank selection inside codegen
-    * sort machinery.
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         n: Int = 3, minJaccard: Double = 0.5,
                         hash: Column => Column = fastHash): DataFrame = {
     val t = minJaccard
-    // join on the 60-bit shingle hash, not the string: the equi-join
-    // compares/shuffles 8-byte keys instead of variable-length text.
-    // sh feeds sets, dfreq, and both prefix-join sides — persist so the
-    // tokenize/shingle/hash subtree runs once (ownership: releaseCaches).
-    val sh = df.select(col(idCol).as("id"),
-        shingleRows(col(textCol), n).as("s0"))
-      .select(col("id"), hash(col("s0")).as("s"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    registerCache(sh)
-    // one pass builds both the per-doc set (sorted for cheap intersection)
-    // and its size; persisted use is unnecessary — each side is read once
-    val sets = sh.groupBy("id")
-      .agg(sort_array(collect_list(col("s"))).as("arr"),
-        count(lit(1)).as("nsh"))
-    // global order: document frequency asc, hash asc (rare first).
-    // The epsilon makes ceil(t·n) CONSERVATIVE under floating point: if
-    // double(t) > t (e.g. t = 0.35), t·n can round just above an integer
-    // boundary, inflating the ceiling — which would shorten the prefix /
-    // tighten the size filter below the sound bound and silently drop
-    // qualifying pairs. Subtracting 1e-9 (far above double error at any
-    // realistic |d|, far below 1) restores exactness; at worst the prefix
-    // is one element longer than necessary.
-    def ceilT(n: Column): Column = ceil(lit(t) * n - 1e-9)
-    val dfreq = sh.groupBy("s").agg(count(lit(1)).as("dfreq"))
-    val wPos = Window.partitionBy("id").orderBy(col("dfreq"), col("s"))
-    val wN = Window.partitionBy("id")
-    val prefix = sh.join(dfreq, "s")
-      .select(col("id"), col("s"),
-        row_number().over(wPos).as("pos"),
-        count(lit(1)).over(wN).as("nsh"))
-      .where(col("pos") <= col("nsh") - ceilT(col("nsh")) + 1)
-      .select(col("id"), col("s"), col("nsh"))
+    val (_, sets, prefix) = prefixFilter(df, idCol, textCol, n, t, hash)
     val a = prefix.alias("a"); val b = prefix.alias("b")
     val cand = a.join(b,
         col("a.s") === col("b.s") && col("a.id") < col("b.id") &&
           // size filter: |A| ≥ ⌈t·|B|⌉ and vice versa for any qualifying pair
-          col("a.nsh") >= ceilT(col("b.nsh")) &&
-          col("b.nsh") >= ceilT(col("a.nsh")))
+          col("a.nsh") >= ceilT(t, col("b.nsh")) &&
+          col("b.nsh") >= ceilT(t, col("a.nsh")))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
-    // exact verification: merge-count the sorted (distinct) shingle-hash
-    // sets — codegen-native, no per-pair hash map / output array
-    // (graft.functions.SortedIntersectCount)
-    def intersectCount(a: Column, b: Column): Column =
-      org.apache.spark.sql.GraftBridge.column(graft.functions.SortedIntersectCount(
-        org.apache.spark.sql.GraftBridge.expression(a),
-        org.apache.spark.sql.GraftBridge.expression(b)))
-    val sa = sets.select(col("id").as("id_a"), col("arr").as("arr_a"), col("nsh").as("na"))
-    val sb = sets.select(col("id").as("id_b"), col("arr").as("arr_b"), col("nsh").as("nb"))
-    cand.join(sa, "id_a").join(sb, "id_b")
-      .select(col("id_a"), col("id_b"),
-        intersectCount(col("arr_a"), col("arr_b")).as("n_common"),
-        col("na"), col("nb"))
+    commonCounts(cand, sets)
       .select(col("id_a"), col("id_b"),
         (col("n_common").cast("double") / (col("na") + col("nb") - col("n_common")))
           .as("jaccard"))
@@ -499,18 +457,46 @@ object TextDedup {
                        hash: Column => Column = fastHash): DataFrame = {
     val t = minContainment
     require(t > 0.0 && t <= 1.0, s"minContainment must be in (0,1], got $t")
-    val sh = df.select(col(idCol).as("id"),
-        shingleRows(col(textCol), n).as("s0"))
-      .select(col("id"), hash(col("s0")).as("s"))
+    val (sh, sets, prefix) = prefixFilter(df, idCol, textCol, n, t, hash)
+    val a = prefix.alias("a"); val b = sh.alias("b")
+    val cand = a.join(b,
+        col("a.s") === col("b.s") && col("a.id") =!= col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .dropDuplicates("id_a", "id_b")
+    commonCounts(cand, sets)
+      .select(col("id_a"), col("id_b"),
+        (col("n_common").cast("double") / col("na")).as("containment"))
+      .where(col("containment") >= minContainment)
+  }
+
+  /** The front end both prefix-filter joins share, at threshold `t`: the
+    * gram table `sh` (id, s); each doc's sorted gram set `sets` (id, arr,
+    * nsh); and each doc's `prefix` (id, s, nsh), its first
+    * |d| − ⌈t·|d|⌉ + 1 grams in the global (document frequency asc, hash
+    * asc) order, rarest first.
+    *
+    * Plan note (measured, round 2): a "fused" variant building prefix +
+    * verification sets in one groupBy(id) over (dfreq,s)-sorted struct
+    * arrays was tried and REVERTED — the per-doc interpreted array ops
+    * (struct sort_array, transform field extraction, slice) cost more than
+    * the Tungsten shuffle-sort they replaced (7.5 s vs 3.4 s at local[8]).
+    * The window formulation below keeps the rank selection inside codegen
+    * sort machinery.
+    */
+  private def prefixFilter(df: DataFrame, idCol: String, textCol: String, n: Int,
+                           t: Double, hash: Column => Column): (DataFrame, DataFrame, DataFrame) = {
+    // join on the 60-bit shingle hash, not the string: the equi-join
+    // compares/shuffles 8-byte keys instead of variable-length text.
+    // sh feeds sets, dfreq, the prefix and the candidate join — persist so
+    // the tokenize/shingle/hash subtree runs once (ownership: releaseCaches).
+    val sh = gramHashes(df, idCol, textCol, n, hash)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     registerCache(sh)
+    // one pass builds both the per-doc set (sorted for cheap intersection)
+    // and its size; persisted use is unnecessary — each side is read once
     val sets = sh.groupBy("id")
       .agg(sort_array(collect_list(col("s"))).as("arr"),
         count(lit(1)).as("nsh"))
-    // same conservative-ceiling guard as ngramJaccardPairs: double(t)·n can
-    // round just above an integer boundary and shorten the prefix below the
-    // sound pigeonhole length
-    def ceilT(n: Column): Column = ceil(lit(t) * n - 1e-9)
     val dfreq = sh.groupBy("s").agg(count(lit(1)).as("dfreq"))
     val wPos = Window.partitionBy("id").orderBy(col("dfreq"), col("s"))
     val wN = Window.partitionBy("id")
@@ -518,25 +504,39 @@ object TextDedup {
       .select(col("id"), col("s"),
         row_number().over(wPos).as("pos"),
         count(lit(1)).over(wN).as("nsh"))
-      .where(col("pos") <= col("nsh") - ceilT(col("nsh")) + 1)
+      .where(col("pos") <= col("nsh") - ceilT(t, col("nsh")) + 1)
       .select(col("id"), col("s"), col("nsh"))
-    val a = prefix.alias("a"); val b = sh.alias("b")
-    val cand = a.join(b,
-        col("a.s") === col("b.s") && col("a.id") =!= col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    def intersectCount(x: Column, y: Column): Column =
-      org.apache.spark.sql.GraftBridge.column(graft.functions.SortedIntersectCount(
-        org.apache.spark.sql.GraftBridge.expression(x),
-        org.apache.spark.sql.GraftBridge.expression(y)))
+    (sh, sets, prefix)
+  }
+
+  /** ⌈t·n⌉, made CONSERVATIVE under floating point: if double(t) > t
+    * (e.g. t = 0.35), t·n can round just above an integer boundary,
+    * inflating the ceiling — which would shorten the prefix / tighten the
+    * size filter below the sound bound and silently drop qualifying pairs.
+    * Subtracting 1e-9 (far above double error at any realistic |d|, far
+    * below 1) restores exactness; at worst the prefix is one element longer
+    * than necessary.
+    */
+  private def ceilT(t: Double, n: Column): Column = ceil(lit(t) * n - 1e-9)
+
+  /** Exact verification of both prefix-filter joins: candidate pairs
+    * (id_a, id_b) with set sizes `na`, `nb` and overlap `n_common`.
+    */
+  private def commonCounts(cand: DataFrame, sets: DataFrame): DataFrame = {
     val sa = sets.select(col("id").as("id_a"), col("arr").as("arr_a"), col("nsh").as("na"))
-    val sb = sets.select(col("id").as("id_b"), col("arr").as("arr_b"))
+    val sb = sets.select(col("id").as("id_b"), col("arr").as("arr_b"), col("nsh").as("nb"))
     cand.join(sa, "id_a").join(sb, "id_b")
       .select(col("id_a"), col("id_b"),
-        (intersectCount(col("arr_a"), col("arr_b")).cast("double") / col("na"))
-          .as("containment"))
-      .where(col("containment") >= minContainment)
+        intersectCount(col("arr_a"), col("arr_b")).as("n_common"),
+        col("na"), col("nb"))
   }
+
+  /** |a ∩ b| of two sorted distinct gram-hash arrays, merge-counted in
+    * codegen with no per-pair hash map (graft.functions.SortedIntersectCount). */
+  private def intersectCount(a: Column, b: Column): Column =
+    org.apache.spark.sql.GraftBridge.column(graft.functions.SortedIntersectCount(
+      org.apache.spark.sql.GraftBridge.expression(a),
+      org.apache.spark.sql.GraftBridge.expression(b)))
 
   /** Cluster resolution — the stage every candidate-pair generator above
     * feeds at corpus scale: connected components over the pair graph,
@@ -736,10 +736,8 @@ object TextDedup {
   def noveltyScores(df: DataFrame, idCol: String, textCol: String,
                     n: Int = 3,
                     hash: Column => Column = fastHash): DataFrame = {
-    val sh = df.select(col(idCol).as("id"),
-        shingleRows(col(textCol), n).as("s0"))
-      .select(col("id"), hash(col("s0")).as("s"))
-    // shingleRows is per-doc distinct, so count(*) per hash IS document
+    val sh = gramHashes(df, idCol, textCol, n, hash)
+    // gramHashes is per-doc distinct, so count(*) per hash IS document
     // frequency
     val dfreq = sh.groupBy("s").agg(count(lit(1)).as("dfreq"))
     sh.join(dfreq, "s")

@@ -233,6 +233,25 @@ class PrescreenFactsSpec extends AnyFunSuite {
       assert(screen.clauses(bit).nonEmpty, s"$name derives no clause")
     }
   }
+
+  test("capPairShape reads non-ASCII chars by their word class") {
+    // the extract workload's six non-ASCII chars (ø – │ ° ± NBSP) between
+    // tokens that are not a capitalized pair: no longer inconclusive
+    val cleared = Seq("pipe ø 12 mm", "Pipe ø Fitting", "ø25 Copper", "range 10–12 ga",
+      "Size 3–5 in", "left │ right", "Panel │ 2 Way", "bend 90° elbow", "Elbow 90° Bend",
+      "tol ±2 mm", "Range ±5 Deg", "see\u00A0note", "Note\u00A0a Bar", "ø\u00A0Bar")
+    cleared.foreach { s =>
+      assert(!capPairShape(s), s)
+      assert(capPhraseRx.search(s).isEmpty, s)
+    }
+    // a non-ASCII word char inside a token keeps the pair check exact
+    assert(capPairShape("Café Bar Grill"))
+    assert(capPhraseRx.search("Café Bar Grill").map(_.group(1)).contains("Bar Grill"))
+    // NBSP is `\s`: two capitalized words around it are a pair
+    assert(capPairShape("Bar\u00A0Grill") && capPhraseRx.search("Bar\u00A0Grill").isDefined)
+    // the screen's fallback class (a combining mark, U+2028) stays inconclusive
+    assert(capPairShape("e\u0301 x") && capPairShape("a\u2028b"))
+  }
 }
 
 object PrescreenFactsSpec {

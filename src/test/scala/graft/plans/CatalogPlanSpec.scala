@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-import org.apache.spark.sql.execution.{MapElementsExec, MapPartitionsExec, SparkPlan}
+import org.apache.spark.sql.execution.{GenerateExec, MapElementsExec, MapPartitionsExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
@@ -611,6 +611,33 @@ class CatalogPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       case _ => p.children.flatMap(walk)
     })
     walk(root)
+  }
+
+  test("q_ngram_jaccard / q_containment: documents shingled once, every consumer scans the gram cache") {
+    assume(Files.exists(Paths.get(s"$sf/documents.parquet")), "sf0.001 testdata missing")
+    def shingles(nodes: Seq[SparkPlan]): Int = nodes.count {
+      case g: GenerateExec => g.generator.isInstanceOf[graft.functions.WordShinglesGenerator]
+      case _ => false
+    }
+    // the plan without the plans that fill in-memory caches
+    def outsideCaches(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => outsideCaches(a.executedPlan)
+      case q: QueryStageExec => outsideCaches(q.plan)
+      case _: InMemoryTableScanExec => Nil
+      case _ => p.children.flatMap(outsideCaches)
+    })
+    Seq("q_ngram_jaccard", "q_containment").foreach { q =>
+      val df = graft.SparkEntry.queries(q)(spark, sf)
+      try {
+        df.collect()
+        val root = df.queryExecution.executedPlan
+        assert(shingles(planNodes(root)) == 1, s"$q: one WordShingles generator:\n$root")
+        val outside = outsideCaches(root)
+        val scans = outside.collect { case m: InMemoryTableScanExec => m.relation.cacheBuilder }
+        assert(shingles(outside) == 0 && scans.nonEmpty && scans.distinct.size == 1,
+          s"$q: every gram consumer reads the one persisted gram table:\n$root")
+      } finally graft.ops.TextDedup.releaseCaches()
+    }
   }
 
   /** Checks that `df`'s per-document map reads a range split of the
