@@ -5247,43 +5247,63 @@ object Queries {
     * xref-stream decode, ObjStm expansion, predictor unfiltering, or font
     * decode flips the hash.
     */
-  private def qPdfXrefstream(s: SparkSession, dir: String): DataFrame = {
+  private def qPdfXrefstream(s: SparkSession, dir: String): DataFrame =
+    pdfTextRows(s, dir, "framing") { (id, text) =>
+      import graft.pdf.Pdf
+      val lines = "§ déjà vu — café №42" +: pdfChunks(text)
+      val page = Seq(pdfPage(lines))
+      val framing = (id % 8).toInt
+      framing -> (framing match {
+        case 0 => Pdf.writePages(page, flate = id % 2 == 0)
+        case 1 => Pdf.writePages(page, flate = id % 2 == 0, framing = Pdf.Framing.XrefStream)
+        case 2 => Pdf.writePages(page, flate = id % 2 == 0, framing = Pdf.Framing.XrefStreamPred)
+        case 3 => Pdf.writePages(page, flate = id % 2 == 0, framing = Pdf.Framing.ObjStm)
+        case 4 => Pdf.writeCustomFontDoc(Seq(lines), cid = false)
+        case 5 => Pdf.writeCustomFontDoc(Seq(lines), cid = true)
+        case 6 => // encrypted: /Encrypt injected into the trailer
+          new String(Pdf.writePages(page, flate = false),
+            java.nio.charset.StandardCharsets.ISO_8859_1)
+            .replace("/Root 1 0 R", "/Root 1 0 R /Encrypt 9 0 R")
+            .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+        case _ => // truncated mid-file: must fall back, not crash
+          val full = Pdf.writePages(page, flate = false)
+          java.util.Arrays.copyOfRange(full, 0, full.length / 3)
+      })
+    }
+
+  /** The frame of the PDF text rows: per document `write(id, text)` gives
+    * (variant, PDF bytes), decoded through the production Decode path to
+    * (doc_id, `variant`, n_pages, err_kind, text_h), text_h the hash of
+    * the decoded text (0 when no page decodes).
+    */
+  private def pdfTextRows(s: SparkSession, dir: String, variant: String)(
+      write: (Long, String) => (Int, Array[Byte])): DataFrame = {
     import s.implicits._
-    import graft.pdf.Pdf
-    val prefix = "§ déjà vu — café №42"
     spread(docs(s, dir).select(col("doc_id"), col("text"))).as[(Long, String)]
       .map { case (id, text) =>
-        val chunks = if (text.isEmpty) Seq("") else text.grouped(40).toSeq
-        val lines = prefix +: chunks
-        val placements = lines.zipWithIndex.map { case (l, i) => (50.0, 760.0 - 12.0 * i, l) }
-        val framing = (id % 8).toInt
-        val bytes: Array[Byte] = framing match {
-          case 0 => Pdf.writePages(Seq(Pdf.PageSpec(placements)), flate = id % 2 == 0)
-          case 1 => Pdf.writePages(Seq(Pdf.PageSpec(placements)), flate = id % 2 == 0,
-            framing = Pdf.Framing.XrefStream)
-          case 2 => Pdf.writePages(Seq(Pdf.PageSpec(placements)), flate = id % 2 == 0,
-            framing = Pdf.Framing.XrefStreamPred)
-          case 3 => Pdf.writePages(Seq(Pdf.PageSpec(placements)), flate = id % 2 == 0,
-            framing = Pdf.Framing.ObjStm)
-          case 4 => Pdf.writeCustomFontDoc(Seq(lines), cid = false)
-          case 5 => Pdf.writeCustomFontDoc(Seq(lines), cid = true)
-          case 6 => // encrypted: /Encrypt injected into the trailer
-            new String(Pdf.writePages(Seq(Pdf.PageSpec(placements)), flate = false),
-              java.nio.charset.StandardCharsets.ISO_8859_1)
-              .replace("/Root 1 0 R", "/Root 1 0 R /Encrypt 9 0 R")
-              .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          case _ => // truncated mid-file: must fall back, not crash
-            val full = Pdf.writePages(Seq(Pdf.PageSpec(placements)), flate = false)
-            java.util.Arrays.copyOfRange(full, 0, full.length / 3)
-        }
+        val (v, bytes) = write(id, text)
         val dec = graft.pipeline.Decode.decode(bytes, null)
         val errKind = dec.error.map(_.takeWhile(_ != ':')).getOrElse("")
-        (id, framing, dec.pages.length, errKind, dec.pages.map(_.text).mkString("\n\n"))
+        (id, v, dec.pages.length, errKind, dec.pages.map(_.text).mkString("\n\n"))
       }
-      .toDF("doc_id", "framing", "n_pages", "err_kind", "got_text")
+      .toDF("doc_id", variant, "n_pages", "err_kind", "got_text")
       .withColumn("text_h", when(col("n_pages") > 0, ph(col("got_text"))).otherwise(lit(0L)))
-      .select("doc_id", "framing", "n_pages", "err_kind", "text_h")
+      .select("doc_id", variant, "n_pages", "err_kind", "text_h")
   }
+
+  /** The 40-char chunks of `text` (one empty chunk for empty text), one
+    * line each in the PDF text rows. Oracle twin: [[pdfChunksSql]].
+    */
+  private def pdfChunks(text: String): Seq[String] =
+    if (text.isEmpty) Seq("") else text.grouped(40).toSeq
+
+  private val pdfChunksSql =
+    """array_to_string(list_transform(generate_series(0, (length(text)-1)//40),
+         i -> substr(text, i*40 + 1, 40)), chr(10))"""
+
+  /** One PDF page holding `lines` at x = 50, 12 pt apart down from y = 760. */
+  private def pdfPage(lines: Seq[String]): graft.pdf.Pdf.PageSpec =
+    graft.pdf.Pdf.PageSpec(lines.zipWithIndex.map { case (l, i) => (50.0, 760.0 - 12.0 * i, l) })
 
   /** Gradient fixture image of the PNG rows: pixel(x,y) = (7x + 13y +
     * 31·base) mod 251, plus `bump` at (0,0); dims (9·cw) × (7·ch) with
@@ -5375,10 +5395,8 @@ object Queries {
   // framing outcomes by doc_id % 8. Framings 0-5 → 1 page, text hash;
   // 6 → pdf-encrypted fallback; 7 → pdf-parse fallback.
   private val oPdfXrefstream =
-    """WITH d AS (SELECT doc_id, CAST(doc_id % 8 AS INTEGER) AS framing,
-         '§ déjà vu — café №42' || chr(10) ||
-           array_to_string(list_transform(generate_series(0, (length(text)-1)//40),
-             i -> substr(text, i*40 + 1, 40)), chr(10)) AS full_text
+    s"""WITH d AS (SELECT doc_id, CAST(doc_id % 8 AS INTEGER) AS framing,
+         '§ déjà vu — café №42' || chr(10) || $pdfChunksSql AS full_text
        FROM documents)
        SELECT doc_id, framing,
          CASE WHEN framing >= 6 THEN 0 ELSE 1 END AS n_pages,
@@ -5540,7 +5558,7 @@ object Queries {
           case 2 => Pdf.Framing.XrefStreamPred
           case _ => Pdf.Framing.ObjStm
         }
-        val bytes = Pdf.writePages(Seq(Pdf.PageSpec(Seq((50.0, 760.0, "body")))),
+        val bytes = Pdf.writePages(Seq(pdfPage(Seq("body"))),
           flate = id % 2 == 0, framing = framing,
           info = Seq("Title" -> title, "Author" -> author, "CreationDate" -> date))
         val got = Pdf.docInfo(bytes)
@@ -5570,39 +5588,27 @@ object Queries {
     * from the documents table, so a key-derivation or cipher bug flips the
     * hash.
     */
-  private def qPdfEncrypted(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.pdf.Pdf
-    spread(docs(s, dir).select(col("doc_id"), col("text"))).as[(Long, String)]
-      .map { case (id, text) =>
-        val chunks = if (text.isEmpty) Seq("") else text.grouped(40).toSeq
-        val placements = chunks.zipWithIndex.map { case (l, i) => (50.0, 760.0 - 12.0 * i, l) }
-        val spec = Seq(Pdf.PageSpec(placements))
-        val mode = (id % 5).toInt
-        val bytes = mode match {
-          case 0 => Pdf.writePages(spec, flate = id % 2 == 0)
-          case 1 => Pdf.writePages(spec, flate = id % 2 == 0,
-            encrypt = Some(Pdf.EncryptSpec()))
-          case 2 => Pdf.writePages(spec, flate = id % 2 == 0, framing = Pdf.Framing.ObjStm,
-            encrypt = Some(Pdf.EncryptSpec()))
-          case 3 => Pdf.writePages(spec, flate = id % 2 == 0, framing = Pdf.Framing.XrefStream,
-            encrypt = Some(Pdf.EncryptSpec(aes = true)))
-          case _ => Pdf.writePages(spec, flate = id % 2 == 0,
-            encrypt = Some(Pdf.EncryptSpec(userPwd = s"pwd-$id")))
-        }
-        val dec = graft.pipeline.Decode.decode(bytes, null)
-        val errKind = dec.error.map(_.takeWhile(_ != ':')).getOrElse("")
-        (id, mode, dec.pages.length, errKind, dec.pages.map(_.text).mkString("\n\n"))
-      }
-      .toDF("doc_id", "mode", "n_pages", "err_kind", "got_text")
-      .withColumn("text_h", when(col("n_pages") > 0, ph(col("got_text"))).otherwise(lit(0L)))
-      .select("doc_id", "mode", "n_pages", "err_kind", "text_h")
-  }
+  private def qPdfEncrypted(s: SparkSession, dir: String): DataFrame =
+    pdfTextRows(s, dir, "mode") { (id, text) =>
+      import graft.pdf.Pdf
+      val spec = Seq(pdfPage(pdfChunks(text)))
+      val mode = (id % 5).toInt
+      mode -> (mode match {
+        case 0 => Pdf.writePages(spec, flate = id % 2 == 0)
+        case 1 => Pdf.writePages(spec, flate = id % 2 == 0,
+          encrypt = Some(Pdf.EncryptSpec()))
+        case 2 => Pdf.writePages(spec, flate = id % 2 == 0, framing = Pdf.Framing.ObjStm,
+          encrypt = Some(Pdf.EncryptSpec()))
+        case 3 => Pdf.writePages(spec, flate = id % 2 == 0, framing = Pdf.Framing.XrefStream,
+          encrypt = Some(Pdf.EncryptSpec(aes = true)))
+        case _ => Pdf.writePages(spec, flate = id % 2 == 0,
+          encrypt = Some(Pdf.EncryptSpec(userPwd = s"pwd-$id")))
+      })
+    }
 
   private val oPdfEncrypted =
-    """WITH d AS (SELECT doc_id, CAST(doc_id % 5 AS INTEGER) AS mode,
-         array_to_string(list_transform(generate_series(0, (length(text)-1)//40),
-           i -> substr(text, i*40 + 1, 40)), chr(10)) AS full_text
+    s"""WITH d AS (SELECT doc_id, CAST(doc_id % 5 AS INTEGER) AS mode,
+         $pdfChunksSql AS full_text
        FROM documents)
        SELECT doc_id, mode,
          CASE WHEN mode = 4 THEN 0 ELSE 1 END AS n_pages,
@@ -5630,7 +5636,7 @@ object Queries {
           case 1 => Pdf.Framing.XrefStream
           case _ => Pdf.Framing.ObjStm
         }
-        val bytes = Pdf.writePages(Seq(Pdf.PageSpec(Seq((50.0, 760.0, "body")))),
+        val bytes = Pdf.writePages(Seq(pdfPage(Seq("body"))),
           flate = id % 2 == 0, framing = framing,
           encrypt = if (id % 4 == 0) Some(Pdf.EncryptSpec()) else None,
           annots = Seq(Seq("FreeText" -> note, "Widget" -> field)))

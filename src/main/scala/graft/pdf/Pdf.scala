@@ -87,13 +87,6 @@ object Pdf {
   private val RowH = 14.0
 
   // ------------------------------------------------------------------ write
-  /** Write a PDF whose page texts round-trip through `parse` + `Layout`.
-    * Each input page is a list of (x, y, line) placements.
-    */
-  def write(pages: Seq[Seq[(Double, Double, String)]], flate: Boolean,
-            width: Double = 612.0, height: Double = 792.0): Array[Byte] =
-    writePages(pages.map(p => PageSpec(p)), flate, width, height)
-
   /** The raw byte form an info string decodes FROM: ASCII bytes, or
     * BOM + UTF-16BE for non-ASCII values.
     */
@@ -102,6 +95,8 @@ object Pdf {
     else Array[Byte](0xFE.toByte, 0xFF.toByte) ++
       s.getBytes(java.nio.charset.StandardCharsets.UTF_16BE)
 
+  private def hex(b: Array[Byte]): String = b.map(x => f"${x & 0xff}%02X").mkString("<", "", ">")
+
   /** Serialize a document-information string: ASCII stays a literal string
     * (PDFDocEncoding-compatible bytes); anything non-ASCII uses the
     * standard UTF-16BE-with-BOM form (ISO 32000-1 §7.9.2.2) written as a
@@ -109,263 +104,262 @@ object Pdf {
     * carries it unchanged.
     */
   private def infoString(s: String): String =
-    if (s.forall(_ < 0x80)) {
-      val sb = new java.lang.StringBuilder(s.length + 8)
-      sb.append('(')
-      s.foreach {
-        case '\\' => sb.append("\\\\")
-        case '('  => sb.append("\\(")
-        case ')'  => sb.append("\\)")
-        case '\r' => sb.append("\\r")
-        case '\n' => sb.append("\\n")
-        case c    => sb.append(c)
-      }
-      sb.append(')')
-      sb.toString
-    } else infoRawBytes(s).map(b => f"${b & 0xff}%02X").mkString("<", "", ">")
+    if (s.forall(_ < 0x80)) "(" + escapeString(s, named = "\r\n") + ")"
+    else hex(infoRawBytes(s))
 
+  /** The body of a PDF literal string (§7.3.4.2): backslash and parens
+    * escaped, the control chars in `named` (of `\n`, `\r`, `\t`) as their
+    * two-char escapes, any other char below 0x20 as a 3-digit octal escape
+    * when `octal`, else raw.
+    */
+  private def escapeString(s: String, named: String = "\n\r\t", octal: Boolean = false): String = {
+    val sb = new java.lang.StringBuilder(s.length + 8)
+    s.foreach {
+      case '\\' => sb.append("\\\\")
+      case '('  => sb.append("\\(")
+      case ')'  => sb.append("\\)")
+      case c if c < 0x20 && named.indexOf(c) >= 0 =>
+        sb.append('\\').append("nrt".charAt("\n\r\t".indexOf(c)))
+      case c if c < 0x20 && octal => sb.append(f"\\${c.toInt}%03o")
+      case c    => sb.append(c)
+    }
+    sb.toString
+  }
+
+  private def bytes(s: String): Array[Byte] = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  /** One indirect object's body: a dict, or a stream written as
+    * `<< head/Length n tail >>` around its data bytes (already filtered
+    * and enciphered). A `loose` dict never goes into an /ObjStm: the
+    * /Encrypt dict (§7.5.7).
+    */
+  private sealed trait Body
+  private final case class Dict(text: String, loose: Boolean = false) extends Body
+  private final case class Stream(head: String, data: Array[Byte], tail: String = "") extends Body
+
+  /** A file being written: the header, then objects at recorded offsets. */
+  private final class PdfOut(version: String) {
+    private val out = new java.io.ByteArrayOutputStream()
+    val offsets = mutable.Map.empty[Int, Int] // objnum -> byte offset
+    write(s"%PDF-$version\n")
+
+    def size: Int = out.size()
+    def write(s: String): Unit = out.write(bytes(s))
+    def result: Array[Byte] = out.toByteArray
+
+    def obj(num: Int, body: Body): Unit = {
+      offsets(num) = size
+      body match {
+        case Dict(text, _) => write(s"$num 0 obj\n$text\nendobj\n")
+        case Stream(head, data, tail) =>
+          write(s"$num 0 obj\n<< $head/Length ${data.length}$tail >>\nstream\n")
+          out.write(data)
+          write("\nendstream\nendobj\n")
+      }
+    }
+
+    /** End the file with cross-reference stream object `num` (§7.5.8):
+      * /W [1 4 2] rows for objects 0..num, type 2 (stream, index) for the
+      * objects in `packed`, optionally PNG-predicted (filter 2 / Up,
+      * /Predictor 12), always Flate.
+      */
+    def endWithXrefStream(num: Int, predicted: Boolean, trailer: String,
+                          packed: Map[Int, (Int, Int)]): Array[Byte] = {
+      val xrefPos = size
+      offsets(num) = xrefPos
+      val rowBytes = 7
+      val raw = new Array[Byte]((num + 1) * rowBytes)
+      (0 to num).foreach { n =>
+        val (t, f2, f3) =
+          if (n == 0) (0, 0, 65535)
+          else packed.get(n).fold((1, offsets(n), 0)) { case (stm, idx) => (2, stm, idx) }
+        val o = n * rowBytes
+        raw(o) = t.toByte
+        raw(o + 1) = (f2 >>> 24).toByte; raw(o + 2) = (f2 >>> 16).toByte
+        raw(o + 3) = (f2 >>> 8).toByte; raw(o + 4) = f2.toByte
+        raw(o + 5) = (f3 >>> 8).toByte; raw(o + 6) = f3.toByte
+      }
+      val body = if (predicted) PngFilter.filter(raw, rowBytes, bpp = 1, _ => 2) else raw
+      val parms = if (predicted) s" /DecodeParms << /Predictor 12 /Columns $rowBytes >>" else ""
+      obj(num, Stream(s"/Type /XRef /Size ${num + 1} /W [1 4 2] /Root 1 0 R$trailer ",
+        Zlib.deflate(body), s" /Filter /FlateDecode$parms"))
+      write(s"startxref\n$xrefPos\n%%EOF\n")
+      result
+    }
+  }
+
+  // One serializer per cross-reference form. Each reads the same object
+  // list, numbered 1..n in list order; `trailer` is the trailer's entries
+  // after /Root.
+
+  /** Classic (PDF 1.4, §7.5.4): every object, then an `xref` table. */
+  private def classicFile(objs: Seq[(Int, Body)], trailer: String): Array[Byte] = {
+    val f = new PdfOut("1.4")
+    objs.foreach { case (n, b) => f.obj(n, b) }
+    val xrefPos = f.size
+    val total = objs.length + 1
+    f.write(s"xref\n0 $total\n0000000000 65535 f \n" +
+      objs.map { case (n, _) => f"${f.offsets(n)}%010d 00000 n \n" }.mkString)
+    f.write(s"trailer\n<< /Size $total /Root 1 0 R$trailer >>\nstartxref\n$xrefPos\n%%EOF\n")
+    f.result
+  }
+
+  /** Xref stream (PDF 1.5): every object, then one xref stream. */
+  private def xrefStreamFile(objs: Seq[(Int, Body)], predicted: Boolean,
+                             trailer: String): Array[Byte] = {
+    val f = new PdfOut("1.5")
+    objs.foreach { case (n, b) => f.obj(n, b) }
+    f.endWithXrefStream(objs.length + 1, predicted, trailer, Map.empty)
+  }
+
+  /** Object stream (§7.5.7): the streams and the loose dicts top-level,
+    * every other dict packed, in list order, into one Flate /ObjStm that
+    * `seal` enciphers as a whole (its members' strings are written plain),
+    * then a predicted xref stream with type-2 entries for the members.
+    */
+  private def objStmFile(objs: Seq[(Int, Body)], trailer: String,
+                         seal: (Array[Byte], Int) => Array[Byte]): Array[Byte] = {
+    val f = new PdfOut("1.5")
+    val members = objs.collect { case (n, Dict(text, false)) => (n, text + "\n") }
+    objs.foreach {
+      case (_, Dict(_, false)) => ()
+      case (n, b) => f.obj(n, b)
+    }
+    val offsets = members.scanLeft(0) { case (o, (_, body)) => o + bytes(body).length }
+    val header = members.zip(offsets).map { case ((n, _), o) => s"$n $o" }.mkString(" ") + "\n"
+    val stmNum = objs.length + 1
+    f.obj(stmNum, Stream(s"/Type /ObjStm /N ${members.length} /First ${bytes(header).length} ",
+      seal(Zlib.deflate(bytes(header + members.map(_._2).mkString)), stmNum),
+      " /Filter /FlateDecode"))
+    f.endWithXrefStream(stmNum + 1, predicted = true, trailer,
+      members.map(_._1).zipWithIndex.map { case (n, idx) => n -> (stmNum, idx) }.toMap)
+  }
+
+  /** The objects every written document starts with: 1 catalog, 2 page
+    * tree, 3 the page font `/F1`, the `resources` from 4 on, then one page
+    * dict per page (`/MediaBox [0 0 mediaBox]`, `pageRefs(i)` after its
+    * /Contents) and the pages' content streams; `content(i, num)` is page
+    * i's stream as object `num`.
+    */
+  private def pageObjects(nPages: Int, font: String, resources: Seq[Body], mediaBox: String,
+                          pageRefs: Int => String,
+                          content: (Int, Int) => Body): Seq[(Int, Body)] = {
+    val firstPage = 4 + resources.length
+    def contentNum(i: Int) = firstPage + nPages + i
+    val kids = (0 until nPages).map(i => s"${firstPage + i} 0 R").mkString(" ")
+    val bodies =
+      Seq(Dict("<< /Type /Catalog /Pages 2 0 R >>"),
+        Dict(s"<< /Type /Pages /Kids [$kids] /Count $nPages >>"), Dict(font)) ++
+        resources ++
+        (0 until nPages).map(i => Dict(s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 $mediaBox] " +
+          s"/Contents ${contentNum(i)} 0 R${pageRefs(i)} /Resources << /Font << /F1 3 0 R >> >> >>")) ++
+        (0 until nPages).map(i => content(i, contentNum(i)))
+    bodies.zipWithIndex.map { case (b, k) => (k + 1, b) }
+  }
+
+  /** Page `spec`'s content stream: one Helvetica text run per placement
+    * (the text's raw UTF-8 bytes), then each table as a ruled grid (m/l/S
+    * segments) with one run per non-empty cell, stacked below the lowest
+    * text line so long (fat) pages never push text runs into a grid bbox.
+    */
+  private def contentBytes(spec: PageSpec): Array[Byte] = {
+    val content = new java.lang.StringBuilder
+    def run(x: Double, y: Double, text: String): Unit =
+      content.append("BT /F1 10 Tf 1 0 0 1 ").append(fmtNum(x)).append(' ')
+        .append(fmtNum(y)).append(" Tm (").append(escapeString(text)).append(") Tj ET\n")
+    def seg(x1: Double, y1: Double, x2: Double, y2: Double): Unit =
+      content.append(fmtNum(x1)).append(' ').append(fmtNum(y1)).append(" m ")
+        .append(fmtNum(x2)).append(' ').append(fmtNum(y2)).append(" l S\n")
+    spec.placements.foreach { case (x, y, line) => run(x, y, line) }
+    var yTop = (if (spec.placements.isEmpty) 760.0 else spec.placements.map(_._2).min) - 30.0
+    spec.tables.foreach { table =>
+      val rows = table.length
+      val cols = table.map(_.length).max
+      val x0 = 50.0
+      (0 to cols).foreach(j => seg(x0 + j * CellW, yTop, x0 + j * CellW, yTop - rows * RowH))
+      (0 to rows).foreach(r => seg(x0, yTop - r * RowH, x0 + cols * CellW, yTop - r * RowH))
+      table.zipWithIndex.foreach { case (row, r) =>
+        row.zipWithIndex.foreach {
+          case (Some(cell), j) if cell.nonEmpty => run(x0 + j * CellW + 3, yTop - (r + 1) * RowH + 4, cell)
+          case _ => ()
+        }
+      }
+      yTop -= rows * RowH + 24.0 // gap keeps grid clusters disjoint
+    }
+    bytes(content.toString)
+  }
+
+  /** Write a PDF whose page texts round-trip through `parse` + `Layout`,
+    * in the given framing. Objects: 1 catalog, 2 page tree, 3 font, the
+    * page dicts, the content streams, then each page's `annots` as one
+    * contiguous block (FreeText /Contents or Widget /V), the `info` dict
+    * (/Info in the trailer) and the `encrypt` dict.
+    */
   def writePages(pages: Seq[PageSpec], flate: Boolean,
                  width: Double = 612.0, height: Double = 792.0,
                  framing: Framing = Framing.Classic,
                  info: Seq[(String, String)] = Nil,
                  encrypt: Option[EncryptSpec] = None,
                  annots: Seq[Seq[(String, String)]] = Nil): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def bytes(s: String) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-
-    val nPages = pages.length
-    // object numbering: 1 catalog, 2 pages, 3 font, 4..3+n page objs, 4+n..3+2n contents
-    val pageObjNums = (0 until nPages).map(4 + _)
-    val contObjNums = (0 until nPages).map(4 + nPages + _)
-
-    val catalogDict = "<< /Type /Catalog /Pages 2 0 R >>"
-    val pagesDict =
-      s"<< /Type /Pages /Kids [${pageObjNums.map(n => s"$n 0 R").mkString(" ")}] /Count $nPages >>"
-    val fontDict = "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"
-    // per-page annotations (FreeText /Contents, Widget /V), objects right
-    // after the content streams; page i's annots are a contiguous block
-    val annotCounts: Seq[Int] = pages.indices.map(i => annots.lift(i).map(_.length).getOrElse(0))
-    val annotBase = 4 + 2 * nPages
-    val annotStart: Seq[Int] = annotCounts.scanLeft(annotBase)(_ + _)
-    val totalAnnots = annotCounts.sum
-    def annotDict(subtype: String, text: String): String = {
-      val key = if (subtype == "Widget") "/FT /Tx /V" else "/Contents"
-      s"<< /Type /Annot /Subtype /$subtype /Rect [0 0 10 10] $key ${infoString(text)} >>"
-    }
-    def annotRefsPart(i: Int): String =
-      if (annotCounts(i) == 0) ""
-      else " /Annots [" + (0 until annotCounts(i)).map(k => s"${annotStart(i) + k} 0 R").mkString(" ") + "]"
-    def pageDict(i: Int) =
-      s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 $width $height] " +
-        s"/Contents ${contObjNums(i)} 0 R${annotRefsPart(i)} /Resources << /Font << /F1 3 0 R >> >> >>"
-    // document information dictionary (/Info in the trailer), optional
-    val infoNum: Option[Int] = if (info.nonEmpty) Some(4 + 2 * nPages + totalAnnots) else None
-    val infoCount = if (info.nonEmpty) 1 else 0
-    // standard security handler state, optional: (objnum, cipher, dict, trailer extra)
-    val encNum: Option[Int] = encrypt.map(_ => 4 + 2 * nPages + totalAnnots + infoCount)
-    val encState: Option[(Int, PdfCrypt.Decryptor, String, String)] = encrypt.map { es =>
+    val pageAnnots = pages.indices.map(i => annots.lift(i).getOrElse(Nil))
+    val annotStart = pageAnnots.scanLeft(4 + 2 * pages.length)(_ + _.length)
+    val infoNum = annotStart.last
+    val encNum = infoNum + (if (info.nonEmpty) 1 else 0)
+    // standard security handler, optional: (cipher, /Encrypt dict, trailer entries)
+    val enc: Option[(PdfCrypt.Decryptor, String, String)] = encrypt.map { es =>
       val md = java.security.MessageDigest.getInstance("MD5")
-      pages.foreach(_.placements.foreach { case (x, y, t) =>
-        md.update(s"$x/$y/$t".getBytes(java.nio.charset.StandardCharsets.UTF_8)) })
+      pages.foreach(_.placements.foreach { case (x, y, t) => md.update(bytes(s"$x/$y/$t")) })
       val fileId = md.digest()
       val (v, r) = if (es.aes) (4, 4) else (2, 3)
       val keyLen = 16
       val perm = -44
-      val oBytes = PdfCrypt.computeO(
-        es.ownerPwd.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1),
-        es.userPwd.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1), r, keyLen)
-      val key = PdfCrypt.computeKey(
-        es.userPwd.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1),
-        oBytes, perm, fileId, r, keyLen)
+      val oBytes = PdfCrypt.computeO(es.ownerPwd.getBytes(Latin1), es.userPwd.getBytes(Latin1), r, keyLen)
+      val key = PdfCrypt.computeKey(es.userPwd.getBytes(Latin1), oBytes, perm, fileId, r, keyLen)
       val uBytes = PdfCrypt.computeU(key, fileId, r)
-      def hx(b: Array[Byte]) = b.map(x => f"${x & 0xff}%02X").mkString("<", "", ">")
       val cf = if (es.aes)
         " /CF << /StdCF << /CFM /AESV2 /Length 16 >> >> /StmF /StdCF /StrF /StdCF" else ""
-      val dict = s"<< /Filter /Standard /V $v /R $r /Length 128 /P $perm " +
-        s"/O ${hx(oBytes)} /U ${hx(uBytes)}$cf >>"
-      val idHex = hx(fileId)
-      (encNum.get, PdfCrypt.Decryptor(key, es.aes), dict,
-        s" /Encrypt ${encNum.get} 0 R /ID [$idHex $idHex]")
+      (PdfCrypt.Decryptor(key, es.aes),
+        s"<< /Filter /Standard /V $v /R $r /Length 128 /P $perm " +
+          s"/O ${hex(oBytes)} /U ${hex(uBytes)}$cf >>",
+        s" /Encrypt $encNum 0 R /ID [${hex(fileId)} ${hex(fileId)}]")
     }
-    def encDictObjBytes: Option[Array[Byte]] =
-      encState.map { case (n, _, d, _) =>
-        s"$n 0 obj\n$d\nendobj\n".getBytes(java.nio.charset.StandardCharsets.UTF_8) }
-    def encTrailerPart: String = encState.fold("")(_._4)
-    def encipher(data: Array[Byte], num: Int): Array[Byte] =
-      encState.fold(data) { case (_, d, _, _) => d.encrypt(data, num, 0) }
-    def annotObjDict(subtype: String, text: String, objNum: Int): String = {
-      val vs = encState match {
-        case Some((_, d, _, _)) =>
-          d.encrypt(infoRawBytes(text), objNum, 0)
-            .map(x => f"${x & 0xff}%02X").mkString("<", "", ">")
-        case None => infoString(text)
-      }
-      val key = if (subtype == "Widget") "/FT /Tx /V" else "/Contents"
-      s"<< /Type /Annot /Subtype /$subtype /Rect [0 0 10 10] $key $vs >>"
-    }
-    def infoDict: String =
-      "<< " + info.map { case (k, v) =>
-        val vs = encState match {
-          case Some((_, d, _, _)) =>
-            d.encrypt(infoRawBytes(v), infoNum.get, 0)
-              .map(x => f"${x & 0xff}%02X").mkString("<", "", ">")
-          case None => infoString(v)
-        }
-        s"/$k $vs"
-      }.mkString(" ") + " >>"
-    // inside an /ObjStm the member's strings ride the stream's encryption —
-    // they are NOT individually enciphered (§7.5.7)
-    def infoDictPlain: String =
-      "<< " + info.map { case (k, v) => s"/$k ${infoString(v)}" }.mkString(" ") + " >>"
-    def infoTrailerPart: String = infoNum.fold("")(n => s" /Info $n 0 R")
+    def seal(data: Array[Byte], num: Int): Array[Byte] = enc.fold(data)(_._1.encrypt(data, num, 0))
+    /** An info or annot value of object `num`: enciphered in an encrypted
+      * file, except inside an /ObjStm, whose members ride the stream's
+      * encryption (§7.5.7).
+      */
+    def value(s: String, num: Int): String =
+      if (enc.isEmpty || framing == Framing.ObjStm) infoString(s) else hex(seal(infoRawBytes(s), num))
 
-    def contentBytes(spec: PageSpec): Array[Byte] = {
-      val content = new java.lang.StringBuilder
-      spec.placements.foreach { case (x, y, line) =>
-        content.append("BT /F1 10 Tf 1 0 0 1 ").append(fmtNum(x)).append(' ')
-          .append(fmtNum(y)).append(" Tm (").append(escapeString(line)).append(") Tj ET\n")
-      }
-      if (spec.tables.nonEmpty) {
-        def seg(x1: Double, y1: Double, x2: Double, y2: Double): Unit =
-          content.append(fmtNum(x1)).append(' ').append(fmtNum(y1)).append(" m ")
-            .append(fmtNum(x2)).append(' ').append(fmtNum(y2)).append(" l S\n")
-        // tables stack below the lowest text line so long (fat) pages can
-        // never push text runs into a grid bbox
-        val minY = if (spec.placements.isEmpty) 760.0 else spec.placements.map(_._2).min
-        var yTop = minY - 30.0
-        spec.tables.foreach { table =>
-          val rows = table.length
-          val cols = table.map(_.length).max
-          val x0 = 50.0
-          (0 to cols).foreach(j => seg(x0 + j * CellW, yTop, x0 + j * CellW, yTop - rows * RowH))
-          (0 to rows).foreach(r => seg(x0, yTop - r * RowH, x0 + cols * CellW, yTop - r * RowH))
-          table.zipWithIndex.foreach { case (row, r) =>
-            row.zipWithIndex.foreach {
-              case (Some(cell), j) if cell.nonEmpty =>
-                content.append("BT /F1 10 Tf 1 0 0 1 ").append(fmtNum(x0 + j * CellW + 3))
-                  .append(' ').append(fmtNum(yTop - (r + 1) * RowH + 4))
-                  .append(" Tm (").append(escapeString(cell)).append(") Tj ET\n")
-              case _ => ()
-            }
-          }
-          yTop -= rows * RowH + 24.0 // gap keeps grid clusters disjoint
-        }
-      }
-      bytes(content.toString)
-    }
-
-    def streamObjBytes(num: Int, spec: PageSpec): Array[Byte] = {
-      val raw = contentBytes(spec)
-      val data = encipher(if (flate) Zlib.deflate(raw) else raw, num)
-      val filter = if (flate) " /Filter /FlateDecode" else ""
-      val b = new java.io.ByteArrayOutputStream()
-      b.write(bytes(s"$num 0 obj\n<< /Length ${data.length}$filter >>\nstream\n"))
-      b.write(data)
-      b.write(bytes("\nendstream\nendobj\n"))
-      b.toByteArray
-    }
+    val filter = if (flate) " /Filter /FlateDecode" else ""
+    val objs = pageObjects(pages.length, "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
+      Nil, s"$width $height",
+      pageRefs = i =>
+        if (pageAnnots(i).isEmpty) ""
+        else pageAnnots(i).indices.map(k => s"${annotStart(i) + k} 0 R")
+          .mkString(" /Annots [", " ", "]"),
+      content = (i, num) => {
+        val raw = contentBytes(pages(i))
+        Stream("", seal(if (flate) Zlib.deflate(raw) else raw, num), filter)
+      }) ++
+      pageAnnots.indices.flatMap(i => pageAnnots(i).zipWithIndex.map { case ((subtype, text), k) =>
+        val num = annotStart(i) + k
+        val key = if (subtype == "Widget") "/FT /Tx /V" else "/Contents"
+        num -> Dict(s"<< /Type /Annot /Subtype /$subtype /Rect [0 0 10 10] " +
+          s"$key ${value(text, num)} >>")
+      }) ++
+      (if (info.isEmpty) Nil
+       else Seq(infoNum -> Dict(info.map { case (k, v) => s"/$k ${value(v, infoNum)}" }
+         .mkString("<< ", " ", " >>")))) ++
+      enc.map(e => encNum -> Dict(e._2, loose = true))
+    val trailer = (if (info.isEmpty) "" else s" /Info $infoNum 0 R") + enc.fold("")(_._3)
 
     framing match {
-      case Framing.Classic =>
-        val offsets = ArrayBuffer.empty[Int]
-        def obj(body: Array[Byte]): Unit = { offsets += out.size(); out.write(body) }
-        out.write(bytes("%PDF-1.4\n"))
-        obj(bytes(s"1 0 obj\n$catalogDict\nendobj\n"))
-        obj(bytes(s"2 0 obj\n$pagesDict\nendobj\n"))
-        obj(bytes(s"3 0 obj\n$fontDict\nendobj\n"))
-        pages.indices.foreach(i => obj(bytes(s"${pageObjNums(i)} 0 obj\n${pageDict(i)}\nendobj\n")))
-        pages.zipWithIndex.foreach { case (spec, i) => obj(streamObjBytes(contObjNums(i), spec)) }
-        pages.indices.foreach { i =>
-          annots.lift(i).getOrElse(Nil).zipWithIndex.foreach { case ((st, tx), k) =>
-            obj(bytes(s"${annotStart(i) + k} 0 obj\n${annotObjDict(st, tx, annotStart(i) + k)}\nendobj\n"))
-          }
-        }
-        infoNum.foreach(n => obj(bytes(s"$n 0 obj\n$infoDict\nendobj\n")))
-        encDictObjBytes.foreach(obj)
-        val xrefPos = out.size()
-        val total = offsets.length + 1
-        out.write(bytes(s"xref\n0 $total\n0000000000 65535 f \n"))
-        offsets.foreach(o => out.write(bytes(f"$o%010d 00000 n \n")))
-        out.write(bytes(s"trailer\n<< /Size $total /Root 1 0 R$infoTrailerPart$encTrailerPart >>\nstartxref\n$xrefPos\n%%EOF\n"))
-
-      case Framing.XrefStream | Framing.XrefStreamPred =>
-        val predicted = framing == Framing.XrefStreamPred
-        val offsets = mutable.Map.empty[Int, Int] // objnum -> byte offset
-        def obj(num: Int, body: Array[Byte]): Unit = { offsets(num) = out.size(); out.write(body) }
-        out.write(bytes("%PDF-1.5\n"))
-        obj(1, bytes(s"1 0 obj\n$catalogDict\nendobj\n"))
-        obj(2, bytes(s"2 0 obj\n$pagesDict\nendobj\n"))
-        obj(3, bytes(s"3 0 obj\n$fontDict\nendobj\n"))
-        pages.indices.foreach(i =>
-          obj(pageObjNums(i), bytes(s"${pageObjNums(i)} 0 obj\n${pageDict(i)}\nendobj\n")))
-        pages.zipWithIndex.foreach { case (spec, i) =>
-          obj(contObjNums(i), streamObjBytes(contObjNums(i), spec))
-        }
-        pages.indices.foreach { i =>
-          annots.lift(i).getOrElse(Nil).zipWithIndex.foreach { case ((st, tx), k) =>
-            val n = annotStart(i) + k
-            obj(n, bytes(s"$n 0 obj\n${annotObjDict(st, tx, n)}\nendobj\n"))
-          }
-        }
-        infoNum.foreach(n => obj(n, bytes(s"$n 0 obj\n$infoDict\nendobj\n")))
-        encState.foreach { case (n, _, _, _) => obj(n, encDictObjBytes.get) }
-        val xrefNum = 4 + 2 * nPages + totalAnnots + infoCount + encState.size
-        val xrefPos = out.size()
-        offsets(xrefNum) = xrefPos
-        out.write(xrefStreamObj(xrefNum, size = xrefNum + 1, predicted,
-          entry = n => if (n == 0) (0, 0, 65535) else (1, offsets(n), 0),
-          extra = infoTrailerPart + encTrailerPart))
-        out.write(bytes(s"startxref\n$xrefPos\n%%EOF\n"))
-
-      case Framing.ObjStm =>
-        val offsets = mutable.Map.empty[Int, Int]
-        def obj(num: Int, body: Array[Byte]): Unit = { offsets(num) = out.size(); out.write(body) }
-        out.write(bytes("%PDF-1.5\n"))
-        // content streams stay top-level (streams cannot live inside an ObjStm)
-        pages.zipWithIndex.foreach { case (spec, i) =>
-          obj(contObjNums(i), streamObjBytes(contObjNums(i), spec))
-        }
-        // dict objects packed into the object stream, in-stream index order
-        // (the /Info dict rides compressed too — trailer refs INTO an ObjStm)
-        val members: Vector[(Int, String)] =
-          Vector(1 -> catalogDict, 2 -> pagesDict, 3 -> fontDict) ++
-            pages.indices.map(i => pageObjNums(i) -> pageDict(i)) ++
-            pages.indices.flatMap { i =>
-              annots.lift(i).getOrElse(Nil).zipWithIndex.map { case ((st, tx), k) =>
-                (annotStart(i) + k) -> annotDict(st, tx) // in-stream: plain strings
-              }
-            } ++
-            infoNum.map(n => n -> infoDictPlain)
-        val bodies = members.map(_._2 + "\n")
-        val memberOffsets = bodies.scanLeft(0)(_ + _.getBytes("UTF-8").length)
-        val header = members.zip(memberOffsets).map { case ((n, _), o) => s"$n $o" }.mkString(" ") + "\n"
-        val stmRaw = bytes(header ++ bodies.mkString)
-        val objStmNum = 4 + 2 * nPages + totalAnnots + infoCount + encState.size
-        val xrefNum = objStmNum + 1
-        encState.foreach { case (n, _, _, _) => obj(n, encDictObjBytes.get) }
-        val stmData = encipher(Zlib.deflate(stmRaw), objStmNum)
-        obj(objStmNum, {
-          val b = new java.io.ByteArrayOutputStream()
-          b.write(bytes(s"$objStmNum 0 obj\n<< /Type /ObjStm /N ${members.length} " +
-            s"/First ${bytes(header).length} /Length ${stmData.length} /Filter /FlateDecode >>\nstream\n"))
-          b.write(stmData)
-          b.write(bytes("\nendstream\nendobj\n"))
-          b.toByteArray
-        })
-        val memberIdx = members.map(_._1).zipWithIndex.toMap
-        val xrefPos = out.size()
-        offsets(xrefNum) = xrefPos
-        out.write(xrefStreamObj(xrefNum, size = xrefNum + 1, predicted = true,
-          entry = n =>
-            if (n == 0) (0, 0, 65535)
-            else memberIdx.get(n) match {
-              case Some(idx) => (2, objStmNum, idx) // compressed: (type2, stm, index)
-              case None      => (1, offsets(n), 0)
-            },
-          extra = infoTrailerPart + encTrailerPart))
-        out.write(bytes(s"startxref\n$xrefPos\n%%EOF\n"))
+      case Framing.Classic        => classicFile(objs, trailer)
+      case Framing.XrefStream     => xrefStreamFile(objs, predicted = false, trailer)
+      case Framing.XrefStreamPred => xrefStreamFile(objs, predicted = true, trailer)
+      case Framing.ObjStm         => objStmFile(objs, trailer, seal)
     }
-    out.toByteArray
   }
 
   /** Fixture writer for the FONT-DECODE surface: the same page texts, but
@@ -382,19 +376,11 @@ object Pdf {
     *     strings, and the /ToUnicode CMap uses bfrange for runs and
     *     bfchar for singletons.
     *
-    * `parse(writeCustomFontDoc(pages, cid)) == parse(write(pages, …))`
-    * is the round-trip contract (PdfFontSpec).
+    * The document is classic-framed, its ToUnicode CMap is object 4, and
+    * `parse(writeCustomFontDoc(pages, cid))` equals `parse(writePages(…))`
+    * of the same lines (PdfFontSpec).
     */
   def writeCustomFontDoc(pages: Seq[Seq[String]], cid: Boolean): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def bytes(s: String) = s.getBytes(Latin1) // content carries raw code bytes
-    val offsets = ArrayBuffer.empty[Int]
-    def obj(body: Array[Byte]): Unit = { offsets += out.size(); out.write(body) }
-
-    val nPages = pages.length
-    // 1 catalog, 2 pages, 3 font, 4 tounicode, 5..4+n page objs, 5+n..4+2n contents
-    val pageObjNums = (0 until nPages).map(5 + _)
-    val contObjNums = (0 until nPages).map(5 + nPages + _)
     val chars: Vector[Char] = pages.flatten.flatMap(_.toCharArray).distinct.sorted.toVector
 
     val (fontDict, toUnicode, encodeLine) =
@@ -456,97 +442,22 @@ object Pdf {
           else s" /Encoding << /BaseEncoding /WinAnsiEncoding /Differences [${diffEntries.mkString(" ")}] >>"
         val toUniPart = if (cmap.isEmpty) "" else " /ToUnicode 4 0 R"
         val fd = s"<< /Type /Font /Subtype /Type1 /BaseFont /GraftEnc$encPart$toUniPart >>"
-        val enc: String => String = line => {
-          val sb = new java.lang.StringBuilder("(")
-          line.foreach { c =>
-            val code = if (c < 0x80) c.toInt else codeOf(c)
-            code.toChar match {
-              case '\\' => sb.append("\\\\")
-              case '('  => sb.append("\\(")
-              case ')'  => sb.append("\\)")
-              case _ if code < 0x20 => sb.append(f"\\$code%03o")
-              case ch   => sb.append(ch)
-            }
-          }
-          sb.append(") Tj").toString
-        }
+        // one code char per char; the content's Latin-1 bytes are the codes
+        val enc: String => String = line =>
+          "(" + escapeString(line.map(c => if (c < 0x80) c else codeOf(c).toChar),
+            named = "", octal = true) + ") Tj"
         (fd, cmap, enc)
       }
 
-    out.write(bytes("%PDF-1.4\n"))
-    obj(bytes("1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n"))
-    obj(bytes(s"2 0 obj\n<< /Type /Pages /Kids [${pageObjNums.map(n => s"$n 0 R").mkString(" ")}] /Count $nPages >>\nendobj\n"))
-    obj(bytes(s"3 0 obj\n$fontDict\nendobj\n"))
-    val cmapData = toUnicode.getBytes(Latin1)
-    obj(bytes(s"4 0 obj\n<< /Length ${cmapData.length} >>\nstream\n" + toUnicode + "\nendstream\nendobj\n"))
-    pages.indices.foreach { i =>
-      obj(bytes(s"${pageObjNums(i)} 0 obj\n<< /Type /Page /Parent 2 0 R " +
-        "/MediaBox [0 0 612 792] " +
-        s"/Contents ${contObjNums(i)} 0 R /Resources << /Font << /F1 3 0 R >> >> >>\nendobj\n"))
-    }
-    pages.zipWithIndex.foreach { case (lines, i) =>
-      val content = lines.zipWithIndex.map { case (line, k) =>
+    classicFile(pageObjects(pages.length, fontDict, Seq(Stream("", toUnicode.getBytes(Latin1))),
+      "612 792", pageRefs = _ => "",
+      content = (i, _) => Stream("", pages(i).zipWithIndex.map { case (line, k) =>
         s"BT /F1 10 Tf 1 0 0 1 50 ${fmtNum(760.0 - 12.0 * k)} Tm ${encodeLine(line)} ET"
-      }.mkString("\n") + "\n"
-      val data = content.getBytes(Latin1)
-      obj(bytes(s"${contObjNums(i)} 0 obj\n<< /Length ${data.length} >>\nstream\n"))
-      out.write(data)
-      out.write(bytes("\nendstream\nendobj\n"))
-    }
-    val xrefPos = out.size()
-    val total = offsets.length + 1
-    out.write(bytes(s"xref\n0 $total\n0000000000 65535 f \n"))
-    offsets.foreach(o => out.write(bytes(f"$o%010d 00000 n \n")))
-    out.write(bytes(s"trailer\n<< /Size $total /Root 1 0 R >>\nstartxref\n$xrefPos\n%%EOF\n"))
-    out.toByteArray
-  }
-
-  /** Serialize a cross-reference stream object: /W [1 4 2] rows for objects
-    * 0 until size, optionally PNG-predicted (filter 2 / Up, /Predictor 12),
-    * always Flate. `entry(n)` returns (type, field2, field3).
-    */
-  private def xrefStreamObj(num: Int, size: Int, predicted: Boolean,
-                            entry: Int => (Int, Int, Int),
-                            extra: String = ""): Array[Byte] = {
-    def bytes(s: String) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val rowBytes = 7 // W = [1 4 2]
-    val raw = new Array[Byte](size * rowBytes)
-    (0 until size).foreach { n =>
-      val (t, f2, f3) = entry(n)
-      val o = n * rowBytes
-      raw(o) = t.toByte
-      raw(o + 1) = (f2 >>> 24).toByte; raw(o + 2) = (f2 >>> 16).toByte
-      raw(o + 3) = (f2 >>> 8).toByte; raw(o + 4) = f2.toByte
-      raw(o + 5) = (f3 >>> 8).toByte; raw(o + 6) = f3.toByte
-    }
-    val body = if (predicted) PngFilter.filter(raw, rowBytes, bpp = 1, _ => 2) else raw
-    val data = Zlib.deflate(body)
-    val parms = if (predicted) s" /DecodeParms << /Predictor 12 /Columns $rowBytes >>" else ""
-    val b = new java.io.ByteArrayOutputStream()
-    b.write(bytes(s"$num 0 obj\n<< /Type /XRef /Size $size /W [1 4 2] /Root 1 0 R$extra " +
-      s"/Length ${data.length} /Filter /FlateDecode$parms >>\nstream\n"))
-    b.write(data)
-    b.write(bytes("\nendstream\nendobj\n"))
-    b.toByteArray
+      }.mkString("", "\n", "\n").getBytes(Latin1))), trailer = "")
   }
 
   private def fmtNum(d: Double): String =
     if (d == d.toLong) d.toLong.toString else d.toString
-
-  /** PDF string escaping: backslash, parens, and the control chars we emit. */
-  def escapeString(s: String): String = {
-    val sb = new java.lang.StringBuilder(s.length + 8)
-    s.foreach {
-      case '\\' => sb.append("\\\\")
-      case '('  => sb.append("\\(")
-      case ')'  => sb.append("\\)")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c    => sb.append(c)
-    }
-    sb.toString
-  }
 
   // ------------------------------------------------------------------ parse
   def isPdf(payload: Array[Byte]): Boolean =
@@ -1666,15 +1577,8 @@ object Pdf {
     * byte) on the operand stack; the current font's decoder converts at
     * emit time.
     */
-  def tokenizeContent(content: String): (Vector[TextRun], Vector[Seg]) =
-    tokenizeContent(content, Map.empty)
-
-  def tokenizeContent(content: String,
-                      fonts: Map[String, FontDecoder]): (Vector[TextRun], Vector[Seg]) =
-    tokenizeContent(content, fonts, Map.empty)
-
-  def tokenizeContent(content: String, fonts: Map[String, FontDecoder],
-                      forms: Map[String, XObjForm]): (Vector[TextRun], Vector[Seg]) = {
+  def tokenizeContent(content: String, fonts: Map[String, FontDecoder] = Map.empty,
+                      forms: Map[String, XObjForm] = Map.empty): (Vector[TextRun], Vector[Seg]) = {
     val runs = ArrayBuffer.empty[TextRun]
     val segs = ArrayBuffer.empty[Seg]
     var i = 0

@@ -73,11 +73,7 @@ class PrescreenFactsSpec extends AnyFunSuite {
       "ISO 9001", "isolated valve", "DIN rail", "dinner menu", "BS 1363",
       "bseries", "NEMA 4X", "CSA certified", "ASME B16", "NFPA 13",
       "AWWA C900", "IPC section"),
-    3 -> Gen.oneOf(
-      "Valve Package", "Va Lve", "A B", "Ab Cd", "A1b C2d", "Ab3 Cd",
-      "Ab, Cd", "Ab,Cd", "Ab  Cd", "Abc\tDef", "abc Def Ghi", "X Y Z",
-      "Abc def Ghi", "McDonald Std", "IBM PC", "eXtreme Case", "_Ab Cd_",
-      "3Ab Cd", "Ab 3Cd", "Ab3Cd Ef"),
+    3 -> Gen.oneOf(capPairLines),
     1 -> Gen.oneOf("Ø 25 mm Rør", "ユニット 3 個", "naïve Case Pair", "Ab Çd"),
     2 -> Gen.listOf(Gen.oneOf("page", "Ab", "Cd", "spec", "7", "x", ",", " ",
       "ALL", "use", "in", "type", "UL", "-", ".", "Q1", "Zz")).map(_.mkString(" ")),
@@ -152,6 +148,16 @@ class PrescreenFactsSpec extends AnyFunSuite {
     check(Prop.forAll(lines) { s =>
       capPairShape(s) || capPhraseRx.search(s).isEmpty
     })
+  }
+
+  test("cleared FactCapPair proves capPhraseRx cannot match: every pair line, every Unicode space") {
+    val spaces = bmpTraps.filter(c => Rx("""\s""").containsMatch(c.toString))
+    assert(Set('\u00A0', '\u2009', '\u3000').subsetOf(spaces.toSet))
+    val unsound = for {
+      s <- capPairLines; i <- s.indices if s(i).isWhitespace; c <- spaces
+      line = s.updated(i, c) if !capPairShape(line) && capPhraseRx.search(line).isDefined
+    } yield line
+    assert(unsound.isEmpty, unsound)
   }
 
   test("cleared FactSpec proves spec patterns 0-3 cannot match") {
@@ -255,6 +261,16 @@ class PrescreenFactsSpec extends AnyFunSuite {
 }
 
 object PrescreenFactsSpec {
+  /** Capitalized word pairs, near-pairs and separators for the
+    * capitalized-phrase check: both the random pool and the exhaustive
+    * Unicode-space arm draw on them.
+    */
+  val capPairLines: Seq[String] = Seq(
+    "Valve Package", "Va Lve", "A B", "Ab Cd", "A1b C2d", "Ab3 Cd",
+    "Ab, Cd", "Ab,Cd", "Ab  Cd", "Abc\tDef", "abc Def Ghi", "X Y Z",
+    "Abc def Ghi", "McDonald Std", "IBM PC", "eXtreme Case", "_Ab Cd_",
+    "3Ab Cd", "Ab 3Cd", "Ab3Cd Ef")
+
   /** BMP chars for the screen to classify: the six non-ASCII chars of the
     * extract workload's pages and `Ø`; chars that Java's
     * `CASE_INSENSITIVE | UNICODE_CASE` folds onto `k`, `s` and `i`; Unicode

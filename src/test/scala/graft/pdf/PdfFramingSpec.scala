@@ -326,7 +326,12 @@ class PdfFramingSpec extends AnyFunSuite {
       Pdf.writePages(docPages, flate = true, framing = Pdf.Framing.ObjStm),
       Pdf.writePages(docPages, flate = true, framing = Pdf.Framing.Classic,
         encrypt = Some(Pdf.EncryptSpec())),
-      Pdf.writeCustomFontDoc(Seq(Seq("fuzz körper")), cid = true))
+      Pdf.writeCustomFontDoc(Seq(Seq("fuzz körper")), cid = true),
+      // the richest serializer arm: encrypted /Info and annots packed into an /ObjStm
+      Pdf.writePages(docPages, flate = true, framing = Pdf.Framing.ObjStm,
+        encrypt = Some(Pdf.EncryptSpec(aes = true)),
+        info = Seq("Title" -> "fuzz (title)", "Author" -> "№ körper"),
+        annots = Seq(Seq("FreeText" -> "note (a)", "Widget" -> "v-1"), Seq("FreeText" -> "№ zwei"))))
     bases.zipWithIndex.foreach { case (base, bi) =>
       (0 until 120).foreach { k =>
         val bad = base.clone

@@ -27,7 +27,7 @@ class PdfLayoutSpec extends AnyFunSuite {
   }
 
   test("pages without grids split to (no tables, all runs)") {
-    val parsed = Pdf.parse(Pdf.write(Seq(Seq((50.0, 700.0, "just text"))), flate = false))
+    val parsed = Pdf.parse(Pdf.writePages(Seq(Pdf.PageSpec(Seq((50.0, 700.0, "just text")))), flate = false))
     val (tables, runs) = Pdf.splitTables(parsed.head)
     assert(tables.isEmpty && runs.length == 1)
   }
@@ -37,7 +37,7 @@ class PdfLayoutSpec extends AnyFunSuite {
       (72.0, 700.0, "first line"),
       (72.0, 680.0, "second line"),
       (72.0, 660.0, "third line"))
-    val bytes = Pdf.write(Seq(placements), flate = false)
+    val bytes = Pdf.writePages(Seq(Pdf.PageSpec(placements)), flate = false)
     assert(Pdf.isPdf(bytes))
     val pages = Pdf.parse(bytes)
     assert(pages.length == 1)
@@ -48,23 +48,23 @@ class PdfLayoutSpec extends AnyFunSuite {
     val placements = Seq(
       (320.0, 700.0, "R1"), (320.0, 680.0, "R2"), // right column
       (72.0, 700.0, "L1"), (72.0, 680.0, "L2"))   // left column (out of order)
-    val bytes = Pdf.write(Seq(placements), flate = true)
+    val bytes = Pdf.writePages(Seq(Pdf.PageSpec(placements)), flate = true)
     val pages = Pdf.parse(bytes)
     assert(Layout.pageText(pages.head.runs) == "L1\nL2\nR1\nR2")
   }
 
   test("flate and plain streams parse identically") {
     val placements = Seq((100.0, 500.0, "compressed (content) \\ with specials"))
-    val a = Pdf.parse(Pdf.write(Seq(placements), flate = false))
-    val b = Pdf.parse(Pdf.write(Seq(placements), flate = true))
+    val a = Pdf.parse(Pdf.writePages(Seq(Pdf.PageSpec(placements)), flate = false))
+    val b = Pdf.parse(Pdf.writePages(Seq(Pdf.PageSpec(placements)), flate = true))
     assert(a.head.runs == b.head.runs)
     assert(a.head.runs.head.text == "compressed (content) \\ with specials")
   }
 
   test("multi-page documents keep page order and dimensions") {
-    val bytes = Pdf.write(Seq(
-      Seq((72.0, 700.0, "page one")),
-      Seq((72.0, 700.0, "page two"))), flate = true, width = 612, height = 792)
+    val bytes = Pdf.writePages(Seq(
+      Pdf.PageSpec(Seq((72.0, 700.0, "page one"))),
+      Pdf.PageSpec(Seq((72.0, 700.0, "page two")))), flate = true, width = 612, height = 792)
     val pages = Pdf.parse(bytes)
     assert(pages.map(p => Layout.pageText(p.runs)) == Vector("page one", "page two"))
     assert(pages.forall(p => p.width == 612.0 && p.height == 792.0))

@@ -21,7 +21,7 @@ class OcrSpec extends AnyFunSuite {
     * scanner's text layer contains) + the real text in the OCR sidecar.
     */
   private def scannedPdf(visible: String = "SCAN p.1"): Array[Byte] = {
-    val pdf = Pdf.write(Seq(Seq((72.0, 720.0, visible))), flate = false)
+    val pdf = Pdf.writePages(Seq(Pdf.PageSpec(Seq((72.0, 720.0, visible)))), flate = false)
     Ocr.embedSidecar(pdf, Seq(1L -> ocrText))
   }
 
@@ -55,7 +55,7 @@ class OcrSpec extends AnyFunSuite {
   test("Python truthiness quirk: EMPTY first page never triggers auto-OCR") {
     // reference: `if first_page_text and len(...) < 50` — "" is falsy
     val pdf = Ocr.embedSidecar(
-      Pdf.write(Seq(Seq.empty[(Double, Double, String)]), flate = false),
+      Pdf.writePages(Seq(Pdf.PageSpec(Seq.empty[(Double, Double, String)])), flate = false),
       Seq(1L -> ocrText))
     val dec = Decode.decode(pdf, null, Some(FakeOcrEngine), useOcr = false)
     assert(dec.pages.map(_.text) == Vector(""))
@@ -64,7 +64,7 @@ class OcrSpec extends AnyFunSuite {
 
   test("OCR text replaces only when strictly longer (stripped)") {
     val pdf = Ocr.embedSidecar(
-      Pdf.write(Seq(Seq((72.0, 720.0, "SCAN p.1"))), flate = false),
+      Pdf.writePages(Seq(Pdf.PageSpec(Seq((72.0, 720.0, "SCAN p.1")))), flate = false),
       Seq(1L -> "SCAN")) // shorter than the visible text -> keep visible
     val dec = Decode.decode(pdf, null, Some(FakeOcrEngine), useOcr = false)
     assert(dec.pages.map(_.text) == Vector("SCAN p.1"))
@@ -82,7 +82,7 @@ class OcrSpec extends AnyFunSuite {
   }
 
   test("full-OCR mode without sidecar falls back to regular extraction") {
-    val pdf = Pdf.write(Seq(Seq((72.0, 720.0, "regular text page, no sidecar here"))),
+    val pdf = Pdf.writePages(Seq(Pdf.PageSpec(Seq((72.0, 720.0, "regular text page, no sidecar here")))),
       flate = false)
     val dec = Decode.decode(pdf, null, Some(FakeOcrEngine), useOcr = true)
     assert(dec.pages.map(_.text) == Vector("regular text page, no sidecar here"))

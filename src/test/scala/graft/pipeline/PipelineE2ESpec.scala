@@ -137,12 +137,12 @@ class PipelineE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     PagesGen.write(spark, pagesPath, replicate = 1, buckets = buckets)
     // plant one document for each counter the corpus may not exercise
     val line = Seq((72.0, 700.0, "Quarterly revenue grew in every region during the third quarter."))
-    val flate = Pdf.write(Seq(line), flate = true)
+    val flate = Pdf.writePages(Seq(Pdf.PageSpec(line)), flate = true)
     val planted = Seq(
       "encrypted" -> Pdf.writePages(Seq(Pdf.PageSpec(line)), flate = true,
         encrypt = Some(Pdf.EncryptSpec(userPwd = "secret"))),
       "truncated" -> flate.take(flate.length / 3),
-      "one-word" -> Pdf.write(Seq(Seq((72.0, 700.0, "Hello"))), flate = false)
+      "one-word" -> Pdf.writePages(Seq(Pdf.PageSpec(Seq((72.0, 700.0, "Hello")))), flate = false)
     ).map { case (name, pdf) =>
       PagesGen.PageRowOut(s"https://planted.example/$name.pdf",
         new java.sql.Timestamp(0L), pdf, null, "en")
