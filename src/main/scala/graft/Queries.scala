@@ -872,8 +872,7 @@ object Queries {
       .select(col("doc_id"),
         CorpusSignals.mojibakeCount(col("x")).as("n_moji"),
         length(CorpusSignals.repairMojibake(col("x"))).cast("long").as("repaired_len"),
-        conv(substring(md5(CorpusSignals.repairMojibake(col("x"))), 1, 15), 16, 10)
-          .cast("long").as("repaired_h"))
+        ph(CorpusSignals.repairMojibake(col("x"))).as("repaired_h"))
       .orderBy("doc_id")
   }
 
@@ -1690,9 +1689,7 @@ object Queries {
     docs(s, dir).select(col("doc_id"),
         TextStats.tokenCount(col("text")).cast("long").as("n_toks"),
         least(TextStats.tokenCount(col("text")).cast("long"), lit(64L)).as("kept_toks"),
-        conv(substring(md5(
-          CorpusSignals.truncateMiddle(col("text"), maxToks = 64)), 1, 15), 16, 10)
-          .cast("long").as("trunc_h"))
+        ph(CorpusSignals.truncateMiddle(col("text"), maxToks = 64)).as("trunc_h"))
       .orderBy("doc_id")
 
   private val oTruncate =
@@ -2911,7 +2908,7 @@ object Queries {
     val urls = docs(s, dir).select(col("doc_id"),
       concat(lit("https://H"), pmod(col("doc_id"), lit(37)).cast("string"),
         lit(".Example.com/doc/"), col("doc_id").cast("string")).as("url"))
-    CorpusSignals.hostCap(urls, "url", "doc_id", k = 5, salt = "hc", hash = ph)
+    CorpusSignals.hostCap(urls, "url", "doc_id", k = 5, salt = "hc")
       .select("host", "doc_id").orderBy("host", "doc_id")
   }
 
@@ -3352,23 +3349,30 @@ object Queries {
        FROM d ORDER BY doc_id"""
 
   // -------------------------------------------------------------------- HLL
-  // HyperLogLog register table over the corpus token stream (m = 64): the
+  // HyperLogLog registers over the corpus token stream (m = 64): the
   // constant-size cardinality sketch, bit-identical cross-engine because
-  // bucket/rho are pure integer ops on the shared 60-bit hash.
+  // bucket/rho are pure integer ops on the shared 60-bit hash. One
+  // HllSketchAgg buffer per task, merged on a single partition, then
+  // exploded to (bucket, rho_max).
   private def qHll(s: SparkSession, dir: String): DataFrame =
-    CorpusSignals.hllRegisters(
-        docs(s, dir).select(explode(split(col("text"), " ")).as("w")),
-        col("w"), m = 64)
+    docs(s, dir).select(explode(split(col("text"), " ")).as("w"))
+      .agg(CorpusSignals.hllSketchAgg(col("w"), m = 64).as("r"))
+      .select(posexplode(col("r")).as(Seq("bucket", "rho_max")))
+      .select(col("bucket").cast("long").as("bucket"), col("rho_max"))
       .orderBy("bucket")
 
+  // Bucket and rho of each whitespace token w of `documents` (m = 64, so
+  // W = 54) over the shared 60-bit hash, carrying the columns in `keys`
+  // (empty or "source,") — the DuckDB side of HllSketchAgg.update; every
+  // HLL oracle interpolates this one fragment.
+  private def hllRhoSql(keys: String): String =
+    s"""SELECT $keys h % 64 AS bucket,
+         CASE WHEN (h // 64) = 0 THEN 55 ELSE 54 - length(bin(h // 64)) + 1 END AS rho
+       FROM (SELECT $keys ('0x' || substr(md5(w), 1, 15))::BIGINT AS h
+             FROM (SELECT $keys unnest(str_split(text, ' ')) AS w FROM documents))"""
+
   private val oHll =
-    """WITH h AS (
-         SELECT ('0x' || substr(md5(w), 1, 15))::BIGINT AS h
-         FROM (SELECT unnest(str_split(text, ' ')) AS w FROM documents)),
-       r AS (SELECT h % 64 AS bucket,
-               CASE WHEN (h // 64) = 0 THEN 55
-                    ELSE 54 - length(bin(h // 64)) + 1 END AS rho
-             FROM h),
+    s"""WITH r AS (${hllRhoSql("")}),
        g AS (SELECT unnest(generate_series(0, 63))::BIGINT AS bucket)
        SELECT g.bucket, CAST(COALESCE(max(r.rho), 0) AS BIGINT) AS rho_max
        FROM g LEFT JOIN r ON r.bucket = g.bucket
@@ -3378,25 +3382,20 @@ object Queries {
   // Per-source approximate distinct-token counts as the integral HLL
   // summary (v = empty registers, zint = 2^55-scaled harmonic sum): the
   // per-key cardinality profile a corpus report wants at 100 TB without a
-  // per-key distinct. Both columns are exact BIGINTs, so the oracle
-  // replays the identical register arithmetic; the double estimate is a
-  // separate helper (spec-pinned envelope, not hash-compared).
+  // per-key distinct. Read off each source's HllSketchAgg registers by
+  // hllSummary; both columns are exact BIGINTs, so the oracle replays the
+  // identical register arithmetic. The double estimate (hllEstimate) is
+  // spec-pinned, not hash-compared.
   private def qHllByKey(s: SparkSession, dir: String): DataFrame =
-    CorpusSignals.hllByKey(
-        docs(s, dir).select(col("source"),
-          explode(split(col("text"), " ")).as("w")),
-        col("source"), col("w"), m = 64)
-      .withColumnRenamed("key", "source")
+    docs(s, dir).select(col("source"), explode(split(col("text"), " ")).as("w"))
+      .groupBy("source")
+      .agg(CorpusSignals.hllSketchAgg(col("w"), m = 64).as("r"))
+      .select(col("source"), CorpusSignals.hllSummary(col("r"), m = 64).as("s"))
+      .select(col("source"), col("s.v").as("v"), col("s.zint").as("zint"))
       .orderBy("source")
 
   private val oHllByKey =
-    """WITH h AS (
-         SELECT source, ('0x' || substr(md5(w), 1, 15))::BIGINT AS h
-         FROM (SELECT source, unnest(str_split(text, ' ')) AS w FROM documents)),
-       r AS (SELECT source, h % 64 AS bucket,
-               CASE WHEN (h // 64) = 0 THEN 55
-                    ELSE 54 - length(bin(h // 64)) + 1 END AS rho
-             FROM h),
+    s"""WITH r AS (${hllRhoSql("source,")}),
        g AS (SELECT source, bucket, max(rho) AS rho_max FROM r GROUP BY 1, 2)
        SELECT source, CAST(64 - count(*) AS BIGINT) AS v,
          CAST(sum(1::BIGINT << (55 - rho_max)::INT) +
@@ -3404,10 +3403,8 @@ object Queries {
        FROM g GROUP BY source ORDER BY source"""
 
   // ------------------------------------------------- HLL as a true aggregate
-  // The same per-source register vectors as q_hll_by_key, but computed by
-  // the custom TypedImperativeAggregate (one m-long buffer per group per
-  // task, buffer-merge on the reduce side) — the Catalyst-aggregate form
-  // of the sketch, verified value-identical to the relational arithmetic.
+  // The per-source register vectors behind q_hll_by_key, shipped whole: one
+  // m-long buffer per group per task, buffer-merge on the reduce side.
   private def qHllAgg(s: SparkSession, dir: String): DataFrame =
     docs(s, dir)
       .select(col("source"), explode(split(col("text"), " ")).as("w"))
@@ -3417,13 +3414,7 @@ object Queries {
       .orderBy("source")
 
   private val oHllAgg =
-    """WITH h AS (
-         SELECT source, ('0x' || substr(md5(w), 1, 15))::BIGINT AS h
-         FROM (SELECT source, unnest(str_split(text, ' ')) AS w FROM documents)),
-       r AS (SELECT source, h % 64 AS bucket,
-               CASE WHEN (h // 64) = 0 THEN 55
-                    ELSE 54 - length(bin(h // 64)) + 1 END AS rho
-             FROM h),
+    s"""WITH r AS (${hllRhoSql("source,")}),
        g AS (SELECT source, bucket, max(rho) AS rho_max FROM r GROUP BY 1, 2),
        f AS (SELECT s.source, b.bucket, COALESCE(g.rho_max, 0) AS rho
              FROM (SELECT DISTINCT source FROM documents) s
@@ -3433,45 +3424,58 @@ object Queries {
        FROM f GROUP BY source ORDER BY source"""
 
   // -------------------------------------------------------- count-min sketch
-  // CMS register table (depth 4 × width 64) over the corpus token stream —
-  // the constant-size FREQUENCY sketch next to q_hll's cardinality sketch:
-  // a heavy-hitter scan at 100 TB keeps 256 counters instead of one per
-  // distinct token. Row hashes are Kirsch–Mitzenmacher double hashing over
-  // two shared 60-bit md5 hashes, so both engines rebuild the identical
-  // table at two digests per token.
+  // CMS counters (depth 4 × width 64) over the corpus token stream — the
+  // constant-size FREQUENCY sketch next to q_hll's cardinality sketch: a
+  // heavy-hitter scan at 100 TB keeps 256 counters instead of one per
+  // distinct token. One CmsSketchAgg array, exploded to (i, bucket, cnt)
+  // by its row-major position.
   private def qCms(s: SparkSession, dir: String): DataFrame =
-    CorpusSignals.cmsRegisters(
-        docs(s, dir).select(explode(split(col("text"), " ")).as("w")),
-        col("w"), depth = 4, width = 64)
+    docs(s, dir).select(explode(split(col("text"), " ")).as("w"))
+      .agg(CorpusSignals.cmsSketchAgg(col("w"), depth = 4, width = 64).as("r"))
+      .select(posexplode(col("r")).as(Seq("pos", "cnt")))
+      .select(expr("pos div 64").as("i"), (col("pos") % 64).cast("long").as("bucket"),
+        col("cnt"))
       .orderBy("i", "bucket")
 
+  // Kirsch–Mitzenmacher row buckets (depth 4 × width 64) of each value w of
+  // `from`, carrying the columns in `keys`: h1 = hash(w), h2 = hash('~ ' ||
+  // w), bucket_i = (h1 + i·h2) mod 64 — the DuckDB side of
+  // CmsSketchAgg.update and CorpusSignals.cmsEstimate; every CMS oracle
+  // interpolates this one fragment.
+  private def cmsBucketsSql(keys: String, from: String): String =
+    s"""SELECT $keys d.i, (hs.h1 + d.i * hs.h2) % 64 AS bucket
+       FROM (SELECT $keys ('0x' || substr(md5(w), 1, 15))::BIGINT AS h1,
+                    ('0x' || substr(md5('~ ' || w), 1, 15))::BIGINT AS h2
+             FROM ($from)) hs,
+            (SELECT unnest(generate_series(0, 3))::BIGINT AS i) d"""
+
+  private val cmsToksSql = "SELECT unnest(str_split(text, ' ')) AS w FROM documents"
+
   private val oCms =
-    """WITH toks AS (SELECT unnest(str_split(text, ' ')) AS w FROM documents),
-       hs AS (SELECT ('0x' || substr(md5(w), 1, 15))::BIGINT AS h1,
-                     ('0x' || substr(md5('~ ' || w), 1, 15))::BIGINT AS h2
-              FROM toks),
-       d AS (SELECT unnest(generate_series(0, 3))::BIGINT AS i),
-       r AS (SELECT d.i, (hs.h1 + d.i * hs.h2) % 64 AS bucket, count(*) AS cnt
-             FROM hs, d GROUP BY 1, 2),
-       g AS (SELECT d.i, b.bucket FROM d,
-             (SELECT unnest(generate_series(0, 63))::BIGINT AS bucket) b)
+    s"""WITH r AS (SELECT i, bucket, count(*) AS cnt
+                   FROM (${cmsBucketsSql("", cmsToksSql)}) GROUP BY 1, 2),
+       g AS (SELECT d.i, b.bucket
+             FROM (SELECT unnest(generate_series(0, 3))::BIGINT AS i) d,
+                  (SELECT unnest(generate_series(0, 63))::BIGINT AS bucket) b)
        SELECT g.i, g.bucket, CAST(COALESCE(r.cnt, 0) AS BIGINT) AS cnt
        FROM g LEFT JOIN r ON r.i = g.i AND r.bucket = g.bucket
        ORDER BY g.i, g.bucket"""
 
   // CMS point estimates vs exact counts for a probe set (the distinct
   // tokens of the first three documents): est = min over rows of the
-  // probed register — the one-sided CMS bound, so `sound` (est ≥ exact)
-  // must hold for every row. Probes explode ×depth and meet the 256-row
-  // register table in a broadcast equi-join; the exact side broadcasts the
-  // probe list into the token scan — nothing corpus-sized shuffles beyond
-  // the probe-keyed counts.
+  // probed counter — the one-sided CMS bound, so `sound` (est ≥ exact)
+  // must hold for every row. The probes meet the one-row counter array in
+  // a broadcast cross and read it with cmsEstimate; the exact side
+  // broadcasts the probe list into the token scan — nothing corpus-sized
+  // shuffles beyond the probe-keyed counts.
   private def qCmsEst(s: SparkSession, dir: String): DataFrame = {
     val toks = docs(s, dir).select(explode(split(col("text"), " ")).as("w"))
-    val regs = CorpusSignals.cmsRegisters(toks, col("w"), depth = 4, width = 64)
+    val sketch = toks.agg(CorpusSignals.cmsSketchAgg(col("w"), depth = 4, width = 64).as("r"))
     val probes = docs(s, dir).where(col("doc_id") < 3)
       .select(explode(split(col("text"), " ")).as("w")).distinct()
-    val est = CorpusSignals.cmsEstimate(regs, probes, col("w"), depth = 4, width = 64)
+    val est = probes.crossJoin(broadcast(sketch))
+      .select(col("w"),
+        CorpusSignals.cmsEstimate(col("r"), col("w"), depth = 4, width = 64).as("est"))
     val exact = toks.join(broadcast(probes), Seq("w"))
       .groupBy("w").agg(count(lit(1)).as("exact"))
     est.join(exact, Seq("w"))
@@ -3481,19 +3485,12 @@ object Queries {
   }
 
   private val oCmsEst =
-    """WITH toks AS (SELECT unnest(str_split(text, ' ')) AS w FROM documents),
+    s"""WITH toks AS ($cmsToksSql),
        probes AS (SELECT DISTINCT unnest(str_split(text, ' ')) AS w
                   FROM documents WHERE doc_id < 3),
-       hs AS (SELECT ('0x' || substr(md5(w), 1, 15))::BIGINT AS h1,
-                     ('0x' || substr(md5('~ ' || w), 1, 15))::BIGINT AS h2
-              FROM toks),
-       d AS (SELECT unnest(generate_series(0, 3))::BIGINT AS i),
-       r AS (SELECT d.i, (hs.h1 + d.i * hs.h2) % 64 AS bucket, count(*) AS cnt
-             FROM hs, d GROUP BY 1, 2),
-       e AS (SELECT p.w, d.i,
-               (('0x' || substr(md5(p.w), 1, 15))::BIGINT +
-                d.i * ('0x' || substr(md5('~ ' || p.w), 1, 15))::BIGINT) % 64 AS bucket
-             FROM probes p, d),
+       r AS (SELECT i, bucket, count(*) AS cnt
+             FROM (${cmsBucketsSql("", "SELECT w FROM toks")}) GROUP BY 1, 2),
+       e AS (${cmsBucketsSql("w,", "SELECT w FROM probes")}),
        est AS (SELECT e.w, min(r.cnt) AS est
                FROM e JOIN r ON r.i = e.i AND r.bucket = e.bucket GROUP BY e.w),
        ex AS (SELECT t.w, count(*) AS exact FROM toks t JOIN probes p ON p.w = t.w
@@ -3503,7 +3500,7 @@ object Queries {
        FROM est JOIN ex ON ex.w = est.w ORDER BY est.w"""
 
   // ------------------------------------------------- CMS as a true aggregate
-  // Per-source frequency registers via the custom sum-merge
+  // Per-source frequency counters via the custom sum-merge
   // TypedImperativeAggregate — the grouped form of q_cms, one counter
   // array per source through the exchange.
   private def qCmsAgg(s: SparkSession, dir: String): DataFrame =
@@ -3515,16 +3512,13 @@ object Queries {
       .orderBy("source")
 
   private val oCmsAgg =
-    """WITH toks AS (SELECT source, unnest(str_split(text, ' ')) AS w FROM documents),
-       hs AS (SELECT source, ('0x' || substr(md5(w), 1, 15))::BIGINT AS h1,
-                     ('0x' || substr(md5('~ ' || w), 1, 15))::BIGINT AS h2
-              FROM toks),
-       d AS (SELECT unnest(generate_series(0, 3))::BIGINT AS i),
-       r AS (SELECT source, d.i, (hs.h1 + d.i * hs.h2) % 64 AS bucket, count(*) AS cnt
-             FROM hs, d GROUP BY 1, 2, 3),
+    s"""WITH r AS (SELECT source, i, bucket, count(*) AS cnt
+             FROM (${cmsBucketsSql("source,",
+               "SELECT source, unnest(str_split(text, ' ')) AS w FROM documents")})
+             GROUP BY 1, 2, 3),
        f AS (SELECT s.source, d.i, b.bucket, COALESCE(r.cnt, 0) AS cnt
              FROM (SELECT DISTINCT source FROM documents) s
-             CROSS JOIN d
+             CROSS JOIN (SELECT unnest(generate_series(0, 3))::BIGINT AS i) d
              CROSS JOIN (SELECT unnest(generate_series(0, 63))::BIGINT AS bucket) b
              LEFT JOIN r ON r.source = s.source AND r.i = d.i AND r.bucket = b.bucket)
        SELECT source, array_to_string(list(CAST(cnt AS BIGINT) ORDER BY i, bucket), ',') AS regs
@@ -4214,7 +4208,7 @@ object Queries {
     graft.sources.Warc.readPages(s, warcDir)
       .select(col("url"),
         length(col("html")).cast("long").as("body_len"),
-        conv(substring(md5(col("html")), 1, 15), 16, 10).cast("long").as("body_h"))
+        ph(col("html")).as("body_h"))
       .orderBy("url")
   }
 
@@ -4239,7 +4233,7 @@ object Queries {
     graft.sources.Warc.readWet(s, wetDir)
       .select(col("url"),
         length(col("text")).cast("long").as("text_chars"),
-        conv(substring(md5(col("text")), 1, 15), 16, 10).cast("long").as("text_h"))
+        ph(col("text")).as("text_h"))
       .orderBy("url")
   }
 

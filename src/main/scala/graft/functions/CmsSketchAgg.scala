@@ -15,12 +15,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * per group per task and merges by element-wise +, so per-host frequency
   * profiles ship as one array row per group.
   *
-  * Same arithmetic as the relational
-  * [[graft.ops.CorpusSignals.cmsRegisters]] (cross-pinned in
-  * CmsSketchAggSpec): Kirsch–Mitzenmacher row hashes h_i = (h1 + i·h2)
-  * mod width over the two shared 60-bit md5 hashes. Counter-addition
-  * commutes and the hashes are data-derived, so the aggregate is
-  * bit-deterministic under any partitioning.
+  * Arithmetic (pinned against a direct per-value definition in
+  * CmsSketchAggSpec, and by the `q_cms*` DuckDB oracles):
+  * Kirsch–Mitzenmacher row hashes h_i = (h1 + i·h2) mod width over the two
+  * shared 60-bit md5 hashes. Counter-addition commutes and the hashes are
+  * data-derived, so the aggregate is bit-deterministic under any
+  * partitioning. [[graft.ops.CorpusSignals.cmsEstimate]] probes the array.
   */
 case class CmsSketchAgg(
     child: Expression,

@@ -14,18 +14,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * custom-surface set next to the Expression (`multi_match`) and
   * Generator (`extract_items`).
   *
-  * Same arithmetic as the relational [[graft.ops.CorpusSignals.hllRegisters]]
-  * (cross-pinned in HllSketchAggSpec): 60-bit md5 hash, bucket = h mod m,
-  * rho = W − bitlen(h >> log2 m) + 1 (W+1 for a zero remainder), register
-  * = max rho. Register-max is commutative/associative and the hash is
-  * data-derived, so the aggregate is bit-deterministic under ANY
-  * partitioning — safe for the repo's reproducibility contract.
+  * Arithmetic (pinned against a direct per-value definition in
+  * HllSketchAggSpec, and by the `q_hll*` DuckDB oracles): 60-bit md5 hash,
+  * bucket = h mod m, rho = W − bitlen(h >> log2 m) + 1 (W+1 for a zero
+  * remainder), register = max rho. Register-max is commutative/associative
+  * and the hash is data-derived, so the aggregate is bit-deterministic
+  * under ANY partitioning — safe for the repo's reproducibility contract.
   *
-  * Why an aggregate and not the relational form: `groupBy(host)
-  * .agg(hll_sketch(url, 64))` keeps ONE m-long buffer per group per task
-  * and merges buffers on the reduce side — the exchange carries
-  * |groups|·1 array rows instead of |groups|·m register rows, and the
-  * sketch composes with any other aggregate in the same pass.
+  * Shape: `groupBy(host).agg(hll_sketch(url, 64))` keeps ONE m-long buffer
+  * per group per task and merges buffers on the reduce side — the exchange
+  * carries one array row per group, and the sketch composes with any other
+  * aggregate in the same pass. [[graft.ops.CorpusSignals.hllSummary]] and
+  * [[graft.ops.CorpusSignals.hllEstimate]] read the array.
   */
 case class HllSketchAgg(
     child: Expression,

@@ -26,15 +26,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * list (no floating-point `pow`). P = 1e9+7 keeps every intermediate
   * below 2^63 (h < P, h·B + cp < 1e9·257 + 2^21 « 2^63).
   *
-  * The md5-per-gram variant (TextStats.fingerprintAgg) remains for
-  * contracts that want a keyed-quality hash; this is the scan-side fast
-  * path (measured ~9× cheaper at sf0.1).
+  * An md5-per-gram explode + aggregate measured ~9× slower at sf0.1.
   *
   * Semantics note: `n_grams` counts distinct hash RESIDUES mod P, not
   * distinct gram strings — expected undercount ≈ g²/2P per doc (≈1 at
-  * ~65k grams), a size-dependent bias the 60-bit md5 variant does not
-  * have. Fine as a dedup-triage signal; use fingerprintAgg when the exact
-  * distinct-gram count matters.
+  * ~65k grams), a size-dependent bias a 60-bit hash would not have. Fine
+  * as a dedup-triage signal; count distinct grams exactly when that
+  * count matters.
   */
 case class RollingFingerprint(child: Expression, n: Int = 8,
                               b: Long = 257L, p: Long = 1000000007L)

@@ -501,10 +501,9 @@ object CorpusSignals {
     * host column).
     */
   def hostCap(df: DataFrame, urlCol: String, idCol: String, k: Int,
-              salt: String = "",
-              hash: Column => Column = TextDedup.portableHash): DataFrame =
+              salt: String = ""): DataFrame =
     Sampling.stratifiedQuota(
-      df.withColumn("host", host(col(urlCol))), "host", idCol, k, salt, hash)
+      df.withColumn("host", host(col(urlCol))), "host", idCol, k, salt)
 
   /** The classic web-encoding bug as a lookup table: UTF-8 bytes decoded
     * as Windows-1252/Latin-1 ("mojibake"). Each entry maps the 2–3 char
@@ -607,11 +606,6 @@ object CorpusSignals {
       graft.functions.DeflateRatio(
         org.apache.spark.sql.GraftBridge.expression(text)))
 
-  /** HLL rho of the W-bit remainder `w` — see [[hllRegisters]]. */
-  private def hllRho(w: Column, W: Int): Column =
-    when(w === 0L, lit(W + 1).cast("long"))
-      .otherwise(lit(W).cast("long") - length(bin(w)) + 1L)
-
   /** The HLL bias-correction constant alpha_m (Flajolet et al. 2007). */
   private def hllAlpha(m: Int): Double = m match {
     case 16 => 0.673
@@ -620,111 +614,18 @@ object CorpusSignals {
     case _  => 0.7213 / (1.0 + 1.079 / m)
   }
 
-  /** HyperLogLog register table (Flajolet et al. 2007) over a value column
-    * — the constant-size cardinality sketch a 100 TB dedup/mixing planner
-    * runs INSTEAD of countDistinct (whose exact hash aggregate must hold
-    * every distinct key). bucket = h mod m, and rho = leading-zero count
-    * + 1 of the remaining W bits (via bit length: rho = W - bitlen + 1,
-    * W + 1 for an all-zero remainder) — integer-only, so the m-row
-    * register table is bit-identical in any engine sharing the hash.
-    * The aggregate is max(), fully map-side-combinable: each task reduces
-    * its partition to ≤ m rows before the one tiny exchange. Absent
-    * buckets are joined back as rho 0, so the output is always exactly m
-    * rows. [[hllEstimate]] turns registers into the standard bias-corrected
-    * estimate (the one float step, outside any oracle contract).
-    */
-  def hllRegisters(df: DataFrame, value: Column, m: Int,
-                   hash: Column => Column = TextDedup.portableHash): DataFrame = {
-    require(m >= 2 && (m & (m - 1)) == 0, "m must be a power of two")
-    val logm = java.lang.Integer.numberOfTrailingZeros(m)
-    val W = 60 - logm // portableHash is 60-bit
-    val h = hash(value)
-    val regs = df
-      .select(pmod(h, lit(m.toLong)).as("bucket"),
-        // shiftright, NOT division: long / long is DOUBLE division in
-        // Spark, and doubles lose bits past 2^53
-        shiftright(h, logm).as("w"))
-      .select(col("bucket"), hllRho(col("w"), W).as("rho"))
-      .groupBy("bucket")
-      .agg(max(col("rho")).as("rho_max"))
-    df.sparkSession.range(m).select(col("id").as("bucket"))
-      .join(regs, Seq("bucket"), "left")
-      .select(col("bucket"), coalesce(col("rho_max"), lit(0L)).as("rho_max"))
-  }
-
-  /** Registers → the standard HLL estimate: alpha_m · m² / Σ 2^(-rho),
-    * with the small-range linear-counting correction. One aggregate over m
-    * rows — driver-free.
-    */
-  def hllEstimate(registers: DataFrame, m: Int): DataFrame = {
-    val alpha = hllAlpha(m)
-    registers
-      .agg(sum(pow(lit(2.0), -col("rho_max"))).as("z"),
-        sum(when(col("rho_max") === 0L, 1).otherwise(0)).as("v"))
-      .select(
-        when(col("v") > 0 &&
-            lit(alpha * m * m) / col("z") <= lit(2.5 * m),
-          lit(m.toDouble) * log(lit(m.toDouble) / col("v"))) // linear counting
-          .otherwise(lit(alpha * m * m) / col("z"))
-          .as("estimate"))
-  }
-
-  /** Per-key HLL summary: approximate distinct counts BY GROUP (distinct
-    * tokens per source, distinct URLs per host) as two EXACT integers per
-    * key — `v` (empty registers) and `zint` = Σ_buckets 2^(W+1 − rho), the
-    * harmonic denominator scaled by 2^(W+1) so it stays in BIGINT
-    * arithmetic (≤ m·2^(W+1) = 2^61): order-independent, bit-stable on any
-    * engine, unlike a floating Σ2^(−rho). The double estimate is
-    * [[hllEstimateFromSummary]] — kept OUT of the summary so the
-    * verifiable artifact is integral. Shuffle shape: the (key, bucket)
-    * max-aggregate is map-side combinable, so the exchange carries
-    * ≤ |keys|·m partially-combined rows regardless of corpus size; the
-    * second aggregate collapses m rows per key. Summaries of disjoint
-    * corpus slices do NOT merge by adding zint — merge at the register
-    * level (per-bucket max), which is what the map-side partial already
-    * does in one pass.
-    */
-  def hllByKey(df: DataFrame, key: Column, value: Column, m: Int,
-               hash: Column => Column = TextDedup.portableHash): DataFrame = {
-    require(m >= 2 && (m & (m - 1)) == 0, "m must be a power of two")
-    val logm = java.lang.Integer.numberOfTrailingZeros(m)
-    val W = 60 - logm
-    val h = hash(value)
-    df.select(key.as("key"), pmod(h, lit(m.toLong)).as("bucket"),
-        shiftright(h, logm).as("w"))
-      .select(col("key"), col("bucket"), hllRho(col("w"), W).as("rho"))
-      .groupBy("key", "bucket")
-      .agg(max(col("rho")).as("rho_max"))
-      .groupBy("key")
-      .agg((lit(m.toLong) - count(lit(1))).as("v"),
-        sum(expr(s"shiftleft(cast(1 as bigint), cast(${W + 1} - rho_max as int))"))
-          .as("zp"))
-      .select(col("key"), col("v"),
-        (col("zp") + col("v") * lit(1L << (W + 1))).as("zint"))
-  }
-
-  /** The standard HLL estimate from a [[hllByKey]] summary row: the
-    * harmonic mean with the small-range linear-counting correction —
-    * z = zint / 2^(W+1), est = α_m·m²/z, or m·ln(m/v) when the raw
-    * estimate falls under 2.5m and empty registers remain.
-    */
-  def hllEstimateFromSummary(v: Column, zint: Column, m: Int): Column = {
-    val alpha = hllAlpha(m)
-    val logm = java.lang.Integer.numberOfTrailingZeros(m)
-    val W = 60 - logm
-    val raw = lit(alpha * m * m * math.pow(2.0, W + 1)) / zint.cast("double")
-    when(v > 0 && raw <= lit(2.5 * m),
-      lit(m.toDouble) * log(lit(m.toDouble) / v.cast("double")))
-      .otherwise(raw)
-  }
-
-  /** The HLL register vector as a true AGGREGATE column — see
-    * [[graft.functions.HllSketchAgg]]: `groupBy(host).agg(hllSketchAgg(
-    * url, 64))` keeps one m-long buffer per group per task and merges
-    * buffers on the reduce side, so the exchange carries one array row
-    * per group instead of m register rows, and the sketch composes with
-    * other aggregates in the same pass. Bit-identical to [[hllRegisters]]
-    * run on each group's slice (cross-pinned in HllSketchAggSpec).
+  /** HyperLogLog registers (Flajolet et al. 2007) as a true AGGREGATE
+    * column — see [[graft.functions.HllSketchAgg]]: the constant-size
+    * cardinality sketch a 100 TB dedup/mixing planner runs INSTEAD of
+    * countDistinct (whose exact hash aggregate must hold every distinct
+    * key). bucket = h mod m over the shared 60-bit hash, rho = leading-zero
+    * count + 1 of the remaining W = 60 − log2 m bits, register = max rho —
+    * integer-only, so the m-long array is bit-identical in any engine
+    * sharing the hash. `groupBy(host).agg(hllSketchAgg(url, 64))` keeps one
+    * m-long buffer per group per task and merges buffers by max on the
+    * reduce side, so the exchange carries one array row per group; with no
+    * groupBy the one partially-merged buffer per task goes to a single
+    * partition. Empty registers read 0.
     */
   def hllSketchAgg(value: Column, m: Int): Column =
     org.apache.spark.sql.GraftBridge.column(
@@ -732,18 +633,68 @@ object CorpusSignals {
         org.apache.spark.sql.GraftBridge.expression(value), m)
         .toAggregateExpression())
 
-  /** The CMS register table as a true AGGREGATE column — see
-    * [[graft.functions.CmsSketchAgg]]: `groupBy(host).agg(cmsSketchAgg(
-    * token, 4, 64))` keeps one depth×width counter array per group per
-    * task, merged by element-wise + on the reduce side. Bit-identical to
-    * [[cmsRegisters]] run on each group's slice (row-major flattening;
-    * cross-pinned in CmsSketchAggSpec).
+  /** The integral summary of an [[hllSketchAgg]] register array:
+    * struct(v, zint) — `v` the empty registers, `zint` = Σ 2^(W+1 − rho),
+    * the harmonic denominator scaled by 2^(W+1) so it stays in BIGINT
+    * arithmetic (≤ m·2^(W+1) = 2^61; an empty register adds 2^(W+1)).
+    * Order-independent and bit-stable on any engine, unlike a floating
+    * Σ2^(−rho). Summaries of disjoint slices do NOT merge by adding zint —
+    * merge the registers (per-bucket max), which the aggregate does.
+    */
+  def hllSummary(registers: Column, m: Int): Column = {
+    val w1 = 61 - java.lang.Integer.numberOfTrailingZeros(m) // W + 1
+    struct(
+      size(filter(registers, _ === 0L)).cast("long").as("v"),
+      aggregate(registers, lit(0L), (acc, x) =>
+        acc + call_function("shiftleft", lit(1L), (lit(w1) - x).cast("int"))).as("zint"))
+  }
+
+  /** The standard HLL estimate of a register array: the harmonic mean
+    * α_m·m²/z with z = zint / 2^(W+1) (see [[hllSummary]]), or the
+    * small-range linear count m·ln(m/v) when the raw estimate falls under
+    * 2.5m and empty registers remain. The one float step, outside any
+    * oracle contract.
+    */
+  def hllEstimate(registers: Column, m: Int): Column = {
+    val s = hllSummary(registers, m)
+    val w1 = 61 - java.lang.Integer.numberOfTrailingZeros(m)
+    val v = s.getField("v")
+    val raw = lit(hllAlpha(m) * m * m * math.pow(2.0, w1)) / s.getField("zint").cast("double")
+    when(v > 0 && raw <= lit(2.5 * m),
+      lit(m.toDouble) * log(lit(m.toDouble) / v.cast("double")))
+      .otherwise(raw)
+  }
+
+  /** Count-Min Sketch counters (Cormode & Muthukrishnan 2005) as a true
+    * AGGREGATE column — see [[graft.functions.CmsSketchAgg]]: the
+    * fixed-size FREQUENCY sketch next to the HLL cardinality sketch, so a
+    * 100 TB heavy-hitter scan keeps depth×width counters instead of one per
+    * distinct key. Row hashes are Kirsch–Mitzenmacher double hashing (ESA
+    * 2006): h_i = (h1 + i·h2) mod width over two 60-bit md5 hashes, h1 of
+    * the value and h2 of "~ " + value. The result is the row-major
+    * depth×width counter array; `groupBy(host).agg(cmsSketchAgg(token, 4,
+    * 64))` keeps one array per group per task, merged by element-wise +.
     */
   def cmsSketchAgg(value: Column, depth: Int, width: Int): Column =
     org.apache.spark.sql.GraftBridge.column(
       graft.functions.CmsSketchAgg(
         org.apache.spark.sql.GraftBridge.expression(value), depth, width)
         .toAggregateExpression())
+
+  /** Point estimate of `value` from a [[cmsSketchAgg]] counter array:
+    * the minimum over rows i of counter[i·width + h_i(value)] — the classic
+    * one-sided bound (est ≥ true count, never under). A scalar over one
+    * array, so a probe set meets the one-row sketch in a broadcast cross
+    * and nothing corpus-sized moves.
+    */
+  def cmsEstimate(sketch: Column, value: Column, depth: Int, width: Int): Column = {
+    val h1 = TextDedup.portableHash(value)
+    val h2 = TextDedup.portableHash(concat(lit("~ "), value))
+    array_min(array((0 until depth).map { i =>
+      element_at(sketch,
+        (pmod(h1 + h2 * i.toLong, lit(width.toLong)) + (i.toLong * width + 1)).cast("int"))
+    }: _*))
+  }
 
   /** Detected charset of a raw crawl payload (see
     * [[graft.core.CharsetDetect]]): BOM → strict whole-payload UTF-8
@@ -778,40 +729,6 @@ object CorpusSignals {
         org.apache.spark.sql.GraftBridge.expression(score), k)
         .toAggregateExpression())
 
-  /** Count-Min Sketch register table (Cormode & Muthukrishnan 2005) over a
-    * value column — the fixed-size FREQUENCY sketch that pairs with the HLL
-    * cardinality sketch above: a 100 TB heavy-hitter scan (hot n-grams, hot
-    * URLs, hot hosts) keeps depth×width counters instead of one counter per
-    * distinct key. Row hashes use Kirsch–Mitzenmacher double hashing
-    * (ESA 2006): h_i = (h1 + i·h2) mod width over TWO 60-bit md5 hashes
-    * computed ONCE per value BEFORE the ×depth explode — after the
-    * explode, bucketing is pure integer arithmetic, so depth rows cost two
-    * digests instead of depth digest-plus-concat passes (measured ~2-3× on
-    * the bench corpus). Both engines rebuild the identical table. The
-    * aggregate is a plain count over (row, bucket) — fully map-side
-    * combinable: each task collapses its partition to ≤ depth·width rows
-    * before the one constant-size exchange. Absent buckets are joined back
-    * as 0 so the output is always exactly depth·width rows.
-    */
-  def cmsRegisters(df: DataFrame, value: Column, depth: Int, width: Int,
-                   hash: Column => Column = TextDedup.portableHash): DataFrame = {
-    require(depth >= 1 && width >= 2, "need at least one row, two buckets")
-    require(depth <= 7, "h1 + i*h2 must stay under 2^63: depth <= 7")
-    val regs = df
-      .select(hash(value).as("h1"), hash(concat(lit("~ "), value)).as("h2"))
-      .select(explode(sequence(lit(0), lit(depth - 1))).as("i"),
-        col("h1"), col("h2"))
-      .select(col("i").cast("long").as("i"),
-        pmod(col("h1") + col("i") * col("h2"), lit(width.toLong)).as("bucket"))
-      .groupBy("i", "bucket")
-      .agg(count(lit(1)).as("cnt"))
-    val spark = df.sparkSession
-    spark.range(depth).select(col("id").as("i"))
-      .crossJoin(spark.range(width).select(col("id").as("bucket")))
-      .join(regs, Seq("i", "bucket"), "left")
-      .select(col("i"), col("bucket"), coalesce(col("cnt"), lit(0L)).as("cnt"))
-  }
-
   /** Portable Bloom filter registers (Bloom, CACM 1970): the MEMBERSHIP
     * sketch completing the family — HLL answers "how many distinct", CMS
     * "how often", Bloom "have I seen this". The bitmap is `words` BIGINTs
@@ -827,13 +744,13 @@ object CorpusSignals {
     * two filters merge. Absent words are joined back as 0 so the table is
     * always `words` rows.
     */
-  def bloomRegisters(df: DataFrame, value: Column, words: Int, k: Int,
-                     hash: Column => Column = TextDedup.portableHash): DataFrame = {
+  def bloomRegisters(df: DataFrame, value: Column, words: Int, k: Int): DataFrame = {
     require(words >= 1 && k >= 1, "need at least one word and one hash")
     require(k <= 7, "h1 + i*h2 must stay under 2^63: k <= 7")
     val mBits = words.toLong * 63L
     val regs = df
-      .select(hash(value).as("h1"), hash(concat(lit("~ "), value)).as("h2"))
+      .select(TextDedup.portableHash(value).as("h1"),
+        TextDedup.portableHash(concat(lit("~ "), value)).as("h2"))
       .select(explode(sequence(lit(0), lit(k - 1))).as("i"), col("h1"), col("h2"))
       .select(pmod(col("h1") + col("i") * col("h2"), lit(mBits)).as("p"))
       .select(expr("p div 63").as("word"),
@@ -853,13 +770,12 @@ object CorpusSignals {
     * combinable, nothing corpus-sized moves.
     */
   def bloomProbe(registers: DataFrame, probes: DataFrame, value: Column,
-                 words: Int, k: Int,
-                 hash: Column => Column = TextDedup.portableHash): DataFrame = {
+                 words: Int, k: Int): DataFrame = {
     val mBits = words.toLong * 63L
     probes
       .select(value.as("w"))
-      .select(col("w"), hash(col("w")).as("h1"),
-        hash(concat(lit("~ "), col("w"))).as("h2"))
+      .select(col("w"), TextDedup.portableHash(col("w")).as("h1"),
+        TextDedup.portableHash(concat(lit("~ "), col("w"))).as("h2"))
       .select(col("w"), col("h1"), col("h2"),
         explode(sequence(lit(0), lit(k - 1))).as("i"))
       .select(col("w"),
@@ -871,26 +787,4 @@ object CorpusSignals {
       .agg(min((col("bits").bitwiseAND(col("b")) === col("b")).cast("int")).as("m"))
       .select(col("w"), (col("m") === 1).as("maybe"))
   }
-
-  /** Point estimates from a CMS register table: for each probe value,
-    * est = min over rows i of register[i][h_i(value)] — the classic
-    * one-sided bound (est ≥ true count, never under). The probe set is
-    * expected to be small (a candidate list, a blocklist, the vocabulary
-    * head): probes explode ×depth and meet the constant-size register
-    * table in a broadcast equi-join, so nothing corpus-sized moves.
-    */
-  def cmsEstimate(registers: DataFrame, probes: DataFrame, value: Column,
-                  depth: Int, width: Int,
-                  hash: Column => Column = TextDedup.portableHash): DataFrame =
-    probes
-      .select(value.as("w"))
-      .select(col("w"), hash(col("w")).as("h1"),
-        hash(concat(lit("~ "), col("w"))).as("h2"))
-      .select(col("w"), col("h1"), col("h2"),
-        explode(sequence(lit(0), lit(depth - 1))).as("i"))
-      .select(col("w"), col("i").cast("long").as("i"),
-        pmod(col("h1") + col("i") * col("h2"), lit(width.toLong)).as("bucket"))
-      .join(broadcast(registers), Seq("i", "bucket"))
-      .groupBy("w")
-      .agg(min(col("cnt")).as("est"))
 }

@@ -146,31 +146,10 @@ object TextStats {
     }
   }
 
-  /** Character n-gram hashes of a document (the fingerprint alphabet). */
-  def charGramHashes(text: Column, n: Int = 8,
-                     hash: Column => Column = TextDedup.portableHash): Column =
-    transform(
-      sequence(lit(1), greatest(length(text) - (n - 1), lit(1))),
-      i => hash(text.substr(i, lit(n))))
-
-  /** Rolling-hash document fingerprint: min & max char-8-gram hash plus the
-    * distinct gram count — a winnowing-style signature cheap enough to
-    * compute scan-side and strong enough for shard-level dedup triage.
-    */
-  def fingerprint(text: Column, n: Int = 8,
-                  hash: Column => Column = TextDedup.portableHash): Column = {
-    val grams = charGramHashes(text, n, hash)
-    struct(
-      array_min(grams).as("fp_min"),
-      array_max(grams).as("fp_max"),
-      size(array_distinct(grams)).as("n_grams"))
-  }
-
   /** Scan-side rolling-polynomial fingerprint: one pass per row inside the
     * scan stage (graft.functions.RollingFingerprint) — no explode, no
-    * shuffle, no per-gram hash invocation. The production path for corpus
-    * fingerprinting; `fingerprintAgg` below keeps the md5-per-gram variant
-    * for keyed-quality-hash contracts.
+    * shuffle, no per-gram hash invocation — the one corpus fingerprint.
+    * Output: (id, fp_min, fp_max, n_grams).
     */
   def fingerprintScan(df: org.apache.spark.sql.DataFrame, idCol: String,
                       textCol: String, n: Int = 8): org.apache.spark.sql.DataFrame = {
@@ -181,32 +160,8 @@ object TextStats {
     // ONCE per row and emits the struct fields as columns — projecting
     // fp.fp_min / fp.fp_max / fp.n_grams separately would re-evaluate the
     // whole expression per field after projection collapse.
-    // Null texts are dropped, matching fingerprintAgg (whose explode of
-    // null grams produces no rows) — the two paths stay interchangeable.
+    // Null texts are dropped: no text, no row.
     df.where(col(textCol).isNotNull)
       .select(col(idCol).as("id"), inline(array(fp)))
   }
-
-  /** Corpus fingerprint table (id, fp_min, fp_max, n_grams) via
-    * explode + hash-aggregate: each gram is hashed exactly once (selecting
-    * the three fields of the `fingerprint` struct separately re-evaluates
-    * the gram array per field — HOF subtrees are not CSE'd), and the
-    * aggregation is the standard shuffle-parallel plan.
-    */
-  def fingerprintAgg(df: org.apache.spark.sql.DataFrame, idCol: String,
-                     textCol: String, n: Int = 8,
-                     hash: Column => Column = TextDedup.portableHash): org.apache.spark.sql.DataFrame =
-    // explode the POSITIONS, hash top-level: the md5 runs codegen'd in the
-    // fused explode+project stage instead of interpreted inside the
-    // charGramHashes transform lambda. Null texts are dropped (without the
-    // filter, greatest(null-7, 1)=1 emits a ghost row with null fp and
-    // n_grams=0) — same contract as fingerprintScan: no text, no row.
-    df.where(col(textCol).isNotNull)
-      .select(col(idCol).as("id"), col(textCol).as("t"),
-        explode(sequence(lit(1), greatest(length(col(textCol)) - (n - 1), lit(1)))).as("i"))
-      .select(col("id"), hash(col("t").substr(col("i"), lit(n))).as("g"))
-      .groupBy("id").agg(
-        min(col("g")).as("fp_min"),
-        max(col("g")).as("fp_max"),
-        countDistinct(col("g")).as("n_grams"))
 }

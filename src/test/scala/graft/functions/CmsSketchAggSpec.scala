@@ -2,13 +2,15 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The CMS aggregate's contracts: per-group counter arrays are bit-identical
-  * to the (oracle-verified) relational cmsRegisters run on each group's
-  * slice (row-major flattening); results are invariant under repartitioning
-  * (merge = + commutes); nulls are ignored; SQL registration works.
+  * to the direct per-value definition (hash60 of v and of "~ " + v, row
+  * buckets (h1 + i·h2) mod width, row-major sums); results are invariant
+  * under repartitioning (merge = + commutes); nulls are ignored; SQL
+  * registration works.
   */
 class CmsSketchAggSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -30,15 +32,27 @@ class CmsSketchAggSpec extends AnyFunSuite with BeforeAndAfterAll {
       (0 until 80).map(i => ("c", s"c-${i % 11}"))).toDF("k", "v")
   }
 
-  test("per-group counters are bit-identical to the relational cmsRegisters") {
+  /** Direct per-value definition: h1 = hash60(v), h2 = hash60("~ " + v),
+    * counter[i·width + (h1 + i·h2) mod width] += 1 for each row i.
+    */
+  private def directCounters(values: Seq[String], depth: Int, width: Int): Seq[Long] = {
+    val regs = new Array[Long](depth * width)
+    values.foreach { v =>
+      val h1 = HllSketchAgg.hash60(UTF8String.fromString(v))
+      val h2 = HllSketchAgg.hash60(UTF8String.fromString("~ " + v))
+      for (i <- 0 until depth) regs(i * width + ((h1 + i * h2) % width).toInt) += 1L
+    }
+    regs.toSeq
+  }
+
+  test("per-group counters are bit-identical to the direct per-value definition") {
     val df = corpus
     val got = df.groupBy("k")
       .agg(graft.ops.CorpusSignals.cmsSketchAgg(col("v"), depth = 4, width = 32).as("r"))
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1).toSeq).toMap
+    val values = df.collect().map(r => r.getString(0) -> r.getString(1)).toSeq
     for (k <- Seq("a", "b", "c")) {
-      val exp = graft.ops.CorpusSignals
-        .cmsRegisters(df.where(col("k") === k), col("v"), depth = 4, width = 32)
-        .orderBy("i", "bucket").collect().map(_.getLong(2)).toSeq
+      val exp = directCounters(values.collect { case (`k`, v) => v }, depth = 4, width = 32)
       assert(got(k) == exp, k)
     }
     // every row of every group's table carries the group's full mass

@@ -7,8 +7,8 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The custom TypedImperativeAggregate's contracts: its per-group register
-  * vectors are bit-identical to the (oracle-verified) relational
-  * hllRegisters run on each group's slice; results are invariant under
+  * vectors are bit-identical to the direct per-value definition (hash60,
+  * bucket and rho, max per bucket); results are invariant under
   * repartitioning (merge = max commutes); nulls are ignored; the SQL
   * registration works; and the JVM-side 60-bit hash equals the Column-side
   * portableHash.
@@ -44,15 +44,31 @@ class HllSketchAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("per-group registers are bit-identical to the relational hllRegisters") {
+  /** Direct per-value definition: bucket = h mod m, rho = W − bitlen(h >>
+    * log2 m) + 1 (W + 1 for a zero remainder), register = max rho.
+    */
+  private def directRegisters(values: Seq[String], m: Int): Seq[Long] = {
+    val logm = Integer.numberOfTrailingZeros(m)
+    val W = 60 - logm
+    val regs = new Array[Long](m)
+    values.foreach { v =>
+      val h = HllSketchAgg.hash60(UTF8String.fromString(v))
+      val w = h >>> logm
+      val rho = if (w == 0L) W + 1L else W - java.lang.Long.toBinaryString(w).length + 1L
+      val b = (h % m).toInt
+      regs(b) = math.max(regs(b), rho)
+    }
+    regs.toSeq
+  }
+
+  test("per-group registers are bit-identical to the direct per-value definition") {
     val df = corpus
     val got = df.groupBy("k")
       .agg(graft.ops.CorpusSignals.hllSketchAgg(col("v"), m = 64).as("r"))
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1).toSeq).toMap
+    val values = df.collect().map(r => r.getString(0) -> r.getString(1)).toSeq
     for (k <- Seq("a", "b", "c")) {
-      val exp = graft.ops.CorpusSignals
-        .hllRegisters(df.where(col("k") === k), col("v"), m = 64)
-        .orderBy("bucket").collect().map(_.getLong(1)).toSeq
+      val exp = directRegisters(values.collect { case (`k`, v) => v }, m = 64)
       assert(got(k) == exp, k)
     }
   }

@@ -333,68 +333,71 @@ class CorpusSignalsSpec extends AnyFunSuite with BeforeAndAfterAll {
     cases.foreach { case (in, n, k) => assert(got(in) == ((n, k)), in) }
   }
 
-  test("hllRegisters: m rows always, duplicate-invariant, merge = max") {
+  /** Register array of `df`'s column v (one aggregate row). */
+  private def hllRegs(df: org.apache.spark.sql.DataFrame, m: Int): Seq[Long] =
+    df.agg(CorpusSignals.hllSketchAgg(col("v"), m).as("r"))
+      .collect().head.getSeq[Long](0).toSeq
+
+  test("hllSketchAgg: m registers always, duplicate-invariant, merge = max") {
     val s = spark
     import s.implicits._
-    def regs(df: org.apache.spark.sql.DataFrame) =
-      CorpusSignals.hllRegisters(df, col("v"), m = 64)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val a = (0 until 300).map(i => s"val$i").toDF("v")
     val b = (200 until 500).map(i => s"val$i").toDF("v")
-    val ra = regs(a); val rb = regs(b)
-    assert(ra.size == 64 && ra.keySet == (0L until 64L).toSet)
+    val ra = hllRegs(a, 64); val rb = hllRegs(b, 64)
+    assert(ra.size == 64 && hllRegs(a.limit(0), 64) == Seq.fill(64)(0L))
     // the sketch is a set summary: duplicates change nothing
-    assert(regs(a.union(a).union(a)) == ra)
+    assert(hllRegs(a.union(a).union(a), 64) == ra)
     // mergeability (the property that makes it a 100 TB sketch: per-task
     // registers combine by max, exactly what the map-side partial does)
-    val merged = (0L until 64L).map(k => k -> math.max(ra(k), rb(k))).toMap
-    assert(regs(a.union(b)) == merged)
+    assert(hllRegs(a.union(b), 64) == ra.zip(rb).map { case (x, y) => math.max(x, y) })
   }
 
   test("hllEstimate lands within the m=256 error envelope on 5000 distinct") {
     val s = spark
     import s.implicits._
     val df = (0 until 5000).map(i => s"tok-$i-x").toDF("v")
-    val est = CorpusSignals.hllEstimate(
-      CorpusSignals.hllRegisters(df, col("v"), m = 256), m = 256)
+    val est = df.agg(CorpusSignals.hllSketchAgg(col("v"), m = 256).as("r"))
+      .select(CorpusSignals.hllEstimate(col("r"), m = 256))
       .collect().head.getDouble(0)
     // std error 1.04/sqrt(256) = 6.5%; allow 4 sigma on the fixed data
     assert(math.abs(est - 5000.0) / 5000.0 < 0.26, s"estimate $est")
   }
 
-  test("hllByKey: per-key summary equals the global registers of that key's slice") {
+  /** Per-key (v, zint) of `df`'s (k, v) through hllSummary. */
+  private def hllSummaries(df: org.apache.spark.sql.DataFrame) =
+    df.groupBy("k").agg(CorpusSignals.hllSketchAgg(col("v"), m = 64).as("r"))
+      .select(col("k"), CorpusSignals.hllSummary(col("r"), m = 64).as("s"))
+      .select(col("k"), col("s.v"), col("s.zint"))
+      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+
+  test("hllSummary: per-key (v, zint) equals the registers of that key's slice") {
     val s = spark
     import s.implicits._
     val rows = (0 until 800).map(i => ("a", s"tok-${i % 300}")) ++
       (0 until 200).map(i => ("b", s"other-${i % 50}"))
     val df = rows.toDF("k", "v")
-    val got = CorpusSignals.hllByKey(df, col("k"), col("v"), m = 64)
-      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    // reference: run the SINGLE-set register op on each key's slice and
-    // summarize — v = empty registers, zint = Σ 2^(55 - rho)
+    val got = hllSummaries(df)
+    // reference: the registers of each key's slice alone, summarized —
+    // v = empty registers, zint = Σ 2^(55 - rho)
     for (k <- Seq("a", "b")) {
-      val regs = CorpusSignals.hllRegisters(df.where(col("k") === k), col("v"), m = 64)
-        .collect().map(r => r.getLong(1))
+      val regs = hllRegs(df.where(col("k") === k), 64)
       val v = regs.count(_ == 0L).toLong
       val zint = regs.map(r => 1L << (55 - r).toInt).sum
       assert(got(k) == ((v, zint)), k)
     }
     // duplicate-invariance carries over: the sketch summarizes a SET
-    val tripled = CorpusSignals.hllByKey(df.union(df).union(df),
-        col("k"), col("v"), m = 64)
-      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(tripled == got)
+    assert(hllSummaries(df.union(df).union(df)) == got)
   }
 
-  test("hllEstimateFromSummary: both branches land in the error envelope") {
+  test("hllEstimate: both branches land in the error envelope") {
     val s = spark
     import s.implicits._
     // 5000 distinct (harmonic branch) and 40 distinct (linear counting)
     val rows = (0 until 5000).map(i => ("big", s"tok-$i-x")) ++
       (0 until 400).map(i => ("small", s"s-${i % 40}"))
-    val est = CorpusSignals.hllByKey(rows.toDF("k", "v"), col("k"), col("v"), m = 64)
-      .select(col("key"), CorpusSignals.hllEstimateFromSummary(
-        col("v"), col("zint"), m = 64).as("est"))
+    val est = rows.toDF("k", "v").groupBy("k")
+      .agg(CorpusSignals.hllSketchAgg(col("v"), m = 64).as("r"))
+      .select(col("k"), CorpusSignals.hllEstimate(col("r"), m = 64).as("est"))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     // std error 1.04/sqrt(64) = 13%; allow 4 sigma on the fixed data
     assert(math.abs(est("big") - 5000.0) / 5000.0 < 0.52, s"big ${est("big")}")
@@ -434,25 +437,23 @@ class CorpusSignalsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out === Seq(("A", 3L, 2L, 1159L), ("B", 4L, 2L, 1262L)))
   }
 
-  test("cmsRegisters: exact d×w shape, total mass = row count, merge = sum") {
+  /** Row-major depth×width counter array of `df`'s column v. */
+  private def cmsRegs(df: org.apache.spark.sql.DataFrame, depth: Int, width: Int): Seq[Long] =
+    df.agg(CorpusSignals.cmsSketchAgg(col("v"), depth, width).as("r"))
+      .collect().head.getSeq[Long](0).toSeq
+
+  test("cmsSketchAgg: exact d×w shape, row mass = row count, merge = sum") {
     val s = spark
     import s.implicits._
-    def regs(df: org.apache.spark.sql.DataFrame) =
-      CorpusSignals.cmsRegisters(df, col("v"), depth = 4, width = 32)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val a = (0 until 300).map(i => s"tok${i % 40}").toDF("v")
     val b = (0 until 200).map(i => s"tok${i % 70}").toDF("v")
-    val ra = regs(a); val rb = regs(b)
-    assert(ra.size == 4 * 32 &&
-      ra.keySet == (for (i <- 0L until 4L; j <- 0L until 32L) yield (i, j)).toSet)
+    val ra = cmsRegs(a, 4, 32); val rb = cmsRegs(b, 4, 32)
+    assert(ra.size == 4 * 32)
     // every hash row sees every item once: each row's mass is the row count
-    (0L until 4L).foreach { i =>
-      assert(ra.collect { case ((r, _), c) if r == i => c }.sum == 300L)
-    }
+    assert(ra.grouped(32).map(_.sum).toSeq == Seq.fill(4)(300L))
     // counter-additivity (the 100 TB property: per-task sketches combine by
-    // plain +, exactly what the map-side partial count does)
-    val merged = ra.map { case (k, c) => k -> (c + rb(k)) }
-    assert(regs(a.union(b)) == merged)
+    // plain +, exactly what the map-side partial does)
+    assert(cmsRegs(a.union(b), 4, 32) == ra.zip(rb).map { case (x, y) => x + y })
   }
 
   test("bloomRegisters/bloomProbe: no false negatives, bit-63 clear, merge = OR") {
@@ -497,9 +498,9 @@ class CorpusSignalsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import s.implicits._
     val freqs = (0 until 30).map(i => s"w$i" -> (i % 5 + 1).toLong)
     val stream = freqs.flatMap { case (w, n) => Seq.fill(n.toInt)(w) }.toDF("v")
-    val regs = CorpusSignals.cmsRegisters(stream, col("v"), depth = 4, width = 64)
-    val probes = freqs.map(_._1).toDF("v")
-    val est = CorpusSignals.cmsEstimate(regs, probes, col("v"), depth = 4, width = 64)
+    val sketch = stream.agg(CorpusSignals.cmsSketchAgg(col("v"), depth = 4, width = 64).as("r"))
+    val est = freqs.map(_._1).toDF("v").crossJoin(sketch)
+      .select(col("v"), CorpusSignals.cmsEstimate(col("r"), col("v"), depth = 4, width = 64))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val truth = freqs.toMap
     assert(est.keySet == truth.keySet)

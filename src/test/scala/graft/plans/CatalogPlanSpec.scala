@@ -311,13 +311,6 @@ class CatalogPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"the corpus must not sort-merge against a <=1024-row table:\n$p")
   }
 
-  test("q_hll: registers reduce map-side (partial max), constant-size exchange") {
-    val p = plan("q_hll")
-    assert(p.contains("partial_max"),
-      s"each task must reduce to <= m register rows before the exchange:\n$p")
-    assert(!p.contains("CartesianProduct"))
-  }
-
   test("q_substr_dedup: keep-first dedup WITHOUT a window on the chunk key") {
     // the winner rides min(struct(id, idx)) inside the hot-chunk aggregate;
     // a Window here would sort every occurrence of a hot boilerplate chunk
@@ -382,24 +375,6 @@ class CatalogPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"fractional containment must never compare documents pairwise:\n$p")
   }
 
-  test("q_cms: corpus collapses to registers BEFORE any join; fill frame is the only nested loop") {
-    // the sketch property: the one hash exchange carries ≤ depth·width
-    // partially-combined counter rows, never the token stream; the (i,
-    // bucket) fill frame (two tiny Ranges crossed) then LEFT-joins the
-    // aggregate — so every join input is constant-size.
-    val p = plan("q_cms")
-    val initIdx = p.indexOf("== Initial Plan ==")
-    val f = if (initIdx >= 0) p.substring(0, initIdx) else p
-    assert(f.linesIterator.count(l =>
-      l.contains("Exchange hashpartitioning")) == 1,
-      s"one exchange, the register aggregate:\n$p")
-    assert(f.linesIterator.count(_.contains("BroadcastNestedLoopJoin")) == 1 &&
-      f.contains("Range (0, 4"),
-      s"only the depth x width Range frame may cross:\n$p")
-    assert("HashAggregate\\(keys=\\[i#\\d+L, bucket#\\d+L\\]".r.findFirstIn(f).isDefined,
-      s"register counts must map-side combine on (i, bucket):\n$p")
-  }
-
   test("q_pq_topk: ADC is broadcast/equi only — codes, LUT, and ranks never nest") {
     // the PQ promise: after encoding, the corpus is m code rows per vector
     // and every scoring join is a broadcast hash join (codebook by sub,
@@ -427,16 +402,22 @@ class CatalogPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("q_hll_agg / q_cms_agg: ObjectHashAggregate partial+final, ONE exchange of array buffers") {
     // the TypedImperativeAggregate promise: per-group register/counter
     // buffers combine map-side (partial ObjectHashAggregate before the
-    // exchange), so the shuffle carries one buffer row per (group, task)
-    Seq("q_hll_agg", "q_cms_agg").foreach { q =>
-      val p = plan(q)
-      val initIdx = p.indexOf("== Initial Plan ==")
-      val f = if (initIdx >= 0) p.substring(0, initIdx) else p
-      assert(f.contains("ObjectHashAggregate"), s"$q: sketch must aggregate as objects:\n$p")
-      assert(!f.contains("Join"), s"$q: the aggregate form must not join:\n$p")
-      assert(f.linesIterator.count(l =>
-        l.contains("Exchange hashpartitioning")) == 1,
-        s"$q: one exchange of partially-merged buffers:\n$p")
+    // exchange), so the shuffle carries one buffer row per (group, task).
+    // The global rows q_hll / q_cms run the same aggregate with no group
+    // key: one buffer per task goes to a single partition, never the token
+    // stream through a hash exchange.
+    Seq("q_hll_agg" -> "Exchange hashpartitioning", "q_cms_agg" -> "Exchange hashpartitioning",
+      "q_hll" -> "Exchange SinglePartition", "q_cms" -> "Exchange SinglePartition").foreach {
+      case (q, exchange) =>
+        val p = plan(q)
+        val initIdx = p.indexOf("== Initial Plan ==")
+        val f = if (initIdx >= 0) p.substring(0, initIdx) else p
+        assert(f.contains("ObjectHashAggregate"), s"$q: sketch must aggregate as objects:\n$p")
+        assert(!f.contains("Join"), s"$q: the aggregate form must not join:\n$p")
+        assert(f.linesIterator.count(_.contains(exchange)) == 1,
+          s"$q: one exchange of partially-merged buffers:\n$p")
+        assert(exchange.contains("hashpartitioning") || !f.contains("hashpartitioning"),
+          s"$q: the global sketch must not hash-partition:\n$p")
     }
   }
 
