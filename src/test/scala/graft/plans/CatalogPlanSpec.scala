@@ -402,23 +402,56 @@ class CatalogPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("q_hll_agg / q_cms_agg: ObjectHashAggregate partial+final, ONE exchange of array buffers") {
     // the TypedImperativeAggregate promise: per-group register/counter
     // buffers combine map-side (partial ObjectHashAggregate before the
-    // exchange), so the shuffle carries one buffer row per (group, task).
-    // The global rows q_hll / q_cms run the same aggregate with no group
-    // key: one buffer per task goes to a single partition, never the token
-    // stream through a hash exchange.
-    Seq("q_hll_agg" -> "Exchange hashpartitioning", "q_cms_agg" -> "Exchange hashpartitioning",
-      "q_hll" -> "Exchange SinglePartition", "q_cms" -> "Exchange SinglePartition").foreach {
-      case (q, exchange) =>
-        val p = plan(q)
-        val initIdx = p.indexOf("== Initial Plan ==")
-        val f = if (initIdx >= 0) p.substring(0, initIdx) else p
-        assert(f.contains("ObjectHashAggregate"), s"$q: sketch must aggregate as objects:\n$p")
-        assert(!f.contains("Join"), s"$q: the aggregate form must not join:\n$p")
-        assert(f.linesIterator.count(_.contains(exchange)) == 1,
-          s"$q: one exchange of partially-merged buffers:\n$p")
-        assert(exchange.contains("hashpartitioning") || !f.contains("hashpartitioning"),
-          s"$q: the global sketch must not hash-partition:\n$p")
+    // exchange), so the shuffle carries one buffer row per (group, task)
+    Seq("q_hll_agg", "q_cms_agg").foreach { q =>
+      val p = plan(q)
+      val initIdx = p.indexOf("== Initial Plan ==")
+      val f = if (initIdx >= 0) p.substring(0, initIdx) else p
+      assert(f.contains("ObjectHashAggregate"), s"$q: sketch must aggregate as objects:\n$p")
+      assert(!f.contains("Join"), s"$q: the aggregate form must not join:\n$p")
+      assert(f.linesIterator.count(l =>
+        l.contains("Exchange hashpartitioning")) == 1,
+        s"$q: one exchange of partially-merged buffers:\n$p")
     }
+  }
+
+  // The global sketch rows run the same aggregate with no group key: each
+  // task merges its tokens into one buffer (partial_<fn>), the buffers meet
+  // in ONE single-partition exchange, and posexplode of the dense array
+  // yields every register — so the token stream never shuffles and no join
+  // or fill frame is needed. Returns the final (post-AQE) plan text.
+  private def globalSketchPlan(q: String, fn: String): String = {
+    val p = plan(q)
+    val initIdx = p.indexOf("== Initial Plan ==")
+    val f = if (initIdx >= 0) p.substring(0, initIdx) else p
+    val partial = f.indexOf(s"partial_$fn")
+    val exchange = f.indexOf("Exchange SinglePartition")
+    assert(f.contains("ObjectHashAggregate") && partial >= 0,
+      s"$q: registers must combine map-side in an object aggregate:\n$p")
+    assert(f.linesIterator.count(_.contains("Exchange SinglePartition")) == 1,
+      s"$q: one constant-size exchange of partially-merged buffers:\n$p")
+    // the plan prints root first, so the partial aggregate sits BELOW
+    // (after) the exchange it feeds
+    assert(exchange >= 0 && exchange < partial,
+      s"$q: the partial merge must run before the exchange:\n$p")
+    assert(!f.contains("hashpartitioning"),
+      s"$q: the global sketch must not hash-partition:\n$p")
+    assert(!f.contains("CartesianProduct"), s"$q: no cartesian:\n$p")
+    f
+  }
+
+  test("q_hll: registers reduce map-side (partial max), constant-size exchange") {
+    // the buffer merge is a per-register max, so partial_hll_sketch is the
+    // partial max over each task's tokens
+    globalSketchPlan("q_hll", "hll_sketch")
+  }
+
+  test("q_cms: corpus collapses to registers BEFORE any join; fill frame is the only nested loop") {
+    // the depth x width counter array is dense, so posexplode emits every
+    // (i, bucket) cell and the old Range fill frame — once the only nested
+    // loop — is gone: the plan has no join and no nested loop at all
+    val f = globalSketchPlan("q_cms", "cms_sketch")
+    assert(!f.contains("Join"), s"q_cms: the counters must not join, nested loop or not:\n$f")
   }
 
   test("q_topk_agg: k-bounded buffers replace the rank window — no Window operator") {
