@@ -2,6 +2,7 @@ package graft
 
 import graft.core.{Assemble, Construction, Entities, PageData, PyStr}
 import graft.html.Boilerplate
+import graft.ops.TextDedup.portableHash
 import graft.ops.{Bpe, Cdx, CorpusSignals, Curation, Decontam, Feed, Http, Incremental, PageMeta, QualityModel, Ranking, Sampling, Sitemap, Sniff, Temporal, TextDedup, TextSegment, TextStats, UrlFilter, UrlTemplate, VectorSim, WebGraph}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -43,8 +44,6 @@ object Queries {
       col("doc_id")).sortWithinPartitions("doc_id")
 
   private def embs(s: SparkSession, dir: String) = s.read.parquet(pg(dir, "embeddings"))
-
-  private val ph: Column => Column = TextDedup.portableHash
 
   // ---------------------------------------------------------------- A1 stats
   // Reference: get_statistics helpers.py:67-86 (per-document totals/avgs),
@@ -300,14 +299,14 @@ object Queries {
   private def qMinhashSig(s: SparkSession, dir: String): DataFrame =
     TextDedup.minhashSignatures(
       docs(s, dir).where(size(split(col("text"), " ")) >= 3),
-      "doc_id", "text", k = 8, shingleN = 3, hash = ph)
+      "doc_id", "text", k = 8, shingleN = 3)
       .select(col("id"), array_join(col("sig"), ",").as("sig_csv"))
       .orderBy("id")
 
   // MinHash signatures (id, sig) of every doc with a 3-gram: k = 8
   // permutations (a_j·h + b_j) mod P of its gram hashes h = g mod P, the
   // minimum per permutation — TextDedup.minhashSignatures(k = 8,
-  // shingleN = 3, hash = portableHash).
+  // shingleN = 3).
   private def minhashSigsSql =
     s"""SELECT id, list_transform(generate_series(0, 7),
          j -> list_aggregate(list_transform(hs, h -> (h * (j*101 + 37) + (j*61 + 11)) % $P), 'min')) AS sig
@@ -321,7 +320,7 @@ object Queries {
     TextDedup.minhashPairs(
       TextDedup.minhashSignatures(
         docs(s, dir).where(size(split(col("text"), " ")) >= 3),
-        "doc_id", "text", k = 8, shingleN = 3, hash = ph),
+        "doc_id", "text", k = 8, shingleN = 3),
       rowsPerBand = 2, minEstJaccard = 0.25)
       .orderBy("id_a", "id_b")
 
@@ -351,16 +350,16 @@ object Queries {
     TextDedup.minhashPairs(
       TextDedup.minhashSignatures(
         docs(s, dir).where(size(split(col("text"), " ")) >= 3),
-        "doc_id", "text", k = 8, shingleN = 3, hash = ph),
-      rowsPerBand = 4, minEstJaccard = 0.25, bandHash = ph)
+        "doc_id", "text", k = 8, shingleN = 3),
+      rowsPerBand = 4, minEstJaccard = 0.25)
       .orderBy("id_a", "id_b")
 
   private val oMinhashPairsB4 =
     s"""WITH sigs AS ($minhashSigsSql),
        banded AS (
          SELECT id, sig, b.band,
-           ('0x' || substr(md5(sig[4*b.band + 1] || ',' || sig[4*b.band + 2] || ',' ||
-                               sig[4*b.band + 3] || ',' || sig[4*b.band + 4]), 1, 15))::BIGINT AS band_key
+           ${phSql("""sig[4*b.band + 1] || ',' || sig[4*b.band + 2] || ',' ||
+                      sig[4*b.band + 3] || ',' || sig[4*b.band + 4]""")} AS band_key
          FROM sigs, generate_series(0, 1) b(band)),
        cand AS (
          SELECT DISTINCT a.id AS id_a, b.id AS id_b
@@ -375,17 +374,17 @@ object Queries {
 
   // ------------------------------------------------------------------ simhash
   private def qSimhash(s: SparkSession, dir: String): DataFrame =
-    TextDedup.simhash(docs(s, dir), "doc_id", "text", bits = 32, hash = ph)
+    TextDedup.simhash(docs(s, dir), "doc_id", "text", bits = 32)
       .orderBy("id")
 
   private val oSimhash =
-    """SELECT id,
+    s"""SELECT id,
        list_sum(list_transform(generate_series(0, 31), i ->
          CASE WHEN list_sum(list_transform(hs, h ->
            CASE WHEN CAST(floor(h / pow(2, i)) AS BIGINT) % 2 = 1 THEN 1 ELSE -1 END)) > 0
          THEN CAST(pow(2, i) AS BIGINT) ELSE 0 END))::BIGINT AS simhash
        FROM (SELECT doc_id AS id,
-         list_transform(str_split(text, ' '), t -> ('0x' || substr(md5(t), 1, 15))::BIGINT % 4294967296) AS hs
+         list_transform(str_split(text, ' '), t -> ${phSql("t")} % 4294967296) AS hs
          FROM documents)
        ORDER BY id"""
 
@@ -396,19 +395,19 @@ object Queries {
   // all-pairs Hamming in DuckDB — identical output after exact verification.
   private def qSimhashPairs(s: SparkSession, dir: String): DataFrame =
     TextDedup.simhashPairs(
-      TextDedup.simhash(docs(s, dir), "doc_id", "text", bits = 32, hash = ph),
+      TextDedup.simhash(docs(s, dir), "doc_id", "text", bits = 32),
       bits = 32, chunks = 8, maxHamming = 3)
       .orderBy("id_a", "id_b")
 
   private val oSimhashPairs =
-    """WITH sh AS (
+    s"""WITH sh AS (
          SELECT id,
            list_sum(list_transform(generate_series(0, 31), i ->
              CASE WHEN list_sum(list_transform(hs, h ->
                CASE WHEN CAST(floor(h / pow(2, i)) AS BIGINT) % 2 = 1 THEN 1 ELSE -1 END)) > 0
              THEN CAST(pow(2, i) AS BIGINT) ELSE 0 END))::BIGINT AS simhash
          FROM (SELECT doc_id AS id,
-           list_transform(str_split(text, ' '), t -> ('0x' || substr(md5(t), 1, 15))::BIGINT % 4294967296) AS hs
+           list_transform(str_split(text, ' '), t -> ${phSql("t")} % 4294967296) AS hs
            FROM documents))
        SELECT a.id AS id_a, b.id AS id_b,
          bit_count(xor(a.simhash, b.simhash))::BIGINT AS hamming
@@ -424,35 +423,35 @@ object Queries {
   // in exact BIGINT shift/mask arithmetic (the 32-bit oracle's
   // floor(h/pow(2,i)) double `pow` is replaced by (h >> i) & 1).
   private def qSimhash56(s: SparkSession, dir: String): DataFrame =
-    TextDedup.simhash(docs(s, dir), "doc_id", "text", bits = 56, hash = ph)
+    TextDedup.simhash(docs(s, dir), "doc_id", "text", bits = 56)
       .orderBy("id")
 
   private val oSimhash56 =
-    """SELECT id,
+    s"""SELECT id,
        list_sum(list_transform(generate_series(0, 55), i ->
          CASE WHEN list_sum(list_transform(hs, h ->
            CASE WHEN ((h >> i) & 1) = 1 THEN 1 ELSE -1 END)) > 0
          THEN (1::BIGINT << i) ELSE 0 END))::BIGINT AS simhash
        FROM (SELECT doc_id AS id,
-         list_transform(str_split(text, ' '), t -> ('0x' || substr(md5(t), 1, 15))::BIGINT % 72057594037927936) AS hs
+         list_transform(str_split(text, ' '), t -> ${phSql("t")} % 72057594037927936) AS hs
          FROM documents)
        ORDER BY id"""
 
   private def qSimhash56Pairs(s: SparkSession, dir: String): DataFrame =
     TextDedup.simhashPairs(
-      TextDedup.simhash(docs(s, dir), "doc_id", "text", bits = 56, hash = ph),
+      TextDedup.simhash(docs(s, dir), "doc_id", "text", bits = 56),
       bits = 56, chunks = 8, maxHamming = 3)
       .orderBy("id_a", "id_b")
 
   private val oSimhash56Pairs =
-    """WITH sh AS (
+    s"""WITH sh AS (
          SELECT id,
            list_sum(list_transform(generate_series(0, 55), i ->
              CASE WHEN list_sum(list_transform(hs, h ->
                CASE WHEN ((h >> i) & 1) = 1 THEN 1 ELSE -1 END)) > 0
              THEN (1::BIGINT << i) ELSE 0 END))::BIGINT AS simhash
          FROM (SELECT doc_id AS id,
-           list_transform(str_split(text, ' '), t -> ('0x' || substr(md5(t), 1, 15))::BIGINT % 72057594037927936) AS hs
+           list_transform(str_split(text, ' '), t -> ${phSql("t")} % 72057594037927936) AS hs
            FROM documents))
        SELECT a.id AS id_a, b.id AS id_b,
          bit_count(xor(a.simhash, b.simhash))::BIGINT AS hamming
@@ -470,19 +469,19 @@ object Queries {
   private def qDedupClusters(s: SparkSession, dir: String): DataFrame =
     TextDedup.dedupClusters(
       TextDedup.simhashPairs(
-        TextDedup.simhash(docs(s, dir), "doc_id", "text", bits = 32, hash = ph),
+        TextDedup.simhash(docs(s, dir), "doc_id", "text", bits = 32),
         bits = 32, chunks = 8, maxHamming = 3))
       .orderBy("id")
 
   private val oDedupClusters =
-    """WITH RECURSIVE sh AS (
+    s"""WITH RECURSIVE sh AS (
          SELECT id,
            list_sum(list_transform(generate_series(0, 31), i ->
              CASE WHEN list_sum(list_transform(hs, h ->
                CASE WHEN CAST(floor(h / pow(2, i)) AS BIGINT) % 2 = 1 THEN 1 ELSE -1 END)) > 0
              THEN CAST(pow(2, i) AS BIGINT) ELSE 0 END))::BIGINT AS simhash
          FROM (SELECT doc_id AS id,
-           list_transform(str_split(text, ' '), t -> ('0x' || substr(md5(t), 1, 15))::BIGINT % 4294967296) AS hs
+           list_transform(str_split(text, ' '), t -> ${phSql("t")} % 4294967296) AS hs
            FROM documents)),
        e AS (
          SELECT a.id AS src, b.id AS dst FROM sh a JOIN sh b
@@ -500,12 +499,12 @@ object Queries {
   // seeded and none of those). Oracle recomputes the identical bucket
   // arithmetic.
   private def qSampleHash(s: SparkSession, dir: String): DataFrame =
-    Sampling.hashSample(docs(s, dir), "doc_id", frac = 0.2, salt = "s1", hash = ph)
+    Sampling.hashSample(docs(s, dir), "doc_id", frac = 0.2, salt = "s1")
       .select("doc_id", "source").orderBy("doc_id")
 
   private val oSampleHash =
-    """SELECT doc_id, source FROM documents
-       WHERE ('0x' || substr(md5(doc_id::VARCHAR || 's1'), 1, 15))::BIGINT % 1000000 < 200000
+    s"""SELECT doc_id, source FROM documents
+       WHERE ${phSql("doc_id::VARCHAR || 's1'")} % 1000000 < 200000
        ORDER BY doc_id"""
 
   // Priority sampling (DLT 2007): fixed-k weight-aware sample with the
@@ -516,15 +515,15 @@ object Queries {
   private def qPrioritySample(s: SparkSession, dir: String): DataFrame =
     Sampling.prioritySample(
         docs(s, dir).withColumn("w", TextStats.tokenCount(col("text")).cast("long")),
-        "doc_id", "w", k = 20, salt = "ps", hash = ph)
+        "doc_id", "w", k = 20, salt = "ps")
       .select(col("id").as("doc_id"), col("w"), col("est_w"))
       .orderBy("doc_id")
 
   private val oPrioritySample =
-    """WITH pr AS (
+    s"""WITH pr AS (
          SELECT doc_id AS id, len(str_split(text, ' '))::DOUBLE AS w,
            len(str_split(text, ' '))::DOUBLE * 1073741824.0 /
-             ((('0x' || substr(md5(doc_id::VARCHAR || 'ps'), 1, 15))::BIGINT % 1073741824 + 1)::DOUBLE) AS q
+             ((${phSql("doc_id::VARCHAR || 'ps'")} % 1073741824 + 1)::DOUBLE) AS q
          FROM documents),
        top AS (SELECT * FROM pr ORDER BY q DESC, id LIMIT 21),
        tau AS (SELECT CASE WHEN count(*) > 20 THEN min(q) ELSE 0.0 END AS tau FROM top),
@@ -533,8 +532,7 @@ object Queries {
        FROM kept, tau ORDER BY doc_id"""
 
   private def qSampleSplit(s: SparkSession, dir: String): DataFrame = {
-    val splits = Sampling.hashSplit(docs(s, dir), "doc_id", Seq(0.8, 0.1, 0.1),
-      salt = "sp", hash = ph)
+    val splits = Sampling.hashSplit(docs(s, dir), "doc_id", Seq(0.8, 0.1, 0.1), salt = "sp")
     splits.zipWithIndex.map { case (df, i) =>
       df.agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("id_sum"))
         .select(lit(i.toLong).as("split"), col("n_docs"), col("id_sum"))
@@ -544,11 +542,11 @@ object Queries {
   // the VALUES spine keeps an EMPTY split visible as (i, 0, NULL) — the
   // Spark side always emits one row per split, a bare GROUP BY would not
   private val oSampleSplit =
-    """WITH h AS (
+    s"""WITH h AS (
          SELECT doc_id,
            CASE WHEN h < 800000 THEN 0 WHEN h < 900000 THEN 1 ELSE 2 END AS split
          FROM (SELECT doc_id,
-           ('0x' || substr(md5(doc_id::VARCHAR || 'sp'), 1, 15))::BIGINT % 1000000 AS h
+           ${phSql("doc_id::VARCHAR || 'sp'")} % 1000000 AS h
            FROM documents))
        SELECT s.split, count(h.doc_id) AS n_docs, CAST(sum(h.doc_id) AS BIGINT) AS id_sum
        FROM (VALUES (0::BIGINT), (1::BIGINT), (2::BIGINT)) s(split)
@@ -556,14 +554,14 @@ object Queries {
        GROUP BY s.split ORDER BY s.split"""
 
   private def qSampleStrata(s: SparkSession, dir: String): DataFrame =
-    Sampling.stratifiedQuota(docs(s, dir), "source", "doc_id", n = 5, salt = "st", hash = ph)
+    Sampling.stratifiedQuota(docs(s, dir), "source", "doc_id", n = 5, salt = "st")
       .select("doc_id", "source").orderBy("source", "doc_id")
 
   private val oSampleStrata =
-    """SELECT doc_id, source FROM (
+    s"""SELECT doc_id, source FROM (
          SELECT doc_id, source, row_number() OVER (
            PARTITION BY source
-           ORDER BY ('0x' || substr(md5(doc_id::VARCHAR || 'st'), 1, 15))::BIGINT % 1000000, doc_id
+           ORDER BY ${phSql("doc_id::VARCHAR || 'st'")} % 1000000, doc_id
          ) AS rk FROM documents)
        WHERE rk <= 5 ORDER BY source, doc_id"""
 
@@ -617,8 +615,7 @@ object Queries {
 
   // ------------------------------------------------------ word-ngram jaccard
   private def qNgramJaccard(s: SparkSession, dir: String): DataFrame =
-    TextDedup.ngramJaccardPairs(docs(s, dir), "doc_id", "text", n = 3, minJaccard = 0.3,
-        hash = ph)
+    TextDedup.ngramJaccardPairs(docs(s, dir), "doc_id", "text", n = 3, minJaccard = 0.3)
       .orderBy("id_a", "id_b")
 
   private val oNgramJaccard =
@@ -640,8 +637,7 @@ object Queries {
   // brute ordered-pair shape, so the filter's exactness is what's verified.
   // containment = int/int single IEEE division — bit-identical both sides.
   private def qContainment(s: SparkSession, dir: String): DataFrame =
-    TextDedup.containmentPairs(docs(s, dir), "doc_id", "text",
-        n = 3, minContainment = 0.5, hash = ph)
+    TextDedup.containmentPairs(docs(s, dir), "doc_id", "text", n = 3, minContainment = 0.5)
       .orderBy("id_a", "id_b")
 
   private val oContainment =
@@ -661,7 +657,7 @@ object Queries {
   // that runs BEFORE pair-generating dedup. One gram-hash exchange + one
   // doc-id exchange; all-integral output.
   private def qNovelty(s: SparkSession, dir: String): DataFrame =
-    TextDedup.noveltyScores(docs(s, dir), "doc_id", "text", n = 3, hash = ph)
+    TextDedup.noveltyScores(docs(s, dir), "doc_id", "text", n = 3)
       .select(col("id").as("doc_id"), col("n_grams"), col("n_novel"),
         col("novelty_ppm"))
       .orderBy("doc_id")
@@ -688,21 +684,21 @@ object Queries {
         docs(s, dir).select("doc_id"),
         TextDedup.dedupClusters(
           TextDedup.simhashPairs(
-            TextDedup.simhash(docs(s, dir), "doc_id", "text", bits = 32, hash = ph),
+            TextDedup.simhash(docs(s, dir), "doc_id", "text", bits = 32),
             bits = 32, chunks = 8, maxHamming = 3)),
         "doc_id")
       .select("doc_id", "cluster_size", "weight_ppm")
       .orderBy("doc_id")
 
   private val oSoftDedup =
-    """WITH RECURSIVE sh AS (
+    s"""WITH RECURSIVE sh AS (
          SELECT id,
            list_sum(list_transform(generate_series(0, 31), i ->
              CASE WHEN list_sum(list_transform(hs, h ->
                CASE WHEN CAST(floor(h / pow(2, i)) AS BIGINT) % 2 = 1 THEN 1 ELSE -1 END)) > 0
              THEN CAST(pow(2, i) AS BIGINT) ELSE 0 END))::BIGINT AS simhash
          FROM (SELECT doc_id AS id,
-           list_transform(str_split(text, ' '), t -> ('0x' || substr(md5(t), 1, 15))::BIGINT % 4294967296) AS hs
+           list_transform(str_split(text, ' '), t -> ${phSql("t")} % 4294967296) AS hs
            FROM documents)),
        e AS (
          SELECT a.id AS src, b.id AS dst FROM sh a JOIN sh b
@@ -768,15 +764,14 @@ object Queries {
   private def qTempMix(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir).select(col("doc_id"), col("source"),
       size(split(col("text"), " ")).cast("long").as("toks"))
-    Sampling.mixTemperatureSqrt(d, "doc_id", "toks", "source",
-        salt = "temp", hash = ph)
+    Sampling.mixTemperatureSqrt(d, "doc_id", "toks", "source", salt = "temp")
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum(col("toks")).as("n_tokens"))
       .orderBy("source")
   }
 
   private val oTempMix =
-    """WITH d AS (SELECT doc_id, source, len(str_split(text, ' '))::BIGINT AS toks FROM documents),
+    s"""WITH d AS (SELECT doc_id, source, len(str_split(text, ' '))::BIGINT AS toks FROM documents),
        tot AS (SELECT source, CAST(SUM(toks) AS BIGINT) AS tok
                FROM d GROUP BY source HAVING SUM(toks) > 0),
        w AS (SELECT source, tok,
@@ -790,7 +785,7 @@ object Queries {
                FROM w)
        SELECT d.source, count(*) AS n_docs, CAST(SUM(d.toks) AS BIGINT) AS n_tokens
        FROM d JOIN thr USING (source)
-       WHERE ('0x' || substr(md5(d.doc_id::VARCHAR || 'temp'), 1, 15))::BIGINT % 1000000 < thr.thr
+       WHERE ${phSql("d.doc_id::VARCHAR || 'temp'")} % 1000000 < thr.thr
        GROUP BY d.source ORDER BY d.source"""
 
   // ----------------------------------------------------- publish date
@@ -872,7 +867,7 @@ object Queries {
       .select(col("doc_id"),
         CorpusSignals.mojibakeCount(col("x")).as("n_moji"),
         length(CorpusSignals.repairMojibake(col("x"))).cast("long").as("repaired_len"),
-        ph(CorpusSignals.repairMojibake(col("x"))).as("repaired_h"))
+        portableHash(CorpusSignals.repairMojibake(col("x"))).as("repaired_h"))
       .orderBy("doc_id")
   }
 
@@ -889,7 +884,7 @@ object Queries {
        SELECT doc_id,
          CAST($terms AS BIGINT) AS n_moji,
          CAST(length($repaired) AS BIGINT) AS repaired_len,
-         ('0x' || substr(md5($repaired), 1, 15))::BIGINT AS repaired_h
+         ${phSql(repaired)} AS repaired_h
        FROM t ORDER BY doc_id"""
   }
 
@@ -899,14 +894,13 @@ object Queries {
   // sides compute the identical rank, so the WHOLE permutation is
   // value-verified, not just row membership.
   private def qShuffle(s: SparkSession, dir: String): DataFrame =
-    Sampling.deterministicShuffle(docs(s, dir).select("doc_id"), "doc_id",
-        shards = 8, salt = "ep0", hash = ph)
+    Sampling.deterministicShuffle(docs(s, dir).select("doc_id"), "doc_id", shards = 8, salt = "ep0")
       .select("doc_id", "shard", "pos")
       .orderBy("doc_id")
 
   private val oShuffle =
-    """WITH h AS (SELECT doc_id,
-           ('0x' || substr(md5(doc_id::VARCHAR || 'ep0'), 1, 15))::BIGINT % 1000000 AS h
+    s"""WITH h AS (SELECT doc_id,
+           ${phSql("doc_id::VARCHAR || 'ep0'")} % 1000000 AS h
          FROM documents)
        SELECT doc_id, h % 8 AS shard,
          CAST(row_number() OVER (PARTITION BY h % 8 ORDER BY h, doc_id) AS BIGINT) AS pos
@@ -917,14 +911,13 @@ object Queries {
   // wrapping at the shard end — the whole assignment is value-verified
   // (both engines compute the identical lead/first-over-window).
   private def qNegPairs(s: SparkSession, dir: String): DataFrame =
-    Sampling.negativePairs(docs(s, dir).select("doc_id"), "doc_id",
-        shards = 8, salt = "ns", hash = ph)
+    Sampling.negativePairs(docs(s, dir).select("doc_id"), "doc_id", shards = 8, salt = "ns")
       .select("doc_id", "shard", "neg_id")
       .orderBy("doc_id")
 
   private val oNegPairs =
-    """WITH h AS (SELECT doc_id,
-           ('0x' || substr(md5(doc_id::VARCHAR || 'ns'), 1, 15))::BIGINT % 1000000 AS h
+    s"""WITH h AS (SELECT doc_id,
+           ${phSql("doc_id::VARCHAR || 'ns'")} % 1000000 AS h
          FROM documents),
        s AS (SELECT doc_id, h, h % 8 AS shard FROM h),
        p AS (SELECT doc_id, shard,
@@ -1376,8 +1369,8 @@ object Queries {
       .orderBy("doc_id")
 
   private val oTextEmbed =
-    """WITH toks AS (
-         SELECT doc_id AS id, ('0x' || substr(md5(tok), 1, 15))::BIGINT % 1048576 AS hf
+    s"""WITH toks AS (
+         SELECT doc_id AS id, ${phSql("tok")} % 1048576 AS hf
          FROM (SELECT doc_id, unnest(str_split(text, ' ')) AS tok FROM documents)),
        e AS (
          SELECT id, t.j, sum(((t.j*1048576 + hf) * 2654435761) % 1000003 % 19 - 9) AS e
@@ -1395,8 +1388,8 @@ object Queries {
   }
 
   private val oTextAnn =
-    """WITH toks AS (
-         SELECT doc_id AS id, ('0x' || substr(md5(tok), 1, 15))::BIGINT % 1048576 AS hf
+    s"""WITH toks AS (
+         SELECT doc_id AS id, ${phSql("tok")} % 1048576 AS hf
          FROM (SELECT doc_id, unnest(str_split(text, ' ')) AS tok FROM documents)),
        e AS (
          SELECT id, t.j, sum(((t.j*1048576 + hf) * 2654435761) % 1000003 % 19 - 9) AS e
@@ -1555,13 +1548,17 @@ object Queries {
       .orderBy("doc_id")
   }
 
+  // The portable 60-bit hash of the SQL expression `e`: the DuckDB side of
+  // TextDedup.portableHash, the one string hash of the ops layer. Every
+  // oracle that hashes a string interpolates this one fragment.
+  private def phSql(e: String): String = s"('0x' || substr(md5($e), 1, 15))::BIGINT"
+
   // A document as its set of hashed word n-grams, (doc_id, g): one row per
-  // distinct n-gram of the doc, g = the portable 60-bit md5 hash. The DuckDB
-  // side of TextDedup.gramHashes(hash = portableHash); every gram-set oracle
-  // (Jaccard, containment, novelty, MinHash, decontamination) interpolates
-  // this one fragment.
+  // distinct n-gram of the doc, g = phSql(gram). The DuckDB side of
+  // TextDedup.gramHashes; every gram-set oracle (Jaccard, containment,
+  // novelty, MinHash, decontamination) interpolates this one fragment.
   private def gramHashesSql(n: Int): String =
-    s"""SELECT doc_id, ('0x' || substr(md5(gram), 1, 15))::BIGINT AS g FROM (
+    s"""SELECT doc_id, ${phSql("gram")} AS g FROM (
          SELECT doc_id, unnest(list_distinct(list_transform(
            generate_series(1, len(t) - ${n - 1}), i -> array_to_string(t[i:i+${n - 1}], ' ')))) AS gram
          FROM (SELECT doc_id, str_split(text, ' ') AS t FROM documents))"""
@@ -1621,12 +1618,12 @@ object Queries {
         frameBytes = 256, stride = 2)
       .select(col("doc_id"), col("frame_no"),
         length(col("frame")).cast("long").as("frame_len"),
-        ph(hex(col("frame"))).as("frame_h"))
+        portableHash(hex(col("frame"))).as("frame_h"))
       .orderBy("doc_id", "frame_no")
   }
 
   private val oFrameSample =
-    """WITH v AS (SELECT doc_id, hex(encode(text)) AS hx,
+    s"""WITH v AS (SELECT doc_id, hex(encode(text)) AS hx,
            CAST(octet_length(encode(text)) AS BIGINT) AS n
          FROM documents WHERE doc_id % 3 = 2 AND length(text) > 0),
        f AS (SELECT doc_id, hx, n,
@@ -1634,8 +1631,7 @@ object Queries {
          FROM v)
        SELECT doc_id, frame_no,
          CAST(least(256, n - frame_no * 256) AS BIGINT) AS frame_len,
-         ('0x' || substr(md5(substr(hx, CAST(frame_no * 512 + 1 AS INTEGER), 512)),
-          1, 15))::BIGINT AS frame_h
+         ${phSql("substr(hx, CAST(frame_no * 512 + 1 AS INTEGER), 512)")} AS frame_h
        FROM f ORDER BY doc_id, frame_no"""
 
   // -------------------------------------------------------------- language ID
@@ -1689,16 +1685,16 @@ object Queries {
     docs(s, dir).select(col("doc_id"),
         TextStats.tokenCount(col("text")).cast("long").as("n_toks"),
         least(TextStats.tokenCount(col("text")).cast("long"), lit(64L)).as("kept_toks"),
-        ph(CorpusSignals.truncateMiddle(col("text"), maxToks = 64)).as("trunc_h"))
+        portableHash(CorpusSignals.truncateMiddle(col("text"), maxToks = 64)).as("trunc_h"))
       .orderBy("doc_id")
 
   private val oTruncate =
-    """WITH d AS (SELECT doc_id, text, str_split(text, ' ') AS t FROM documents)
+    s"""WITH d AS (SELECT doc_id, text, str_split(text, ' ') AS t FROM documents)
        SELECT doc_id, CAST(len(t) AS BIGINT) AS n_toks,
          CAST(least(len(t), 64) AS BIGINT) AS kept_toks,
-         ('0x' || substr(md5(CASE WHEN len(t) <= 64 THEN text
+         ${phSql("""CASE WHEN len(t) <= 64 THEN text
              ELSE array_to_string(t[1:48], ' ') || ' ' ||
-                  array_to_string(t[len(t)-15:len(t)], ' ') END), 1, 15))::BIGINT AS trunc_h
+                  array_to_string(t[len(t)-15:len(t)], ' ') END""")} AS trunc_h
        FROM d ORDER BY doc_id"""
 
   // ------------------------------------------------------- host reputation
@@ -2522,12 +2518,10 @@ object Queries {
   private def qDedupEval(s: SparkSession, dir: String): DataFrame = {
     val base = docs(s, dir).where(size(split(col("text"), " ")) >= 3)
     val cand = TextDedup.minhashPairs(
-        TextDedup.minhashSignatures(base, "doc_id", "text", k = 8,
-          shingleN = 3, hash = ph),
+        TextDedup.minhashSignatures(base, "doc_id", "text", k = 8, shingleN = 3),
         rowsPerBand = 2, minEstJaccard = 0.0)
       .select(col("id_a"), col("id_b"), lit(1).as("c"))
-    val truth = TextDedup.ngramJaccardPairs(base, "doc_id", "text", n = 3,
-        minJaccard = 0.3, hash = ph)
+    val truth = TextDedup.ngramJaccardPairs(base, "doc_id", "text", n = 3, minJaccard = 0.3)
       .select(col("id_a"), col("id_b"), lit(1).as("t"))
     cand.join(truth, Seq("id_a", "id_b"), "full_outer")
       .agg(
@@ -2825,7 +2819,7 @@ object Queries {
        dedup AS (
          SELECT id, grp, t, n_tokens FROM (
            SELECT *, row_number() OVER (
-             PARTITION BY ('0x' || substr(md5(t), 1, 15))::BIGINT ORDER BY id) AS rk
+             PARTITION BY ${phSql("t")} ORDER BY id) AS rk
            FROM gated) WHERE rk = 1),
        scored AS (
          SELECT id, grp, n_tokens,
@@ -2856,8 +2850,8 @@ object Queries {
   // per-doc aggregation. Grams from the native WordShinglesGenerator.
   private def qDecontam(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
-    val bench = Sampling.hashSample(d, "doc_id", frac = 0.05, salt = "bench13", hash = ph)
-    Decontam.contaminated(d, bench, "doc_id", "text", n = 13, hash = ph)
+    val bench = Sampling.hashSample(d, "doc_id", frac = 0.05, salt = "bench13")
+    Decontam.contaminated(d, bench, "doc_id", "text", n = 13)
       .orderBy("train_id")
   }
 
@@ -2865,7 +2859,7 @@ object Queries {
     s"""WITH gh AS (${gramHashesSql(13)}),
        bench AS (
          SELECT doc_id AS bench_id, g FROM gh
-         WHERE ('0x' || substr(md5(doc_id::VARCHAR || 'bench13'), 1, 15))::BIGINT % 1000000 < 50000)
+         WHERE ${phSql("doc_id::VARCHAR || 'bench13'")} % 1000000 < 50000)
        SELECT t.doc_id AS train_id,
          count(DISTINCT t.g) AS n_grams_hit,
          count(DISTINCT b.bench_id) AS n_bench_docs,
@@ -2879,9 +2873,8 @@ object Queries {
   // duplicates produce genuine cross-doc pairs.
   private def qDecontamFrac(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
-    val bench = Sampling.hashSample(d, "doc_id", frac = 0.05, salt = "bench13", hash = ph)
-    Decontam.containmentPairs(d, bench, "doc_id", "text", n = 8,
-        minPermille = 800, hash = ph)
+    val bench = Sampling.hashSample(d, "doc_id", frac = 0.05, salt = "bench13")
+    Decontam.containmentPairs(d, bench, "doc_id", "text", n = 8, minPermille = 800)
       .orderBy("train_id", "bench_id")
   }
 
@@ -2889,7 +2882,7 @@ object Queries {
     s"""WITH gh AS (${gramHashesSql(8)}),
        bench AS (
          SELECT doc_id AS bench_id, g FROM gh
-         WHERE ('0x' || substr(md5(doc_id::VARCHAR || 'bench13'), 1, 15))::BIGINT % 1000000 < 50000),
+         WHERE ${phSql("doc_id::VARCHAR || 'bench13'")} % 1000000 < 50000),
        bn AS (SELECT bench_id, count(*) AS nb FROM bench GROUP BY bench_id),
        j AS (SELECT t.doc_id AS train_id, b.bench_id, count(*) AS n_hit
              FROM gh t JOIN bench b ON t.g = b.g GROUP BY 1, 2)
@@ -2913,12 +2906,12 @@ object Queries {
   }
 
   private val oHostCap =
-    """WITH u AS (
+    s"""WITH u AS (
          SELECT doc_id, 'h' || (doc_id % 37)::VARCHAR || '.example.com' AS host
          FROM documents),
        r AS (
          SELECT doc_id, host, row_number() OVER (PARTITION BY host
-           ORDER BY ('0x' || substr(md5(doc_id::VARCHAR || 'hc'), 1, 15))::BIGINT % 1000000,
+           ORDER BY ${phSql("doc_id::VARCHAR || 'hc'")} % 1000000,
                     doc_id) AS rk
          FROM u)
        SELECT host, doc_id FROM r WHERE rk <= 5 ORDER BY host, doc_id"""
@@ -3055,8 +3048,8 @@ object Queries {
          FROM cps),
        chunks AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(ss)), j ->
            struct_pack(
-             ck := ('0x' || substr(md5(substr(text, CAST(ss[j] AS INTEGER),
-               CAST((CASE WHEN j < len(ss) THEN ss[j+1] ELSE L + 1 END) - ss[j] AS INTEGER))), 1, 15))::BIGINT,
+             ck := ${phSql("""substr(text, CAST(ss[j] AS INTEGER),
+               CAST((CASE WHEN j < len(ss) THEN ss[j+1] ELSE L + 1 END) - ss[j] AS INTEGER))""")},
              clen := (CASE WHEN j < len(ss) THEN ss[j+1] ELSE L + 1 END) - ss[j]))) AS c
          FROM anch),
        flat AS (SELECT doc_id, c.ck AS ck, c.clen AS clen FROM chunks),
@@ -3095,12 +3088,12 @@ object Queries {
     Sampling.sequenceWindows(
         docs(s, dir).select(col("doc_id"),
           size(split(col("text"), " ")).cast("long").as("toks")),
-        "doc_id", "toks", seqLen = 128L, shards = 8, salt = "sw", hash = ph)
+        "doc_id", "toks", seqLen = 128L, shards = 8, salt = "sw")
       .orderBy("shard", "window", "doc_id")
 
   private val oSeqWindows =
-    """WITH d AS (SELECT doc_id, CAST(len(str_split(text, ' ')) AS BIGINT) AS toks,
-           ('0x' || substr(md5(doc_id::VARCHAR || 'sw'), 1, 15))::BIGINT % 1000000 AS h
+    s"""WITH d AS (SELECT doc_id, CAST(len(str_split(text, ' ')) AS BIGINT) AS toks,
+           ${phSql("doc_id::VARCHAR || 'sw'")} % 1000000 AS h
          FROM documents WHERE len(str_split(text, ' ')) > 0),
        s AS (SELECT doc_id, toks, h, h % 8 AS shard FROM d),
        o AS (SELECT *, CAST(sum(toks) OVER (PARTITION BY shard ORDER BY h, doc_id
@@ -3124,7 +3117,7 @@ object Queries {
         docs(s, dir).where(length(col("text")) > 0), "doc_id", "text",
         n = 12, modulus = 8, minDocs = 2)
       .select(col("id").as("doc_id"), col("n_chunks"), col("n_removed"),
-        ph(col("text_dedup")).as("clean_h"))
+        portableHash(col("text_dedup")).as("clean_h"))
       .orderBy("doc_id")
 
   private val oSubstrDedup: String = {
@@ -3148,7 +3141,7 @@ object Queries {
                CAST((CASE WHEN j < len(ss) THEN ss[j+1] ELSE L + 1 END) - ss[j] AS INTEGER))))) AS c
          FROM anch),
        flat AS (SELECT doc_id, c.idx AS idx, c.chunk AS chunk,
-           ('0x' || substr(md5(c.chunk), 1, 15))::BIGINT AS ck FROM chunks),
+           ${phSql("c.chunk")} AS ck FROM chunks),
        hot AS (SELECT ck, min(struct_pack(d := doc_id, i := idx)) AS first
                FROM flat GROUP BY ck HAVING count(DISTINCT doc_id) >= 2),
        k AS (SELECT f.doc_id, f.idx, f.chunk,
@@ -3156,9 +3149,8 @@ object Queries {
              FROM flat f LEFT JOIN hot h ON f.ck = h.ck)
        SELECT doc_id, count(*) AS n_chunks,
          CAST(sum(CASE WHEN keep THEN 0 ELSE 1 END) AS BIGINT) AS n_removed,
-         ('0x' || substr(md5(COALESCE(
-            string_agg(chunk, '' ORDER BY idx) FILTER (WHERE keep), '')),
-            1, 15))::BIGINT AS clean_h
+         ${phSql("""COALESCE(
+            string_agg(chunk, '' ORDER BY idx) FILTER (WHERE keep), '')""")} AS clean_h
        FROM k GROUP BY doc_id ORDER BY doc_id"""
   }
 
@@ -3182,7 +3174,7 @@ object Queries {
     TextDedup.lineDedup(
         docs(s, dir).select(col("doc_id"),
           concat(lit(LineBoiler), col("text")).as("t2")),
-        "doc_id", "t2", lineArray, sep = " ", hash = ph)
+        "doc_id", "t2", lineArray, sep = " ")
       .orderBy("doc_id")
   }
 
@@ -3198,7 +3190,7 @@ object Queries {
          FROM toks),
        r AS (
          SELECT doc_id, line_no, line,
-           row_number() OVER (PARTITION BY ('0x' || substr(md5(line), 1, 15))::BIGINT
+           row_number() OVER (PARTITION BY ${phSql("line")}
                               ORDER BY doc_id, line_no) AS rk
          FROM lines)
        SELECT r.doc_id,
@@ -3228,15 +3220,14 @@ object Queries {
       concat(lit("h"), hostS).as("host"),
       concat(lit("nav h"), hostS, lit(" menu login search cart help "),
         col("text")).as("t2"))
-    TextDedup.hostBoilerplate(d, "doc_id", "host", "t2", lineArray,
-        sep = " ", minDocs = 5L, hash = ph)
+    TextDedup.hostBoilerplate(d, "doc_id", "host", "t2", lineArray, sep = " ", minDocs = 5L)
       .select(col("doc_id"), col("n_lines"), col("n_boiler"),
-        ph(col("text_clean")).as("clean_h"))
+        portableHash(col("text_clean")).as("clean_h"))
       .orderBy("doc_id")
   }
 
   private val oHostBoiler =
-    """WITH toks AS (
+    s"""WITH toks AS (
          SELECT doc_id, 'h' || (doc_id % 5)::VARCHAR AS host,
            str_split('nav h' || (doc_id % 5)::VARCHAR ||
                      ' menu login search cart help ' || text, ' ') AS ts
@@ -3247,7 +3238,7 @@ object Queries {
            unnest(list_transform(generate_series(0, CAST((len(ts)+6)//7 AS BIGINT) - 1),
                   i -> array_to_string(ts[i*7+1 : i*7+7], ' '))) AS line
          FROM toks),
-       lh AS (SELECT *, ('0x' || substr(md5(line), 1, 15))::BIGINT AS lhash FROM lines),
+       lh AS (SELECT *, ${phSql("line")} AS lhash FROM lines),
        dfq AS (SELECT host, lhash, count(DISTINCT doc_id) AS df_docs
                FROM lh GROUP BY host, lhash),
        j AS (SELECT l.doc_id, l.line_no, l.line, (f.df_docs >= 5) AS b
@@ -3255,9 +3246,8 @@ object Queries {
        SELECT doc_id,
          count(*) AS n_lines,
          CAST(sum(CASE WHEN b THEN 1 ELSE 0 END) AS BIGINT) AS n_boiler,
-         ('0x' || substr(md5(COALESCE(
-            string_agg(line, ' ' ORDER BY line_no) FILTER (WHERE NOT b), '')),
-            1, 15))::BIGINT AS clean_h
+         ${phSql("""COALESCE(
+            string_agg(line, ' ' ORDER BY line_no) FILTER (WHERE NOT b), '')""")} AS clean_h
        FROM j GROUP BY doc_id ORDER BY doc_id"""
 
   // ------------------------------------------------------------------- DSIR
@@ -3271,9 +3261,9 @@ object Queries {
       .orderBy("doc_id")
 
   private val oDsir =
-    """WITH occ AS (
+    s"""WITH occ AS (
          SELECT doc_id, (source = 'src1') AS t,
-           ('0x' || substr(md5(bg), 1, 15))::BIGINT % 1024 AS b
+           ${phSql("bg")} % 1024 AS b
          FROM (SELECT doc_id, source,
                  unnest(list_transform(generate_series(1, len(ts) - 1),
                         i -> ts[i] || ' ' || ts[i+1])) AS bg
@@ -3368,7 +3358,7 @@ object Queries {
   private def hllRhoSql(keys: String): String =
     s"""SELECT $keys h % 64 AS bucket,
          CASE WHEN (h // 64) = 0 THEN 55 ELSE 54 - length(bin(h // 64)) + 1 END AS rho
-       FROM (SELECT $keys ('0x' || substr(md5(w), 1, 15))::BIGINT AS h
+       FROM (SELECT $keys ${phSql("w")} AS h
              FROM (SELECT $keys unnest(str_split(text, ' ')) AS w FROM documents))"""
 
   private val oHll =
@@ -3444,8 +3434,8 @@ object Queries {
   // interpolates this one fragment.
   private def cmsBucketsSql(keys: String, from: String): String =
     s"""SELECT $keys d.i, (hs.h1 + d.i * hs.h2) % 64 AS bucket
-       FROM (SELECT $keys ('0x' || substr(md5(w), 1, 15))::BIGINT AS h1,
-                    ('0x' || substr(md5('~ ' || w), 1, 15))::BIGINT AS h2
+       FROM (SELECT $keys ${phSql("w")} AS h1,
+                    ${phSql("'~ ' || w")} AS h2
              FROM ($from)) hs,
             (SELECT unnest(generate_series(0, 3))::BIGINT AS i) d"""
 
@@ -3605,12 +3595,12 @@ object Queries {
        dedup AS (
          SELECT id, src, t FROM (
            SELECT *, row_number() OVER (
-             PARTITION BY ('0x' || substr(md5(t), 1, 15))::BIGINT ORDER BY id) AS rk
+             PARTITION BY ${phSql("t")} ORDER BY id) AS rk
            FROM gated) WHERE rk = 1),
        capped AS (
          SELECT id, src, t FROM (
            SELECT *, row_number() OVER (PARTITION BY src
-             ORDER BY ('0x' || substr(md5('cap ' || id::VARCHAR), 1, 15))::BIGINT, id) AS rk
+             ORDER BY ${phSql("'cap ' || id::VARCHAR")}, id) AS rk
            FROM dedup) WHERE rk <= 20),
        toks AS (
          SELECT id, src, CAST(len(str_split(t, ' ')) AS BIGINT) AS n_tokens
@@ -3679,10 +3669,10 @@ object Queries {
       .orderBy("word")
 
   private val oBloom =
-    """WITH bg AS (SELECT unnest(list_transform(generate_series(1, len(t) - 1), i -> t[i] || ' ' || t[i+1])) AS b
+    s"""WITH bg AS (SELECT unnest(list_transform(generate_series(1, len(t) - 1), i -> t[i] || ' ' || t[i+1])) AS b
          FROM (SELECT str_split(text, ' ') AS t FROM documents WHERE doc_id < 250)),
-       hs AS (SELECT ('0x' || substr(md5(b), 1, 15))::BIGINT AS h1,
-                     ('0x' || substr(md5('~ ' || b), 1, 15))::BIGINT AS h2
+       hs AS (SELECT ${phSql("b")} AS h1,
+                     ${phSql("'~ ' || b")} AS h2
               FROM bg),
        p AS (SELECT (hs.h1 + d.i * hs.h2) % 4032 AS p
          FROM hs, (SELECT unnest(generate_series(0, 2))::BIGINT AS i) d),
@@ -3708,10 +3698,10 @@ object Queries {
   }
 
   private val oBloomProbe =
-    """WITH bg AS (SELECT unnest(list_transform(generate_series(1, len(t) - 1), i -> t[i] || ' ' || t[i+1])) AS b
+    s"""WITH bg AS (SELECT unnest(list_transform(generate_series(1, len(t) - 1), i -> t[i] || ' ' || t[i+1])) AS b
          FROM (SELECT str_split(text, ' ') AS t FROM documents WHERE doc_id < 250)),
-       hs AS (SELECT ('0x' || substr(md5(b), 1, 15))::BIGINT AS h1,
-                     ('0x' || substr(md5('~ ' || b), 1, 15))::BIGINT AS h2
+       hs AS (SELECT ${phSql("b")} AS h1,
+                     ${phSql("'~ ' || b")} AS h2
               FROM bg),
        hp AS (SELECT (hs.h1 + d.i * hs.h2) % 4032 AS p
          FROM hs, (SELECT unnest(generate_series(0, 2))::BIGINT AS i) d),
@@ -3720,8 +3710,8 @@ object Queries {
        probes AS (SELECT DISTINCT unnest(list_transform(generate_series(1, len(t) - 1), i -> t[i] || ' ' || t[i+1])) AS w
          FROM (SELECT str_split(text, ' ') AS t FROM documents)),
        pe AS (SELECT p.w, d.i,
-           (('0x' || substr(md5(p.w), 1, 15))::BIGINT +
-            d.i * ('0x' || substr(md5('~ ' || p.w), 1, 15))::BIGINT) % 4032 AS p
+           (${phSql("p.w")} +
+            d.i * ${phSql("'~ ' || p.w")}) % 4032 AS p
          FROM probes p, (SELECT unnest(generate_series(0, 2))::BIGINT AS i) d),
        verdict AS (
          SELECT pe.w, min(CASE WHEN (r.bits & (1::BIGINT << (pe.p % 63)::INT)) =
@@ -4043,8 +4033,7 @@ object Queries {
   private def qMlQuality(s: SparkSession, dir: String): DataFrame = {
     val weights = s.range(0, MlDim.toLong).select(col("id").as("fid"),
       (((col("id") * lit(2654435761L)) % lit(P)) % 2001L - 1000L).as("w"))
-    QualityModel.scoreHashed(docs(s, dir), "doc_id", "text",
-        weights, MlDim, hash = ph)
+    QualityModel.scoreHashed(docs(s, dir), "doc_id", "text", weights, MlDim)
       .orderBy("doc_id")
   }
 
@@ -4052,7 +4041,7 @@ object Queries {
     s"""WITH wts AS (SELECT i AS fid, ((i * 2654435761) % $P) % 2001 - 1000 AS w
                FROM generate_series(0, ${MlDim - 1}) t(i)),
        toks AS (SELECT doc_id, unnest(str_split(text, ' ')) AS tok FROM documents),
-       tf AS (SELECT doc_id, ('0x' || substr(md5(tok),1,15))::BIGINT % $MlDim AS fid,
+       tf AS (SELECT doc_id, ${phSql("tok")} % $MlDim AS fid,
                 count(*) AS tf
               FROM toks GROUP BY 1, 2)
        SELECT doc_id, CAST(SUM(tf * COALESCE(w,0)) AS BIGINT) AS score,
@@ -4070,8 +4059,7 @@ object Queries {
   private def qQualityEval(s: SparkSession, dir: String): DataFrame = {
     val weights = s.range(0, MlDim.toLong).select(col("id").as("fid"),
       (((col("id") * lit(2654435761L)) % lit(P)) % 2001L - 1000L).as("w"))
-    val ml = QualityModel.scoreHashed(docs(s, dir), "doc_id", "text",
-        weights, MlDim, hash = ph)
+    val ml = QualityModel.scoreHashed(docs(s, dir), "doc_id", "text", weights, MlDim)
       .select(col("doc_id"), col("keep").as("ml_keep"))
     val gg = CorpusSignals.gopherGate(docs(s, dir), "doc_id", "text")
       .select(col("id").as("doc_id"), col("keep").as("gopher_keep"))
@@ -4085,7 +4073,7 @@ object Queries {
     s"""WITH wts AS (SELECT i AS fid, ((i * 2654435761) % $P) % 2001 - 1000 AS w
                FROM generate_series(0, ${MlDim - 1}) t(i)),
        toks AS (SELECT doc_id, unnest(str_split(text, ' ')) AS tok FROM documents),
-       tf AS (SELECT doc_id, ('0x' || substr(md5(tok),1,15))::BIGINT % $MlDim AS fid,
+       tf AS (SELECT doc_id, ${phSql("tok")} % $MlDim AS fid,
                 count(*) AS tf
               FROM toks GROUP BY 1, 2),
        ml AS (SELECT doc_id, CAST(SUM(tf * COALESCE(w,0)) AS BIGINT) > 0 AS ml_keep
@@ -4117,8 +4105,8 @@ object Queries {
   }
 
   private val oLmScore =
-    """WITH ref AS (SELECT * FROM documents
-               WHERE ('0x' || substr(md5(doc_id::VARCHAR || 'lm'),1,15))::BIGINT % 1000000 < 250000),
+    s"""WITH ref AS (SELECT * FROM documents
+               WHERE ${phSql("doc_id::VARCHAR || 'lm'")} % 1000000 < 250000),
        rt AS (SELECT doc_id, str_split(text,' ') AS ts FROM ref),
        dt AS (SELECT doc_id, str_split(text,' ') AS ts FROM documents),
        c1 AS (SELECT tok AS w1, count(*) AS c1 FROM (SELECT unnest(ts) AS tok FROM rt) GROUP BY 1),
@@ -4146,15 +4134,14 @@ object Queries {
     val d = docs(s, dir).select(col("doc_id"), col("source"),
       size(split(col("text"), " ")).cast("long").as("toks"))
     val weights = (0 until 20).map(i => s"src$i" -> (i % 5).toLong).toMap
-    Sampling.mixByTokenBudget(d, "doc_id", "toks", "source", weights,
-        salt = "mix", hash = ph)
+    Sampling.mixByTokenBudget(d, "doc_id", "toks", "source", weights, salt = "mix")
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum(col("toks")).as("n_tokens"))
       .orderBy("source")
   }
 
   private val oMix =
-    """WITH d AS (SELECT doc_id, source, len(str_split(text, ' '))::BIGINT AS toks FROM documents),
+    s"""WITH d AS (SELECT doc_id, source, len(str_split(text, ' '))::BIGINT AS toks FROM documents),
        w AS (SELECT source, (substr(source, 4)::BIGINT % 5) AS w
              FROM (SELECT DISTINCT source FROM d)),
        tot AS (SELECT d.source, CAST(SUM(toks) AS BIGINT) AS tok, any_value(w.w) AS w
@@ -4166,7 +4153,7 @@ object Queries {
                FROM tot)
        SELECT d.source, count(*) AS n_docs, CAST(SUM(d.toks) AS BIGINT) AS n_tokens
        FROM d JOIN thr USING (source)
-       WHERE ('0x' || substr(md5(d.doc_id::VARCHAR || 'mix'), 1, 15))::BIGINT % 1000000 < thr.thr
+       WHERE ${phSql("d.doc_id::VARCHAR || 'mix'")} % 1000000 < thr.thr
        GROUP BY d.source ORDER BY d.source"""
 
   // ----------------------------------------------------------------- z-order
@@ -4208,14 +4195,14 @@ object Queries {
     graft.sources.Warc.readPages(s, warcDir)
       .select(col("url"),
         length(col("html")).cast("long").as("body_len"),
-        ph(col("html")).as("body_h"))
+        portableHash(col("html")).as("body_h"))
       .orderBy("url")
   }
 
   private val oWarcExtract =
-    """SELECT 'https://site' || (doc_id % 7)::VARCHAR || '.example/doc/' || doc_id::VARCHAR AS url,
+    s"""SELECT 'https://site' || (doc_id % 7)::VARCHAR || '.example/doc/' || doc_id::VARCHAR AS url,
          CAST(octet_length(encode('<html><body><p>' || text || '</p></body></html>')) AS BIGINT) AS body_len,
-         ('0x' || substr(md5('<html><body><p>' || text || '</p></body></html>'), 1, 15))::BIGINT AS body_h
+         ${phSql("'<html><body><p>' || text || '</p></body></html>'")} AS body_h
        FROM documents ORDER BY url"""
 
   // WET e2e: conversion records (plain text, no HTTP block) written and
@@ -4233,14 +4220,14 @@ object Queries {
     graft.sources.Warc.readWet(s, wetDir)
       .select(col("url"),
         length(col("text")).cast("long").as("text_chars"),
-        ph(col("text")).as("text_h"))
+        portableHash(col("text")).as("text_h"))
       .orderBy("url")
   }
 
   private val oWetExtract =
-    """SELECT 'https://site' || (doc_id % 7)::VARCHAR || '.example/doc/' || doc_id::VARCHAR AS url,
+    s"""SELECT 'https://site' || (doc_id % 7)::VARCHAR || '.example/doc/' || doc_id::VARCHAR AS url,
          CAST(length(text) AS BIGINT) AS text_chars,
-         ('0x' || substr(md5(text), 1, 15))::BIGINT AS text_h
+         ${phSql("text")} AS text_h
        FROM documents ORDER BY url"""
 
   // WAT e2e: metadata records carrying the CC JSON envelope (Envelope →
@@ -4605,15 +4592,14 @@ object Queries {
     val d = docs(s, dir).select(col("doc_id"), col("source"),
       size(split(col("text"), " ")).cast("long").as("toks"))
     val weights = (0 until 20).map(i => s"src$i" -> (i % 5).toLong).toMap
-    Sampling.mixEpochs(d, "doc_id", "toks", "source", weights, salt = "mixe",
-        hash = ph)
+    Sampling.mixEpochs(d, "doc_id", "toks", "source", weights, salt = "mixe")
       .groupBy("source")
       .agg(count(lit(1)).as("n_rows"), sum(col("toks")).as("n_tokens"))
       .orderBy("source")
   }
 
   private val oMixEpochs =
-    """WITH d AS (SELECT doc_id, source, len(str_split(text, ' '))::BIGINT AS toks FROM documents),
+    s"""WITH d AS (SELECT doc_id, source, len(str_split(text, ' '))::BIGINT AS toks FROM documents),
        w AS (SELECT source, (substr(source, 4)::BIGINT % 5) AS w
              FROM (SELECT DISTINCT source FROM d)),
        tot AS (SELECT d.source, CAST(SUM(toks) AS BIGINT) AS tok, any_value(w.w) AS w
@@ -4625,7 +4611,7 @@ object Queries {
        cr AS (SELECT source, target // tok AS copies,
                      ((target % tok) * 1000000) // tok AS rem FROM thr),
        n AS (SELECT d.source, d.toks,
-               cr.copies + CASE WHEN ('0x' || substr(md5(d.doc_id::VARCHAR || 'mixe'), 1, 15))::BIGINT % 1000000 < cr.rem
+               cr.copies + CASE WHEN ${phSql("d.doc_id::VARCHAR || 'mixe'")} % 1000000 < cr.rem
                            THEN 1 ELSE 0 END AS n
              FROM d JOIN cr USING (source))
        SELECT source, CAST(SUM(n) AS BIGINT) AS n_rows,
@@ -4968,7 +4954,7 @@ object Queries {
   private val oSplitLeak =
     s"""WITH gh AS (${gramHashesSql(3)}),
        b AS (SELECT doc_id,
-               ('0x' || substr(md5(doc_id::VARCHAR || 'split'), 1, 15))::BIGINT
+               ${phSql("doc_id::VARCHAR || 'split'")}
                  % 1000000 AS h
              FROM documents),
        train AS (SELECT gh.doc_id, g FROM gh JOIN b USING (doc_id) WHERE b.h < 900000),
@@ -4992,7 +4978,7 @@ object Queries {
     TextDedup.lineDedup(
         docs(s, dir).select(col("doc_id"),
           concat(lit(SentBoiler), punctify(col("text"))).as("t2")),
-        "doc_id", "t2", TextSegment.sentenceArray, sep = " ", hash = ph)
+        "doc_id", "t2", TextSegment.sentenceArray, sep = " ")
       .orderBy("doc_id")
 
   private val oSentDedup =
@@ -5007,7 +4993,7 @@ object Queries {
          FROM sa),
        r AS (
          SELECT doc_id, sent_no, sent,
-           row_number() OVER (PARTITION BY ('0x' || substr(md5(sent), 1, 15))::BIGINT
+           row_number() OVER (PARTITION BY ${phSql("sent")}
                               ORDER BY doc_id, sent_no) AS rk
          FROM sents),
        ns AS (SELECT doc_id, CAST(len(ss) AS BIGINT) AS n_s FROM sa)
@@ -5281,7 +5267,8 @@ object Queries {
         (id, v, dec.pages.length, errKind, dec.pages.map(_.text).mkString("\n\n"))
       }
       .toDF("doc_id", variant, "n_pages", "err_kind", "got_text")
-      .withColumn("text_h", when(col("n_pages") > 0, ph(col("got_text"))).otherwise(lit(0L)))
+      .withColumn("text_h",
+        when(col("n_pages") > 0, portableHash(col("got_text"))).otherwise(lit(0L)))
       .select("doc_id", variant, "n_pages", "err_kind", "text_h")
   }
 
@@ -5397,12 +5384,12 @@ object Queries {
          CASE WHEN framing = 6 THEN 'pdf-encrypted'
               WHEN framing = 7 THEN 'pdf-parse' ELSE '' END AS err_kind,
          CASE WHEN framing >= 6 THEN 0
-              ELSE ('0x' || substr(md5(full_text), 1, 15))::BIGINT END AS text_h
+              ELSE ${phSql("full_text")} END AS text_h
        FROM d ORDER BY doc_id"""
 
   /** Flagship-envelope hash pin (r5, VERDICT r4 what's-wrong #2): the full
     * `entry()` output — per-doc canonical construction/standard JSON — is
-    * reduced to per-mode (docs, Σwords, Σjson_chars, Σ ph(json) mod P).
+    * reduced to per-mode (docs, Σwords, Σjson_chars, Σ portableHash(json) mod P).
     * DuckDB cannot re-run the construction pipeline, so the two envelope
     * rows are GOLDEN CONSTANTS pinned at the driver's contract scale
     * (sf0.01, where CORRECTNESS runs); the `corpus` row is a live oracle
@@ -5414,12 +5401,12 @@ object Queries {
       count(lit(1)).as("docs"),
       sum(col("n_words")).as("sum_words"),
       sum(col("json_chars")).as("sum_json_chars"),
-      sum(pmod(ph(col("extracted_json")), lit(P.toLong))).as("digest"))
+      sum(pmod(portableHash(col("extracted_json")), lit(P.toLong))).as("digest"))
     val corpus = docs(s, dir).agg(
       count(lit(1)).as("docs"),
       sum(size(split(col("text"), " "))).cast("long").as("sum_words"),
       sum(length(col("text"))).cast("long").as("sum_json_chars"),
-      sum(pmod(ph(col("text")), lit(P.toLong))).as("digest"))
+      sum(pmod(portableHash(col("text")), lit(P.toLong))).as("digest"))
       .select(lit("corpus").as("mode"), col("docs"), col("sum_words"),
         col("sum_json_chars"), col("digest"))
     corpus.unionByName(env).orderBy("mode")
@@ -5608,7 +5595,7 @@ object Queries {
          CASE WHEN mode = 4 THEN 0 ELSE 1 END AS n_pages,
          CASE WHEN mode = 4 THEN 'pdf-encrypted' ELSE '' END AS err_kind,
          CASE WHEN mode = 4 THEN 0
-              ELSE ('0x' || substr(md5(full_text), 1, 15))::BIGINT END AS text_h
+              ELSE ${phSql("full_text")} END AS text_h
        FROM d ORDER BY doc_id"""
 
   /** PDF annotation/form-field text as a driver row (r5): FreeText
@@ -5639,16 +5626,15 @@ object Queries {
           got.map { case (p, st, tx) => s"$p/$st:$tx" }.mkString("\n"))
       }
       .toDF("doc_id", "n_annots", "ann_text")
-      .withColumn("ann_h", ph(col("ann_text")))
+      .withColumn("ann_h", portableHash(col("ann_text")))
       .select("doc_id", "n_annots", "ann_h")
   }
 
   private val oPdfAnnots =
-    """SELECT doc_id, 2 AS n_annots,
-         ('0x' || substr(md5(
-           '0/FreeText:' || CASE WHEN doc_id % 2 = 1 THEN '№ ' ELSE '' END ||
+    s"""SELECT doc_id, 2 AS n_annots,
+         ${phSql("""'0/FreeText:' || CASE WHEN doc_id % 2 = 1 THEN '№ ' ELSE '' END ||
            'note: ' || substr(text, 1, 20) || chr(10) ||
-           '0/Widget:v-' || CAST(doc_id % 100 AS VARCHAR)), 1, 15))::BIGINT AS ann_h
+           '0/Widget:v-' || CAST(doc_id % 100 AS VARCHAR)""")} AS ann_h
        FROM documents ORDER BY doc_id"""
 
   // Oracle for qEntryDigest: the corpus row is recomputed live from the
@@ -5657,10 +5643,10 @@ object Queries {
   // (regenerate by running q_entry_digest and pasting — any envelope byte
   // change flips a digest).
   private val oEntryDigest =
-    """SELECT 'corpus' AS mode, count(*)::BIGINT AS docs,
+    s"""SELECT 'corpus' AS mode, count(*)::BIGINT AS docs,
          sum(len(str_split(text, ' ')))::BIGINT AS sum_words,
          sum(length(text))::BIGINT AS sum_json_chars,
-         sum(('0x' || substr(md5(text), 1, 15))::BIGINT % 1000000007)::BIGINT AS digest
+         sum(${phSql("text")} % 1000000007)::BIGINT AS digest
        FROM documents
        UNION ALL SELECT 'construction', 500, 31665, 764806, 247542848565
        UNION ALL SELECT 'standard', 500, 27165, 531274, 260798163669

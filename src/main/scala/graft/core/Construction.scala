@@ -290,7 +290,7 @@ object Construction {
     while (lineNum < lines.length) {
       val line = stripped(lineNum)
       if (line.nonEmpty) {
-        detectItemLineF(line, pageNum, lineNum, screenOf(lineNum)) match {
+        detectItemLine(line, pageNum, lineNum, screenOf(lineNum)) match {
           case Some(d) =>
             if (current != null && current.meaningful) items += current.toRaw
             current = new OpenItem(
@@ -314,7 +314,7 @@ object Construction {
               var k = lo
               while (k <= hi) {
                 val c = stripped(k)
-                if (c.nonEmpty) enrichItemF(current, c, screenOf(k))
+                if (c.nonEmpty) enrichItem(current, c, screenOf(k))
                 k += 1
               }
               if (hi > enrichedUpTo) enrichedUpTo = hi
@@ -328,14 +328,11 @@ object Construction {
   }
 
   // ------------------------------------------------------ P3 line classifier
-  /** _detect_item_line (construction.py:216-649). */
-  def detectItemLine(line: String, pageNum: Long, lineNum: Long): Option[Detected] =
-    detectItemLineF(line, pageNum, lineNum, screen.screen(line))
-
-  /** detectItemLine with the prescreen precomputed (extractItems memoizes
-    * it per line across the detect pass and the enrich window).
+  /** _detect_item_line (construction.py:216-649). `bits` is the line's
+    * prescreen, `screen.screen(line)` (extractItems memoizes it per line
+    * across the detect pass and the enrich window).
     */
-  private[core] def detectItemLineF(
+  private[core] def detectItemLine(
       line: String, pageNum: Long, lineNum: Long, bits: Array[Long]): Option[Detected] = {
 
     // exclusion regexes (:222-224) — keyword fold screened, anchored fold
@@ -640,13 +637,10 @@ object Construction {
   // ---------------------------------------------------------- P4 enrichment
   /** _enrich_item (construction.py:651-758) — mutates the open item.
     * Enrichment is deliberately looser than detection (no vetoes): a context
-    * line "SEE PAGE 5" contributes quantity 5.
+    * line "SEE PAGE 5" contributes quantity 5. `bits` is the line's
+    * prescreen (see detectItemLine).
     */
-  def enrichItem(item: OpenItem, line: String): Unit =
-    enrichItemF(item, line, screen.screen(line))
-
-  /** enrichItem with the prescreen precomputed (see detectItemLineF). */
-  private[core] def enrichItemF(item: OpenItem, line: String, bits: Array[Long]): Unit = {
+  private[core] def enrichItem(item: OpenItem, line: String, bits: Array[Long]): Unit = {
     // quantity (:654-667)
     if (!item.quantity.exists(_.truthy)) {
       var brk = false

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Benchmark decontamination: find training documents that share word
@@ -18,15 +18,15 @@ import org.apache.spark.sql.functions._
   *
   * Grams come from [[TextDedup.gramHashes]]: the native
   * WordShinglesGenerator (zero-copy byte slices, per-document distinct),
-  * hashed top-level so the hash runs codegen'd in the fused
-  * Generate+Project stage.
+  * keyed by [[TextDedup.portableHash]] as a top-level projection, so the
+  * hash runs codegen'd in the fused Generate+Project stage.
   */
 object Decontam {
 
   /** [[TextDedup.gramHashes]] of `df` as (`outId`, g). */
   private def grams(df: DataFrame, outId: String, idCol: String, textCol: String,
-                    n: Int, hash: Column => Column): DataFrame =
-    TextDedup.gramHashes(df, idCol, textCol, n, hash)
+                    n: Int): DataFrame =
+    TextDedup.gramHashes(df, idCol, textCol, n)
       .select(col("id").as(outId), col("s").as("g"))
 
   /** Per-train-document contamination report: every training doc sharing at
@@ -39,12 +39,11 @@ object Decontam {
     * flagged — by construction, matching the published procedure.
     */
   def contaminated(train: DataFrame, bench: DataFrame,
-                   idCol: String, textCol: String, n: Int = 13,
-                   hash: Column => Column = TextDedup.fastHash): DataFrame = {
+                   idCol: String, textCol: String, n: Int = 13): DataFrame = {
     require(n >= 1, "n must be >= 1")
     // (bench_id, g) is already distinct: the generator dedups per doc.
-    val benchGrams = broadcast(grams(bench, "bench_id", idCol, textCol, n, hash))
-    grams(train, "train_id", idCol, textCol, n, hash)
+    val benchGrams = broadcast(grams(bench, "bench_id", idCol, textCol, n))
+    grams(train, "train_id", idCol, textCol, n)
       .join(benchGrams, "g")
       .groupBy("train_id")
       .agg(
@@ -69,14 +68,13 @@ object Decontam {
     */
   def containmentPairs(train: DataFrame, bench: DataFrame,
                        idCol: String, textCol: String, n: Int = 8,
-                       minPermille: Long = 800,
-                       hash: Column => Column = TextDedup.fastHash): DataFrame = {
+                       minPermille: Long = 800): DataFrame = {
     require(n >= 1 && minPermille >= 1 && minPermille <= 1000)
-    val bg = grams(bench, "bench_id", idCol, textCol, n, hash)
+    val bg = grams(bench, "bench_id", idCol, textCol, n)
     // grams are per-doc distinct by the generator, so count(*) = |gram set|
     val benchSide = bg.join(
       bg.groupBy("bench_id").agg(count(lit(1)).as("n_bench_grams")), "bench_id")
-    grams(train, "train_id", idCol, textCol, n, hash)
+    grams(train, "train_id", idCol, textCol, n)
       .join(broadcast(benchSide), "g")
       .groupBy("train_id", "bench_id")
       .agg(count(lit(1)).as("n_hit"),
@@ -98,11 +96,10 @@ object Decontam {
     * aggregate's input is pre-filtered to shared grams only.
     */
   def benchLeakage(train: DataFrame, bench: DataFrame,
-                   idCol: String, textCol: String, n: Int = 13,
-                   hash: Column => Column = TextDedup.fastHash): DataFrame = {
+                   idCol: String, textCol: String, n: Int = 13): DataFrame = {
     require(n >= 1, "n must be >= 1")
-    val benchGrams = broadcast(grams(bench, "bench_id", idCol, textCol, n, hash))
-    grams(train, "train_id", idCol, textCol, n, hash)
+    val benchGrams = broadcast(grams(bench, "bench_id", idCol, textCol, n))
+    grams(train, "train_id", idCol, textCol, n)
       .join(benchGrams, "g")
       .groupBy("bench_id")
       .agg(

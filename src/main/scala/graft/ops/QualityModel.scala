@@ -36,12 +36,11 @@ object QualityModel {
     * join on fid (the model, ≤ dim rows) and one final aggregate on id.
     */
   def scoreHashed(df: DataFrame, idCol: String, textCol: String,
-                  weights: DataFrame, dim: Int,
-                  hash: Column => Column = TextDedup.portableHash): DataFrame = {
+                  weights: DataFrame, dim: Int): DataFrame = {
     val id = col(idCol)
     val tf = df
       .select(id, explode(split(col(textCol), " ")).as("tok"))
-      .select(id, pmod(hash(col("tok")), lit(dim.toLong)).as("fid"))
+      .select(id, pmod(TextDedup.portableHash(col("tok")), lit(dim.toLong)).as("fid"))
       .groupBy(id, col("fid")).agg(count(lit(1)).as("tf"))
     tf.join(broadcast(weights), Seq("fid"), "left")
       .groupBy(id)
@@ -108,14 +107,13 @@ object QualityModel {
     */
   def dsirScore(df: DataFrame, idCol: String, textCol: String,
                 isTarget: Column, buckets: Int,
-                scale: Long = LmScale,
-                hash: Column => Column = TextDedup.portableHash): DataFrame = {
+                scale: Long = LmScale): DataFrame = {
     val ts = split(col(textCol), " ")
     val n1 = greatest(size(ts) - 1, lit(0))
     val bg = zip_with(slice(ts, lit(1), n1), slice(ts, lit(2), n1),
       (a, b) => concat(a, lit(" "), b))
     val occ = df.select(col(idCol), isTarget.as("__t"), explode(bg).as("bg"))
-      .withColumn("b", pmod(hash(col("bg")), lit(buckets.toLong)))
+      .withColumn("b", pmod(TextDedup.portableHash(col("bg")), lit(buckets.toLong)))
       .drop("bg")
     val counts = occ
       .groupBy("b")

@@ -15,17 +15,21 @@ object Sampling {
 
   private val M = 1000000L // hash-bucket modulus: fraction resolution 1e-6
 
+  /** The salted id position every sampler keys on:
+    * portableHash(string(id) ++ salt) mod `modulus`.
+    */
+  private def saltedPos(idCol: String, salt: String, modulus: Long): Column =
+    pmod(TextDedup.portableHash(concat(col(idCol).cast("string"), lit(salt))), lit(modulus))
+
   /** Bernoulli-style sample keeping ~`frac` of rows: keep iff
     * hash(id, salt) mod M < frac·M. Scan-side filter — NO shuffle, prunes
     * at the reader when the hash column is cheap; different `salt` values
     * give independent samples (train/validation splits that provably don't
     * overlap: disjoint hash ranges of the SAME salt, see [[hashSplit]]).
     */
-  def hashSample(df: DataFrame, idCol: String, frac: Double, salt: String = "",
-                 hash: Column => Column = TextDedup.portableHash): DataFrame = {
+  def hashSample(df: DataFrame, idCol: String, frac: Double, salt: String = ""): DataFrame = {
     require(frac >= 0.0 && frac <= 1.0, "frac must be in [0,1]")
-    df.where(pmod(hash(concat(col(idCol).cast("string"), lit(salt))), lit(M))
-      < math.floor(frac * M).toLong)
+    df.where(saltedPos(idCol, salt, M) < math.floor(frac * M).toLong)
   }
 
   /** Priority sampling (Duffield, Lund & Thorup, JACM 2007): a
@@ -47,11 +51,9 @@ object Sampling {
     * sort); τ is a 1-row broadcast back onto the k kept rows.
     */
   def prioritySample(df: DataFrame, idCol: String, weightCol: String, k: Int,
-                     salt: String = "",
-                     hash: Column => Column = TextDedup.portableHash): DataFrame = {
+                     salt: String = ""): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    val u = pmod(hash(concat(col(idCol).cast("string"), lit(salt))),
-      lit(1073741824L)) + lit(1L)
+    val u = saltedPos(idCol, salt, 1073741824L) + lit(1L)
     val pr = df.select(col(idCol).as("id"), col(weightCol).cast("double").as("w"),
         u.cast("double").as("__u"))
       .withColumn("q", col("w") * lit(1073741824.0) / col("__u"))
@@ -69,8 +71,8 @@ object Sampling {
     * complement guarantee (no row in two splits, no row dropped) — the
     * property per-split independent sampling cannot give.
     */
-  def hashSplit(df: DataFrame, idCol: String, fracs: Seq[Double], salt: String = "",
-                hash: Column => Column = TextDedup.portableHash): Seq[DataFrame] = {
+  def hashSplit(df: DataFrame, idCol: String, fracs: Seq[Double],
+                salt: String = ""): Seq[DataFrame] = {
     require(fracs.nonEmpty && fracs.forall(_ >= 0) && math.abs(fracs.sum - 1.0) < 1e-9,
       "fracs must be non-negative and sum to 1")
     // the FINAL bound is pinned to M exactly: floating cumulative sums can
@@ -79,7 +81,7 @@ object Sampling {
     // breaks the documented disjoint-AND-complete contract
     val bounds = fracs.scanLeft(0.0)(_ + _).map(f => math.floor(f * M).toLong)
       .updated(fracs.length, M)
-    val h = pmod(hash(concat(col(idCol).cast("string"), lit(salt))), lit(M))
+    val h = saltedPos(idCol, salt, M)
     bounds.sliding(2).map { case Seq(lo, hi) =>
       df.where(h >= lo && h < hi)
     }.toSeq
@@ -129,11 +131,10 @@ object Sampling {
     * div). One exchange on the shard key, same as packBudget.
     */
   def sequenceWindows(df: DataFrame, idCol: String, tokCol: String,
-                      seqLen: Long, shards: Int, salt: String = "",
-                      hash: Column => Column = TextDedup.portableHash): DataFrame = {
+                      seqLen: Long, shards: Int, salt: String = ""): DataFrame = {
     require(seqLen >= 1 && shards >= 1)
     val id = col(idCol)
-    val h = pmod(hash(concat(id.cast("string"), lit(salt))), lit(M))
+    val h = saltedPos(idCol, salt, M)
     val shard = pmod(h, lit(shards.toLong))
     val w = Window.partitionBy(col("shard")).orderBy(col("h"), id)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -171,19 +172,16 @@ object Sampling {
     * duplicated assignments could silently drift apart under edits.
     */
   private def shardAssign(df: DataFrame, idCol: String, shards: Int,
-                          salt: String,
-                          hash: Column => Column): DataFrame = {
+                          salt: String): DataFrame = {
     require(shards >= 1, "shards must be >= 1")
-    df.withColumn("__h",
-        pmod(hash(concat(col(idCol).cast("string"), lit(salt))), lit(M)))
+    df.withColumn("__h", saltedPos(idCol, salt, M))
       .withColumn("shard", pmod(col("__h"), lit(shards.toLong)))
   }
 
   def deterministicShuffle(df: DataFrame, idCol: String, shards: Int,
-                           salt: String = "",
-                           hash: Column => Column = TextDedup.portableHash): DataFrame = {
+                           salt: String = ""): DataFrame = {
     val w = Window.partitionBy(col("shard")).orderBy(col("__h"), col(idCol))
-    shardAssign(df, idCol, shards, salt, hash)
+    shardAssign(df, idCol, shards, salt)
       .withColumn("pos", row_number().over(w).cast("long"))
       .drop("__h")
   }
@@ -202,10 +200,9 @@ object Sampling {
     * lead/first over the shard window — no join, no second pass.
     */
   def negativePairs(df: DataFrame, idCol: String, shards: Int,
-                    salt: String = "",
-                    hash: Column => Column = TextDedup.portableHash): DataFrame = {
+                    salt: String = ""): DataFrame = {
     val w = Window.partitionBy(col("shard")).orderBy(col("__h"), col(idCol))
-    shardAssign(df, idCol, shards, salt, hash)
+    shardAssign(df, idCol, shards, salt)
       .withColumn("neg_id",
         coalesce(lead(col(idCol), 1).over(w), first(col(idCol)).over(w)))
       .where(col("neg_id") =!= col(idCol))
@@ -221,10 +218,9 @@ object Sampling {
     * corpus) never concentrates on a task.
     */
   def stratifiedQuota(df: DataFrame, strataCol: String, idCol: String, n: Int,
-                      salt: String = "",
-                      hash: Column => Column = TextDedup.portableHash): DataFrame = {
+                      salt: String = ""): DataFrame = {
     require(n >= 1, "n must be >= 1")
-    val pri = pmod(hash(concat(col(idCol).cast("string"), lit(salt))), lit(M))
+    val pri = saltedPos(idCol, salt, M)
     val w = Window.partitionBy(col(strataCol)).orderBy(pri, col(idCol))
     df.withColumn("rk", row_number().over(w))
       .where(col("rk") <= n)
@@ -311,8 +307,7 @@ object Sampling {
     */
   def mixByTokenBudget(df: DataFrame, idCol: String, tokCol: String,
                        srcCol: String, weights: Map[String, Long],
-                       salt: String = "",
-                       hash: Column => Column = TextDedup.portableHash): DataFrame = {
+                       salt: String = ""): DataFrame = {
     require(weights.nonEmpty && weights.values.forall(_ >= 0L) &&
       weights.values.sum > 0L, "weights must be non-negative, not all zero")
     val spark = df.sparkSession
@@ -334,8 +329,7 @@ object Sampling {
         expr(s"CASE WHEN __tok = 0 THEN 0L ELSE (CAST(__target AS DECIMAL(38,0)) * ${M}L) div __tok END")))
       .select(col(srcCol), col("__thr"))
     df.join(broadcast(thr), Seq(srcCol))
-      .where(pmod(hash(concat(col(idCol).cast("string"), lit(salt))), lit(M))
-        < col("__thr"))
+      .where(saltedPos(idCol, salt, M) < col("__thr"))
       .select(df.columns.map(col): _*)
   }
 
@@ -381,8 +375,7 @@ object Sampling {
     * scan-side filter.
     */
   def mixTemperatureSqrt(df: DataFrame, idCol: String, tokCol: String,
-                         srcCol: String, salt: String = "",
-                         hash: Column => Column = TextDedup.portableHash): DataFrame = {
+                         srcCol: String, salt: String = ""): DataFrame = {
     val perSrc = df.groupBy(col(srcCol)).agg(sum(col(tokCol)).as("__tok"))
       .where(col("__tok") > 0)
       .withColumn("__w", isqrt(col("__tok")))
@@ -394,8 +387,7 @@ object Sampling {
         expr(s"(CAST(__target AS DECIMAL(38,0)) * ${M}L) div __tok")))
       .select(col(srcCol), col("__thr"))
     df.join(broadcast(thr), Seq(srcCol))
-      .where(pmod(hash(concat(col(idCol).cast("string"), lit(salt))), lit(M))
-        < col("__thr"))
+      .where(saltedPos(idCol, salt, M) < col("__thr"))
       .select(df.columns.map(col): _*)
   }
 
@@ -418,8 +410,7 @@ object Sampling {
     */
   def mixEpochs(df: DataFrame, idCol: String, tokCol: String,
                 srcCol: String, weights: Map[String, Long],
-                salt: String = "",
-                hash: Column => Column = TextDedup.portableHash): DataFrame = {
+                salt: String = ""): DataFrame = {
     require(weights.nonEmpty && weights.values.forall(_ >= 0L) &&
       weights.values.sum > 0L, "weights must be non-negative, not all zero")
     val spark = df.sparkSession
@@ -437,7 +428,7 @@ object Sampling {
       .withColumn("__rem",
         expr(s"(CAST(__target % __tok AS DECIMAL(38,0)) * ${M}L) div __tok"))
       .select(col(srcCol), col("__copies"), col("__rem"))
-    val h = pmod(hash(concat(col(idCol).cast("string"), lit(salt))), lit(M))
+    val h = saltedPos(idCol, salt, M)
     val n = (col("__copies") + when(h < col("__rem"), 1L).otherwise(0L)).cast("int")
     df.join(broadcast(thr), Seq(srcCol))
       .withColumn("__n", n)

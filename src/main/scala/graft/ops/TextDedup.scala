@@ -9,10 +9,10 @@ import org.apache.spark.sql.functions._
   * functions, candidate generation via equi-joins on band hashes — no UDFs,
   * no driver-side collection, so every stage scales horizontally.
   *
-  * Two hash families are exposed:
-  *   - `fastHash`  : xxhash64 — the production default (codegen'd, cheap);
-  *   - `portableHash` : first 60 bits of md5 as a BIGINT — bit-identical in
-  *     Spark and DuckDB, used by the oracle-checked query variants.
+  * Every string → key hash here (text, gram, band, token and line keys)
+  * is [[portableHash]], the first 60 bits of md5 as a BIGINT. It is
+  * bit-identical in Spark and DuckDB, so each operator's rows are the rows
+  * its SQL oracle computes; there is no second hash family to choose.
   *
   * The greedy fuzzy matcher of the reference
   * (/root/reference/extractor/services/extraction_service.py:360-411) is a
@@ -44,8 +44,6 @@ object TextDedup {
   def portableHash(s: Column): Column =
     conv(substring(md5(s), 1, 15), 16, 10).cast("long")
 
-  def fastHash(s: Column): Column = xxhash64(s)
-
   /** Whitespace tokens (documents corpus is single-spaced). */
   def tokens(text: Column): Column = split(text, " ")
 
@@ -62,14 +60,14 @@ object TextDedup {
         org.apache.spark.sql.GraftBridge.expression(text), n))
 
   /** A document as its set of hashed word n-grams: (id, s), one row per
-    * distinct shingle ([[shingleRows]]), s = hash(shingle) as a top-level,
+    * distinct shingle ([[shingleRows]]), s = portableHash(shingle) as a top-level,
     * codegen'd projection; docs under `n` tokens have no rows. The gram
     * source of every gram-set operator here and in [[Decontam]].
     */
   private[ops] def gramHashes(df: DataFrame, idCol: String, textCol: String,
-                              n: Int, hash: Column => Column): DataFrame =
+                              n: Int): DataFrame =
     df.select(col(idCol).as("id"), shingleRows(col(textCol), n).as("s0"))
-      .select(col("id"), hash(col("s0")).as("s"))
+      .select(col("id"), portableHash(col("s0")).as("s"))
 
   /** Distinct word n-gram shingles of a token array. Guarded: Spark's
     * sequence(1, stop) DESCENDS when stop < 1, so short docs get an empty
@@ -213,12 +211,12 @@ object TextDedup {
           "").as("text_dedup"))
   }
 
-  /** Exact dedup: group by a hash of the full text, keep the first id as
-    * the canonical representative. Scales: one shuffle on the 60-bit key.
+  /** Exact dedup: group by the portable hash of the full text, keep the
+    * first id as the canonical representative. Scales: one shuffle on the
+    * 60-bit key.
     */
-  def exactGroups(df: DataFrame, idCol: String, textCol: String,
-                  hash: Column => Column = fastHash): DataFrame =
-    df.groupBy(hash(col(textCol)).as("text_hash"))
+  def exactGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.groupBy(portableHash(col(textCol)).as("text_hash"))
       .agg(count(lit(1)).as("n_docs"), min(col(idCol)).as("canonical_id"))
 
   /** MinHash signatures: k permutations h_j(x) = (a_j*x + b_j) mod P over
@@ -227,14 +225,13 @@ object TextDedup {
     * Returns (id, sig: array<bigint> length k).
     */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-                        k: Int = 8, shingleN: Int = 3,
-                        hash: Column => Column = fastHash): DataFrame = {
+                        k: Int = 8, shingleN: Int = 3): DataFrame = {
     // Exploded shape so the (md5-grade) shingle hash runs as a TOP-LEVEL
     // projection — codegen'd — rather than interpreted inside a HOF lambda;
     // the k permutation minima become k min-aggregates in ONE hash
     // aggregate (fully codegen, map-side partial). Docs shorter than one
     // shingle produce no rows and drop out, as before.
-    val sh = gramHashes(df, idCol, textCol, shingleN, hash)
+    val sh = gramHashes(df, idCol, textCol, shingleN)
       .select(col("id"), pmod(col("s"), lit(P)).as("h"))
     val mins = (0 until k).map { j =>
       val a = j * 101 + 37
@@ -252,8 +249,7 @@ object TextDedup {
     * classic shuffle-friendly plan; no O(n^2) stage exists anywhere.
     */
   def minhashPairs(sigs0: DataFrame, rowsPerBand: Int = 2,
-                   minEstJaccard: Double = 0.5,
-                   bandHash: Column => Column = fastHash): DataFrame = {
+                   minEstJaccard: Double = 0.5): DataFrame = {
     val k = rowsPerBand
     require(rowsPerBand >= 1, "rowsPerBand must be >= 1")
     // the signature computation feeds both sides of the self-join — persist
@@ -267,17 +263,16 @@ object TextDedup {
     // collision-free, the cheapest form; P^2 ≈ 1e18 < 2^63). k ≥ 3 would
     // overflow Long (and DuckDB BIGINT multiplication errors instead of
     // wrapping), so wider bands hash the ','-joined slot values through
-    // `bandHash` instead — xxhash64 in production, the portable md5 hash in
-    // the oracle-checked variant. A hash collision can only ADD a candidate
-    // pair (false positive), never drop one, and every candidate is
-    // re-scored by the exact slot comparison below — so hashing keeps the
-    // output contract bit-identical.
+    // portableHash instead, the hash the oracle spells in SQL. A hash
+    // collision can only ADD a candidate pair (false positive), never drop
+    // one, and every candidate is re-scored by the exact slot comparison
+    // below — so hashing keeps the output contract bit-identical.
     def bandKey(b: Column): Column =
       if (k <= 2)
         (0 until k).map(r => element_at(col("sig"), b * k + r + 1))
           .reduce((acc, s) => acc * P + s)
       else
-        bandHash(concat_ws(",",
+        portableHash(concat_ws(",",
           (0 until k).map(r => element_at(col("sig"), b * k + r + 1).cast("string")): _*))
     val banded = sigs.select(
       col("id"), col("sig"),
@@ -314,10 +309,9 @@ object TextDedup {
     * allocated a `bits`-slot array per TOKEN in interpreted eval and
     * dominated the operator's cost.
     */
-  def simhash(df: DataFrame, idCol: String, textCol: String, bits: Int = 32,
-              hash: Column => Column = fastHash): DataFrame = {
+  def simhash(df: DataFrame, idCol: String, textCol: String, bits: Int = 32): DataFrame = {
     require(bits >= 1 && bits <= 62, "bits must be in [1, 62] (2^bits must fit a positive Long)")
-    val hs = transform(tokens(col(textCol)), t => pmod(hash(t), lit(1L << bits)))
+    val hs = transform(tokens(col(textCol)), t => pmod(portableHash(t), lit(1L << bits)))
     val sim = org.apache.spark.sql.GraftBridge.column(
       graft.functions.SimHashVotes(
         org.apache.spark.sql.GraftBridge.expression(hs), bits))
@@ -411,10 +405,9 @@ object TextDedup {
     * the brute formulation (the DuckDB oracle keeps the brute shape).
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                        n: Int = 3, minJaccard: Double = 0.5,
-                        hash: Column => Column = fastHash): DataFrame = {
+                        n: Int = 3, minJaccard: Double = 0.5): DataFrame = {
     val t = minJaccard
-    val (_, sets, prefix) = prefixFilter(df, idCol, textCol, n, t, hash)
+    val (_, sets, prefix) = prefixFilter(df, idCol, textCol, n, t)
     val a = prefix.alias("a"); val b = prefix.alias("b")
     val cand = a.join(b,
         col("a.s") === col("b.s") && col("a.id") < col("b.id") &&
@@ -453,11 +446,10 @@ object TextDedup {
     * brute formulation — the DuckDB oracle keeps the brute shape.
     */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
-                       n: Int = 3, minContainment: Double = 0.8,
-                       hash: Column => Column = fastHash): DataFrame = {
+                       n: Int = 3, minContainment: Double = 0.8): DataFrame = {
     val t = minContainment
     require(t > 0.0 && t <= 1.0, s"minContainment must be in (0,1], got $t")
-    val (sh, sets, prefix) = prefixFilter(df, idCol, textCol, n, t, hash)
+    val (sh, sets, prefix) = prefixFilter(df, idCol, textCol, n, t)
     val a = prefix.alias("a"); val b = sh.alias("b")
     val cand = a.join(b,
         col("a.s") === col("b.s") && col("a.id") =!= col("b.id"))
@@ -484,12 +476,12 @@ object TextDedup {
     * sort machinery.
     */
   private def prefixFilter(df: DataFrame, idCol: String, textCol: String, n: Int,
-                           t: Double, hash: Column => Column): (DataFrame, DataFrame, DataFrame) = {
+                           t: Double): (DataFrame, DataFrame, DataFrame) = {
     // join on the 60-bit shingle hash, not the string: the equi-join
     // compares/shuffles 8-byte keys instead of variable-length text.
     // sh feeds sets, dfreq, the prefix and the candidate join — persist so
     // the tokenize/shingle/hash subtree runs once (ownership: releaseCaches).
-    val sh = gramHashes(df, idCol, textCol, n, hash)
+    val sh = gramHashes(df, idCol, textCol, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     registerCache(sh)
     // one pass builds both the per-doc set (sorted for cheap intersection)
@@ -733,10 +725,8 @@ object TextDedup {
     * anything — novelty is the cheap corpus-wide signal that triages
     * BEFORE the pair-generating dedup operators run.
     */
-  def noveltyScores(df: DataFrame, idCol: String, textCol: String,
-                    n: Int = 3,
-                    hash: Column => Column = fastHash): DataFrame = {
-    val sh = gramHashes(df, idCol, textCol, n, hash)
+  def noveltyScores(df: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame = {
+    val sh = gramHashes(df, idCol, textCol, n)
     // gramHashes is per-doc distinct, so count(*) per hash IS document
     // frequency
     val dfreq = sh.groupBy("s").agg(count(lit(1)).as("dfreq"))
@@ -779,27 +769,6 @@ object TextDedup {
       .withColumn("weight_ppm", expr("1000000L div cluster_size"))
   }
 
-  /** C4-style corpus-level line deduplication: every line that occurs more
-    * than once ACROSS the corpus keeps exactly its first occurrence (by
-    * (id, position) order) and loses the rest; documents are rewritten from
-    * their surviving lines (C4, Raffel et al. 2020 §2.2 — "we discarded all
-    * but one of any three-sentence span occurring more than once").
-    *
-    * `lineArray` maps the text column to the array of line units (real
-    * newline-split lines, sentence spans, or fixed word windows — the unit
-    * is the caller's policy, the dedup is this function's).
-    *
-    * Plan at 100 TB: ONE exchange on the 8-byte line hash. The keep
-    * decision is `row_number() = 1`, which Spark rewrites to
-    * WindowGroupLimit with a map-side Partial pass — a boilerplate line
-    * repeated on a billion pages contributes at most one row PER MAP TASK
-    * to the shuffle, so hot lines (the entire point of line dedup) cannot
-    * become hot shuffle keys. Reassembly is a second exchange on the doc
-    * id; per-doc line totals ride the scan (`size(lineArray)`), so dropped
-    * counts need no second pass over the losing rows. Collisions of the
-    * 60-bit portable hash conflate distinct lines; at real corpus scale use
-    * a 128-bit hash (e.g. full md5) for `hash` — the operator is agnostic.
-    */
   /** CCNet-style host-level template removal (Wenzek et al. 2020 strip
     * frequent lines per shard; here the shard key is the page's host, the
     * unit a site template actually repeats over): a line occurring in
@@ -821,14 +790,13 @@ object TextDedup {
     */
   def hostBoilerplate(df: DataFrame, idCol: String, hostCol: String,
                       textCol: String, lineArray: Column => Column,
-                      sep: String, minDocs: Long,
-                      hash: Column => Column = portableHash): DataFrame = {
+                      sep: String, minDocs: Long): DataFrame = {
     val id = col(idCol); val host = col(hostCol)
     // same CSE guard as lineDedup: materialize the interpreted HOF once
     val lines = df
       .select(id, host, lineArray(col(textCol)).as("la"))
       .select(id, host, posexplode(col("la")).as(Seq("line_no", "line")))
-      .withColumn("lh", hash(col("line")))
+      .withColumn("lh", portableHash(col("line")))
     val boilerSet = lines.select(host, col("lh"), id).distinct()
       .groupBy(host, col("lh"))
       .agg(count(lit(1)).as("df_docs"))
@@ -850,9 +818,30 @@ object TextDedup {
           sep).as("text_clean"))
   }
 
+  /** C4-style corpus-level line deduplication: every line that occurs more
+    * than once ACROSS the corpus keeps exactly its first occurrence (by
+    * (id, position) order) and loses the rest; documents are rewritten from
+    * their surviving lines (C4, Raffel et al. 2020 §2.2 — "we discarded all
+    * but one of any three-sentence span occurring more than once").
+    *
+    * `lineArray` maps the text column to the array of line units (real
+    * newline-split lines, sentence spans, or fixed word windows — the unit
+    * is the caller's policy, the dedup is this function's).
+    *
+    * Plan at 100 TB: ONE exchange on the 8-byte line hash. The keep
+    * decision is `row_number() = 1`, which Spark rewrites to
+    * WindowGroupLimit with a map-side Partial pass — a boilerplate line
+    * repeated on a billion pages contributes at most one row PER MAP TASK
+    * to the shuffle, so hot lines (the entire point of line dedup) cannot
+    * become hot shuffle keys. Reassembly is a second exchange on the doc
+    * id; per-doc line totals ride the scan (`size(lineArray)`), so dropped
+    * counts need no second pass over the losing rows. Collisions of the
+    * 60-bit portable hash conflate distinct lines: n distinct lines hold
+    * about n²/2^61 colliding pairs (≈ 0.4 at 10^9 lines), each of which
+    * drops one line.
+    */
   def lineDedup(df: DataFrame, idCol: String, textCol: String,
-                lineArray: Column => Column, sep: String,
-                hash: Column => Column = portableHash): DataFrame = {
+                lineArray: Column => Column, sep: String): DataFrame = {
     val id = col(idCol)
     // materialize the line array in its own projection: HOF lambdas run
     // interpreted and get NO common-subexpression elimination — naming
@@ -862,7 +851,7 @@ object TextDedup {
       .select(id, lineArray(col(textCol)).as("la"))
       .select(id, size(col("la")).as("n_lines"),
         posexplode(col("la")).as(Seq("line_no", "line")))
-      .withColumn("lh", hash(col("line")))
+      .withColumn("lh", portableHash(col("line")))
     val w = Window.partitionBy(col("lh")).orderBy(id, col("line_no"))
     val kept = lines
       .withColumn("rk", row_number().over(w))

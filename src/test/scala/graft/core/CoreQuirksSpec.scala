@@ -43,19 +43,20 @@ class CoreQuirksSpec extends AnyFunSuite {
     val variants = spaces.map(ws => (s"Big Cooling${ws}Tower 3 ea", s"Cooling${ws}Tower")) ++
       cases.map(v => (s"Main Supply $v 2 ea", v)) ++
       Seq(("Kelvin \u212Aey Pipe", "\u212Aey Pipe"), ("\u017Fteel pipe", "\u017Fteel"))
+    def detect(line: String) =
+      Construction.detectItemLine(line, 1L, 0L, Construction.screen.screen(line))
     // first use of each code path on this thread
     Seq(variants.head, variants(spaces.size), variants.last)
-      .foreach { case (line, _) => Construction.detectItemLine(line, 1L, 0L) }
+      .foreach { case (line, _) => detect(line) }
     val before = Rx.tlInits.get
     val got = variants.map { case (line, text) => Construction.phraseBefore(line, text) }
-    variants.foreach { case (line, _) => Construction.detectItemLine(line, 1L, 0L) }
+    variants.foreach { case (line, _) => detect(line) }
     assert(Rx.tlInits.get - before <= 8, "per-text patterns leaked into Rx")
     variants.zip(got).foreach { case ((line, text), g) =>
       assert(g == reference(line, text), s"phrase differs on ${line.replace("\t", "\\t")}")
     }
     assert(got.head.contains("Big"))
-    assert(Construction.detectItemLine("Main Supply PiPe 2 ea", 1L, 0L).flatMap(_.tpe)
-      .contains("Main Supply Pipe"))
+    assert(detect("Main Supply PiPe 2 ea").flatMap(_.tpe).contains("Main Supply Pipe"))
   }
 
   test("decimal-spec quirk: 'spec: 31.1' becomes BOTH spec and string quantity") {

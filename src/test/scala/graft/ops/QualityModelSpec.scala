@@ -1,7 +1,9 @@
 package graft.ops
 
+import graft.functions.HllSketchAgg
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,13 +28,14 @@ class QualityModelSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("scoreHashed: tf-weighted sum over the weight table, absent fid scores 0") {
     val s = spark
     import s.implicits._
-    // identity "hash" makes the feature ids explicit
-    val idHash: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      c => c.cast("long")
-    val df = Seq((1L, "3 3 5"), (2L, "7")).toDF("doc_id", "text")
+    // each token is chosen by its portable hash mod 16, so the feature
+    // ids are explicit: t3 -> 3, t5 -> 5, t7 -> 7
+    def tokenAt(fid: Long): String = Iterator.from(0).map(k => s"t$k")
+      .find(t => HllSketchAgg.hash60(UTF8String.fromString(t)) % 16 == fid).get
+    val (t3, t5, t7) = (tokenAt(3), tokenAt(5), tokenAt(7))
+    val df = Seq((1L, s"$t3 $t3 $t5"), (2L, t7)).toDF("doc_id", "text")
     val weights = Seq((3L, 10L), (5L, -100L)).toDF("fid", "w") // no 7
-    val got = QualityModel.scoreHashed(df, "doc_id", "text", weights,
-        dim = 16, hash = idHash)
+    val got = QualityModel.scoreHashed(df, "doc_id", "text", weights, dim = 16)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
     assert(got.toSeq == Seq(

@@ -1,7 +1,9 @@
 package graft.ops
 
+import graft.functions.HllSketchAgg
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,6 +23,20 @@ class SamplingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  /** The salted id position the samplers key on, portableHash(string(id)
+    * ++ salt) mod 10^6, recomputed on the driver.
+    */
+  private def pos(id: Long, salt: String = ""): Long =
+    HllSketchAgg.hash60(UTF8String.fromString(id.toString + salt)) % 1000000L
+
+  /** The first id at or after `from` whose position lies in [lo, hi). */
+  private def idAt(lo: Long, hi: Long, from: Long = 0L): Long =
+    Iterator.iterate(from)(_ + 1).find { id => val p = pos(id); p >= lo && p < hi }.get
+
+  /** One id per hash decile: the i-th has its position in [i·10^5, (i+1)·10^5). */
+  private def decileIds(from: Long): Seq[Long] =
+    (0 until 10).map(i => idAt(i * 100000L, (i + 1) * 100000L, from))
 
   private def corpus = {
     val s = spark
@@ -198,18 +214,15 @@ class SamplingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("mixByTokenBudget: exact threshold arithmetic on hand-computed totals") {
     val s = spark
     import s.implicits._
-    // an "identity" hash (the id itself) makes the kept set predictable:
-    // ids are spread over the hash deciles
-    val idHash: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      c => c.cast("long")
-    val a = (0 until 10).map(i => (i * 100000L, "A", 10L))
+    // A's ids sit one per hash decile, which makes the kept set predictable
+    val a = decileIds(0L).map(id => (id, "A", 10L))
     val b = (0 until 10).map(i => (2000000L + i, "B", 10L))
     val df = (a ++ b).toDF("doc_id", "source", "toks")
     // tok_A = tok_B = 100, T = 200, W = 4:
-    //   A: target = 200/4 = 50  -> thr = 50*1e6/100 = 500000 -> ids 0..4e5 keep
+    //   A: target = 200/4 = 50  -> thr = 50*1e6/100 = 500000 -> deciles 0..4 keep
     //   B: target = 150 >= 100  -> thr = M (keep everything)
     val kept = Sampling.mixByTokenBudget(df, "doc_id", "toks", "source",
-        Map("A" -> 1L, "B" -> 3L), hash = idHash)
+        Map("A" -> 1L, "B" -> 3L))
       .collect().map(r => (r.getString(1), r.getLong(0))).toSet
     assert(kept == (a.take(5).map(r => ("A", r._1)) ++ b.map(r => ("B", r._1))).toSet)
   }
@@ -276,15 +289,16 @@ class SamplingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("mix thresholds survive 10^18-token sources (DECIMAL intermediates, no Long overflow)") {
     val s = spark; import s.implicits._
-    val idHash: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      c => c.cast("long")
     // A: 3 docs × 2e18 toks; B: 20 docs × 5e10 — w·T and target·M both
     // exceed 2^63, which the pre-fix BIGINT chain either threw on (ANSI)
-    // or wrapped negative (dropping every doc)
-    val a = (0 until 3).map(i => (i * 300000L, "A", 2000000000000000000L))
-    val b = (0 until 20).map(i => (i * 50000L + 7L, "B", 50000000000L))
+    // or wrapped negative (dropping every doc). A's positions start at
+    // 0, 3e5 and 6e5, B's at every 5e4.
+    val a = (0 until 3).map(i =>
+      (idAt(i * 300000L, i * 300000L + 50000L), "A", 2000000000000000000L))
+    val b = (0 until 20).map(i =>
+      (idAt(i * 50000L, (i + 1) * 50000L, from = 10000000L), "B", 50000000000L))
     val df = (a ++ b).toDF("doc_id", "source", "toks")
-    val kept = Sampling.mixTemperatureSqrt(df, "doc_id", "toks", "source", hash = idHash)
+    val kept = Sampling.mixTemperatureSqrt(df, "doc_id", "toks", "source")
       .collect().map(r => (r.getString(1), r.getLong(0))).toSet
     // BigInt reference of the documented arithmetic
     def isq(x: BigInt): BigInt = {
@@ -302,30 +316,31 @@ class SamplingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val tsum = tokA + tokB; val wsum = wA + wB
     def thr(w: BigInt, tok: BigInt): BigInt =
       (BigInt(1000000) min ((w * tsum / wsum) * 1000000 / tok))
-    val expect = (a.filter(r => BigInt(r._1) < thr(wA, tokA)).map(r => ("A", r._1)) ++
-      b.filter(r => BigInt(r._1) < thr(wB, tokB)).map(r => ("B", r._1))).toSet
+    val expect = (a.filter(r => BigInt(pos(r._1)) < thr(wA, tokA)).map(r => ("A", r._1)) ++
+      b.filter(r => BigInt(pos(r._1)) < thr(wB, tokB)).map(r => ("B", r._1))).toSet
     assert(kept == expect)
     assert(kept.nonEmpty, "degenerate fixture: nothing survived")
   }
 
   test("mixTemperatureSqrt: hand-computed isqrt thresholds; small source keeps a larger share") {
     val s = spark; import s.implicits._
-    val idHash: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      c => c.cast("long")
     // A: 10 docs × 10 toks = 100; B: 20 docs × 1000 toks = 20000.
     // w_A = isqrt(100) = 10, w_B = isqrt(20000) = 141; T = 20100, W = 151:
     //   A: target = (10·20100) div 151 = 1331 ≥ 100   -> thr = M (keep all)
     //   B: target = (141·20100) div 151 = 18768
-    //      thr = (18768·10^6) div 20000 = 938400 -> identity-hash ids
-    //      0, 50000, …, 900000 keep; 950000 drops (ids stay < 10^6 — the
-    //      hash is taken mod 10^6, so larger ids would alias low buckets)
+    //      thr = (18768·10^6) div 20000 = 938400 -> B's ids at positions
+    //      in [0, 5e4), …, [8.5e5, 9e5) and exactly 938399 keep; the id at
+    //      exactly 938400 drops
     val a = (0 until 10).map(i => (i * 100000L + 7L, "A", 10L))
-    val b = (0 until 20).map(i => (i * 50000L, "B", 1000L))
+    val from = 10000000L
+    val b = ((0 until 18).map(i => idAt(i * 50000L, (i + 1) * 50000L, from)) ++
+      Seq(idAt(938399L, 938400L, from), idAt(938400L, 938401L, from)))
+      .map(id => (id, "B", 1000L))
     val df = (a ++ b).toDF("doc_id", "source", "toks")
-    val kept = Sampling.mixTemperatureSqrt(df, "doc_id", "toks", "source", hash = idHash)
+    val kept = Sampling.mixTemperatureSqrt(df, "doc_id", "toks", "source")
       .collect().map(r => (r.getString(1), r.getLong(0))).toSet
     val expect = (a.map(r => ("A", r._1)) ++
-      b.filter(_._1 < 938400L).map(r => ("B", r._1))).toSet
+      b.filter(r => pos(r._1) < 938400L).map(r => ("B", r._1))).toSet
     assert(kept == expect)
     // the temperature property: the big source is downsampled (19 of 20
     // here — and exactly at the computed boundary), the small untouched
@@ -335,16 +350,15 @@ class SamplingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("mixEpochs: whole epochs plus hash-selected fractional epoch, exact arithmetic") {
     val s = spark
     import s.implicits._
-    val idHash: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      c => c.cast("long")
-    val a = (0 until 10).map(i => (i * 100000L, "A", 10L))
-    val b = (0 until 10).map(i => (3000000L + i * 100000L, "B", 10L))
+    // both sources' ids sit one per hash decile
+    val a = decileIds(0L).map(id => (id, "A", 10L))
+    val b = decileIds(10000000L).map(id => (id, "B", 10L))
     val df = (a ++ b).toDF("doc_id", "source", "toks")
     // tok_A = tok_B = 100, T = 200, W = 4:
-    //   A (w=3): target 150 -> copies 1, rem 500000: ids<5e5 get 2 epochs
-    //   B (w=1): target 50  -> copies 0, rem 500000: ids<5e5 kept once
+    //   A (w=3): target 150 -> copies 1, rem 500000: deciles 0..4 get 2 epochs
+    //   B (w=1): target 50  -> copies 0, rem 500000: deciles 0..4 kept once
     val out = Sampling.mixEpochs(df, "doc_id", "toks", "source",
-      Map("A" -> 3L, "B" -> 1L), hash = idHash)
+      Map("A" -> 3L, "B" -> 1L))
     val got = out.collect()
       .map(r => (r.getString(1), r.getLong(0), r.getInt(3))).toSet
     val expect =
